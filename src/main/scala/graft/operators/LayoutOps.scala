@@ -229,119 +229,13 @@ object LayoutOps {
           .as("extent_frac"))
   }
 
-  /** Filesystems with PROVEN atomic directory rename — the two-rename
-    * swap protocol's entire safety argument (recovery never mistakes a
-    * partial copy for a complete index) rests on it, so the guard is an
-    * ALLOWLIST that fails safe on anything unknown (ADVICE r17: the
-    * previous deny-list silently gave abfs on a flat-namespace Azure
-    * account, o3fs, and third-party object-store connectors the unsafe
-    * protocol). `null`/empty covers the scheme-less default-FS case,
-    * which the call sites re-check against the RESOLVED
-    * `FileSystem.getScheme`. Object stores (s3a, gs, abfs, ...) use the
-    * pointer-publish lifecycle instead ([[withPointerGeneration]]),
-    * which needs no renames at all. */
-  private val atomicRenameSchemes = Set("file", "hdfs", "viewfs")
+  // --- pointer-publish index lifecycle --------------------------------
 
-  private def requireAtomicRename(scheme: String, path: String): Unit =
-    require(scheme == null || scheme.isEmpty ||
-        atomicRenameSchemes.contains(scheme.toLowerCase),
-      s"index swap at $path: directory rename on '$scheme' is not " +
-        "known-atomic (object stores rename by copy+delete), so a " +
-        "crash mid-swap could leave a partial copy posing as a " +
-        "complete index — publish through the pointer lifecycle " +
-        "instead (LayoutOps.withPointerGeneration / " +
-        "resolveIndexPointer, e.g. VectorOps.rebuildIvfIndexPointer: " +
-        "write a NEW generation directory, then commit with one " +
-        "pointer-object write, which is atomic on every store), or " +
-        "host the index on a filesystem with atomic rename " +
-        "(hdfs, file, viewfs)")
-
-  private def swapPaths(path: String): (org.apache.hadoop.fs.Path,
-      org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    require(hp.getParent != null,
-      s"index swap needs a parented path, got $path")
-    requireAtomicRename(hp.toUri.getScheme, path)
-    (hp, new org.apache.hadoop.fs.Path(hp.getParent,
-      ".rebuild.tmp." + hp.getName),
-      new org.apache.hadoop.fs.Path(hp.getParent,
-        ".rebuild.old." + hp.getName))
-  }
-
-  /** The staging directory an index rebuild writes its full new layout
-    * into before [[commitIndexSwap]] publishes it — a dot-prefixed
-    * SIBLING of the live path (same filesystem, so the commit renames
-    * never copy; invisible to any parquet reader of the parent). */
-  private[graft] def indexStagingPath(path: String): String = {
-    val (_, tmp, _) = swapPaths(path)
-    tmp.toString
-  }
-
-  /**
-   * Crash-recovery sweep for an interrupted index rebuild
-   * ([[graft.operators.VectorOps.rebuildIvfIndex]] /
-   * [[graft.operators.TextOps.rebuildBm25Index]]) — the
-   * [[compactParquet]] crash-restoring discipline at index-root
-   * granularity. A rebuild stages the ENTIRE new index at a
-   * dot-prefixed sibling, then commits with two renames (live →
-   * `.rebuild.old.<leaf>`, staged → live) and deletes the backup.
-   * Every crash window recovers here to a fully-consistent index:
-   *
-   *  - before the first rename: live untouched — the stranded staging
-   *    dir is deleted (always regenerable);
-   *  - between the renames: live missing, backup present — the backup
-   *    is restored, so the OLD index answers exactly as before the
-   *    rebuild started (the staged copy is discarded: restore-old is
-   *    the one choice that never has to trust a half-written stage);
-   *  - after the second rename: the new index is live — the stale
-   *    backup and any staging leftover are deleted.
-   *
-   * Like compaction, the swap itself is an offline/maintenance
-   * operation: a reader scanning between the two renames can see the
-   * path briefly missing (concurrent-commit protocols are a table
-   * format's job). Idempotent; safe to call on a healthy index.
-   *
-   * Filesystem contract: the protocol is sound ONLY where directory
-   * rename is atomic (HDFS, posix) — on object stores a rename is a
-   * copy+delete whose crash leaves a PARTIAL copy the recovery could
-   * mistake for a complete index, so the known copy-rename schemes
-   * are refused up front (see `nonAtomicRenameSchemes`; spec-pinned
-   * on an `s3a:` path).
-   */
-  def recoverIndexSwap(spark: SparkSession, path: String): Unit = {
-    val (hp, tmp, old) = swapPaths(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    requireAtomicRename(fs.getScheme, path) // scheme-less default-FS case
-    if (fs.exists(old)) {
-      if (fs.exists(hp)) fs.delete(old, true) // stale backup
-      else require(fs.rename(old, hp),
-        s"recoverIndexSwap: cannot restore $path from $old")
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-  }
-
-  /** The two-rename publish of a staged index rebuild: live →
-    * backup, staged → live, delete backup. Callers must have staged a
-    * COMPLETE index at [[indexStagingPath]]; crash windows are
-    * [[recoverIndexSwap]]'s contract. */
-  private[graft] def commitIndexSwap(spark: SparkSession,
-      path: String): Unit = {
-    val (hp, tmp, old) = swapPaths(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    requireAtomicRename(fs.getScheme, path) // scheme-less default-FS case
-    require(fs.exists(tmp), s"commitIndexSwap: nothing staged at $tmp")
-    if (fs.exists(hp))
-      require(fs.rename(hp, old), s"commitIndexSwap: cannot retire $path")
-    require(fs.rename(tmp, hp), s"commitIndexSwap: cannot publish $tmp")
-    fs.delete(old, true)
-  }
-
-  // --- pointer-publish index lifecycle (object-store safe) -------------
-
-  /** The OTHER publish protocol — for filesystems whose rename is a
-    * non-atomic copy+delete (s3a, gs, abfs, ...), where
-    * [[commitIndexSwap]]'s two-rename swap is refused. The index ROOT
-    * holds numbered generation directories (`gen-00001`, ...) plus a
+  /** The index publish protocol — every rebuild
+    * (`rebuild*IndexPointer`) publishes through it, on posix/HDFS and
+    * on object stores alike (s3a, gs, abfs, ..., where rename is a
+    * non-atomic copy+delete: the protocol renames nothing). The index
+    * ROOT holds numbered generation directories (`gen-00001`, ...) plus a
     * tiny pointer directory `_ptr/` of one-line pointer objects
     * (`ptr-00001` containing exactly `gen-00001`). The LIVE index is the
     * generation named by the highest VALID pointer; publish = write the
@@ -362,8 +256,8 @@ object LayoutOps {
     *    all but the live and the immediately-previous generation (kept
     *    for [[rollbackIndexPointer]]).
     *
-    * Like the rename swap, maintenance is single-writer per index root
-    * (generation numbers are allocated by listing); READERS are
+    * Maintenance is single-writer per index root (generation numbers
+    * are allocated by listing); READERS are
     * wait-free — [[resolveIndexPointer]] at open, then every query runs
     * against a generation directory that no publish ever mutates.
     * Generations are immutable TO THE PROTOCOL: the standard pure-append
@@ -457,7 +351,8 @@ object LayoutOps {
       throw new IllegalArgumentException(
         s"resolveIndexPointer: no published generation under $root — " +
           "build into LayoutOps.withPointerGeneration(spark, root)(gen " +
-          "=> buildIvfIndex(corpus, gen, ...)) to publish the first one"))
+          "=> buildIvfIndex(corpus, gen, ...)) to publish the first one " +
+          "(a plain index directory has no _ptr/: rebuild it that way)"))
     new org.apache.hadoop.fs.Path(rp, genLeaf(live)).toString
   }
 
@@ -506,12 +401,11 @@ object LayoutOps {
     prunePointerGenerations(fs, rp, retain)
   }
 
-  /** Crash-recovery sweep for a pointer-published index — the
-    * [[recoverIndexSwap]] counterpart: deletes torn pointers, stranded
-    * unpublished generations, and all history beyond the newest
-    * `retain` (default 2: live + predecessor). Idempotent; a no-op on
-    * a healthy root; safe before the first publish (nothing valid to
-    * keep → only strandeds are swept). */
+  /** Crash-recovery sweep for a pointer-published index: deletes
+    * torn pointers, stranded unpublished generations, and all history
+    * beyond the newest `retain` (default 2: live + predecessor).
+    * Idempotent; a no-op on a healthy root; safe before the first
+    * publish (nothing valid to keep → only strandeds are swept). */
   def recoverPointerSwap(spark: SparkSession, root: String,
       retain: Int = 2): Unit = {
     val rp = new org.apache.hadoop.fs.Path(root)
@@ -544,9 +438,8 @@ object LayoutOps {
     * Reader hazard (ADVICE r18): a reader that resolved the live
     * generation stays correct across ONE publish (its generation
     * becomes the retained predecessor) but a SECOND publish prunes
-    * that directory under its scan — missing-file failures, the same
-    * exposure as the rename swap's old-dir delete. Where long scans
-    * overlap frequent publishes, raise `retain` (generations kept
+    * that directory under its scan — missing-file failures. Where long
+    * scans overlap frequent publishes, raise `retain` (generations kept
     * after each publish, default 2 = live + rollback predecessor) so
     * pruning lags the oldest running reader. */
   def withPointerGeneration(spark: SparkSession, root: String,

@@ -711,50 +711,39 @@ object TextOps {
    * LSH banding can be re-parameterized (`numHashes`/`bands` — the
    * recall/precision dial [[lshRecallReport]] tunes; also `nParts`
    * re-fanning) WITHOUT re-reading or re-tokenizing the corpus text.
-   * Signatures recompute from stored shingles, bands rewrite in the
-   * pristine build layout with bn recomputed globally, shingles
-   * rewrite deduplicated by ref_id (purging rows a
+   * Signatures recompute from the LIVE generation's stored shingles,
+   * bands rewrite in the pristine build layout with bn recomputed
+   * globally, shingles rewrite deduplicated by ref_id (purging rows a
    * crashed-and-replayed append duplicated — the repair half), and
-   * the whole staged index publishes via the atomic two-rename swap
-   * ([[graft.operators.LayoutOps.commitIndexSwap]]; every crash
-   * window restores the old index —
-   * [[graft.operators.LayoutOps.recoverIndexSwap]] on entry, so
-   * retries self-heal). Queries must pass the NEW parameters after a
-   * retune ([[requireIndexParams]] refuses mismatches loudly, as
-   * always).
+   * the whole new index publishes as a NEW generation of the pointer
+   * root `root` ([[graft.operators.LayoutOps.withPointerGeneration]];
+   * every crash window leaves the old generation serving). Readers
+   * resolve the live generation via
+   * [[graft.operators.LayoutOps.resolveIndexPointer]] and must pass
+   * the NEW parameters after a retune ([[requireIndexParams]] refuses
+   * mismatches loudly, as always).
    *
    * What it cannot change: `k` — shingles are stored already
    * k-shingled, so a different shingle width needs a fresh
    * [[buildMinhashIndex]] from text (stated here rather than
    * silently recomputing wrong). Not concurrency-safe with appends:
-   * serialize maintenance per index path.
+   * serialize maintenance per index root.
    */
-  def rebuildMinhashIndex(spark: SparkSession, path: String,
+  def rebuildMinhashIndexPointer(spark: SparkSession, root: String,
       numHashes: Int = 0, bands: Int = 0, nParts: Int = 0): Unit = {
-    LayoutOps.recoverIndexSwap(spark, path)
-    minhashRetuneInto(spark, path, LayoutOps.indexStagingPath(path),
-      numHashes, bands, nParts)
-    LayoutOps.commitIndexSwap(spark, path)
-  }
-
-  /** The retune-from-stored-shingles core both publish protocols
-    * share: resolve parameters against `src`'s manifest, re-derive
-    * signatures/bands/bn from the stored shingle sets, write the
-    * pristine layout to `dst`. */
-  private def minhashRetuneInto(spark: SparkSession, src: String,
-      dst: String, numHashes: Int, bands: Int, nParts: Int): Unit = {
-    val (k, bNh, bBands, bNp) = minhashIndexParams(spark, src)
+    val live = LayoutOps.resolveIndexPointer(spark, root)
+    val (k, bNh, bBands, bNp) = minhashIndexParams(spark, live)
     val nh = if (numHashes > 0) numHashes else bNh
     val bb = if (bands > 0) bands else bBands
     val np = if (nParts > 0) nParts else bNp
     val rows = nh / bb
     require(bb * rows == nh,
-      "rebuildMinhashIndex: numHashes must divide into bands")
+      "rebuildMinhashIndexPointer: numHashes must divide into bands")
     graft.functions.ensureRegistered(spark)
-    val sh = Caches.persist(spark.read.parquet(s"$src/shingles")
+    val sh = Caches.persist(spark.read.parquet(s"$live/shingles")
       .dropDuplicates(Seq("ref_id")))
     val wBucket = Window.partitionBy(col("band"), col("band_key"))
-    try {
+    try LayoutOps.withPointerGeneration(spark, root) { gen =>
       sh.select(col("ref_id"),
           posexplode(bandKeys(
             graft.functions.minhash_signature(col("sh"), nh),
@@ -764,27 +753,13 @@ object TextOps {
         .repartition(col("part"))
         .sortWithinPartitions(col("band_key"))
         .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$dst/bands")
-      sh.write.mode("overwrite").parquet(s"$dst/shingles")
+        .parquet(s"$gen/bands")
+      sh.write.mode("overwrite").parquet(s"$gen/shingles")
       import spark.implicits._
       Seq((k, nh, bb, np))
         .toDF("k", "num_hashes", "bands", "n_parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dst/params")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
     } finally sh.unpersist(false)
-  }
-
-  /** [[rebuildMinhashIndex]] (the RETUNE) for OBJECT-STORE indexes —
-    * same re-parameterization from stored shingles (no corpus text
-    * re-read; `k` still refused), published through the pointer
-    * lifecycle instead of the rename swap. Readers resolve the live
-    * generation via
-    * [[graft.operators.LayoutOps.resolveIndexPointer]] and must pass
-    * the NEW parameters after a retune, as always. */
-  def rebuildMinhashIndexPointer(spark: SparkSession, root: String,
-      numHashes: Int = 0, bands: Int = 0, nParts: Int = 0): Unit = {
-    val live = LayoutOps.resolveIndexPointer(spark, root)
-    LayoutOps.withPointerGeneration(spark, root)(gen =>
-      minhashRetuneInto(spark, live, gen, numHashes, bands, nParts))
   }
 
   /** The append's base read, factored out so PlanSpec can pin that an
@@ -2337,8 +2312,9 @@ object TextOps {
     val base = touchedBandPartitions(spark, path, touched)
     require(base.columns.contains("sig"),
       s"appendToSimhashIndex: index at $path uses the pre-r19 layout " +
-        "(no sig column on band rows) — run rebuildSimhashIndex to " +
-        "migrate before appending")
+        "(no sig column on band rows) — rebuild it " +
+        "(rebuildSimhashIndexPointer on its pointer root, or " +
+        "buildSimhashIndex) before appending")
     val wBucket = Window.partitionBy(col("band"), col("chunk"))
     val wOrd = wBucket.orderBy(col("ref_id").asc)
     val merged = inc
@@ -2366,38 +2342,30 @@ object TextOps {
    * RETUNE rebuild for the SimHash index — the cheapest retune of any
    * family: the index stores complete 8-byte signatures, so the band
    * SPLIT itself (2/4/8/16/32 — the recall dial: candidates are
-   * guaranteed below hamming < bands) re-parameterizes from `sigs`
-   * alone, no corpus text re-read, no signature recompute. Sigs dedup
-   * by ref_id (purging crashed-and-replayed append rows — the repair
-   * half), bn recomputes globally, and the staged index publishes via
-   * the atomic two-rename swap with every crash window restoring the
-   * old index ([[graft.operators.LayoutOps.recoverIndexSwap]] on
-   * entry; retries self-heal). Queries must pass the NEW bands after
-   * a retune — the manifest gate refuses the old ones. Single-writer
-   * per index path, like all index maintenance.
+   * guaranteed below hamming < bands) re-parameterizes from the LIVE
+   * generation's `sigs` alone, no corpus text re-read, no signature
+   * recompute. Sigs dedup by ref_id (purging crashed-and-replayed
+   * append rows — the repair half), bn recomputes globally, and the new
+   * index publishes as a NEW generation of the pointer root `root`
+   * ([[graft.operators.LayoutOps.withPointerGeneration]]; every crash
+   * window leaves the old generation serving). Readers resolve the
+   * live generation via [[graft.operators.LayoutOps.resolveIndexPointer]]
+   * and must pass the NEW bands after a retune — the manifest gate
+   * refuses the old ones. Single-writer per index root, like all index
+   * maintenance.
    */
-  def rebuildSimhashIndex(spark: SparkSession, path: String,
+  def rebuildSimhashIndexPointer(spark: SparkSession, root: String,
       bands: Int = 0, nParts: Int = 0): Unit = {
-    LayoutOps.recoverIndexSwap(spark, path)
-    simhashRetuneInto(spark, path, LayoutOps.indexStagingPath(path),
-      bands, nParts)
-    LayoutOps.commitIndexSwap(spark, path)
-  }
-
-  /** The retune core both publish protocols share: parameters resolve
-    * against `src`'s manifest, bands re-derive from the stored sigs,
-    * the pristine layout lands at `dst`. */
-  private def simhashRetuneInto(spark: SparkSession, src: String,
-      dst: String, bands: Int, nParts: Int): Unit = {
-    val (bB, bNp) = simhashIndexParams(spark, src)
+    val live = LayoutOps.resolveIndexPointer(spark, root)
+    val (bB, bNp) = simhashIndexParams(spark, live)
     val bb = if (bands > 0) bands else bB
     val np = if (nParts > 0) nParts else bNp
-    requireSimhashBands(bb, "rebuildSimhashIndex")
+    requireSimhashBands(bb, "rebuildSimhashIndexPointer")
     graft.functions.ensureRegistered(spark)
-    val sigs = Caches.persist(spark.read.parquet(s"$src/sigs")
+    val sigs = Caches.persist(spark.read.parquet(s"$live/sigs")
       .dropDuplicates(Seq("ref_id")))
     val wBucket = Window.partitionBy(col("band"), col("chunk"))
-    try {
+    try LayoutOps.withPointerGeneration(spark, root) { gen =>
       sigs.select(col("ref_id"), col("sig"),
           posexplode(simhashChunks(col("sig"), bb))
             .as(Seq("band", "chunk")))
@@ -2406,24 +2374,12 @@ object TextOps {
         .repartition(col("part"))
         .sortWithinPartitions(col("chunk"))
         .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$dst/bands")
-      sigs.write.mode("overwrite").parquet(s"$dst/sigs")
+        .parquet(s"$gen/bands")
+      sigs.write.mode("overwrite").parquet(s"$gen/sigs")
       import spark.implicits._
       Seq((bb, np)).toDF("bands", "n_parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dst/params")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
     } finally sigs.unpersist(false)
-  }
-
-  /** [[rebuildSimhashIndex]] for OBJECT-STORE indexes — the same
-    * retune from stored sigs, published through the pointer lifecycle
-    * ([[graft.operators.LayoutOps.withPointerGeneration]]); readers
-    * resolve the live generation via
-    * [[graft.operators.LayoutOps.resolveIndexPointer]]. */
-  def rebuildSimhashIndexPointer(spark: SparkSession, root: String,
-      bands: Int = 0, nParts: Int = 0): Unit = {
-    val live = LayoutOps.resolveIndexPointer(spark, root)
-    LayoutOps.withPointerGeneration(spark, root)(gen =>
-      simhashRetuneInto(spark, live, gen, bands, nParts))
   }
 
   /** The shared LSH bucket-balance rollup: one row per band over a
@@ -2449,14 +2405,14 @@ object TextOps {
    * Monitoring report over a persisted SimHash index's bucket balance
    * — the [[graft.operators.VectorOps.ivfIndexStats]] discipline for
    * the LSH families, and the operator that tells you WHEN to pull
-   * [[rebuildSimhashIndex]]'s retune dial: one row per band,
+   * [[rebuildSimhashIndexPointer]]'s retune dial: one row per band,
    * `(band, n_buckets, n_rows, max_bn, imbalance)` where `imbalance`
    * is max-bucket/mean-bucket (1.0 = perfectly balanced; a flooded
    * bucket is boilerplate mass that makes every query touching it pay
    * a quadratic candidate fan-out — the signal to cap with
    * `maxBucketSize` or re-band). Counts are the layout's on-disk
    * truth: rows duplicated by a replayed at-least-once append count
-   * as stored ([[rebuildSimhashIndex]] is the purge).
+   * as stored ([[rebuildSimhashIndexPointer]] is the purge).
    *
    * Scale shape: ONE scan of the bands table reading ONLY
    * (band, chunk, bn) — ref_id is never read — into a
@@ -2470,7 +2426,7 @@ object TextOps {
   /** [[simhashIndexStats]] for the MinHash index — same rollup over
     * its `(band, band_key, bn)` rows; the monitor half the MinHash
     * lifecycle was missing (its retune dial is
-    * [[rebuildMinhashIndex]]'s numHashes/bands). */
+    * [[rebuildMinhashIndexPointer]]'s numHashes/bands). */
   def minhashIndexStats(spark: SparkSession, path: String): DataFrame = {
     minhashIndexParams(spark, path): Unit // manifest gate: refuse bare dirs
     lshBandStats(spark.read.parquet(s"$path/bands"), "band_key")
@@ -3528,9 +3484,9 @@ object TextOps {
    * equals the row count of each (already pruned, candidate-bounded)
    * posting list, so deriving it at query time costs one tiny
    * aggregation and appends never maintain a df table. After heavy
-   * append traffic, [[rebuildBm25Index]] restores the pristine layout
-   * (dedup + re-sort + optional `nParts` re-size) behind an atomic
-   * swap.
+   * append traffic, [[rebuildBm25IndexPointer]] restores the pristine
+   * layout (dedup + re-sort + optional `nParts` re-size) in a new
+   * pointer generation.
    *
    * Build cost: one tokenize pass, one (term, doc_id) aggregation,
    * one `part`-keyed shuffle clustering the layout — all corpus-scale
@@ -3651,7 +3607,7 @@ object TextOps {
    * refresh's doc_id dedup would each keep an ARBITRARY row, making
    * that doc's tf/dl partition-order-dependent. To update a
    * document's content, rebuild the corpus's index (or
-   * [[rebuildBm25Index]] after removing the stale rows upstream).
+   * [[rebuildBm25IndexPointer]] after removing the stale rows upstream).
    */
   def appendToBm25Index(newDocs: DataFrame, path: String): Unit = {
     val spark = newDocs.sparkSession
@@ -3671,72 +3627,49 @@ object TextOps {
   /**
    * Canonicalizing REBUILD of a [[buildBm25Index]] index — the
    * maintenance half of the lifecycle (VERDICT r16 #3), the BM25
-   * analogue of [[graft.operators.VectorOps.rebuildIvfIndex]]. BM25
-   * has no trained component, so "re-train" here is a re-LAYOUT: the
-   * live postings and doclens are read back, deduplicated ((term,
-   * doc_id) / doc_id — purging any byte-identical rows that
-   * crashed-and-replayed at-least-once appends accumulated), rewritten
-   * in the pristine build layout (term-hash part directories,
-   * term-sorted row groups — appends degrade row-group tightness;
-   * this restores it, and `nParts > 0` re-sizes the directory fan-out
-   * for a corpus that outgrew its build-time value), stats recomputed,
-   * and the whole staged index published with the atomic two-rename
-   * swap. Serving reads never see a half-index; every crash window
-   * restores the old index intact ([[LayoutOps.recoverIndexSwap]],
-   * called on entry so a retry self-heals; spec-pinned).
+   * analogue of [[graft.operators.VectorOps.rebuildIvfIndexPointer]].
+   * BM25 has no trained component, so "re-train" here is a re-LAYOUT:
+   * the LIVE generation's postings and doclens are read back,
+   * deduplicated ((term, doc_id) / doc_id — purging any byte-identical
+   * rows that crashed-and-replayed at-least-once appends accumulated),
+   * rewritten in the pristine build layout (term-hash part directories,
+   * term-sorted row groups — appends degrade row-group tightness; this
+   * restores it, and `nParts > 0` re-sizes the directory fan-out for a
+   * corpus that outgrew its build-time value), stats recomputed, and
+   * the whole new index published as a NEW generation of the pointer
+   * root `root` ([[graft.operators.LayoutOps.withPointerGeneration]]:
+   * write a complete generation, commit with one pointer-object write;
+   * readers resolve via [[graft.operators.LayoutOps.resolveIndexPointer]]).
+   * Serving reads never see a half-index; every crash window leaves the
+   * old generation serving.
    *
    * The dedup canonicalizes REPLAYS only: an existing doc_id
    * re-appended with changed text (the unsupported case — see
    * [[appendToBm25Index]]) keeps an arbitrary one of its conflicting
    * rows. Not concurrency-safe with appends: serialize maintenance
-   * per index path.
+   * per index root.
    */
-  def rebuildBm25Index(spark: SparkSession, path: String,
-      nParts: Int = 0): Unit = {
-    LayoutOps.recoverIndexSwap(spark, path)
-    val np = if (nParts > 0) nParts else bm25IndexNParts(spark, path)
-    canonicalizeBm25Into(spark, path, LayoutOps.indexStagingPath(path), np)
-    LayoutOps.commitIndexSwap(spark, path)
-  }
-
-  /** The canonicalizing re-layout both publish protocols share: read
-    * the index at `src`, dedup replayed-append rows, restore the
-    * term-sorted pristine layout at the requested fan-out, recompute
-    * stats — all written to `dst` (a rename-swap staging sibling or a
-    * pointer generation directory). */
-  private def canonicalizeBm25Into(spark: SparkSession, src: String,
-      dst: String, np: Int): Unit = {
-    spark.read.parquet(s"$src/doclens")
-      .dropDuplicates(Seq("doc_id"))
-      .write.mode("overwrite").parquet(s"$dst/doclens")
-    spark.read.parquet(s"$src/postings")
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-      .dropDuplicates(Seq("term", "doc_id"))
-      .withColumn("part", termPart(col("term"), np))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$dst/postings")
-    import spark.implicits._
-    Seq(np).toDF("n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dst/params")
-    refreshBm25Stats(spark, dst)
-  }
-
-  /** [[rebuildBm25Index]] for OBJECT-STORE indexes — same
-    * canonicalizing re-layout, published through the pointer
-    * lifecycle ([[graft.operators.LayoutOps.withPointerGeneration]]:
-    * write a complete NEW generation, commit with one pointer-object
-    * write; readers resolve via
-    * [[graft.operators.LayoutOps.resolveIndexPointer]]). Same
-    * new-docs-only append precondition and single-writer contract as
-    * the rename-swap twin. */
   def rebuildBm25IndexPointer(spark: SparkSession, root: String,
       nParts: Int = 0): Unit = {
     val live = LayoutOps.resolveIndexPointer(spark, root)
     val np = if (nParts > 0) nParts else bm25IndexNParts(spark, live)
-    LayoutOps.withPointerGeneration(spark, root)(gen =>
-      canonicalizeBm25Into(spark, live, gen, np))
+    LayoutOps.withPointerGeneration(spark, root) { gen =>
+      spark.read.parquet(s"$live/doclens")
+        .dropDuplicates(Seq("doc_id"))
+        .write.mode("overwrite").parquet(s"$gen/doclens")
+      spark.read.parquet(s"$live/postings")
+        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+        .dropDuplicates(Seq("term", "doc_id"))
+        .withColumn("part", termPart(col("term"), np))
+        .repartition(col("part"))
+        .sortWithinPartitions(col("term"))
+        .write.mode("overwrite").partitionBy("part")
+        .parquet(s"$gen/postings")
+      import spark.implicits._
+      Seq(np).toDF("n_parts")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
+      refreshBm25Stats(spark, gen)
+    }
   }
 
   /** The query-time posting read, factored out so PlanSpec can pin

@@ -1049,8 +1049,9 @@ object VectorOps {
    * queries before and after an append rank existing neighbors
    * identically — the trade is that a drifting corpus slowly unbalances
    * cells (monitor with a cluster-size scan; re-train =
-   * [[rebuildIvfIndex]], which retrains into a staging directory and
-   * atomically swaps — the FAISS re-train discipline made crash-safe).
+   * [[rebuildIvfIndexPointer]], which retrains into a new generation
+   * and publishes it atomically — the FAISS re-train discipline made
+   * crash-safe).
    * Not concurrency-safe: serialize appends per index path. Repeated
    * appends accumulate files per cell directory — compact in place
    * with [[LayoutOps.compactParquet]] (partition-aware,
@@ -1061,7 +1062,8 @@ object VectorOps {
    * in a default probe read. The recovery pair: query with
    * `ivfIndexTopK(..., absorbReplays = true)` (window-ride dedup; pays
    * the partial-window-limit bytes) in the window between the crash
-   * and [[rebuildIvfIndex]], which purges the duplicates from disk.
+   * and [[rebuildIvfIndexPointer]], which purges the duplicates from
+   * disk.
    * Re-appending an existing `vec_id` with CHANGED embedding bytes is
    * unsupported (both rows are stored and both rank) — treat vec_ids
    * as immutable, or rebuild.
@@ -1087,33 +1089,37 @@ object VectorOps {
    * RE-TRAIN the lifecycle's other half (VERDICT r16 #3) — the
    * operation every append scaladoc defers to when [[ivfIndexStats]]
    * shows drift-flooded cells. The index stores its raw vectors, so
-   * it retrains FROM ITSELF: read `(vec_id, embedding)` off the live
-   * layout, dedup by vec_id (purging any rows a crashed-and-replayed
-   * at-least-once append left behind — this is also the repair tool),
-   * run the full [[buildIvfIndex]] (fresh Lloyd codebook, fresh
-   * cell-clustered layout) into a staging sibling, and publish with
-   * an atomic two-rename swap. Serving reads never see a half-index:
-   * they read the old index until the commit, the new one after, and
-   * every crash window restores the old index intact
-   * ([[LayoutOps.recoverIndexSwap]], called here on entry so a retry
-   * self-heals; spec-pinned). `nCentroids`/`iters`/`nParts` default
-   * to the live manifest's values (pass > 0 to re-size — the "corpus
-   * grew 10×, re-split the cells" knob).
+   * it retrains FROM ITSELF: read `(vec_id, embedding)` off the LIVE
+   * generation of the pointer root `root`, dedup by vec_id (purging any
+   * rows a crashed-and-replayed at-least-once append left behind — this
+   * is also the repair tool), and run the full [[buildIvfIndex]] (fresh
+   * Lloyd codebook, fresh cell-clustered layout) into a NEW generation
+   * published with ONE pointer-object write
+   * ([[LayoutOps.withPointerGeneration]] has the crash-window contract;
+   * every window leaves the old generation serving, on object stores
+   * too). Readers open [[LayoutOps.resolveIndexPointer]]`(spark, root)`
+   * and pass that generation path to [[ivfIndexTopK]] / appends as
+   * usual. `nCentroids`/`iters`/`nParts` default to the live manifest's
+   * values (pass > 0 to re-size — the "corpus grew 10×, re-split the
+   * cells" knob).
    *
-   * Cost: one build over the indexed corpus — the retrain IS a build,
-   * by design (a drifted codebook invalidates every stored
-   * assignment, so there is nothing incremental to save). Not
-   * concurrency-safe with appends: serialize maintenance per index
-   * path.
+   * The first build of a pointer index is just
+   * `withPointerGeneration(spark, root)(gen => buildIvfIndex(corpus,
+   * gen, ...))`; an index built into a plain directory is refused (no
+   * published generation) and migrates the same way. Cost: one build
+   * over the indexed corpus — the retrain IS a build, by design (a
+   * drifted codebook invalidates every stored assignment, so there is
+   * nothing incremental to save). Not concurrency-safe with appends:
+   * serialize maintenance per index root.
    */
-  def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, nCentroids: Int = 0, iters: Int = -1,
+  def rebuildIvfIndexPointer(spark: org.apache.spark.sql.SparkSession,
+      root: String, nCentroids: Int = 0, iters: Int = -1,
       nParts: Int = 0): Unit = {
-    LayoutOps.recoverIndexSwap(spark, path)
+    val live = LayoutOps.resolveIndexPointer(spark, root)
     // ONE guarded manifest read supplies all three defaults (the r17
     // review caught the raw double-read here surfacing opaque Spark
     // errors instead of the readers' rebuild message)
-    val params = ivfIndexManifest(spark, path,
+    val params = ivfIndexManifest(spark, live,
       Seq("n_centroids", "iters", "n_parts"))
     val nc = if (nCentroids > 0) nCentroids
       else params.getAs[Int]("n_centroids")
@@ -1122,45 +1128,6 @@ object VectorOps {
     // persisted: the build consumes the corpus once per Lloyd round
     // plus once for the layout write — without the barrier the dedup
     // shuffle would re-run per consumer
-    val corpus = Caches.persist(spark.read.parquet(s"$path/vectors")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id"))
-    try {
-      buildIvfIndex(corpus, LayoutOps.indexStagingPath(path), nc, it, np)
-      LayoutOps.commitIndexSwap(spark, path)
-    } finally corpus.unpersist(false)
-  }
-
-  /**
-   * [[rebuildIvfIndex]] for OBJECT-STORE indexes (s3a, gs, abfs, ...),
-   * where the two-rename swap is refused because directory rename is a
-   * non-atomic copy+delete (VERDICT r17 #4): the index lives under a
-   * pointer ROOT of immutable generation directories, the retrain
-   * writes a complete NEW generation, and publish is ONE pointer-object
-   * write — atomic on every store ([[LayoutOps.withPointerGeneration]]
-   * has the full crash-window contract; every window leaves the old
-   * generation serving). Readers open
-   * [[LayoutOps.resolveIndexPointer]]`(spark, root)` and pass that
-   * generation path to [[ivfIndexTopK]] / appends as usual.
-   *
-   * Same retrain semantics as [[rebuildIvfIndex]]: reads the LIVE
-   * generation's raw vectors, dedups replayed-append rows by vec_id,
-   * full fresh Lloyd build; `nCentroids`/`iters`/`nParts` default to
-   * the live manifest. Single-writer per index root, like all index
-   * maintenance. The first build of a pointer index is just
-   * `withPointerGeneration(spark, root)(gen => buildIvfIndex(corpus,
-   * gen, ...))`.
-   */
-  def rebuildIvfIndexPointer(spark: org.apache.spark.sql.SparkSession,
-      root: String, nCentroids: Int = 0, iters: Int = -1,
-      nParts: Int = 0): Unit = {
-    val live = LayoutOps.resolveIndexPointer(spark, root)
-    val params = ivfIndexManifest(spark, live,
-      Seq("n_centroids", "iters", "n_parts"))
-    val nc = if (nCentroids > 0) nCentroids
-      else params.getAs[Int]("n_centroids")
-    val it = if (iters >= 0) iters else params.getAs[Int]("iters")
-    val np = if (nParts > 0) nParts else params.getAs[Int]("n_parts")
     val corpus = Caches.persist(spark.read.parquet(s"$live/vectors")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .dropDuplicates("vec_id"))
@@ -1186,7 +1153,7 @@ object VectorOps {
    * not measurements, and NaN masquerading as one would defeat the
    * monitor (ADVICE r16). Counts are the layout's on-disk truth:
    * rows duplicated by a replayed at-least-once append count as
-   * stored — [[rebuildIvfIndex]] is the dedup/retrain repair.
+   * stored — [[rebuildIvfIndexPointer]] is the dedup/retrain repair.
    *
    * `sub` selects the list layout: the IVF twin's `vectors` (default)
    * or the IVF-PQ twin's `codes` — both carry the `cluster` column.
@@ -1338,9 +1305,10 @@ object VectorOps {
     // window above the same exchange forces EVERY scored pair through
     // it — MBs vs hundreds of GB at production probe batches. Default
     // keeps the k-bounded plan; query with absorbReplays = true in
-    // the window between an ingest crash and its [[rebuildIvfIndex]]
-    // repair. Re-appending an existing vec_id with a CHANGED embedding
-    // is NOT a replay and stays unsupported (both rows rank).
+    // the window between an ingest crash and its
+    // [[rebuildIvfIndexPointer]] repair. Re-appending an existing
+    // vec_id with a CHANGED embedding is NOT a replay and stays
+    // unsupported (both rows rank).
     val wRank = Window.partitionBy(col("probe_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     // excludeSelf = the "probe is IN the index" contract (a vector must
@@ -1955,8 +1923,9 @@ object VectorOps {
    * append under their cells' part directories; nothing existing moves and
    * earlier queries' rankings are unchanged. Quantization drift under
    * a shifting corpus is the documented trade (monitor cell sizes /
-   * [[pqRecall]]; re-train = [[rebuildIvfPqIndex]] FROM THE SOURCE
-   * CORPUS — codes are lossy, so unlike [[rebuildIvfIndex]] this
+   * [[pqRecall]]; re-train = [[rebuildIvfPqIndexPointer]] FROM THE
+   * SOURCE CORPUS — codes are lossy, so unlike
+   * [[rebuildIvfIndexPointer]] this
    * index cannot retrain from its own contents). At-least-once
    * replays re-add byte-identical code rows; query with
    * `absorbReplays = true` between a crash and the rebuild, exactly
@@ -1980,76 +1949,48 @@ object VectorOps {
 
   /**
    * RE-TRAIN the IVF-PQ lifecycle's other half — the
-   * [[rebuildIvfIndex]] discipline for the compressed twin, with the
-   * one structural difference stated in the type: PQ codes are LOSSY,
-   * so the index cannot retrain from its own contents and the caller
-   * passes the SOURCE corpus. Both codebooks retrain fresh (coarse
-   * cells + sub-quantizers), the corpus re-encodes, the whole staged
-   * index publishes via the atomic two-rename swap, and any rows a
-   * crashed-and-replayed at-least-once append duplicated are purged
-   * (`vec_id` dedup on the source before encoding). Defaults re-read
-   * the live manifest; pass > 0 to re-size. Serving reads never see a
-   * half-index; crash windows restore the old one
-   * ([[LayoutOps.recoverIndexSwap]], called on entry).
+   * [[rebuildIvfIndexPointer]] discipline for the compressed twin, with
+   * the one structural difference stated in the type: PQ codes are
+   * LOSSY, so the index cannot retrain from its own contents and the
+   * caller passes the SOURCE corpus. Both codebooks retrain fresh
+   * (coarse cells + sub-quantizers), the corpus re-encodes into a NEW
+   * generation of the pointer root `root` published with one
+   * pointer-object write ([[LayoutOps.withPointerGeneration]]), and any
+   * rows a crashed-and-replayed at-least-once append duplicated are
+   * purged (`vec_id` dedup on the source before encoding). Each `<= 0`
+   * argument falls back to the LIVE generation's manifest; readers
+   * resolve it via [[LayoutOps.resolveIndexPointer]]. Serving reads
+   * never see a half-index; every crash window leaves the old
+   * generation serving.
    */
-  def rebuildIvfPqIndex(emb: DataFrame, path: String, m: Int = 0,
+  def rebuildIvfPqIndexPointer(emb: DataFrame, root: String, m: Int = 0,
       kCent: Int = 0, nCentroids: Int = 0, nParts: Int = 0): Unit = {
     val spark = emb.sparkSession
-    LayoutOps.recoverIndexSwap(spark, path)
-    val (mm, kc, nc, np) =
-      ivfPqRebuildParams(spark, path, m, kCent, nCentroids, nParts)
-    // persisted: the build consumes the corpus three times (PQ books,
-    // coarse seeds, the encode+layout pass) — without the barrier the
-    // dedup shuffle and source scan re-run per consumer (r17 review;
-    // the IVF twin already had this)
-    val corpus = Caches.persist(emb.dropDuplicates("vec_id"))
-    try {
-      buildIvfPqIndex(corpus, LayoutOps.indexStagingPath(path),
-        mm, kc, nc, np)
-      LayoutOps.commitIndexSwap(spark, path)
-    } finally corpus.unpersist(false)
-  }
-
-  /** Guarded manifest read shared by both IVF-PQ rebuild paths (the
-    * raw read surfaced opaque Spark errors on missing/legacy layouts —
-    * r17 review): each `<= 0` argument falls back to the live
-    * manifest's value. */
-  private def ivfPqRebuildParams(
-      spark: org.apache.spark.sql.SparkSession, path: String, m: Int,
-      kCent: Int, nCentroids: Int, nParts: Int): (Int, Int, Int, Int) = {
+    val live = LayoutOps.resolveIndexPointer(spark, root)
+    // guarded manifest read (the raw read surfaced opaque Spark errors
+    // on missing/legacy layouts — r17 review)
     val row =
-      try spark.read.parquet(s"$path/pq_book").head()
+      try spark.read.parquet(s"$live/pq_book").head()
       catch {
         case e: Throwable => throw new IllegalArgumentException(
-          s"ivf-pq index at $path has no codebooks — rebuild with " +
+          s"ivf-pq index at $live has no codebooks — rebuild with " +
             "buildIvfPqIndex", e)
       }
     val needed = Seq("m", "k_cent", "n_centroids", "n_parts")
     val missing = needed.filterNot(row.schema.fieldNames.contains)
     if (missing.nonEmpty)
       throw new IllegalArgumentException(
-        s"ivf-pq index at $path predates the current layout (pq_book " +
+        s"ivf-pq index at $live predates the current layout (pq_book " +
           s"carries no ${missing.mkString("/")}) — rebuild with " +
           "buildIvfPqIndex")
-    (if (m > 0) m else row.getAs[Int]("m"),
-      if (kCent > 0) kCent else row.getAs[Int]("k_cent"),
-      if (nCentroids > 0) nCentroids else row.getAs[Int]("n_centroids"),
-      if (nParts > 0) nParts else row.getAs[Int]("n_parts"))
-  }
-
-  /** [[rebuildIvfPqIndex]] for OBJECT-STORE indexes — same
-    * retrain-from-source semantics (codes are lossy, so the corpus is
-    * the argument; BOTH codebooks retrain), published through the
-    * pointer lifecycle ([[LayoutOps.withPointerGeneration]]) instead
-    * of the rename swap. Parameter defaults come from the LIVE
-    * generation's manifest; readers resolve it via
-    * [[LayoutOps.resolveIndexPointer]]. */
-  def rebuildIvfPqIndexPointer(emb: DataFrame, root: String, m: Int = 0,
-      kCent: Int = 0, nCentroids: Int = 0, nParts: Int = 0): Unit = {
-    val spark = emb.sparkSession
-    val live = LayoutOps.resolveIndexPointer(spark, root)
-    val (mm, kc, nc, np) =
-      ivfPqRebuildParams(spark, live, m, kCent, nCentroids, nParts)
+    val mm = if (m > 0) m else row.getAs[Int]("m")
+    val kc = if (kCent > 0) kCent else row.getAs[Int]("k_cent")
+    val nc = if (nCentroids > 0) nCentroids else row.getAs[Int]("n_centroids")
+    val np = if (nParts > 0) nParts else row.getAs[Int]("n_parts")
+    // persisted: the build consumes the corpus three times (PQ books,
+    // coarse seeds, the encode+layout pass) — without the barrier the
+    // dedup shuffle and source scan re-run per consumer (r17 review;
+    // the IVF twin already had this)
     val corpus = Caches.persist(emb.dropDuplicates("vec_id"))
     try LayoutOps.withPointerGeneration(spark, root)(gen =>
       buildIvfPqIndex(corpus, gen, mm, kc, nc, np))

@@ -48,6 +48,26 @@ object QueryDefs {
   private def dirTag(dir: String): String =
     java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
 
+  /** The IVF retrain lifecycle behind `ivf_index_rebuild` and
+    * `ivf_index_rebuild_pointer` (see the first row's comment), under
+    * the pointer root `/tmp/graft_<name>/<dir tag>`. */
+  private def ivfRebuildLifecycle(s: SparkSession, dir: String,
+      name: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val root = s"/tmp/graft_$name/${dirTag(dir)}"
+    if (fixtureMemo.add(s"$name|$dir")) {
+      val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
+        VectorOps.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0), g,
+          nCentroids = 16, iters = 2))
+      val odd = emb.filter(col("vec_id") % 2 =!= 0)
+      VectorOps.appendToIvfIndex(odd, gen1)
+      VectorOps.appendToIvfIndex(odd, gen1) // at-least-once replay
+      VectorOps.rebuildIvfIndexPointer(s, root)
+    }
+    VectorOps.ivfIndexTopK(emb.filter(col("vec_id") < 16),
+      LayoutOps.resolveIndexPointer(s, root), k = 5)
+  }
+
   /** The full BM25 scoring chain over the fixed 3-term query bag,
     * shared VERBATIM by `bm25_topk` (per-batch corpus stats),
     * `bm25_index_topk` (persisted postings + stats), and
@@ -3147,29 +3167,31 @@ chunks AS (
       Some(minhashIndexOracle)),
 
     // REBUILD lifecycle for the MinHash family (r17 — the fourth and
-    // last index family's maintenance half): half build + half
-    // append + that append REPLAYED verbatim (duplicate shingle rows
-    // on disk), then rebuildMinhashIndex re-derives signatures and
-    // bands FROM THE STORED SHINGLES (no corpus text re-read),
-    // dedups shingles by ref_id, recomputes bn globally, and
-    // publishes via the atomic two-rename swap. Same verbatim oracle:
-    // hash parity certifies rebuild == the direct computation over
-    // the full reference split.
+    // last index family's maintenance half): half build published as
+    // the first pointer generation + half append into it + that
+    // append REPLAYED verbatim (duplicate shingle rows on disk), then
+    // rebuildMinhashIndexPointer re-derives signatures and bands FROM
+    // THE STORED SHINGLES (no corpus text re-read), dedups shingles by
+    // ref_id, recomputes bn globally, and publishes a new generation
+    // with one pointer write. Same verbatim oracle: hash parity
+    // certifies rebuild == the direct computation over the full
+    // reference split.
     ("near_dup_index_rebuild", (s: SparkSession, dir: String) => {
       val tag = dirTag(dir)
       val docs = t(s, dir, "documents")
-      val path = s"/tmp/graft_mhindex_rb/$tag"
+      val root = s"/tmp/graft_mhindex_rb/$tag"
       if (fixtureMemo.add(s"mhindex_rb|$dir")) {
-        TextOps.buildMinhashIndex(
-          docs.filter(col("doc_id") % 50 === 0), path)
+        val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
+          TextOps.buildMinhashIndex(docs.filter(col("doc_id") % 50 === 0),
+            g))
         val inc = docs.filter(
           col("doc_id") % 25 === 0 && col("doc_id") % 50 =!= 0)
-        TextOps.appendToMinhashIndex(inc, path)
-        TextOps.appendToMinhashIndex(inc, path) // at-least-once replay
-        TextOps.rebuildMinhashIndex(s, path)
+        TextOps.appendToMinhashIndex(inc, gen1)
+        TextOps.appendToMinhashIndex(inc, gen1) // at-least-once replay
+        TextOps.rebuildMinhashIndexPointer(s, root)
       }
       TextOps.nearDupAgainstIndex(docs.filter(col("doc_id") % 25 =!= 0),
-        path, threshold = 0.5)
+        LayoutOps.resolveIndexPointer(s, root), threshold = 0.5)
     },
       Some(minhashIndexOracle)),
 
@@ -3212,28 +3234,30 @@ chunks AS (
     },
       Some(simhashIndexOracle)),
 
-    // ... and its REBUILD lifecycle: half build + half append + that
-    // append REPLAYED verbatim (duplicate sig rows on disk), then
-    // rebuildSimhashIndex re-bands FROM THE STORED SIGS (the cheapest
-    // retune of any family — 8 bytes per doc, no text re-read), dedups
-    // sigs by ref_id, recomputes bn, publishes via the atomic
-    // two-rename swap. Same verbatim oracle certifies rebuild ==
-    // the direct computation.
+    // ... and its REBUILD lifecycle: half build published as the first
+    // pointer generation + half append into it + that append REPLAYED
+    // verbatim (duplicate sig rows on disk), then
+    // rebuildSimhashIndexPointer re-bands FROM THE STORED SIGS (the
+    // cheapest retune of any family — 8 bytes per doc, no text
+    // re-read), dedups sigs by ref_id, recomputes bn, publishes a new
+    // generation with one pointer write. Same verbatim oracle
+    // certifies rebuild == the direct computation.
     ("simhash_index_rebuild", (s: SparkSession, dir: String) => {
       val tag = dirTag(dir)
       val docs = t(s, dir, "documents")
-      val path = s"/tmp/graft_shindex_rb/$tag"
+      val root = s"/tmp/graft_shindex_rb/$tag"
       if (fixtureMemo.add(s"shindex_rb|$dir")) {
-        TextOps.buildSimhashIndex(
-          docs.filter(col("doc_id") % 50 === 0), path)
+        val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
+          TextOps.buildSimhashIndex(docs.filter(col("doc_id") % 50 === 0),
+            g))
         val inc = docs.filter(
           col("doc_id") % 25 === 0 && col("doc_id") % 50 =!= 0)
-        TextOps.appendToSimhashIndex(inc, path)
-        TextOps.appendToSimhashIndex(inc, path) // at-least-once replay
-        TextOps.rebuildSimhashIndex(s, path)
+        TextOps.appendToSimhashIndex(inc, gen1)
+        TextOps.appendToSimhashIndex(inc, gen1) // at-least-once replay
+        TextOps.rebuildSimhashIndexPointer(s, root)
       }
       TextOps.simhashAgainstIndex(docs.filter(col("doc_id") % 25 =!= 0),
-        path, maxHamming = 10)
+        LayoutOps.resolveIndexPointer(s, root), maxHamming = 10)
     },
       Some(simhashIndexOracle)),
 
@@ -3284,7 +3308,7 @@ chunks AS (
           |FROM buckets GROUP BY band""".stripMargin)),
 
     // ... and the MinHash twin — the monitor half that family was
-    // missing (its retune dial is rebuildMinhashIndex's
+    // missing (its retune dial is rebuildMinhashIndexPointer's
     // numHashes/bands). Same rollup over (band, band_key, bn); oracle
     // replays the md5-banding chain into bucket counts.
     ("near_dup_index_stats", (s: SparkSession, dir: String) => {
@@ -4763,26 +4787,28 @@ GROUP BY c.doc_id""")),
       Some(bm25Oracle)),
 
     // REBUILD lifecycle (r17 — VERDICT r16 #3, the BM25 half): build
-    // from the even doc_ids, append the odd half, REPLAY that append
-    // verbatim (the at-least-once crash/retry that leaves duplicate
-    // posting/doclen rows on disk), then rebuildBm25Index
-    // canonicalizes the whole index — (term, doc_id)/doc_id dedup,
-    // pristine term-sorted re-layout, recomputed stats — behind the
-    // atomic two-rename swap. Same full-corpus oracle as bm25_topk:
+    // from the even doc_ids as the first pointer generation, append
+    // the odd half into it, REPLAY that append verbatim (the
+    // at-least-once crash/retry that leaves duplicate posting/doclen
+    // rows on disk), then rebuildBm25IndexPointer canonicalizes the
+    // whole index — (term, doc_id)/doc_id dedup, pristine term-sorted
+    // re-layout, recomputed stats — into a new generation published
+    // with one pointer write. Same full-corpus oracle as bm25_topk:
     // hash parity certifies post-rebuild answers equal a fresh
     // buildBm25Index over the full corpus.
     ("bm25_index_rebuild", (s: SparkSession, dir: String) => {
       val tag = dirTag(dir)
       val docs = t(s, dir, "documents")
-      val path = s"/tmp/graft_bm25index_rb/$tag"
+      val root = s"/tmp/graft_bm25index_rb/$tag"
       if (fixtureMemo.add(s"bm25index_rb|$dir")) {
-        TextOps.buildBm25Index(docs.filter(col("doc_id") % 2 === 0), path)
+        val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
+          TextOps.buildBm25Index(docs.filter(col("doc_id") % 2 === 0), g))
         val odd = docs.filter(col("doc_id") % 2 =!= 0)
-        TextOps.appendToBm25Index(odd, path)
-        TextOps.appendToBm25Index(odd, path) // at-least-once replay
-        TextOps.rebuildBm25Index(s, path)
+        TextOps.appendToBm25Index(odd, gen1)
+        TextOps.appendToBm25Index(odd, gen1) // at-least-once replay
+        TextOps.rebuildBm25IndexPointer(s, root)
       }
-      TextOps.bm25AgainstIndex(s, path,
+      TextOps.bm25AgainstIndex(s, LayoutOps.resolveIndexPointer(s, root),
         Seq("hash", "join", "vector"), kTop = 20)
     },
       Some(bm25Oracle)),
@@ -6814,58 +6840,25 @@ GROUP BY c.doc_id""")),
            |FROM filled CROSS JOIN tot""".stripMargin)),
 
     // RE-TRAIN lifecycle (r17 — VERDICT r16 #3): the index is built
-    // from the EVEN vec_ids, the odd half appended with the codebook
-    // frozen, the odd append REPLAYED verbatim (the at-least-once
-    // crash/retry, leaving duplicate rows on disk), and then
-    // rebuildIvfIndex retrains the codebook over the full stored
-    // corpus — dedup by vec_id, fresh Lloyd, pristine cell layout —
-    // into a staging sibling published by the atomic two-rename swap.
-    // Oracle = the full-corpus trained chain VERBATIM (the
-    // ivf_index_topk oracle): hash parity certifies post-rebuild
-    // answers equal a fresh buildIvfIndex over the full corpus — the
-    // retrain retrained, the dedup purged, the swap lost nothing.
-    ("ivf_index_rebuild", (s: SparkSession, dir: String) => {
-      val tag = dirTag(dir)
-      val emb = t(s, dir, "embeddings")
-      val path = s"/tmp/graft_ivfindex_rb/$tag"
-      if (fixtureMemo.add(s"ivfindex_rb|$dir")) {
-        VectorOps.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0), path,
-          nCentroids = 16, iters = 2)
-        val odd = emb.filter(col("vec_id") % 2 =!= 0)
-        VectorOps.appendToIvfIndex(odd, path)
-        VectorOps.appendToIvfIndex(odd, path) // at-least-once replay
-        VectorOps.rebuildIvfIndex(s, path)
-      }
-      VectorOps.ivfIndexTopK(emb.filter(col("vec_id") < 16), path, k = 5)
-    },
+    // from the EVEN vec_ids as the first pointer generation, the odd
+    // half appended into it with the codebook frozen, the odd append
+    // REPLAYED verbatim (the at-least-once crash/retry, leaving
+    // duplicate rows on disk), and then rebuildIvfIndexPointer
+    // retrains the codebook over the full stored corpus — dedup by
+    // vec_id, fresh Lloyd, pristine cell layout — into a new
+    // generation published with ONE pointer-object write. Readers
+    // resolve the live generation and query it unchanged. Oracle =
+    // the full-corpus trained chain VERBATIM (the ivf_index_topk
+    // oracle): hash parity certifies post-rebuild answers equal a
+    // fresh buildIvfIndex over the full corpus — the retrain
+    // retrained, the dedup purged, the publish lost nothing.
+    ("ivf_index_rebuild", (s: SparkSession, dir: String) =>
+      ivfRebuildLifecycle(s, dir, "ivfindex_rb"),
       Some(ivfIndexTopkOracle)),
 
-    // The SAME retrain lifecycle through the POINTER publish protocol
-    // (r18 — VERDICT r17 #4): object stores refuse the two-rename swap
-    // (non-atomic copy+delete rename), so their indexes live under a
-    // pointer root of immutable generation directories and publish
-    // with ONE pointer-object write. First publish, frozen-codebook
-    // append, verbatim replay, rebuildIvfIndexPointer — readers
-    // resolve the live generation and query it unchanged. Oracle =
-    // the full-corpus trained chain VERBATIM again: hash parity
-    // certifies the pointer path answers exactly like the rename-swap
-    // path and a fresh full build.
-    ("ivf_index_rebuild_pointer", (s: SparkSession, dir: String) => {
-      val tag = dirTag(dir)
-      val emb = t(s, dir, "embeddings")
-      val root = s"/tmp/graft_ivfindex_rbp/$tag"
-      if (fixtureMemo.add(s"ivfindex_rbp|$dir")) {
-        val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
-          VectorOps.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0), g,
-            nCentroids = 16, iters = 2))
-        val odd = emb.filter(col("vec_id") % 2 =!= 0)
-        VectorOps.appendToIvfIndex(odd, gen1)
-        VectorOps.appendToIvfIndex(odd, gen1) // at-least-once replay
-        VectorOps.rebuildIvfIndexPointer(s, root)
-      }
-      VectorOps.ivfIndexTopK(emb.filter(col("vec_id") < 16),
-        LayoutOps.resolveIndexPointer(s, root), k = 5)
-    },
+    // The same lifecycle under a second pointer root.
+    ("ivf_index_rebuild_pointer", (s: SparkSession, dir: String) =>
+      ivfRebuildLifecycle(s, dir, "ivfindex_rbp"),
       Some(ivfIndexTopkOracle)),
 
     // BATCH retrieval against the persisted BM25 index — the standing-
@@ -7393,27 +7386,31 @@ GROUP BY c.doc_id""")),
 
     // REBUILD lifecycle for the compressed twin (r17 — completing
     // VERDICT r16 #3 across all three persisted index families): half
-    // build + half append + that append REPLAYED (at-least-once
-    // duplicates on disk), then rebuildIvfPqIndex retrains BOTH
-    // codebooks from the SOURCE corpus (codes are lossy — the index
-    // cannot retrain from itself), re-encodes with vec_id dedup, and
-    // publishes via the atomic swap. Oracle = the IVFADC chain
-    // verbatim: hash parity certifies rebuild == fresh full build.
+    // build published as the first pointer generation + half append
+    // into it + that append REPLAYED (at-least-once duplicates on
+    // disk), then rebuildIvfPqIndexPointer retrains BOTH codebooks
+    // from the SOURCE corpus (codes are lossy — the index cannot
+    // retrain from itself), re-encodes with vec_id dedup, and
+    // publishes a new generation with one pointer write. Oracle = the
+    // IVFADC chain verbatim: hash parity certifies rebuild == fresh
+    // full build.
     ("ivfpq_index_rebuild", (s: SparkSession, dir: String) => {
       val tag = dirTag(dir)
       val emb = t(s, dir, "embeddings")
-      val path = s"/tmp/graft_ivfpqindex_rb/$tag"
+      val root = s"/tmp/graft_ivfpqindex_rb/$tag"
       if (fixtureMemo.add(s"ivfpqindex_rb|$dir")) {
         val half = emb.count() / 2
         require(half >= 16, s"ivfpq_index_rebuild: corpus too small")
-        VectorOps.buildIvfPqIndex(emb.filter(col("vec_id") < half), path,
-          m = 8, kCent = 16, nCentroids = 16)
+        val gen1 = LayoutOps.withPointerGeneration(s, root)(g =>
+          VectorOps.buildIvfPqIndex(emb.filter(col("vec_id") < half), g,
+            m = 8, kCent = 16, nCentroids = 16))
         val rest = emb.filter(col("vec_id") >= half)
-        VectorOps.appendToIvfPqIndex(rest, path)
-        VectorOps.appendToIvfPqIndex(rest, path) // at-least-once replay
-        VectorOps.rebuildIvfPqIndex(emb, path)
+        VectorOps.appendToIvfPqIndex(rest, gen1)
+        VectorOps.appendToIvfPqIndex(rest, gen1) // at-least-once replay
+        VectorOps.rebuildIvfPqIndexPointer(emb, root)
       }
-      VectorOps.ivfPqIndexTopK(emb.filter(col("vec_id") < 16), path, k = 5)
+      VectorOps.ivfPqIndexTopK(emb.filter(col("vec_id") < 16),
+        LayoutOps.resolveIndexPointer(s, root), k = 5)
     },
       Some(ivfPqAdcOracle)),
 

@@ -105,9 +105,11 @@ object Fixtures {
           lit(sy * sx))
       else {
         val base = img * 31 + tt * 13 + cc * 7 + zz * 3
-        // floor-div for the row index: Column./ is DOUBLE division
+        // floor-div for the row index: Column./ is DOUBLE division;
+        // the square is taken in long — p * p in int overflows above
+        // 46,340 px per plane
         transform(sequence(lit(0), lit(sy * sx - 1)), p =>
-          ((base + p * p * (lit(1) +
+          ((base + p.cast("long") * p * (lit(1) +
             (zz + floor(p / lit(sx)).cast("int")) % 2))
             % 65536).cast("int"))
       }

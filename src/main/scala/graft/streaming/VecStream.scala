@@ -39,14 +39,14 @@ object VecStream {
    * with [[graft.operators.VectorOps.ivfIndexTopK]]'s
    * `absorbReplays = true` (rank-window dedup; trades the partial
    * window limit's k-bounded shuffle) from the crash until
-   * [[graft.operators.VectorOps.rebuildIvfIndex]] purges the
+   * [[graft.operators.VectorOps.rebuildIvfIndexPointer]] purges the
    * duplicates from disk. What neither absorbs: a feed that re-keys
    * an existing vec_id to CHANGED embedding bytes — that is an
    * update, not a replay, and is unsupported (both rows rank).
    * Quantization drift under a shifting corpus is the documented
    * trade — monitor with
    * [[graft.operators.VectorOps.ivfIndexStats]]; re-train =
-   * [[graft.operators.VectorOps.rebuildIvfIndex]]. Appends serialize
+   * [[graft.operators.VectorOps.rebuildIvfIndexPointer]]. Appends serialize
    * through the single writer. Blocks until the AvailableNow drain
    * finishes; the query is stopped before a timeout surfaces.
    */
@@ -121,7 +121,7 @@ object VecStream {
    * default probe read's topK until repaired — query
    * [[graft.operators.VectorOps.ivfPqIndexTopK]] with
    * `absorbReplays = true` from the crash until
-   * [[graft.operators.VectorOps.rebuildIvfPqIndex]] purges them;
+   * [[graft.operators.VectorOps.rebuildIvfPqIndexPointer]] purges them;
    * re-keyed (changed-embedding) vec_ids are unsupported.
    */
   def ivfPqIngestRun(stream: DataFrame, indexPath: String,

@@ -60,7 +60,9 @@ object BasketScale {
     val dir = s"/tmp/graft_basketscale/${nB}_${itemsPerB}_$dupF"
     val p1 = s"$dir/dup1.parquet"
     val pN = s"$dir/dupN.parquet"
-    if (!new java.io.File(p1).exists()) {
+    // both files, not just the first: an interrupt between the two
+    // writes must regenerate rather than fail every later run on dupN
+    if (!new java.io.File(p1).exists() || !new java.io.File(pN).exists()) {
       base.write.mode("overwrite").parquet(p1)
       // SCATTER the duplicate copies across the feed (global order by a
       // copy-salted hash): adjacent duplicates would let the shuffle

@@ -171,8 +171,8 @@ object GenSf {
   }
 
   /** The embeddings table alone (factored out of [[generate]], r17 —
-    * the [[documentsDf]] discipline, so scale tools (RebuildScale)
-    * can generate an embeddings corpus at any sf without writing the
+    * the [[documentsDf]] discipline, so scale tools can generate an
+    * embeddings corpus at any sf without writing the
     * whole sf tree): unit-normalized 64-dim gaussians (Box-Muller
     * over two uniform hashes) with a small label-direction bias —
     * matches the driver corpus' per-component std 0.125 and weak

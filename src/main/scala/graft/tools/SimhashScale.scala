@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.BenchMetrics
-import graft.operators.{Caches, TextOps}
+import graft.operators.{Caches, LayoutOps, TextOps}
 
 /**
  * The SimHash index's amortization measurement (r18 — giving the sixth
@@ -18,9 +18,9 @@ import graft.operators.{Caches, TextOps}
  *    whole corpus per batch (what a pipeline without the index pays
  *    daily),
  *  - `appendToSimhashIndex` of the increment + its verbatim replay,
- *  - the `rebuildSimhashIndex` 4→8 re-band RETUNE (stored sigs only —
- *    the claim under test: the retune never re-reads text, so its cost
- *    is sig-table-sized, not corpus-sized),
+ *  - the `rebuildSimhashIndexPointer` 4→8 re-band RETUNE (stored sigs
+ *    only — the claim under test: the retune never re-reads text, so
+ *    its cost is sig-table-sized, not corpus-sized),
  *  - the `simhashIndexStats` monitor (keys-only scan).
  *
  * Build/append/rebuild timed once (eager one-shots); queries warm
@@ -64,10 +64,14 @@ object SimhashScale {
           .coalesce(1).write.mode("overwrite").parquet(incP)
       val inc = spark.read.parquet(incP)
 
-      val idx = s"$dir/idx"
+      // the index lives under a pointer root; `idx` is its first
+      // generation, which the queries and appends below target
+      val root = s"$dir/idx"
+      var idx = ""
       show("buildSimhashIndex", BenchMetrics.timed(spark.sparkContext) {
         Caches.scoped {
-          TextOps.buildSimhashIndex(docs, idx)
+          idx = LayoutOps.withPointerGeneration(spark, root)(g =>
+            TextOps.buildSimhashIndex(docs, g))
         }
         spark.catalog.clearCache()
       })
@@ -125,11 +129,14 @@ object SimhashScale {
         spark.catalog.clearCache()
       })
       show("rebuild(retune 4->8)", BenchMetrics.timed(spark.sparkContext) {
-        Caches.scoped { TextOps.rebuildSimhashIndex(spark, idx, bands = 8) }
+        Caches.scoped {
+          TextOps.rebuildSimhashIndexPointer(spark, root, bands = 8)
+        }
         spark.catalog.clearCache()
       })
+      val live = LayoutOps.resolveIndexPointer(spark, root)
       show("stats(monitor)", median3 {
-        Caches.scoped { TextOps.simhashIndexStats(spark, idx).count(): Unit }
+        Caches.scoped { TextOps.simhashIndexStats(spark, live).count(): Unit }
         spark.catalog.clearCache()
       })
     }

@@ -9,12 +9,13 @@ import graft.operators.{LayoutOps, TextOps, VectorOps}
  * The r17 maintenance half of the persisted-index lifecycle
  * (VERDICT r16 #3 + the ADVICE r16 replay findings):
  *
- *  - `rebuildIvfIndex` / `rebuildBm25Index` retrain/canonicalize into
- *    a staging sibling and publish with an atomic two-rename swap —
- *    a crash in EVERY window leaves the old index answering
- *    identically, and a completed rebuild answers like a fresh build
- *    over the full corpus (duplicate rows from replayed appends
- *    purged);
+ *  - every family's `rebuild*IndexPointer` retrains/canonicalizes into
+ *    a new generation of a pointer root and publishes it with one
+ *    pointer write — a crash in EVERY window leaves the old
+ *    generation answering identically, a completed rebuild answers
+ *    like a fresh build over the full corpus (duplicate rows from
+ *    replayed appends purged), and a plain (pointer-less) index
+ *    directory is refused untouched;
  *  - the probe paths (`ivfIndexTopK` / `ivfPqIndexTopK`) absorb
  *    at-least-once replayed appends via the rank-window dedup — a
  *    duplicated neighbor must not take two ranks and displace a
@@ -55,153 +56,60 @@ class IndexLifecycleSpec extends SparkSpec {
       .map(r => (r.getAs[Int]("rnk"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("score"))).toSeq.sortBy(_._1)
 
-  test("rebuildIvfIndex: retrain over build+replayed-append equals a " +
-      "fresh full-corpus build; duplicate rows purged from disk") {
+  test("rebuildIvfIndexPointer: nParts re-size re-fans the layout and " +
+      "answers are unchanged") {
     val e = emb(64)
-    val dirty = java.nio.file.Files
-      .createTempDirectory("ilc_ivf_rb").toString
-    val fresh = java.nio.file.Files
-      .createTempDirectory("ilc_ivf_fresh").toString
-    VectorOps.buildIvfIndex(e.filter($"vec_id" % 2 === 0), dirty,
-      nCentroids = 8, iters = 2)
-    val odd = e.filter($"vec_id" % 2 =!= 0)
-    VectorOps.appendToIvfIndex(odd, dirty)
-    VectorOps.appendToIvfIndex(odd, dirty) // at-least-once replay
-    assert(spark.read.parquet(s"$dirty/vectors").count() === 96L,
-      "fixture must actually hold replayed duplicates")
-    VectorOps.rebuildIvfIndex(spark, dirty)
-    VectorOps.buildIvfIndex(e, fresh, nCentroids = 8, iters = 2)
-    // dedup happened on disk, not just at query time
-    assert(spark.read.parquet(s"$dirty/vectors").count() === 64L)
-    // the retrained codebook is the fresh full-corpus codebook
-    assert(spark.read.parquet(s"$dirty/centroids").collect().toSet ===
-      spark.read.parquet(s"$fresh/centroids").collect().toSet)
-    val probes = e.filter($"vec_id" < 4)
-    assert(topkRows(dirty, probes) === topkRows(fresh, probes))
-    // staging/backup siblings are gone after a clean commit
-    val parent = new java.io.File(dirty).getParentFile
-    assert(!parent.listFiles().exists(f =>
-      f.getName.contains(".rebuild.") &&
-        f.getName.endsWith(new java.io.File(dirty).getName)))
-    spark.catalog.clearCache()
-  }
-
-  test("rebuildIvfIndex: nParts re-size re-fans the layout and answers " +
-      "are unchanged") {
-    val e = emb(64)
-    val path = java.nio.file.Files
+    val root = java.nio.file.Files
       .createTempDirectory("ilc_ivf_np").toString
-    VectorOps.buildIvfIndex(e, path, nCentroids = 8, iters = 1,
-      nParts = 64)
+    val gen1 = LayoutOps.withPointerGeneration(spark, root)(g =>
+      VectorOps.buildIvfIndex(e, g, nCentroids = 8, iters = 1,
+        nParts = 64))
     val probes = e.filter($"vec_id" < 4)
-    val before = topkRows(path, probes)
-    VectorOps.rebuildIvfIndex(spark, path, nParts = 4)
-    val dirs = new java.io.File(s"$path/vectors").listFiles()
+    val before = topkRows(gen1, probes)
+    VectorOps.rebuildIvfIndexPointer(spark, root, nParts = 4)
+    val live = LayoutOps.resolveIndexPointer(spark, root)
+    val dirs = new java.io.File(s"$live/vectors").listFiles()
       .filter(_.getName.startsWith("part=")).map(_.getName).toSet
     assert(dirs.nonEmpty && dirs.size <= 4,
       s"expected <= 4 part dirs after re-size, got $dirs")
-    assert(spark.read.parquet(s"$path/params")
+    assert(spark.read.parquet(s"$live/params")
       .head().getAs[Int]("n_parts") === 4,
       "manifest must record the new fan-out for later readers")
-    assert(topkRows(path, probes) === before)
+    assert(topkRows(live, probes) === before)
     spark.catalog.clearCache()
   }
 
-  test("rebuild crash windows: a stranded staging dir is swept, and a " +
-      "crash BETWEEN the two renames restores the old index answering " +
-      "identically") {
-    val e = emb(64)
-    val path = java.nio.file.Files
-      .createTempDirectory("ilc_ivf_crash").toString
-    VectorOps.buildIvfIndex(e, path, nCentroids = 8, iters = 1)
-    val probes = e.filter($"vec_id" < 4)
-    val before = topkRows(path, probes)
-    val conf = spark.sessionState.newHadoopConf()
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      LayoutOps.indexStagingPath(path))
-
-    // window 1: crash BEFORE the first rename — complete stage
-    // stranded, live untouched
-    VectorOps.buildIvfIndex(e, tmp.toString, nCentroids = 8, iters = 1)
-    LayoutOps.recoverIndexSwap(spark, path)
-    assert(!fs.exists(tmp), "stranded staging must be swept")
-    assert(topkRows(path, probes) === before)
-
-    // window 2: crash BETWEEN the renames — live retired to the
-    // backup name, staged copy present but never published
-    VectorOps.buildIvfIndex(e, tmp.toString, nCentroids = 8, iters = 1)
-    val old = new org.apache.hadoop.fs.Path(hp.getParent,
-      ".rebuild.old." + hp.getName)
-    require(fs.rename(hp, old)) // the simulated crash point
-    assert(!fs.exists(hp))
-    LayoutOps.recoverIndexSwap(spark, path)
-    assert(fs.exists(hp) && !fs.exists(old) && !fs.exists(tmp))
-    assert(topkRows(path, probes) === before,
-      "the restored OLD index must answer exactly as before the rebuild")
-
-    // a retry after the crash completes normally
-    VectorOps.rebuildIvfIndex(spark, path)
-    assert(topkRows(path, probes) === before,
-      "same corpus + deterministic trainer: the retried rebuild " +
-        "answers identically")
-    // recovery on a healthy index is a no-op
-    LayoutOps.recoverIndexSwap(spark, path)
-    assert(topkRows(path, probes) === before)
-    spark.catalog.clearCache()
-  }
-
-  test("rebuildBm25Index: canonicalizes a replayed-append index to a " +
-      "fresh full build — dedup, stats, layout, answers") {
-    val dirty = java.nio.file.Files
+  test("rebuildBm25IndexPointer: canonicalizes a replayed-append index " +
+      "to a fresh full build — dedup, stats, layout, answers") {
+    val root = java.nio.file.Files
       .createTempDirectory("ilc_bm_rb").toString
     val fresh = java.nio.file.Files
       .createTempDirectory("ilc_bm_fresh").toString
-    TextOps.buildBm25Index(bmCorpus.filter($"doc_id" < 4L), dirty)
+    val gen1 = LayoutOps.withPointerGeneration(spark, root)(g =>
+      TextOps.buildBm25Index(bmCorpus.filter($"doc_id" < 4L), g))
     val inc = bmCorpus.filter($"doc_id" >= 4L)
-    TextOps.appendToBm25Index(inc, dirty)
-    TextOps.appendToBm25Index(inc, dirty) // at-least-once replay
+    TextOps.appendToBm25Index(inc, gen1)
+    TextOps.appendToBm25Index(inc, gen1) // at-least-once replay
     TextOps.buildBm25Index(bmCorpus, fresh)
-    val dupPostings = spark.read.parquet(s"$dirty/postings").count()
-    TextOps.rebuildBm25Index(spark, dirty)
-    assert(spark.read.parquet(s"$dirty/postings").count() <
+    val dupPostings = spark.read.parquet(s"$gen1/postings").count()
+    TextOps.rebuildBm25IndexPointer(spark, root)
+    val live = LayoutOps.resolveIndexPointer(spark, root)
+    assert(spark.read.parquet(s"$live/postings").count() <
       dupPostings, "replayed posting rows must be purged from disk")
-    assert(spark.read.parquet(s"$dirty/postings").count() ===
+    assert(spark.read.parquet(s"$live/postings").count() ===
       spark.read.parquet(s"$fresh/postings").count())
-    assert(spark.read.parquet(s"$dirty/doclens").count() === 7L)
-    val st = spark.read.parquet(s"$dirty/stats").head()
+    assert(spark.read.parquet(s"$live/doclens").count() === 7L)
+    val st = spark.read.parquet(s"$live/stats").head()
     val sf = spark.read.parquet(s"$fresh/stats").head()
     assert(st.getAs[Long]("n_docs") === sf.getAs[Long]("n_docs"))
     assert(st.getAs[Long]("sum_dl") === sf.getAs[Long]("sum_dl"))
-    assert(bmRows(dirty) === bmRows(fresh))
+    assert(bmRows(live) === bmRows(fresh))
     // nParts re-size through the same path
-    TextOps.rebuildBm25Index(spark, dirty, nParts = 4)
-    assert(spark.read.parquet(s"$dirty/params")
+    TextOps.rebuildBm25IndexPointer(spark, root, nParts = 4)
+    val resized = LayoutOps.resolveIndexPointer(spark, root)
+    assert(spark.read.parquet(s"$resized/params")
       .head().getAs[Int]("n_parts") === 4)
-    assert(bmRows(dirty) === bmRows(fresh))
-    spark.catalog.clearCache()
-  }
-
-  test("rebuildBm25Index crash between the renames: the old index is " +
-      "restored and answers identically") {
-    val path = java.nio.file.Files
-      .createTempDirectory("ilc_bm_crash").toString
-    TextOps.buildBm25Index(bmCorpus, path)
-    val before = bmRows(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
-    TextOps.buildBm25Index(bmCorpus,
-      LayoutOps.indexStagingPath(path)) // a complete stage
-    val old = new org.apache.hadoop.fs.Path(hp.getParent,
-      ".rebuild.old." + hp.getName)
-    require(fs.rename(hp, old)) // simulated crash between the renames
-    LayoutOps.recoverIndexSwap(spark, path)
-    assert(bmRows(path) === before)
-    // the retry self-heals (recoverIndexSwap on entry) and completes
-    TextOps.rebuildBm25Index(spark, path)
-    assert(bmRows(path) === before)
+    assert(bmRows(resized) === bmRows(fresh))
     spark.catalog.clearCache()
   }
 
@@ -262,23 +170,25 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("rebuildIvfPqIndex: retrain-from-source over build+replayed-" +
-      "append equals a fresh full build (codes are lossy, so the " +
-      "corpus is the argument)") {
+  test("rebuildIvfPqIndexPointer: retrain-from-source over " +
+      "build+replayed-append equals a fresh full build (codes are " +
+      "lossy, so the corpus is the argument)") {
     val e16 = emb(64, dims = 16, patterns = 6)
-    val dirty = java.nio.file.Files
+    val root = java.nio.file.Files
       .createTempDirectory("ilc_pq_rb").toString
     val fresh = java.nio.file.Files
       .createTempDirectory("ilc_pq_fresh").toString
-    VectorOps.buildIvfPqIndex(e16.filter($"vec_id" < 32), dirty,
-      m = 4, kCent = 8, nCentroids = 8)
+    val gen1 = LayoutOps.withPointerGeneration(spark, root)(g =>
+      VectorOps.buildIvfPqIndex(e16.filter($"vec_id" < 32), g,
+        m = 4, kCent = 8, nCentroids = 8))
     val rest = e16.filter($"vec_id" >= 32)
-    VectorOps.appendToIvfPqIndex(rest, dirty)
-    VectorOps.appendToIvfPqIndex(rest, dirty) // at-least-once replay
-    assert(spark.read.parquet(s"$dirty/codes").count() === 96L)
-    VectorOps.rebuildIvfPqIndex(e16, dirty) // params from the manifest
+    VectorOps.appendToIvfPqIndex(rest, gen1)
+    VectorOps.appendToIvfPqIndex(rest, gen1) // at-least-once replay
+    assert(spark.read.parquet(s"$gen1/codes").count() === 96L)
+    VectorOps.rebuildIvfPqIndexPointer(e16, root) // params from manifest
     VectorOps.buildIvfPqIndex(e16, fresh, m = 4, kCent = 8,
       nCentroids = 8)
+    val dirty = LayoutOps.resolveIndexPointer(spark, root)
     assert(spark.read.parquet(s"$dirty/codes").count() === 64L,
       "replayed code rows must be purged")
     assert(spark.read.parquet(s"$dirty/pq_book").collect().toSeq ===
@@ -290,9 +200,9 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("rebuildMinhashIndex: re-derives from STORED shingles — same-" +
-      "params rebuild equals a fresh build through a replayed append, " +
-      "and a re-band retune equals a fresh build at the new " +
+  test("rebuildMinhashIndexPointer: re-derives from STORED shingles — " +
+      "same-params rebuild equals a fresh build through a replayed " +
+      "append, and a re-band retune equals a fresh build at the new " +
       "parameters (no corpus text re-read)") {
     import graft.operators.TextOps
     val docs = (0L until 24L).map { i =>
@@ -308,31 +218,34 @@ class IndexLifecycleSpec extends SparkSpec {
         k = k, numHashes = nh, bands = b)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2))).toSeq.sorted
-    val dirty = java.nio.file.Files
+    val root = java.nio.file.Files
       .createTempDirectory("ilc_mh_rb").toString
     val fresh = java.nio.file.Files
       .createTempDirectory("ilc_mh_fresh").toString
-    TextOps.buildMinhashIndex(build, dirty)
-    TextOps.appendToMinhashIndex(inc, dirty)
-    TextOps.appendToMinhashIndex(inc, dirty) // at-least-once replay
+    val gen1 = LayoutOps.withPointerGeneration(spark, root)(g =>
+      TextOps.buildMinhashIndex(build, g))
+    TextOps.appendToMinhashIndex(inc, gen1)
+    TextOps.appendToMinhashIndex(inc, gen1) // at-least-once replay
     TextOps.buildMinhashIndex(ref, fresh)
-    val dupShingles = spark.read.parquet(s"$dirty/shingles").count()
+    val dupShingles = spark.read.parquet(s"$gen1/shingles").count()
     assert(dupShingles > ref.count(),
       "fixture must actually hold replayed shingle rows")
-    TextOps.rebuildMinhashIndex(spark, dirty)
+    TextOps.rebuildMinhashIndexPointer(spark, root)
+    val dirty = LayoutOps.resolveIndexPointer(spark, root)
     assert(spark.read.parquet(s"$dirty/shingles").count() === ref.count(),
       "replayed shingle rows must be purged")
     assert(hits(dirty) === hits(fresh))
     assert(hits(dirty).nonEmpty, "fixture must produce near-dup hits")
     // the retune: re-band 4 -> 6 from stored shingles; equals a fresh
     // build at the new parameters, and the OLD parameters are refused
-    TextOps.rebuildMinhashIndex(spark, dirty, bands = 6)
+    TextOps.rebuildMinhashIndexPointer(spark, root, bands = 6)
+    val retuned = LayoutOps.resolveIndexPointer(spark, root)
     val fresh6 = java.nio.file.Files
       .createTempDirectory("ilc_mh_f6").toString
     TextOps.buildMinhashIndex(ref, fresh6, bands = 6)
-    assert(hits(dirty, b = 6) === hits(fresh6, b = 6))
+    assert(hits(retuned, b = 6) === hits(fresh6, b = 6))
     val ex = intercept[IllegalArgumentException] {
-      TextOps.nearDupAgainstIndex(queries, dirty, threshold = 0.3)
+      TextOps.nearDupAgainstIndex(queries, retuned, threshold = 0.3)
         .collect()
     }
     assert(ex.getMessage.contains("bands"))
@@ -410,10 +323,11 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("rebuildSimhashIndex: the sixth family's lifecycle — same-" +
-      "params rebuild purges a replayed append and equals a fresh " +
+  test("rebuildSimhashIndexPointer: the sixth family's lifecycle — " +
+      "same-params rebuild purges a replayed append and equals a fresh " +
       "build; a 4→8 re-band RETUNE from stored sigs equals a fresh " +
-      "build at the new banding; the pointer twin answers identically") {
+      "build at the new banding, also straight from the dirty " +
+      "generation") {
     val ref = Seq(
       (100L, "the quick brown fox jumps over the lazy dog"),
       (101L, "entirely unrelated reference material"),
@@ -437,33 +351,36 @@ class IndexLifecycleSpec extends SparkSpec {
       .toSet
 
     // dirty: half build + half append + that append REPLAYED
-    val dirty = tmp("shrb_dirty")
+    val dirtyRoot = tmp("shrb_dirty")
     val fresh = tmp("shrb_fresh")
-    TextOps.buildSimhashIndex(ref.filter($"doc_id" <= 101L), dirty)
+    val dirty = LayoutOps.withPointerGeneration(spark, dirtyRoot)(g =>
+      TextOps.buildSimhashIndex(ref.filter($"doc_id" <= 101L), g))
     TextOps.appendToSimhashIndex(ref.filter($"doc_id" >= 102L), dirty)
     TextOps.appendToSimhashIndex(ref.filter($"doc_id" >= 102L), dirty)
     assert(spark.read.parquet(s"$dirty/sigs").count() === 6L,
       "fixture must actually hold replayed duplicate sig rows")
-    TextOps.rebuildSimhashIndex(spark, dirty)
+    TextOps.rebuildSimhashIndexPointer(spark, dirtyRoot)
     TextOps.buildSimhashIndex(ref, fresh)
-    assert(spark.read.parquet(s"$dirty/sigs").count() === 4L,
+    val rebuilt = LayoutOps.resolveIndexPointer(spark, dirtyRoot)
+    assert(spark.read.parquet(s"$rebuilt/sigs").count() === 4L,
       "rebuild must purge replayed sig rows from disk")
-    assert(bandRows(dirty) === bandRows(fresh))
-    assert(pairs(dirty) === pairs(fresh) && pairs(dirty).nonEmpty)
+    assert(bandRows(rebuilt) === bandRows(fresh))
+    assert(pairs(rebuilt) === pairs(fresh) && pairs(rebuilt).nonEmpty)
 
     // the RETUNE: 4 -> 8 bands from STORED sigs (no corpus text);
     // old banding refused afterwards
     val fresh8 = tmp("shrb_fresh8")
-    TextOps.rebuildSimhashIndex(spark, dirty, bands = 8)
+    TextOps.rebuildSimhashIndexPointer(spark, dirtyRoot, bands = 8)
     TextOps.buildSimhashIndex(ref, fresh8, bands = 8)
-    assert(bandRows(dirty) === bandRows(fresh8))
-    assert(pairs(dirty, bands = 8) === pairs(fresh8, bands = 8))
+    val retuned = LayoutOps.resolveIndexPointer(spark, dirtyRoot)
+    assert(bandRows(retuned) === bandRows(fresh8))
+    assert(pairs(retuned, bands = 8) === pairs(fresh8, bands = 8))
     val e = intercept[IllegalArgumentException] {
-      TextOps.simhashAgainstIndex(probe, dirty, maxHamming = 10)
+      TextOps.simhashAgainstIndex(probe, retuned, maxHamming = 10)
     }
     assert(e.getMessage.contains("built with bands=8"))
 
-    // the pointer twin on a file: root answers like the swap twin
+    // a one-step 4 -> 8 retune straight from a dirty generation
     val root = tmp("shrb_root")
     val gen1 = LayoutOps.withPointerGeneration(spark, root)(g =>
       TextOps.buildSimhashIndex(ref.filter($"doc_id" <= 101L), g))
@@ -517,27 +434,49 @@ class IndexLifecycleSpec extends SparkSpec {
       s"expected exact dropDuplicates-on-window semantics, got $got")
   }
 
-  test("index swap scheme guard is an ALLOWLIST that names the pointer " +
-      "lifecycle: s3a refused, unknown schemes (abfss) fail safe, " +
-      "known-atomic filesystems stay allowed") {
-    val ex = intercept[IllegalArgumentException] {
-      LayoutOps.recoverIndexSwap(spark, "s3a://bucket/indexes/ivf")
+  test("rebuild*IndexPointer refuses a plain index directory (no _ptr/) " +
+      "for all five families: IllegalArgumentException naming " +
+      "withPointerGeneration, directory listing unchanged") {
+    val e = emb(64)
+    val e16 = emb(64, dims = 16, patterns = 6)
+    def listing(dir: String): Seq[(String, Long)] = {
+      val base = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(base)
+      try {
+        val it = walk.iterator()
+        val out = Seq.newBuilder[(String, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          out += ((base.relativize(f).toString, f.toFile.length))
+        }
+        out.result().sorted
+      } finally walk.close()
     }
-    assert(ex.getMessage.contains("s3a") &&
-      ex.getMessage.contains("withPointerGeneration") &&
-      ex.getMessage.contains("rebuildIvfIndexPointer"),
-      s"refusal must name the object-store alternative: ${ex.getMessage}")
-    // the old deny-list silently passed abfss (ADVICE r17): an
-    // allowlist fails safe on every unproven scheme
-    val ex2 = intercept[IllegalArgumentException] {
-      LayoutOps.recoverIndexSwap(spark, "abfss://c@acct.dfs.example/idx")
+    val families: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("ivf", p => VectorOps.buildIvfIndex(e, p, nCentroids = 8,
+        iters = 1), p => VectorOps.rebuildIvfIndexPointer(spark, p)),
+      ("ivfpq", p => VectorOps.buildIvfPqIndex(e16, p, m = 4, kCent = 8,
+        nCentroids = 8), p => VectorOps.rebuildIvfPqIndexPointer(e16, p)),
+      ("bm25", p => TextOps.buildBm25Index(bmCorpus, p),
+        p => TextOps.rebuildBm25IndexPointer(spark, p)),
+      ("minhash", p => TextOps.buildMinhashIndex(bmCorpus, p),
+        p => TextOps.rebuildMinhashIndexPointer(spark, p)),
+      ("simhash", p => TextOps.buildSimhashIndex(bmCorpus, p),
+        p => TextOps.rebuildSimhashIndexPointer(spark, p)))
+    for ((name, build, rebuild) <- families) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"ilc_plain_$name").toString
+      build(dir)
+      val before = listing(dir)
+      assert(before.exists(_._1.endsWith(".parquet")),
+        s"$name: fixture must hold a built index")
+      val ex = intercept[IllegalArgumentException](rebuild(dir))
+      assert(ex.getMessage.contains("withPointerGeneration"),
+        s"$name: refusal must name the migration path: ${ex.getMessage}")
+      assert(listing(dir) === before,
+        s"$name: a refused rebuild must leave the directory untouched")
     }
-    assert(ex2.getMessage.contains("abfss"))
-    // local paths (and file: URIs) stay allowed
-    val ok = java.nio.file.Files
-      .createTempDirectory("ilc_swap_ok").toString
-    LayoutOps.recoverIndexSwap(spark, ok)
-    LayoutOps.recoverIndexSwap(spark, s"file:$ok")
+    spark.catalog.clearCache()
   }
 
   test("pointer lifecycle: first publish, replayed append, " +

@@ -33,6 +33,20 @@ class OpsSpec extends SparkSpec {
     assert(df.filter(not(col("a") <=> col("b"))).count() === 0)
   }
 
+  test("syntheticImages(textured = true) squares the pixel index in " +
+      "long: a 256x256 plane (past the int overflow at 46,341 px) " +
+      "matches the closed form") {
+    val px = Fixtures.syntheticImages(spark, 1, t = 1, c = 1, z = 1,
+        sy = 256, sx = 256, textured = true)
+      .select(element_at(col("ome_arrow.planes"), 1).getField("pixels"))
+      .head().getSeq[Int](0)
+    assert(px.length === 65536)
+    // image 0, t = c = z = 0: base 0, pixel p = p^2 * (1 + row % 2)
+    for (p <- Seq(0, 1, 255, 256, 46340, 46341, 65535))
+      assert(px(p) === ((p.toLong * p * (1 + (p / 256) % 2)) % 65536).toInt,
+        s"pixel $p")
+  }
+
   test("graft_pixel_sum matches the aggregate fold") {
     graft.functions.ensureRegistered(spark)
     val df = spark.range(20).select(
