@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
+import graft.operators.OmeOps
 import graft.schema.Fixtures
 import graft.sources.OmeTiff
 import graft.sources.v2.OmeTiffScan
@@ -93,6 +95,145 @@ class DataSourceV2Spec extends SparkSpec {
     val key = col("ome_arrow.id")
     assert(v2.orderBy(key).collect().map(_.toString).toSeq ===
       v1.orderBy(key).collect().map(_.toString).toSeq)
+  }
+
+  // --- omezarr vs the written frame, on every chunk layout ------------
+
+  private type PlaneRow = (String, Int, Int, Int, Seq[Int])
+
+  /** (id, t, c, z, pixels) of every plane, sorted. */
+  private def planeRows(df: DataFrame): Seq[PlaneRow] =
+    OmeOps.explodePlanes(df)
+      .select(col("image_id"), col("t"), col("c"), col("z"), col("pixels"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+        r.getInt(3), r.getSeq[Int](4)))
+      .sortBy(r => (r._1, r._2, r._3, r._4)).toSeq
+
+  /** The metadata a Zarr store keeps, plus each record's plane order. */
+  private def keptMeta(df: DataFrame): Seq[String] =
+    df.select(col("ome_arrow.id").as("id"), col("ome_arrow.name"),
+        col("ome_arrow.pixels_meta.size_t"), col("ome_arrow.pixels_meta.size_c"),
+        col("ome_arrow.pixels_meta.size_z"), col("ome_arrow.pixels_meta.size_y"),
+        col("ome_arrow.pixels_meta.size_x"),
+        col("ome_arrow.pixels_meta.physical_size_x"),
+        col("ome_arrow.pixels_meta.physical_size_y"),
+        col("ome_arrow.pixels_meta.physical_size_z"),
+        col("ome_arrow.pixels_meta.channels.name"),
+        col("ome_arrow.planes.t"), col("ome_arrow.planes.c"),
+        col("ome_arrow.planes.z"))
+      .orderBy(col("id")).collect().map(_.toString).toSeq
+
+  private def zarrReaders: Seq[(String, String => DataFrame)] = Seq(
+    "omezarr" -> (d => spark.read.format("omezarr").load(d)),
+    "readAll" -> (d => graft.sources.OmeZarr.readAll(spark, d)))
+
+  /** Every `<store>/0` level directory of a corpus. */
+  private def levelDirs(d: String): Seq[java.io.File] =
+    new java.io.File(d).listFiles.filter(_.getName.endsWith(".zarr"))
+      .map(new java.io.File(_, "0")).toSeq
+
+  private def patch(f: java.io.File, from: String, to: String): Unit = {
+    val doc = new String(Files.readAllBytes(f.toPath), "UTF-8")
+    assert(doc.contains(from), s"fixture drift: no $from in $f")
+    Files.write(f.toPath, doc.replace(from, to).getBytes("UTF-8"))
+  }
+
+  /** v2 `t.c.z.y.x` chunk files -> the nested `t/c/z/y/x` layout. */
+  private def nestV2Keys(d: String): Unit = levelDirs(d).foreach { lvl =>
+    lvl.listFiles.filter(_.getName.matches("""\d+(\.\d+){4}""")).foreach { f =>
+      val parts = f.getName.split("\\.")
+      val dir = new java.io.File(lvl, parts.init.mkString("/"))
+      dir.mkdirs()
+      assert(f.renameTo(new java.io.File(dir, parts.last)))
+    }
+    patch(new java.io.File(lvl, ".zarray"),
+      "\"dimension_separator\": \".\"", "\"dimension_separator\": \"/\"")
+  }
+
+  /** v3 `c/t/c/z/y/x` chunk files -> the flat `c.t.c.z.y.x` layout. */
+  private def flattenV3Keys(d: String): Unit = levelDirs(d).foreach { lvl =>
+    import scala.jdk.CollectionConverters._
+    val cDir = lvl.toPath.resolve("c")
+    val files = Files.walk(cDir).iterator().asScala
+      .filter(Files.isRegularFile(_)).toList
+    files.foreach { f =>
+      val key = lvl.toPath.relativize(f).iterator().asScala.mkString(".")
+      Files.move(f, lvl.toPath.resolve(key))
+    }
+    Files.walk(cDir).iterator().asScala.toList.reverse.foreach(Files.delete)
+    patch(new java.io.File(lvl, "zarr.json"),
+      "\"separator\": \"/\"", "\"separator\": \".\"")
+  }
+
+  test("omezarr and readAll reproduce the written frame on every chunk layout") {
+    val src = Fixtures.corpus4d(spark)
+    val want = planeRows(src)
+    val wantMeta = keptMeta(src)
+    def corpus(name: String)(write: String => Unit): String = {
+      val d = Files.createTempDirectory(s"dsv2_zarr_$name").toString
+      write(d)
+      d
+    }
+    val w = graft.sources.OmeZarr
+    val hole = ("i4d-0002", 1, 0, 1)
+    val noPlanes = col("ome_arrow").dropFields("planes").as("ome_arrow")
+    val layouts: Seq[(String, String, Seq[PlaneRow])] = Seq(
+      ("v2 '.' plane chunks", corpus("v2dot")(w.write(src, _)), want),
+      ("v2 '/' plane chunks", corpus("v2slash") { d =>
+        w.write(src, d); nestV2Keys(d) }, want),
+      ("v2 multi-plane grid", corpus("v2multi")(
+        w.write(src, _, chunks = Some(Seq(2, 1, 2, 8, 8)))), want),
+      ("v2 sub-plane grid", corpus("v2sub")(
+        w.write(src, _, chunks = Some(Seq(1, 1, 2, 4, 8)))), want),
+      ("v3 '/' plane chunks", corpus("v3slash")(w.write(src, _, zarrFormat = 3)),
+        want),
+      ("v3 '.' plane chunks", corpus("v3dot") { d =>
+        w.write(src, d, zarrFormat = 3); flattenV3Keys(d) }, want),
+      ("v3 sharding_indexed", corpus("v3shard")(w.write(src, _,
+        zarrFormat = 3, compressor = "zstd", shardZ = true)), want),
+      ("v2 missing chunk", corpus("v2hole") { d =>
+        w.write(src, d)
+        assert(new java.io.File(s"$d/${hole._1}.zarr/0/" +
+          s"${hole._2}.${hole._3}.${hole._4}.0.0").delete())
+      }, want.map {
+        case (id, t, c, z, px) if (id, t, c, z) == hole => (id, t, c, z, px.map(_ => 0))
+        case r => r
+      }))
+    for ((layout, d, expect) <- layouts) {
+      val meta = w.readMeta(spark, d).select(noPlanes)
+      for ((reader, read) <- zarrReaders) {
+        val got = read(d)
+        assert(planeRows(got) === expect, s"$reader pixels, $layout")
+        assert(keptMeta(got) === wantMeta, s"$reader metadata, $layout")
+        // the record metadata equals readMeta's, field for field
+        val gotMeta = got.select(noPlanes)
+        assert(gotMeta.schema.catalogString === meta.schema.catalogString)
+        assert(gotMeta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq ===
+          meta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq,
+          s"$reader record metadata vs readMeta, $layout")
+      }
+    }
+  }
+
+  test("omezarr and readAll decode foreign u1 and big-endian u2 stores") {
+    val d = Files.createTempDirectory("dsv2_zarr_dtypes")
+    for (s <- Seq("u1_store.zarr", "bigu2_store.zarr"))
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"src/test/resources/$s"), d.resolve(s).toFile)
+    val expect = for (id <- Seq("bigu2_store", "u1_store"); z <- 0 to 1)
+      yield (id, 0, 0, z, (0 until 12).map(_ + 100 * z))
+    for ((reader, read) <- zarrReaders) {
+      val got = read(d.toString)
+      assert(planeRows(got) === expect, reader)
+      val meta = got.select(col("ome_arrow.name").as("name"),
+          col("ome_arrow.pixels_meta.physical_size_x"),
+          col("ome_arrow.pixels_meta.physical_size_z"),
+          col("ome_arrow.pixels_meta.channels.name").as("channels"))
+        .orderBy(col("name")).collect().map(r => (r.getString(0),
+          r.getFloat(1), r.getFloat(2), r.getSeq[String](3))).toSeq
+      assert(meta === Seq(("bigu2_store.zarr", 0.5f, 2.0f, Seq("DNA")),
+        ("u1_store.zarr", 0.5f, 2.0f, Seq("DNA"))), reader)
+    }
   }
 
   test("omezarr metadata + coordinate queries open zero chunk files") {
