@@ -140,7 +140,8 @@ object ProfileOps {
    * the per-basket pair fan-out ≤ B², so one pathological mega-basket
    * cannot emit millions of pairs; (3) the pair generation is a
    * basket-keyed self-join (equi-join, bounded fan-out), aggregated
-   * with map-side combine; (4) item counts and the basket total
+   * with map-side combine, over only the items in >= `minCount`
+   * baskets (Apriori); (4) item counts and the basket total
    * broadcast back onto the (already reduced) pair table;
    * (5) top-`topK` is a TakeOrdered, never a global sort.
    */
@@ -177,8 +178,14 @@ object ProfileOps {
     val nB = broadcast(sized.agg(
       countDistinct(col("b")).cast("long").as("n_baskets")))
     val ic = sized.groupBy(col("i")).agg(count(lit(1)).as("ci"))
-    val pairs = sized.alias("x")
-      .join(sized.alias("y"),
+    // Apriori prune: n_pairs <= min(ca, cb), so an item in fewer than
+    // minCount baskets is in no surviving pair. The broadcast semi-join
+    // keeps `sized`'s hashpartitioning(b) for the self-join.
+    val frequent = sized.join(
+      broadcast(ic.where(col("ci") >= minCount).select(col("i"))),
+      Seq("i"), "left_semi")
+    val pairs = frequent.alias("x")
+      .join(frequent.alias("y"),
         col("x.b") === col("y.b") && col("x.i") < col("y.i"))
       .groupBy(col("x.i").as("item_a"), col("y.i").as("item_b"))
       .agg(count(lit(1)).cast("long").as("n_pairs"))

@@ -22,12 +22,15 @@ import graft.schema._
  *    `zarr.json` metadata, chunk keys `c/t/c/z/y/x` (default encoding,
  *    "/" or "." separator), `bytes` + optional compression codecs.
  *
- * Chunking is one chunk per (t,c,z) plane (`chunks = [1,1,1,Y,X]`), which
- * makes the chunk file the unit of distribution both ways: export is a
- * parallel `foreachPartition` over exploded planes (no driver pixel
- * traffic, no whole-volume densify — the reference's single-node memory
- * cliff, export.py:292, does not exist here), and ingest fans chunk
- * decode out over `binaryFile`.
+ * Chunking is one chunk per (t,c,z) plane (`chunks = [1,1,1,Y,X]`) by
+ * default. Export is a parallel `foreachPartition` over exploded planes
+ * (no driver pixel traffic, no whole-volume densify — the reference's
+ * single-node memory cliff, export.py:292, does not exist here). Ingest
+ * is the `omezarr` DataSourceV2 scan: one store per partition, whose
+ * reader decodes, assembles and zero-fills the record, so a read has no
+ * shuffle. The trade-off: the image is the unit of parallelism, as in
+ * the `ometiff` source — chunk decode inside one store runs in one task,
+ * and the record it builds is one row anyway.
  *
  * Codecs: `null` (raw), `zlib` (JDK Inflater; v3 writes its `gzip`
  * codec), `zstd` (zstd-jni from Spark's own jars; raw frames, matching
@@ -791,8 +794,8 @@ object OmeZarr {
   }
 
   /** Decode one chunk (or shard) FILE of store `c` into its
-    * `(t, c, z, pixels)` planes — the executor-side kernel shared by the
-    * DataFrame read path and the `omezarr` DataSourceV2 reader. */
+    * `(t, c, z, pixels)` planes — the executor-side kernel of the
+    * `omezarr` partition reader for plane, multi-plane and shard files. */
   private[sources] def decodeChunkFile(c: StoreConfig, p: String,
       raw: Array[Byte]): Seq[(Int, Int, Int, Seq[Int])] = {
     val expect = c.sy * c.sx * (if (c.u1) 1 else 2)
@@ -906,10 +909,9 @@ object OmeZarr {
   /**
    * Decode one SUB-PLANE-chunked file into plane pieces
    * `(t, c, z, gy, gx, h, w, pixels)` — `gy/gx` the piece's top-left in
-   * the full plane, `pixels` row-major h×w. Planes are then assembled
-   * across files by [[assemblePlane]] (distributed: a plane-keyed
-   * aggregation in the DataFrame reader; local: per-store in the v2
-   * partition reader).
+   * the full plane, `pixels` row-major h×w. The `omezarr` partition
+   * reader holds every chunk of its store, so it assembles each plane
+   * locally with [[assemblePlane]].
    */
   private[sources] def decodeChunkPieces(c: StoreConfig, p: String,
       raw: Array[Byte]): Seq[(Int, Int, Int, Int, Int, Int, Int, Seq[Int])] = {
@@ -968,91 +970,13 @@ object OmeZarr {
     out.toSeq
   }
 
-  /**
-   * Shared read core: N stores -> N canonical records in a SINGLE job.
-   * Metadata parses driver-side per store, but all chunk files across
-   * all stores flow through one `binaryFile` load and one nest shuffle —
-   * a 10,000-store corpus is one plan, not 10,000 unioned plans. Missing
-   * chunks zero-fill (Zarr fill_value semantics) via the generated-grid
-   * left join.
-   */
-  private def readStores(spark: SparkSession, configs: Seq[StoreConfig],
-      chunkPaths: Seq[String]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    require(chunkPaths.nonEmpty,
-      s"Zarr: no chunk files under ${configs.map(_.store).mkString(", ")}")
-    val byStem = configs.map(c => c.stem -> c).toMap
-    require(byStem.size == configs.size, "Zarr: duplicate store stems")
-    val confB = spark.sparkContext.broadcast(byStem)
-    // single-store reads may target a root that doesn't end in ".zarr",
-    // where stem extraction from the chunk path can't work — resolve the
-    // lone config directly instead
-    val loneStem = if (configs.size == 1) configs.head.stem else null
-
-    def stemOf(p: String): String =
-      if (loneStem != null) loneStem
-      else {
-        val parts = p.split('/')
-        parts(parts.lastIndexWhere(_.endsWith(".zarr"))).stripSuffix(".zarr")
-      }
-    val binRows = spark.read.format("binaryFile")
-      .load(chunkPaths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    // Sub-plane-chunked stores need their planes assembled across chunk
-    // files: one extra plane-keyed aggregation, taken ONLY when such a
-    // store is present (known at plan time) so the common layouts keep
-    // the single-shuffle plan.
-    val anySub = configs.exists(c => c.shardT == 0 && c.subPlane)
-    val planeRows =
-      if (!anySub)
-        binRows.flatMap { case (p, raw) =>
-          val stem = stemOf(p)
-          decodeChunkFile(confB.value(stem), p, raw)
-            .map { case (t, ch, z, px) => (stem, t, ch, z, px) }
-        }.toDF("image_id", "t", "c", "z", "pixels")
-      else
-        binRows.flatMap { case (p, raw) =>
-          val stem = stemOf(p)
-          val c = confB.value(stem)
-          if (c.shardT > 0 || !c.subPlane)
-            decodeChunkFile(c, p, raw).map { case (t, ch, z, px) =>
-              (stem, t, ch, z, 0, 0, c.sy, c.sx, px)
-            }
-          else decodeChunkPieces(c, p, raw)
-            .map { case (t, ch, z, gy, gx, h, w, px) =>
-              (stem, t, ch, z, gy, gx, h, w, px)
-            }
-        }.groupByKey(r => (r._1, r._2, r._3, r._4))
-          .mapGroups { (key, it) =>
-            (key._1, key._2, key._3, key._4, assemblePlane(confB.value(key._1),
-              it.map(r => (r._5, r._6, r._7, r._8, r._9))))
-          }.toDF("image_id", "t", "c", "z", "pixels")
-
-    // zero-fill grid for every store, generated on executors
-    val grid = spark.createDataset(configs.map(c =>
-        (c.stem, c.st, c.sc, c.sz, c.sy * c.sx)))
-      .flatMap { case (stem, st, sc, sz, planeLen) =>
-        for (t <- 0 until st; ch <- 0 until sc; z <- 0 until sz)
-          yield (stem, t, ch, z, planeLen)
-      }.toDF("image_id", "t", "c", "z", "plane_len")
-    val filled = grid.join(planeRows, Seq("image_id", "t", "c", "z"), "left")
-      .select(col("image_id"), col("t"), col("c"), col("z"),
-        coalesce(col("pixels"),
-          array_repeat(lit(0), col("plane_len"))).as("pixels"))
-
-    OmeOps.nestPlanes(filled.join(broadcast(metaFrame(spark, configs)),
-      Seq("image_id")))
-  }
-
-  /** Per-store (image_id, record_meta) rows, built as expressions over
-    * the driver-parsed store configs — no chunk I/O of any kind. */
+  /** Per-store `record_meta` rows for [[readMeta]], built as expressions
+    * over the driver-parsed store configs — no chunk I/O of any kind. */
   private def metaFrame(spark: SparkSession,
       configs: Seq[StoreConfig]): DataFrame = {
     spark.createDataset(configs)(
       org.apache.spark.sql.Encoders.product[StoreConfig]).toDF()
-      .select(col("stem").as("image_id"), struct(
+      .select(struct(
         lit(OmeSchema.TagType).as("type"), lit(OmeSchema.Version).as("version"),
         col("stem").as("id"), col("name").as("name"),
         lit(new Timestamp(0L)).cast("timestamp").as("acquisition_datetime"),
@@ -1079,24 +1003,16 @@ object OmeZarr {
 
   /**
    * Read one OME-Zarr image directory (level `levelPath`, default "0")
-   * into a single canonical record — v2 or v3, auto-detected.
+   * into a single canonical record — v2 or v3, auto-detected. This is the
+   * `omezarr` source: `spark.read.format("omezarr").option("level", ..)`.
    */
-  def read(spark: SparkSession, path: String, levelPath: String = "0"): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    require(fs.exists(root), s"No such Zarr store: $path")
-    val config = parseConfig(fs, path, levelPath)
-    readStores(spark, Seq(config), listChunks(fs, config, levelPath))
-  }
+  def read(spark: SparkSession, path: String, levelPath: String = "0"): DataFrame =
+    spark.read.format("omezarr").option("level", levelPath).load(path)
 
-  /** Read every `*.zarr` child of a directory, one record each (see
-    * [[readStores]] for the single-job layout). */
-  def readAll(spark: SparkSession, dir: String, levelPath: String = "0"): DataFrame = {
-    val configs = corpusConfigs(spark, dir, levelPath)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    readStores(spark, configs, configs.flatMap(listChunks(fs, _, levelPath)))
-  }
+  /** Read every `*.zarr` child of a directory, one record each (the same
+    * `omezarr` scan as [[read]]: one store per partition). */
+  def readAll(spark: SparkSession, dir: String, levelPath: String = "0"): DataFrame =
+    read(spark, dir, levelPath)
 
   /**
    * METADATA-ONLY corpus read: canonical records with correct id/name/
@@ -1115,15 +1031,21 @@ object OmeZarr {
         .as(OmeSchema.DefaultColumn))
   }
 
-  /** Configs for a path that is either one `.zarr` store or a corpus
-    * directory of stores — the DataSourceV2 planning entry. */
+  /** Configs for a path that is either one store or a corpus directory
+    * of `*.zarr` stores — the `omezarr` planning entry. A store is told
+    * by its own root metadata (`.zattrs`/`.zarray` or `zarr.json`), so
+    * its root need not end in ".zarr". */
   private[sources] def storeConfigs(spark: SparkSession, path: String,
-      levelPath: String): Seq[StoreConfig] =
-    if (path.toLowerCase.stripSuffix("/").endsWith(".zarr")) {
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      require(fs.exists(new Path(path)), s"No such Zarr store: $path")
+      levelPath: String): Seq[StoreConfig] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (Seq(".zattrs", ".zarray", "zarr.json").exists(m => fs.exists(new Path(root, m))))
       Seq(parseConfig(fs, path, levelPath))
-    } else corpusConfigs(spark, path, levelPath)
+    else {
+      require(fs.exists(root), s"No such Zarr store: $path")
+      corpusConfigs(spark, path, levelPath)
+    }
+  }
 
   /** Chunk/shard files of one store (driver-side listing). */
   private[sources] def chunkFiles(spark: SparkSession, c: StoreConfig,
@@ -1136,7 +1058,7 @@ object OmeZarr {
    * Canonical record from a store config plus decoded planes, zero-
    * filling the full (t,c,z) grid, t-major — the `omezarr` DataSourceV2
    * row path. Metadata semantics MUST match [[metaFrame]] exactly
-   * (pinned by the v2-vs-readAll parity test).
+   * (pinned by DataSourceV2Spec's written-frame differential test).
    */
   private[sources] def configToRecord(c: StoreConfig,
       decoded: Map[(Int, Int, Int), Seq[Int]],

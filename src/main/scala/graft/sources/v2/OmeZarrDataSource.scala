@@ -35,12 +35,17 @@ import graft.sources.OmeZarr
  *  - `planes` coordinates without `pixels`: the (t,c,z) grid derives from
  *    the array shape — still zero chunk I/O (Zarr grids are dense by
  *    metadata; missing chunks are fill-value anyway);
- *  - `planes.pixels`: chunk/shard files decode through the same kernel
- *    as the DataFrame reader ([[OmeZarr.decodeChunkFile]]).
+ *  - `planes.pixels`: chunk/shard files decode through
+ *    [[OmeZarr.decodeChunkFile]] (sub-plane chunks through
+ *    [[OmeZarr.decodeChunkPieces]] + [[OmeZarr.assemblePlane]]), and
+ *    missing chunks zero-fill in [[OmeZarr.configToRecord]].
  *
  * One store = one `InputPartition` (an image is the parallelism unit,
- * matching the ometiff source); chunk fan-out happens inside the reader.
- * Options: `level` (multiscale level path, default "0").
+ * matching the ometiff source); chunk fan-out happens inside the reader,
+ * so a read has no shuffle. [[OmeZarr.read]] and [[OmeZarr.readAll]] are
+ * this source. A path is one store when its root holds store metadata
+ * (`.zattrs`/`.zarray` or `zarr.json`), else a corpus directory of
+ * `*.zarr` stores. Options: `level` (multiscale level path, default "0").
  */
 class OmeZarrDataSource extends TableProvider with DataSourceRegister {
 

@@ -74,8 +74,8 @@ object PlanAudit {
     audit("cosine_topk", graft.operators.VectorOps.cosineTopK(
       spark.read.parquet(s"$dir/embeddings.parquet"), 8, 10))
 
-    // corpus zarr read: all stores through ONE binaryFile scan + the
-    // nest shuffle + the broadcast zero-fill grid/metadata joins
+    // corpus zarr read: the omezarr scan, one store per partition; the
+    // reader decodes and zero-fills each record, so no exchange
     graft.sources.OmeZarr.write(Fixtures.corpus4d(spark), "/tmp/audit_zarr")
     audit("zarr readAll", graft.sources.OmeZarr.readAll(spark, "/tmp/audit_zarr"))
 
@@ -100,8 +100,8 @@ object PlanAudit {
 
     // r6 operators: multi-probe IVF (probe fan-out must stay broadcast-
     // side; the corpus shuffles once on cluster) and the sub-plane
-    // chunk-grid read (one extra plane-assembly exchange, only when a
-    // sub-plane store is present)
+    // chunk-grid read (planes assemble inside the store's partition, so
+    // still no exchange)
     audit("ivf_multiprobe", graft.operators.VectorOps.ivfTopKProbed(
       spark.read.parquet(s"$dir/embeddings.parquet"), 16, 5, nProbe = 3))
     graft.sources.OmeZarr.write(Fixtures.corpus4d(spark),

@@ -13,7 +13,8 @@ import graft.sources.v2.OmeTiffScan
 
 /** The `ometiff` DataSourceV2: parity with the binaryFile reader plus
   * nested-column pruning reaching the scan (metadata reads must not
-  * decode pixels). */
+  * decode pixels). The `omezarr` DataSourceV2: the written frame back on
+  * every chunk layout, and the same pruning. */
 class DataSourceV2Spec extends SparkSpec {
 
   private lazy val dir: String = {
@@ -82,21 +83,6 @@ class DataSourceV2Spec extends SparkSpec {
 
   // --- omezarr ---------------------------------------------------------
 
-  private lazy val zdir: String = {
-    val d = Files.createTempDirectory("dsv2_zarr").toString
-    graft.sources.OmeZarr.write(Fixtures.corpus4d(spark), d)
-    d
-  }
-
-  test("omezarr v2 source matches readAll exactly (incl. pixels)") {
-    val v2 = spark.read.format("omezarr").load(zdir)
-    val v1 = graft.sources.OmeZarr.readAll(spark, zdir)
-    assert(v2.schema.catalogString === v1.schema.catalogString)
-    val key = col("ome_arrow.id")
-    assert(v2.orderBy(key).collect().map(_.toString).toSeq ===
-      v1.orderBy(key).collect().map(_.toString).toSeq)
-  }
-
   // --- omezarr vs the written frame, on every chunk layout ------------
 
   private type PlaneRow = (String, Int, Int, Int, Seq[Int])
@@ -123,9 +109,8 @@ class DataSourceV2Spec extends SparkSpec {
         col("ome_arrow.planes.z"))
       .orderBy(col("id")).collect().map(_.toString).toSeq
 
-  private def zarrReaders: Seq[(String, String => DataFrame)] = Seq(
-    "omezarr" -> (d => spark.read.format("omezarr").load(d)),
-    "readAll" -> (d => graft.sources.OmeZarr.readAll(spark, d)))
+  private def omezarr(path: String): DataFrame =
+    spark.read.format("omezarr").load(path)
 
   /** Every `<store>/0` level directory of a corpus. */
   private def levelDirs(d: String): Seq[java.io.File] =
@@ -165,7 +150,7 @@ class DataSourceV2Spec extends SparkSpec {
       "\"separator\": \"/\"", "\"separator\": \".\"")
   }
 
-  test("omezarr and readAll reproduce the written frame on every chunk layout") {
+  test("omezarr reproduces the written frame on every chunk layout") {
     val src = Fixtures.corpus4d(spark)
     val want = planeRows(src)
     val wantMeta = keptMeta(src)
@@ -200,40 +185,56 @@ class DataSourceV2Spec extends SparkSpec {
         case r => r
       }))
     for ((layout, d, expect) <- layouts) {
+      val got = omezarr(d)
+      assert(planeRows(got) === expect, s"pixels, $layout")
+      assert(keptMeta(got) === wantMeta, s"metadata, $layout")
+      // the record metadata equals readMeta's, field for field
+      val gotMeta = got.select(noPlanes)
       val meta = w.readMeta(spark, d).select(noPlanes)
-      for ((reader, read) <- zarrReaders) {
-        val got = read(d)
-        assert(planeRows(got) === expect, s"$reader pixels, $layout")
-        assert(keptMeta(got) === wantMeta, s"$reader metadata, $layout")
-        // the record metadata equals readMeta's, field for field
-        val gotMeta = got.select(noPlanes)
-        assert(gotMeta.schema.catalogString === meta.schema.catalogString)
-        assert(gotMeta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq ===
-          meta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq,
-          s"$reader record metadata vs readMeta, $layout")
-      }
+      assert(gotMeta.schema.catalogString === meta.schema.catalogString)
+      assert(gotMeta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq ===
+        meta.orderBy(col("ome_arrow.id")).collect().map(_.toString).toSeq,
+        s"record metadata vs readMeta, $layout")
     }
   }
 
-  test("omezarr and readAll decode foreign u1 and big-endian u2 stores") {
+  test("omezarr decodes foreign u1 and big-endian u2 stores") {
     val d = Files.createTempDirectory("dsv2_zarr_dtypes")
     for (s <- Seq("u1_store.zarr", "bigu2_store.zarr"))
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(s"src/test/resources/$s"), d.resolve(s).toFile)
     val expect = for (id <- Seq("bigu2_store", "u1_store"); z <- 0 to 1)
       yield (id, 0, 0, z, (0 until 12).map(_ + 100 * z))
-    for ((reader, read) <- zarrReaders) {
-      val got = read(d.toString)
-      assert(planeRows(got) === expect, reader)
-      val meta = got.select(col("ome_arrow.name").as("name"),
-          col("ome_arrow.pixels_meta.physical_size_x"),
-          col("ome_arrow.pixels_meta.physical_size_z"),
-          col("ome_arrow.pixels_meta.channels.name").as("channels"))
-        .orderBy(col("name")).collect().map(r => (r.getString(0),
-          r.getFloat(1), r.getFloat(2), r.getSeq[String](3))).toSeq
-      assert(meta === Seq(("bigu2_store.zarr", 0.5f, 2.0f, Seq("DNA")),
-        ("u1_store.zarr", 0.5f, 2.0f, Seq("DNA"))), reader)
+    val got = omezarr(d.toString)
+    assert(planeRows(got) === expect)
+    val meta = got.select(col("ome_arrow.name").as("name"),
+        col("ome_arrow.pixels_meta.physical_size_x"),
+        col("ome_arrow.pixels_meta.physical_size_z"),
+        col("ome_arrow.pixels_meta.channels.name").as("channels"))
+      .orderBy(col("name")).collect().map(r => (r.getString(0),
+        r.getFloat(1), r.getFloat(2), r.getSeq[String](3))).toSeq
+    assert(meta === Seq(("bigu2_store.zarr", 0.5f, 2.0f, Seq("DNA")),
+      ("u1_store.zarr", 0.5f, 2.0f, Seq("DNA"))))
+  }
+
+  test("a store root without the .zarr suffix reads as one store") {
+    val one = Fixtures.corpus4d(spark).filter(col("ome_arrow.id") === "i4d-0001")
+    val want = planeRows(one).map(r => r.copy(_1 = "image"))
+    for (format <- Seq(2, 3)) {
+      val d = Files.createTempDirectory(s"dsv2_zarr_bare_v$format")
+      graft.sources.OmeZarr.write(one, s"$d/img.zarr", zarrFormat = format)
+      Files.move(d.resolve("img.zarr"), d.resolve("image"))
+      for (df <- Seq(graft.sources.OmeZarr.read(spark, s"$d/image"),
+          omezarr(s"$d/image"))) {
+        assert(planeRows(df) === want, s"v$format")
+        assert(df.select(col("ome_arrow.name")).collect()(0).getString(0) ===
+          "Synthetic image 1")
+      }
     }
+    val e = intercept[Exception] {
+      graft.sources.OmeZarr.read(spark, "/nonexistent/missing.zarr").count()
+    }
+    assert(e.getMessage.contains("No such Zarr store"))
   }
 
   test("omezarr metadata + coordinate queries open zero chunk files") {

@@ -116,6 +116,42 @@ class ProfileOpsSpec extends SparkSpec {
       minCount = 2, maxBasketSize = 2, topK = 10).count() === 0L)
   }
 
+  test("associationRules: equals brute force on generated baskets, " +
+      "with items at and just below minCount") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val minCount = 3
+    val maxB = 6
+    val generated = for (b <- 0L until 60L; _ <- 0 until 1 + rnd.nextInt(7))
+      yield (b, rnd.nextInt(12).toLong)
+    // item 100 is in exactly minCount baskets with item 0; item 101 in
+    // one fewer — (0, 100) survives, every pair of 101 is pruned
+    val edge = Seq((1000L, 0L), (1000L, 100L), (1000L, 101L),
+      (1001L, 0L), (1001L, 100L), (1001L, 101L), (1002L, 0L), (1002L, 100L))
+    val rows = generated ++ edge
+    val baskets = rows.distinct.groupBy(_._1).values.map(_.map(_._2).sorted)
+      .filter(_.size <= maxB).toSeq
+    val nB = baskets.size
+    val ci = baskets.flatten.groupBy(identity).map { case (i, xs) => i -> xs.size }
+    def r6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = baskets.flatMap(is => for (a <- is; b <- is if a < b) yield (a, b))
+      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      .filter(_._2 >= minCount).toSeq
+      .map { case ((a, b), n) => (a, b, n, r6(n.toDouble / nB),
+        r6(n.toDouble / ci(a)), r6(n.toDouble * nB / (ci(a).toLong * ci(b)))) }
+      .sortBy(r => (-r._3, r._1, r._2))
+    assert(want.exists(r => (r._1, r._2, r._3) == ((0L, 100L, 3L))))
+    assert(!want.exists(_._2 == 101L))
+    for (topK <- Seq(want.size + 5, 4)) {
+      val got = ProfileOps.associationRules(rows.toDF("b", "i"), "b", "i",
+        minCount = minCount, maxBasketSize = maxB, topK = topK).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+          r.getDouble(4), r.getDouble(5))).toSeq
+      assert(got === want.take(topK), s"topK=$topK")
+    }
+  }
+
   test("trianglesOf: K4 has four triangles") {
     import spark.implicits._
     val edges = (for {
