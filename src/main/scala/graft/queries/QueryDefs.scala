@@ -5648,8 +5648,9 @@ GROUP BY c.doc_id""")),
            |  CAST(z AS INT) AS z, $planeStatsSelect
            |FROM px GROUP BY img, t, c, z""".stripMargin)),
 
-    // DataSourceV2 zarr scan: same pixels as readAll via
-    // spark.read.format("omezarr"), store-per-partition
+    // DataSourceV2 zarr scan called by its format name,
+    // spark.read.format("omezarr"), store-per-partition (readAll is
+    // the same scan)
     ("ome_zarr_dsv2", (s: SparkSession, _: String) => {
       graft.sources.OmeZarr.write(Fixtures.corpus4d(s), "/tmp/graft_q_zarr_v2d")
       planeStatsRows(s.read.format("omezarr").load("/tmp/graft_q_zarr_v2d"))
