@@ -40,6 +40,43 @@ class DataSourceV2Spec extends SparkSpec {
     assert(a.toSeq === b.toSeq)
   }
 
+  test("OmeTiff.read and ometiff each reproduce the written frame") {
+    val src = Fixtures.corpus4d(spark)
+    // what an OME-TIFF keeps: the record fields but `name` (the file
+    // name), with channel names as given when the caller overrides them
+    def kept(df: DataFrame, names: Option[Seq[String]]): Seq[String] =
+      df.select(col("ome_arrow.id").as("id"),
+          col("ome_arrow.pixels_meta.dimension_order"),
+          col("ome_arrow.pixels_meta.type"),
+          col("ome_arrow.pixels_meta.size_t"), col("ome_arrow.pixels_meta.size_c"),
+          col("ome_arrow.pixels_meta.size_z"), col("ome_arrow.pixels_meta.size_y"),
+          col("ome_arrow.pixels_meta.size_x"),
+          col("ome_arrow.pixels_meta.physical_size_x"),
+          col("ome_arrow.pixels_meta.physical_size_y"),
+          col("ome_arrow.pixels_meta.physical_size_z"),
+          names.fold(col("ome_arrow.pixels_meta.channels.name"))(
+            n => typedLit(n)).as("channels"),
+          col("ome_arrow.planes.t"), col("ome_arrow.planes.c"),
+          col("ome_arrow.planes.z"))
+        .orderBy(col("id")).collect().map(_.toString).toSeq
+    val want = planeRows(src)
+    val renamed = Seq("dapi", "gfp")
+    val readers: Seq[(String, Option[Seq[String]], DataFrame)] = Seq(
+      ("OmeTiff.read dir", None, OmeTiff.read(spark, dir)),
+      ("OmeTiff.read glob", None, OmeTiff.read(spark, s"$dir/*.tiff")),
+      ("OmeTiff.read names", Some(renamed), OmeTiff.read(spark, dir, renamed)),
+      ("ometiff dir", None, spark.read.format("ometiff").load(dir)),
+      ("ometiff glob", None, spark.read.format("ometiff").load(s"$dir/*.tiff")),
+      ("ometiff names", Some(renamed), spark.read.format("ometiff")
+        .option("channel_names", renamed.mkString(",")).load(dir)))
+    for ((reader, names, got) <- readers) {
+      assert(planeRows(got) === want, s"pixels, $reader")
+      assert(kept(got, None) === kept(src, names), s"metadata, $reader")
+      assert(got.select(col("ome_arrow.name")).collect().map(_.getString(0)).sorted.toSeq ===
+        (0 until 4).map(i => f"i4d-$i%04d.ome.tiff"), s"file names, $reader")
+    }
+  }
+
   test("metadata query prunes pixels out of the scan schema") {
     val df = spark.read.format("ometiff").load(dir)
       .select(col("ome_arrow.id"), col("ome_arrow.pixels_meta.size_x"))
