@@ -27,27 +27,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE sort-merge -> shuffled-hash conversion bound (r19, guide
-    // §3.1): convert ONLY when every measured post-shuffle build
-    // partition is under this many bytes — a per-partition safety
-    // bound, not a cluster-size constant, so the same value is correct
-    // at any scale (partitions above it keep the spilling sort-merge).
-    // The static planner path (preferSortMergeJoin=false) stays OFF:
-    // it decides from size ESTIMATES, which are unbounded-wrong after
-    // filters/explodes; the AQE path decides from runtime stats.
-    // Parameterised for ops; 0 disables (Spark's default). NOTE
-    // (ADVICE r19): Spark applies the threshold only when it is >=
-    // spark.sql.adaptive.advisoryPartitionSizeInBytes (default 64m) —
-    // a value in (0, 64m) silently disables the conversion rather than
-    // bounding tighter; lower advisory alongside it if you need that.
-    // Firing evidence: tools/ShjProbe (sf1 capped posting join) — at
-    // sf0.1 every convertible join demotes to broadcast first.
-    val shjBound = sys.env.getOrElse("SPARK_GRAFT_SHJ_BOUND", "64m")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjBound)
+      // AQE turns the full outer join of corpus_diff, hybrid_topk,
+      // hybrid_index_topk and the 12 stream_*_check certs from sort-merge
+      // into shuffled hash at sf0.1 under this bound (SCALE.md "The SHJ
+      // bound over the registry")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -170,14 +170,11 @@ object GenSf {
     write(embeddingsDf(spark, sf), "embeddings", 1)
   }
 
-  /** The embeddings table alone (factored out of [[generate]], r17 —
-    * the [[documentsDf]] discipline, so scale tools can generate an
-    * embeddings corpus at any sf without writing the
-    * whole sf tree): unit-normalized 64-dim gaussians (Box-Muller
-    * over two uniform hashes) with a small label-direction bias —
-    * matches the driver corpus' per-component std 0.125 and weak
+  /** The embeddings table: unit-normalized 64-dim gaussians
+    * (Box-Muller over two uniform hashes) with a small label-direction
+    * bias — matches the driver corpus' per-component std 0.125 and weak
     * label clusters. */
-  def embeddingsDf(spark: SparkSession, sf: Double): DataFrame = {
+  private def embeddingsDf(spark: SparkSession, sf: Double): DataFrame = {
     val id = col("id")
     val nVec = math.max(1L, math.round(20000 * sf))
     val gauss = transform(sequence(lit(0), lit(63)), i => {
@@ -205,7 +202,7 @@ object GenSf {
     * except for planted duplicates — every 625th doc is an exact copy
     * of its predecessor (the driver's ~0.16% dup rate) and every 400th
     * a near-dup with ~10% of words replaced by a "dup" marker token.
-    * Exposed so scale tools (Bm25Scale) can generate a documents
+    * Exposed so scale tools (NearDupScale) can generate a documents
     * decade without paying for the full table set. */
   def documentsDf(spark: SparkSession, sf: Double): DataFrame = {
     val id = col("id")

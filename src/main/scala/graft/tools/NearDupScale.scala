@@ -65,9 +65,8 @@ object NearDupScale {
       reps(1)
     }
     // the EXACT rows stream half-a-billion join rows at sf10 — timed
-    // once like SimhashScale's build/append one-shots (a median-of-3
-    // would spend ~2 h re-proving the same completion; counters are
-    // data-deterministic, only the wall wobbles)
+    // once (a median-of-3 would spend ~2 h re-proving the same
+    // completion; counters are data-deterministic, only the wall wobbles)
     def once(body: => Unit): BenchMetrics.Rep =
       BenchMetrics.timed(spark.sparkContext)(body)
 

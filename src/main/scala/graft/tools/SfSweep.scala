@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * operator families that read the sf tables (relational agg/join,
   * exact + LSH dedup, n-gram contamination, LM scoring, retrieval,
   * ANN, events) — the Fixtures-synthetic OME queries scale by image
-  * count, measured separately in [[ScalePoints]].
+  * count (SCALE.md's ScalePoints section).
   *
   * Env knobs: `SPARK_GRAFT_TESTDATA` root (default /root/testdata),
   * `SPARK_GRAFT_SFS` comma list of sf dir names (default the driver

@@ -48,6 +48,20 @@ class DescribeSpec extends SparkSpec {
       "4D timelapse-volume, single-channel - shape (T=7, C=1, Z=5, Y=167, X=439)")
   }
 
+  test("SparkEntry.entry: one row per mixedCorpus image, all four " +
+      "classification branches") {
+    val kinds = Map("i2d" -> "2D image", "i3d" -> "3D image (z-stack)",
+      "mov" -> "movie / timelapse", "i4d" -> "4D timelapse-volume")
+    val want = for ((p, t, c, z) <- Fixtures.MixedFamilies; i <- 0 until 4)
+      yield (f"$p-$i%04d", kinds(p), c > 1, (t, c, z))
+    val got = SparkEntry.entry(spark).collect().map(r =>
+      (r.getAs[String]("id"), r.getAs[String]("type"),
+        r.getAs[Boolean]("is_multichannel"),
+        (r.getAs[Int]("size_t"), r.getAs[Int]("size_c"), r.getAs[Int]("size_z"))))
+    assert(got.sortBy(_._1).toSeq === want.sortBy(_._1))
+    assert(got.map(_._2).toSet === kinds.values.toSet)
+  }
+
   test("conftest fixture golden row") {
     val row = OmeOps.describe(Fixtures.conftestDf(spark)).collect()(0)
     assert(row.getAs[String]("id") === "img-0001")
