@@ -1024,10 +1024,10 @@ object OmeOps {
    */
   def trackObjects(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      maxGap: Int = 0, keyCheck: Boolean = true): DataFrame = {
+      maxGap: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val assigned = trackAssignments(objects, maxDisp, maxIters,
-      driverEdgeLimit, maxGap, keyCheck)
+      driverEdgeLimit, maxGap)
     val wTrack = Window.partitionBy(col("image_id"), col("c"), col("z"),
       col("track_t"), col("track_label")).orderBy(col("t").asc)
     val steps = assigned
@@ -1053,6 +1053,15 @@ object OmeOps {
         round(col("raw_net_dx"), 6).as("net_dx"),
         round(col("raw_path"), 6).as("path_len"),
         round(col("raw_max"), 6).as("max_step"))
+  }
+
+  /** One aggregation job checks that the xxhash64 object keys are
+    * distinct: a collision would silently merge two objects' tracks. */
+  private def requireDistinctKeys(withKeys: DataFrame, op: String): Unit = {
+    val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
+    require(chk.getLong(0) == chk.getLong(1),
+      s"$op: xxhash64 collision across object keys — renumber " +
+        "object labels before tracking")
   }
 
   /**
@@ -1082,7 +1091,7 @@ object OmeOps {
    */
   def trackAssignments(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      maxGap: Int = 0, keyCheck: Boolean = true): DataFrame = {
+      maxGap: Int = 0): DataFrame = {
     require(maxDisp > 0, "trackObjects: maxDisp must be positive")
     require(maxGap >= 0 && maxGap <= 5,
       s"trackObjects: maxGap $maxGap not in [0,5] (each gap level adds " +
@@ -1141,18 +1150,7 @@ object OmeOps {
     def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
       col("c"), col("z"), t, l)
     val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    // one aggregation job for the collision check, not two counts —
-    // OPT-OUT (r12 verdict #5): callers re-tracking in a hot loop over
-    // frames whose labels they already renumbered (or already tracked
-    // once this session) skip the extra job with keyCheck = false; a
-    // collision with the check off silently merges the two colliding
-    // objects' tracks, so the default stays on
-    if (keyCheck) {
-      val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        "trackObjects: xxhash64 collision across object keys — renumber " +
-          "object labels before tracking")
-    }
+    requireDistinctKeys(withKeys, "trackObjects")
     val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
       key(col("tb"), col("lb")).as("nid_b"))
     val cc = TextOps.connectedComponents(edges, maxIters,
@@ -1214,8 +1212,7 @@ object OmeOps {
    * beyond the cap is diameter-independent — see [[trackAssignments]]).
    */
   def trackLineage(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      keyCheck: Boolean = true): DataFrame = {
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackLineage: maxDisp must be positive")
     import org.apache.spark.sql.expressions.Window
     val obj = Caches.persist(objects.select(col("image_id"),
@@ -1254,13 +1251,7 @@ object OmeOps {
     def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
       col("c"), col("z"), t, l)
     val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    // same opt-out collision-check contract as [[trackAssignments]]
-    if (keyCheck) {
-      val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        "trackLineage: xxhash64 collision across object keys — renumber " +
-          "object labels before tracking")
-    }
+    requireDistinctKeys(withKeys, "trackLineage")
     val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
       key(col("tb"), col("lb")).as("nid_b"))
     val cc = TextOps.connectedComponents(edges, maxIters,
@@ -1335,8 +1326,7 @@ object OmeOps {
    * beyond it).
    */
   def trackMerges(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      keyCheck: Boolean = true): DataFrame = {
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackMerges: maxDisp must be positive")
     import org.apache.spark.sql.expressions.Window
     val obj = Caches.persist(objects.select(col("image_id"),
@@ -1373,12 +1363,7 @@ object OmeOps {
     def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
       col("c"), col("z"), t, l)
     val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    if (keyCheck) {
-      val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        "trackMerges: xxhash64 collision across object keys — renumber " +
-          "object labels before tracking")
-    }
+    requireDistinctKeys(withKeys, "trackMerges")
     val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
       key(col("tb"), col("lb")).as("nid_b"))
     val cc = TextOps.connectedComponents(edges, maxIters,
@@ -1455,8 +1440,7 @@ object OmeOps {
    * only cost over [[trackLineage]]; CC through the shared engine.
    */
   def trackEvents(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      keyCheck: Boolean = true): DataFrame = {
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackEvents: maxDisp must be positive")
     import org.apache.spark.sql.expressions.Window
     val obj = Caches.persist(objects.select(col("image_id"),
@@ -1499,12 +1483,7 @@ object OmeOps {
     def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
       col("c"), col("z"), t, l)
     val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    if (keyCheck) {
-      val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        "trackEvents: xxhash64 collision across object keys — renumber " +
-          "object labels before tracking")
-    }
+    requireDistinctKeys(withKeys, "trackEvents")
     val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
       key(col("tb"), col("lb")).as("nid_b"))
     val cc = TextOps.connectedComponents(edges, maxIters,
@@ -1555,11 +1534,10 @@ object OmeOps {
    * frame persists for the two consumers' lifetime.
    */
   def lineageStats(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      keyCheck: Boolean = true): DataFrame = {
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     val keys = Seq("image_id", "c", "z", "lineage_t", "lineage_label")
     val lin = Caches.persist(trackLineage(objects, maxDisp, maxIters,
-      driverEdgeLimit, keyCheck))
+      driverEdgeLimit))
     val maxCells = lin
       .groupBy((keys :+ "t").map(col): _*)
       .agg(count(lit(1)).as("nc"))
@@ -1598,11 +1576,10 @@ object OmeOps {
    * map-side-partial aggregations as [[lineageStats]].
    */
   def eventStats(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
-      keyCheck: Boolean = true): DataFrame = {
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     val keys = Seq("image_id", "c", "z", "lineage_t", "lineage_label")
     val ev = Caches.persist(trackEvents(objects, maxDisp, maxIters,
-      driverEdgeLimit, keyCheck))
+      driverEdgeLimit))
     val maxCells = ev
       .groupBy((keys :+ "t").map(col): _*)
       .agg(count(lit(1)).as("nc"))
