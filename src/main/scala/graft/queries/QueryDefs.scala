@@ -2799,8 +2799,8 @@ chunks AS (
            |  CAST(z AS INT) AS z, $planeStatsSelect
            |FROM px GROUP BY img, t, c, z""".stripMargin)),
 
-    // DataSourceV2 scan path: same pixels as the binaryFile reader, via
-    // spark.read.format("ometiff") and Catalyst column pushdown
+    // DataSourceV2 scan path called directly: spark.read.format("ometiff")
+    // and Catalyst column pushdown (OmeTiff.read is a thin call of it)
     ("ome_tiff_dsv2", (s: SparkSession, _: String) => {
       graft.sources.OmeTiff.write(Fixtures.corpus4d(s), "/tmp/graft_q_tiff_v2")
       planeStatsRows(s.read.format("ometiff").load("/tmp/graft_q_tiff_v2"))

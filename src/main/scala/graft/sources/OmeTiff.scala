@@ -3,17 +3,18 @@ package graft.sources
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.schema._
 
 /**
  * TIFF / OME-TIFF source and sink (reference: ingest.py:293-400 `from_tiff`,
- * export.py:116-228 `to_ome_tiff`), built on `binaryFile` + the
- * self-contained `TiffCodec` — the decode loop the reference runs on one
- * process becomes a per-file executor task, so a directory of thousands of
- * TIFFs ingests in parallel with no driver involvement beyond listing.
+ * export.py:116-228 `to_ome_tiff`), built on the `ometiff` DataSourceV2
+ * scan + the self-contained `TiffCodec` — the decode loop the reference
+ * runs on one process becomes a per-file executor task, so a directory of
+ * thousands of TIFFs ingests in parallel with no driver involvement beyond
+ * listing.
  *
  * Shape resolution: OME-XML (ImageDescription) sizes + DimensionOrder when
  * present; otherwise a multi-page file is treated as a Z-stack (1,1,N) and
@@ -36,15 +37,10 @@ object OmeTiff {
         Some(colors.lift(i).flatten.getOrElse(0xFFFFFFFFL)))
     }
 
-  /** Decode one TIFF file into a canonical record. `withPixels = false`
-    * decodes headers/XML only (plane pixel arrays come back empty) — the
-    * pruned-scan path used when a query never touches `planes.pixels`. */
+  /** Decode one whole TIFF file into a canonical record. */
   private[sources] def decodeRecord(path: String, modTime: Timestamp,
-      bytes: Array[Byte], channelNames: Seq[String] = Nil,
-      withPixels: Boolean = true): OmeArrowRecord =
-    recordFromPages(path, modTime,
-      if (withPixels) TiffCodec.decode(bytes) else TiffCodec.decodeMeta(bytes),
-      channelNames)
+      bytes: Array[Byte], channelNames: Seq[String] = Nil): OmeArrowRecord =
+    recordFromPages(path, modTime, TiffCodec.decode(bytes), channelNames)
 
   /** Metadata-only decode over a random-access source: with
     * [[TiffCodec.PagedTiffData]] only the header/IFD/tag ranges are read
@@ -141,23 +137,19 @@ object OmeTiff {
       planes = planes)
   }
 
-  /** Read TIFF file(s) (path may be a glob) into one record per file. */
+  /** Read TIFF file(s) (path may be a glob or a directory, read one
+    * level deep) into one record per file, through the `ometiff` source.
+    * `channelNames` overrides the channel names; the source takes them as
+    * one comma-separated option that it trims, so a name must be
+    * non-empty, comma-free and unpadded. */
   def read(spark: SparkSession, path: String,
       channelNames: Seq[String] = Nil): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.{tif,tiff,TIF,TIFF}")
-      .load(path)
-      .select(col("path"), col("modificationTime"), col("content"))
-      .as[(String, Timestamp, Array[Byte])]
-    val names = channelNames
-    val records: Dataset[OmeArrowRecord] =
-      bin.map { case (p, ts, bytes) => decodeRecord(p, ts, bytes, names) }
-    records.toDF()
-      .select(struct(col("type"), col("version"), col("id"), col("name"),
-        col("acquisition_datetime"), col("pixels_meta"), col("planes"))
-        .as(OmeSchema.DefaultColumn))
+    require(channelNames.forall(n => n.nonEmpty && n.trim == n && !n.contains(",")),
+      "OmeTiff.read: channel names must be non-empty, without ',' or " +
+        s"surrounding spaces: ${channelNames.mkString("[", "; ", "]")}")
+    val names = if (channelNames.isEmpty) Map.empty[String, String]
+      else Map("channel_names" -> channelNames.mkString(","))
+    spark.read.format("ometiff").options(names).load(path)
   }
 
   /**

@@ -67,7 +67,7 @@ object TiffCodec {
     }
   }
 
-  /** Whole file already in memory (the batch `binaryFile` path). */
+  /** Whole file already in memory (the pixel-decoding reads). */
   final class ArrayTiffData(val bytes: Array[Byte]) extends TiffData {
     def length: Long = bytes.length
     def get(off: Long): Byte = bytes(off.toInt)

@@ -28,8 +28,8 @@ import graft.sources.{OmeTiff, TiffCodec}
  *   spark.read.format("ometiff").load("/data/plates/")    // 1 row per file
  * }}}
  *
- * The Spark-native upgrade over the `binaryFile`-based [[OmeTiff.read]]:
- * Catalyst pushes the REQUIRED (nested) schema into the scan via
+ * [[OmeTiff.read]] is a thin call of this source. Catalyst pushes the
+ * REQUIRED (nested) schema into the scan via
  * `SupportsPushDownRequiredColumns`, so a query that never touches
  * `planes.pixels` — `describe`, shape joins, plane-coordinate queries,
  * `count(*)` — decodes TIFF headers/OME-XML only and skips every strip
@@ -37,8 +37,8 @@ import graft.sources.{OmeTiff, TiffCodec}
  * demand-paged positioned reads (`TiffCodec.PagedTiffData`) — pixel
  * payload bytes never leave storage. At 100 TB that turns metadata
  * analytics over an image lake from a full decode pass into a true
- * header scan, for I/O as well as CPU. Pixel-touching queries behave
- * exactly like [[OmeTiff.read]].
+ * header scan, for I/O as well as CPU. Pixel-touching queries read and
+ * decode the whole file.
  *
  * One file = one `InputPartition` — the same per-image parallelism as the
  * reference's per-file ingest loop (ingest.py:293-400), minus the driver

@@ -11,10 +11,10 @@ import graft.schema.Fixtures
 import graft.sources.OmeTiff
 import graft.sources.v2.OmeTiffScan
 
-/** The `ometiff` DataSourceV2: parity with the binaryFile reader plus
-  * nested-column pruning reaching the scan (metadata reads must not
-  * decode pixels). The `omezarr` DataSourceV2: the written frame back on
-  * every chunk layout, and the same pruning. */
+/** The `ometiff` DataSourceV2: the written frame back through it and
+  * through `OmeTiff.read`, plus nested-column pruning reaching the scan
+  * (metadata reads must not decode pixels). The `omezarr` DataSourceV2:
+  * the written frame back on every chunk layout, and the same pruning. */
 class DataSourceV2Spec extends SparkSpec {
 
   private lazy val dir: String = {
@@ -27,18 +27,6 @@ class DataSourceV2Spec extends SparkSpec {
     df.queryExecution.executedPlan.collectLeaves()
       .collectFirst { case b: BatchScanExec => b.scan }
       .get.asInstanceOf[OmeTiffScan]
-
-  test("ometiff v2 source matches the binaryFile reader exactly") {
-    val v2 = spark.read.format("ometiff").load(dir)
-    val v1 = OmeTiff.read(spark, s"$dir/*.tiff")
-    // nullability differs (encoder-derived v1 marks primitives non-null);
-    // names and types must match exactly
-    assert(v2.schema.catalogString === v1.schema.catalogString)
-    val key = col("ome_arrow.id")
-    val a = v2.orderBy(key).collect().map(_.toString)
-    val b = v1.orderBy(key).collect().map(_.toString)
-    assert(a.toSeq === b.toSeq)
-  }
 
   test("OmeTiff.read and ometiff each reproduce the written frame") {
     val src = Fixtures.corpus4d(spark)
@@ -75,6 +63,11 @@ class DataSourceV2Spec extends SparkSpec {
       assert(got.select(col("ome_arrow.name")).collect().map(_.getString(0)).sorted.toSeq ===
         (0 until 4).map(i => f"i4d-$i%04d.ome.tiff"), s"file names, $reader")
     }
+  }
+
+  test("OmeTiff.read refuses channel names the ometiff option cannot carry") {
+    for (bad <- Seq(Seq("a,b"), Seq("dapi", " gfp"), Seq("")))
+      intercept[IllegalArgumentException](OmeTiff.read(spark, dir, bad))
   }
 
   test("metadata query prunes pixels out of the scan schema") {
