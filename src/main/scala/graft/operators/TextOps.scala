@@ -2222,9 +2222,8 @@ object TextOps {
    * shuffling 445.61 MB at sf10 where direct-exact moved 98.72 — the
    * index must never shuffle more than the direct path). That
    * distinct also absorbs the byte-identical duplicate rows a
-   * crashed-then-retried append leaves behind. Pre-r19 indexes
-   * (no `sig` on band rows) are still served through the legacy
-   * sigs-join; rebuild to migrate.
+   * crashed-then-retried append leaves behind. A pre-r19 index (no
+   * `sig` on band rows) is refused; rebuild to migrate.
    */
   def simhashAgainstIndex(docs: DataFrame, path: String,
       maxHamming: Int = 8, bands: Int = 4,
@@ -2240,43 +2239,37 @@ object TextOps {
       col("doc_id").cast("long").as("doc_id"),
       graft.functions.simhash64(tokens(col("text"))).as("sig")))
     val idx = spark.read.parquet(s"$path/bands")
+    requireSigBands(idx, "simhashAgainstIndex", path, "querying")
     val refOk =
       if (maxBucketSize <= 0) idx
       else idx.filter(col("bn") <= maxBucketSize)
-    val banded = sigsD
+    sigsD
       .select(col("doc_id"), col("sig"),
         posexplode(simhashChunks(col("sig"), bands))
           .as(Seq("band", "chunk")))
-    if (idx.columns.contains("sig"))
-      banded
-        .join(refOk.select(col("band"), col("chunk"), col("ref_id"),
-          col("sig").as("sig_r")), Seq("band", "chunk"))
-        .select(col("doc_id"), col("ref_id"),
-          bit_count(col("sig").bitwiseXOR(col("sig_r"))).cast("int")
-            .as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        // dedup on the PAIR alone: hamming is a function of it, so the
-        // output is identical to a 3-column distinct, and keeping the
-        // determined column out of the grouping keys measurably
-        // shrinks the survivor exchange (sf10 probe: 106.78 → 80.38 MB
-        // on ~10M survivors)
-        .dropDuplicates(Seq("doc_id", "ref_id"))
-    else {
-      // legacy pre-r19 layout: candidates dedup first, then verify
-      // against the sigs table (one extra candidate-sized join)
-      val cand = banded
-        .join(refOk, Seq("band", "chunk"))
-        .select(col("doc_id"), col("sig"), col("ref_id")).distinct()
-      cand
-        .join(spark.read.parquet(s"$path/sigs")
-          .select(col("ref_id"), col("sig").as("sig_r")), Seq("ref_id"))
-        .select(col("doc_id"), col("ref_id"),
-          bit_count(col("sig").bitwiseXOR(col("sig_r"))).cast("int")
-            .as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .dropDuplicates(Seq("doc_id", "ref_id"))
-    }
+      .join(refOk.select(col("band"), col("chunk"), col("ref_id"),
+        col("sig").as("sig_r")), Seq("band", "chunk"))
+      .select(col("doc_id"), col("ref_id"),
+        bit_count(col("sig").bitwiseXOR(col("sig_r"))).cast("int")
+          .as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      // dedup on the PAIR alone: hamming is a function of it, so the
+      // output is identical to a 3-column distinct, and keeping the
+      // determined column out of the grouping keys measurably
+      // shrinks the survivor exchange (sf10 probe: 106.78 → 80.38 MB
+      // on ~10M survivors)
+      .dropDuplicates(Seq("doc_id", "ref_id"))
   }
+
+  /** Band rows without `sig` are the pre-r19 layout, which no current
+    * writer produces: refused, with the rebuild that migrates it. */
+  private def requireSigBands(bands: DataFrame, op: String, path: String,
+      use: String): Unit =
+    require(bands.columns.contains("sig"),
+      s"$op: index at $path uses the pre-r19 layout " +
+        "(no sig column on band rows) — rebuild it " +
+        "(rebuildSimhashIndexPointer on its pointer root, or " +
+        s"buildSimhashIndex) before $use")
 
   /**
    * INCREMENTAL append for the SimHash index — the
@@ -2310,11 +2303,7 @@ object TextOps {
     val touched = inc.select(col("part")).distinct()
       .collect().map(_.getInt(0)).toIndexedSeq
     val base = touchedBandPartitions(spark, path, touched)
-    require(base.columns.contains("sig"),
-      s"appendToSimhashIndex: index at $path uses the pre-r19 layout " +
-        "(no sig column on band rows) — rebuild it " +
-        "(rebuildSimhashIndexPointer on its pointer root, or " +
-        "buildSimhashIndex) before appending")
+    requireSigBands(base, "appendToSimhashIndex", path, "appending")
     val wBucket = Window.partitionBy(col("band"), col("chunk"))
     val wOrd = wBucket.orderBy(col("ref_id").asc)
     val merged = inc

@@ -394,6 +394,27 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("a SimHash bands table without sig (the pre-r19 layout) is refused " +
+      "by both simhashAgainstIndex and appendToSimhashIndex") {
+    val ref = Seq(
+      (100L, "the quick brown fox jumps over the lazy dog"),
+      (101L, "entirely unrelated reference material")
+    ).toDF("doc_id", "text")
+    val built = java.nio.file.Files.createTempDirectory("sh_built").toString
+    val legacy = java.nio.file.Files.createTempDirectory("sh_legacy").toFile
+    TextOps.buildSimhashIndex(ref, built)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(built), legacy)
+    spark.read.parquet(s"$built/bands").drop("sig")
+      .write.mode("overwrite").partitionBy("part").parquet(s"$legacy/bands")
+    val q = intercept[IllegalArgumentException](
+      TextOps.simhashAgainstIndex(ref, legacy.toString))
+    val a = intercept[IllegalArgumentException](
+      TextOps.appendToSimhashIndex(ref, legacy.toString))
+    for ((e, use) <- Seq((q, "querying"), (a, "appending")))
+      assert(e.getMessage.contains("pre-r19 layout") &&
+        e.getMessage.contains(s"buildSimhashIndex) before $use"), e.getMessage)
+  }
+
   test("ivfPqIndexTopK excludeSelf = false keeps colliding-id pairs — " +
       "the PQ twin of the r17 silent-leakage fix (ADVICE r17)") {
     val e16 = emb(64, dims = 16, patterns = 6)
