@@ -25,13 +25,9 @@ import graft.schema.OmeSchema
  *    decode/re-encode, one sequential read+write per file, each file
  *    independent) and ends with the merged key-value map, so pyarrow
  *    and the reference's tag check (ingest.py:923-930) see real footer
- *    metadata. A `_ome_arrow_meta.json` sidecar (underscore-prefixed ->
- *    invisible to Parquet scans) is kept as a cheap directory-level
- *    fallback and for writers that skip the stamp.
+ *    metadata. The footer is the tags' only carrier.
  */
 object OmeParquet {
-
-  val SidecarName = "_ome_arrow_meta.json"
 
   /**
    * Read an OME-Parquet file/directory and normalize to a single
@@ -107,7 +103,7 @@ object OmeParquet {
   /**
    * Write the `ome_arrow` column as OME-Parquet: zstd, chosen column name
    * (reference raw-writer default is "image", class API uses "ome_arrow"),
-   * plus the metadata sidecar.
+   * with the OME tags stamped into every part file's footer.
    */
   def write(df: DataFrame, path: String,
       columnName: String = OmeSchema.DefaultColumn,
@@ -121,7 +117,6 @@ object OmeParquet {
     val tags = Map(
       "ome.arrow.type" -> OmeSchema.TagType,
       "ome.arrow.version" -> OmeSchema.Version) ++ fileMetadata
-    writeSidecar(df.sparkSession, path, tags)
     stampFooterMetadata(df.sparkSession, path, tags)
   }
 
@@ -189,41 +184,13 @@ object OmeParquet {
       s"OmeParquet: could not replace $path with its stamped rewrite")
   }
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def writeSidecar(spark: SparkSession, dir: String,
-      tags: Map[String, String]): Unit = {
-    val json = tags.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${jsonEscape(k)}": "${jsonEscape(v)}"""" }
-      .mkString("{", ", ", "}")
-    val p = new Path(dir, SidecarName)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Read the OME tags back: parquet FOOTER key-values first (what the
-    * reference writes and checks, ingest.py:923-930 — one positioned
-    * footer read of one part file, no row groups touched), then the
-    * sidecar; empty when neither carries tags — soft, like the
-    * reference's warning-only check. */
+  /** Read the OME tags back: the footer key-value metadata of the first
+    * part file under `dir` (or of `dir` itself when it is a single file)
+    * — what the reference writes and checks (ingest.py:923-930), one
+    * positioned footer read, no row groups touched. Empty when absent:
+    * soft, like the reference's warning-only check. Any Spark-written
+    * file also carries Spark's own row-metadata key. */
   def readMetadata(spark: SparkSession, dir: String): Map[String, String] = {
-    // any Spark-written file carries Spark's own row-metadata key, so
-    // fall back on the ABSENCE OF OUR TAGS, not on an empty footer
-    val footer = readFooterMetadata(spark, dir)
-    if (footer.contains("ome.arrow.type")) footer
-    else readSidecar(spark, dir)
-  }
-
-  /** Footer key-value metadata of the first part file under `dir` (or of
-    * `dir` itself when it is a single file); empty when absent. */
-  def readFooterMetadata(spark: SparkSession, dir: String): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -243,30 +210,4 @@ object OmeParquet {
       finally reader.close()
     }
   }
-
-  private def readSidecar(spark: SparkSession, dir: String): Map[String, String] = {
-    val p = new Path(dir, SidecarName)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](8192)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        buf.toByteArray
-      } finally in.close()
-      // minimal flat {"k":"v"} parse — the sidecar is engine-written
-      val s = new String(bytes, "UTF-8")
-      """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-        .findAllMatchIn(s)
-        .map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
-    }
-  }
-
-  private def unescape(s: String): String =
-    """\\u([0-9a-fA-F]{4})|\\(.)""".r.replaceAllIn(s, m =>
-      if (m.group(1) != null) Integer.parseInt(m.group(1), 16).toChar.toString
-      else java.util.regex.Matcher.quoteReplacement(m.group(2)))
 }

@@ -29,27 +29,25 @@ class SourcesSpec extends SparkSpec {
     assert(ex.getMessage.contains("not found"))
   }
 
-  test("O10+O6: write/read round-trip under a foreign column name + sidecar") {
+  test("O10+O6: write/read round-trip under a foreign column name + footer tags") {
     val dir = "/tmp/graft_test_rt"
     OmeParquet.write(Fixtures.mixedCorpus(spark), dir, columnName = "image",
       fileMetadata = Map("k" -> "v"))
     val back = OmeParquet.read(spark, dir)
     assert(OmeOps.describe(back).exceptAll(
       OmeOps.describe(Fixtures.mixedCorpus(spark))).count() === 0)
-    val meta = OmeParquet.readMetadata(spark, dir)
-    assert(meta("ome.arrow.type") === "ome.arrow")
-    assert(meta("k") === "v")
     // tags live in the real parquet FOOTER (export.py:405-414 parity),
-    // not only the sidecar: footer-only read sees them, and the stamped
-    // files stay readable after deleting the sidecar
-    val footer = OmeParquet.readFooterMetadata(spark, dir)
+    // the only carrier: no sidecar file is written next to the parts
+    val footer = OmeParquet.readMetadata(spark, dir)
     assert(footer("ome.arrow.type") === "ome.arrow")
     assert(footer("ome.arrow.version") === graft.schema.OmeSchema.Version)
     assert(footer("k") === "v")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(dir, OmeParquet.SidecarName), false)
-    assert(OmeParquet.readMetadata(spark, dir)("ome.arrow.type") === "ome.arrow")
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).toSeq
+    assert(files.filterNot(n => n.startsWith("part-") || n.startsWith(".") ||
+      n == "_SUCCESS").isEmpty, s"unexpected files: $files")
     assert(OmeParquet.read(spark, dir).count() === 16)
   }
 
