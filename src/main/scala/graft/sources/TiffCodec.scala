@@ -145,12 +145,8 @@ object TiffCodec {
   /** Headers/shape/description only — pages come back with EMPTY pixel
     * arrays and no strip/tile payload is touched or validated. This is
     * the pruned-scan path: metadata-only queries over a TIFF corpus
-    * (describe, counts, joins on shape) skip all decompression. */
-  def decodeMeta(bytes: Array[Byte]): Seq[Page] =
-    decodeImpl(new ArrayTiffData(bytes), withPixels = false)
-
-  /** [[decodeMeta]] over an arbitrary byte source — with
-    * [[PagedTiffData]] this reads only the header/IFD/tag-value ranges
+    * (describe, counts, joins on shape) skip all decompression. With
+    * [[PagedTiffData]] only the header/IFD/tag-value ranges are read
     * from storage. */
   def decodeMeta(data: TiffData): Seq[Page] =
     decodeImpl(data, withPixels = false)

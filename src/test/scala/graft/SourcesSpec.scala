@@ -140,7 +140,7 @@ class SourcesSpec extends SparkSpec {
       === (4, 4, 16))
     assert(pages.head.pixels.toSeq === (0 until 16))
     // metadata-only decode agrees and stays pixel-free
-    val meta = TiffCodec.decodeMeta(bytes)
+    val meta = TiffCodec.decodeMeta(new TiffCodec.ArrayTiffData(bytes))
     assert(meta.head.width === 4 && meta.head.pixels.isEmpty)
     // a BigTIFF header with the wrong offset bytesize is rejected
     val bad = bytes.clone; bad(4) = 4
@@ -281,7 +281,7 @@ class SourcesSpec extends SparkSpec {
         f.length, pageSize = 512)
       val meta = TiffCodec.decodeMeta(paged)
       // parity with the in-memory meta decode
-      val expect = TiffCodec.decodeMeta(bytes)
+      val expect = TiffCodec.decodeMeta(new TiffCodec.ArrayTiffData(bytes))
       assert(meta.map(p => (p.width, p.height, p.bitsPerSample)) ===
         expect.map(p => (p.width, p.height, p.bitsPerSample)))
       assert(meta.head.pixels.isEmpty)
