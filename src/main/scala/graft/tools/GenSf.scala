@@ -172,7 +172,7 @@ object GenSf {
 
   /** The embeddings table: unit-normalized 64-dim gaussians
     * (Box-Muller over two uniform hashes) with a small label-direction
-    * bias — matches the driver corpus' per-component std 0.125 and weak
+    * bias — matches the testdata corpus' per-component std 0.125 and weak
     * label clusters. */
   private def embeddingsDf(spark: SparkSession, sf: Double): DataFrame = {
     val id = col("id")
