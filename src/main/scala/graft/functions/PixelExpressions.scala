@@ -262,25 +262,8 @@ case class BlockMean2x(pixels: Expression, sx: Expression, sy: Expression)
   override def eval(input: InternalRow): Any = {
     val pxAny = pixels.eval(input)
     if (pxAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    val w = sx.eval(input).asInstanceOf[Int]
-    val h = sy.eval(input).asInstanceOf[Int]
-    val nw = math.max(w / 2, 1); val nh = math.max(h / 2, 1)
-    val dx = if (w >= 2) 1 else 0
-    val dy = if (h >= 2) w else 0
-    val out = new Array[Int](nw * nh)
-    var by = 0
-    while (by < nh) {
-      var bx = 0
-      while (bx < nw) {
-        val base = (by * 2) * w + bx * 2
-        out(by * nw + bx) = (px.getInt(base) + px.getInt(base + dx) +
-          px.getInt(base + dy) + px.getInt(base + dy + dx)) / 4
-        bx += 1
-      }
-      by += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(BlockMean2x.mean(pxAny.asInstanceOf[ArrayData].toIntArray(),
+      sx.eval(input).asInstanceOf[Int], sy.eval(input).asInstanceOf[Int]))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -322,6 +305,29 @@ case class BlockMean2x(pixels: Expression, sx: Expression, sy: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(pixels = newChildren(0), sx = newChildren(1), sy = newChildren(2))
+}
+
+object BlockMean2x {
+  /** The 2x2 floor block mean of a flat w*h plane (the kernel `eval`
+    * runs and `OmeZarr.write` builds pyramid levels with). */
+  def mean(px: Array[Int], w: Int, h: Int): Array[Int] = {
+    val nw = math.max(w / 2, 1); val nh = math.max(h / 2, 1)
+    val dx = if (w >= 2) 1 else 0
+    val dy = if (h >= 2) w else 0
+    val out = new Array[Int](nw * nh)
+    var by = 0
+    while (by < nh) {
+      var bx = 0
+      while (bx < nw) {
+        val base = (by * 2) * w + bx * 2
+        out(by * nw + bx) = (px(base) + px(base + dx) +
+          px(base + dy) + px(base + dy + dx)) / 4
+        bx += 1
+      }
+      by += 1
+    }
+    out
+  }
 }
 
 /**

@@ -35,9 +35,9 @@ import graft.sources.OmeZarr
  *  - `planes` coordinates without `pixels`: the (t,c,z) grid derives from
  *    the array shape — still zero chunk I/O (Zarr grids are dense by
  *    metadata; missing chunks are fill-value anyway);
- *  - `planes.pixels`: chunk/shard files decode through
- *    [[OmeZarr.decodeChunkFile]] (sub-plane chunks through
- *    [[OmeZarr.decodeChunkPieces]] + [[OmeZarr.assemblePlane]]), and
+ *  - `planes.pixels`: every chunk or shard file, whatever the chunk
+ *    layout, decodes through [[OmeZarr.decodeChunkFile]] into plane
+ *    pieces, [[OmeZarr.assemblePlane]] copies them into planes, and
  *    missing chunks zero-fill in [[OmeZarr.configToRecord]].
  *
  * One store = one `InputPartition` (an image is the parallelism unit,
@@ -146,23 +146,14 @@ private[v2] class OmeZarrPartitionReader(part: OmeZarrInputPartition,
       RecordRows.readFileFully(fs, p, fs.getFileStatus(p).getLen)
     }
     val cfg = part.config
-    val decoded: Map[(Int, Int, Int), Seq[Int]] =
-      if (!part.needPixels) Map.empty
-      else if (cfg.shardT == 0 && cfg.subPlane)
-        // sub-plane chunks: assemble planes locally (one store = one
-        // partition, so every piece of a plane is in hand)
-        part.chunkPaths
-          .flatMap(cp => OmeZarr.decodeChunkPieces(cfg, cp, readBytes(cp)))
-          .groupBy(pc => (pc._1, pc._2, pc._3))
-          .map { case (k, ps) =>
-            k -> OmeZarr.assemblePlane(cfg,
-              ps.iterator.map(p => (p._4, p._5, p._6, p._7, p._8)))
-          }
-      else part.chunkPaths.flatMap { cp =>
-        OmeZarr.decodeChunkFile(cfg, cp, readBytes(cp))
-          .map { case (t, c, z, px) => (t, c, z) -> px }
-      }.toMap
-    val rec = OmeZarr.configToRecord(part.config, decoded, part.needPixels)
+    // one store = one partition, so every piece of a plane is in hand
+    val decoded = part.chunkPaths
+      .flatMap(cp => OmeZarr.decodeChunkFile(cfg, cp, readBytes(cp)))
+      .groupBy(pc => (pc._1, pc._2, pc._3))
+      .map { case (k, ps) =>
+        k -> OmeZarr.assemblePlane(cfg, ps.iterator.map(p => (p._4, p._5, p._6, p._7, p._8)))
+      }
+    val rec = OmeZarr.configToRecord(cfg, decoded, part.needPixels)
     val vals: Array[Any] = required.fields.map {
       case StructField(n, dt: StructType, _, _) if n == OmeSchema.DefaultColumn =>
         RecordRows.record(rec, dt): Any

@@ -519,9 +519,8 @@ class BloscZarrSpec extends SparkSpec {
       "path (padded strides)") {
     // legal in Zarr: chunk y/x extents may exceed the array shape, and
     // the single chunk is then PADDED — row stride cX, slab stride
-    // cY*cX. The whole-plane decoders (strides sx / sy*sx) would
-    // silently misread this layout, so it must route through
-    // decodeChunkPieces.
+    // cY*cX. Plane strides (sx / sy*sx) would silently misread this
+    // layout.
     def mkStore(dir: String, compressor: String,
         chunkBytes: Array[Byte]): Unit = {
       val root = java.nio.file.Paths.get(dir)
@@ -572,14 +571,14 @@ class BloscZarrSpec extends SparkSpec {
   test("readMeta describes a corpus without opening any chunk file") {
     val dir = "/tmp/graft_test_zmeta"
     graft.sources.OmeZarr.write(Fixtures.corpus4d(spark), dir)
-    // delete EVERY chunk file; only the JSON metadata remains, so any
-    // chunk access would throw — metadata reads must survive this
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p) &&
-        p.getFileName.toString.matches("""\d+(\.\d+)*"""))
-      .foreach(java.nio.file.Files.delete)
+    // a missing chunk reads as zeros, so deleting chunk files cannot show
+    // that none is opened; a scan whose read schema lacks `planes` lists
+    // and opens no chunk file
     val meta = graft.sources.OmeZarr.readMeta(spark, dir)
+    val scanSchema = meta.queryExecution.executedPlan.collectLeaves()
+      .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.readSchema().catalogString }.get
+    assert(!scanSchema.contains("planes"), s"planes survived pruning: $scanSchema")
     val rows = meta.select(col("ome_arrow.id"),
         col("ome_arrow.pixels_meta.size_x"),
         size(col("ome_arrow.planes"))).orderBy(col("id")).collect()

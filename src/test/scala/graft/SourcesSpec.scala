@@ -176,9 +176,8 @@ class SourcesSpec extends SparkSpec {
   test("v2 store with OVERSIZED (padded) chunk extents decodes exactly") {
     // regression pin (ADVICE r7 #1): chunk y/x extents LARGER than the
     // array shape are legal zarr (edge chunks pad to the full chunk
-    // shape); the whole-plane decoders' sx/sy strides would silently
-    // mis-read the cX-strided padded rows, so these must route through
-    // decodeChunkPieces — and decode correctly, not merely not error.
+    // shape); sx/sy strides would silently mis-read the cX-strided
+    // padded rows — they must decode correctly, not merely not error.
     val one = Fixtures.corpus4d(spark).filter(col("ome_arrow.id") === "i4d-0003")
     val root = "/tmp/graft_test_v2oversized/i4d-0003.zarr"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))

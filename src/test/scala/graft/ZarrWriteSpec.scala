@@ -169,4 +169,31 @@ class ZarrWriteSpec extends SparkSpec {
     checkStore(Layout("v3 single store", v3 = true, levels = 2),
       d.resolve("one.zarr"), "i4d-0002")
   }
+
+  test("Zarr writes of a chunk grid, a shardZ store and a 3-level pyramid do not shuffle") {
+    val sc = spark.sparkContext
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val corpus = Fixtures.corpus4d(spark)
+    def write(opts: (String => Unit)): Long = {
+      org.apache.spark.graftmetrics.BusDrain.drain(sc)
+      written.set(0L)
+      opts(Files.createTempDirectory("zarr_write_noshuffle").toString)
+      org.apache.spark.graftmetrics.BusDrain.drain(sc)
+      written.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(write(OmeZarr.write(corpus, _, chunks = Some(Seq(1, 1, 2, 4, 8)))) === 0L,
+        "chunks grid")
+      assert(write(OmeZarr.write(corpus, _, zarrFormat = 3, shardZ = true)) === 0L,
+        "shardZ")
+      assert(write(OmeZarr.write(corpus, _, multiscaleLevels = 3)) === 0L,
+        "3-level pyramid")
+    } finally sc.removeSparkListener(listener)
+  }
 }
