@@ -673,13 +673,13 @@ object OmeZarr {
     val levelDir = fs.makeQualified(new Path(new Path(c.store), levelPath))
     val sep = "\\" + c.sep
     val key = ((if (c.v3) "c" + sep else "") + """\d+(""" + sep + """\d+){4}""").r
-    val it = fs.listFiles(levelDir, true)
-    val buf = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next().getPath.toString
-      if (key.matches(f.stripPrefix(levelDir.toString + "/"))) buf += f
+    // listStatus, not listFiles: a located status costs the local file
+    // system one owner/permission lookup per file
+    def walk(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else Seq(s.getPath.toString).filter(f => key.matches(f.stripPrefix(levelDir.toString + "/")))
     }
-    buf.result()
+    walk(levelDir)
   }
 
   /**
