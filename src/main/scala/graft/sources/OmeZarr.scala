@@ -267,9 +267,9 @@ object OmeZarr {
    * addressability (readers fetch one inner chunk via the index).
    *
    * Each store is written whole by one task (the single-store target by
-   * the driver): its JSON documents, then every level's chunks, each
-   * level 2x2 block-meaned from the one above. The image is the unit of
-   * parallelism, so a write has no shuffle.
+   * the driver): every level's array document and chunks, each level 2x2
+   * block-meaned from the one above, then the group document. The image
+   * is the unit of parallelism, so a write has no shuffle.
    */
   def write(df: DataFrame, out: String,
       multiscaleLevels: Int = 1,
@@ -313,9 +313,9 @@ object OmeZarr {
     }
   }
 
-  /** One record's whole store: the group document, then per level its
-    * array document and chunk grid (level shapes `max(1, n >> l)`,
-    * export.py:317-318). */
+  /** One record's whole store: per level its array document and chunk
+    * grid (level shapes `max(1, n >> l)`, export.py:317-318), then the
+    * group document. */
   private def writeStore(r: OmeArrowRecord, root: Path,
       conf: org.apache.hadoop.conf.Configuration, levels: Int, chunkComp: String,
       v3: Boolean, shardZ: Boolean, chunks: Option[Seq[Int]]): Unit = {
