@@ -24,8 +24,8 @@ import graft.schema._
  *
  * Chunking is one chunk per (t,c,z) plane (`chunks = [1,1,1,Y,X]`) by
  * default; any TCZYX chunk grid and v3 `shardZ` shards are written by
- * the same grid writer. Export writes each store whole in one task (the
- * single-store target on the driver), pyramid levels included: a task
+ * the same grid writer. Export writes each store whole in one task (a
+ * single-store target after a `collect`), pyramid levels included: a task
  * holds one record's planes, never the corpus, and a write has no
  * shuffle. Ingest is the `omezarr` DataSourceV2 scan: one store per
  * partition, whose reader decodes every chunk layout into plane pieces,
@@ -266,8 +266,8 @@ object OmeZarr {
    * collapses the file count by size_z without giving up per-plane
    * addressability (readers fetch one inner chunk via the index).
    *
-   * Each store is written whole by one task (the single-store target by
-   * the driver): every level's array document and chunks, each level 2x2
+   * Each store is written whole by one task (a single-store target after
+   * a `collect`): every level's array document and chunks, each level 2x2
    * block-meaned from the one above, then the group document. The image
    * is the unit of parallelism, so a write has no shuffle.
    */
@@ -664,9 +664,9 @@ object OmeZarr {
       chX = if (shardObj.isEmpty) chunks(4) else 0)
   }
 
-  /** All chunk/shard file paths of one store's level (driver-side
-    * listing): the level directory's files whose relative path is a chunk
-    * key of the store's layout — `[c<sep>]t<sep>c<sep>z<sep>y<sep>x`. */
+  /** All chunk/shard file paths of one store's level, listed at planning
+    * time: the level directory's files whose relative path is a chunk key
+    * of the store's layout — `[c<sep>]t<sep>c<sep>z<sep>y<sep>x`. */
   private[sources] def chunkFiles(spark: SparkSession, c: StoreConfig,
       levelPath: String): Seq[String] = {
     val fs = new Path(c.store).getFileSystem(spark.sessionState.newHadoopConf())
