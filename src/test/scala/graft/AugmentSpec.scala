@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.OmeOps
 
 /** PixelPermute kernel + augmentPlanes semantics on a non-square plane. */
-class AugmentSpec extends SparkSpec {
+class AugmentSpec extends SparkSpec with ModePairs {
 
   // 2 rows x 3 cols, row-major: in(y, x) = y*3 + x
   private val plane = Seq(0, 1, 2, 3, 4, 5)
@@ -29,20 +30,13 @@ class AugmentSpec extends SparkSpec {
   }
 
   test("PixelPermute: eval (interpreted) matches the codegen path") {
-    import graft.functions.PixelPermute
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    for (m <- PixelPermute.modes) {
-      val e = PixelPermute(
-        Literal(new GenericArrayData(plane.toArray),
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.IntegerType, containsNull = false)),
-        Literal(3), Literal(2), m)
-      val interpreted = e.eval(InternalRow.empty)
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toIntArray().toSeq
-      assert(interpreted === permute(m), s"mode=$m")
+    import spark.implicits._
+    graft.functions.ensureRegistered(spark)
+    for (m <- graft.functions.PixelPermute.modes) {
+      val want = permute(m)
+      assertBothModes(Seq((plane, 3, 2)).toDF("px", "sx", "sy")
+        .select(graft.functions.pixel_permute(
+          col("px"), col("sx"), col("sy"), m)))(Seq(Row(want)))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.ProfileOps
@@ -7,7 +8,7 @@ import graft.operators.ProfileOps
 /** Randomized properties of the r9-late kernels: permutation group
   * laws, union-find vs brute-force BFS, stretch invariants, triangle
   * counts vs exhaustive enumeration. */
-class KernelPropertySpec extends SparkSpec {
+class KernelPropertySpec extends SparkSpec with ModePairs {
 
   private val rnd = new scala.util.Random(20260814)
 
@@ -258,30 +259,11 @@ class KernelPropertySpec extends SparkSpec {
     }
     val expected = rows.map { case (x, y) =>
       x.zip(y).map { case (a, b) => (a - b) * (a - b) }.sum }
-    val df = rows.toDF("a", "b")
-    def got(codegen: String): Seq[Long] = {
-      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
-      try df.select(expr("graft_micro_l2(a, b)")).collect()
-        .map(_.getLong(0)).toSeq
-      finally spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
-    assert(got("CODEGEN_ONLY") === expected)
-    assert(got("NO_CODEGEN") === expected)
+    assertBothModes(rows.toDF("a", "b")
+      .select(expr("graft_micro_l2(a, b)")))(expected.map(Row(_)))
     // dim mismatch must raise (not return null and rank wrong cells
     // nearest) on BOTH paths
-    val bad = Seq((Seq(1L, 2L), Seq(1L, 2L, 3L))).toDF("a", "b")
-    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try {
-        val e = intercept[Exception] {
-          bad.select(expr("graft_micro_l2(a, b)")).collect()
-        }
-        def msgs(t: Throwable): Seq[String] =
-          if (t == null) Nil
-          else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-        assert(msgs(e).exists(_.contains("length mismatch")),
-          s"mode=$mode wrong failure: ${msgs(e).mkString(" | ")}")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+    assertBothModesFail(Seq((Seq(1L, 2L), Seq(1L, 2L, 3L))).toDF("a", "b")
+      .select(expr("graft_micro_l2(a, b)")))("length mismatch")
   }
 }

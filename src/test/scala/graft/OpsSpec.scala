@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.{OmeConstructors, OmeOps}
 import graft.schema.Fixtures
 
 /** Downscale / stride / percentile / dense-bridge / explode-nest specs. */
-class OpsSpec extends SparkSpec {
+class OpsSpec extends SparkSpec with ModePairs {
 
   test("downscale2x computes exact floor block means (conftest 4x3 -> 2x1)") {
     val out = OmeOps.downscale2x(Fixtures.conftestDf(spark))
@@ -129,16 +130,8 @@ class OpsSpec extends SparkSpec {
     // would desync colocalization's n/Σx/Σy from Σxy (r8 ADVICE) —
     // pinned in BOTH eval and codegen paths
     import spark.implicits._
-    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try {
-        val rows = Seq((Array(2, 3, 4), Array(5, 7)))
-          .toDF("a", "b")
-          .select(graft.functions.pixel_dot(col("a"), col("b")))
-          .collect()
-        assert(rows(0).isNullAt(0), s"mode $mode")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+    assertBothModes(Seq((Array(2, 3, 4), Array(5, 7))).toDF("a", "b")
+      .select(graft.functions.pixel_dot(col("a"), col("b"))))(Seq(Row(null)))
   }
 
   test("colocalization computes exact Pearson r: +1 linear, -1 " +

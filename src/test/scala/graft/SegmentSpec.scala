@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.OmeOps
 
 /** Connected-component labeling kernel + segmentObjects semantics. */
-class SegmentSpec extends SparkSpec {
+class SegmentSpec extends SparkSpec with ModePairs {
 
-  /** run the kernel through a DataFrame (codegen path). */
+  /** run the kernel through a DataFrame. */
   private def objects(mask: Seq[Int], w: Int): Seq[(Int, Int, Int, Int,
       Int, Int, Long, Long)] = {
     import spark.implicits._
@@ -45,23 +46,17 @@ class SegmentSpec extends SparkSpec {
   }
 
   test("CcObjects: labels are ascending min indexes; eval matches codegen") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import spark.implicits._
     // 2 rows x 4: two horizontal runs separated by a gap
     val m = Seq(1, 1, 0, 1, 1, 1, 0, 1)
     val viaDf = objects(m, 4)
     assert(viaDf.map(_._1) === viaDf.map(_._1).sorted)
-    val e = graft.functions.PixelCcObjects(
-      Literal(new GenericArrayData(m.toArray),
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType, containsNull = false)),
-      Literal(4))
-    val interp = e.eval(InternalRow.empty)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    assert(interp.numElements() === viaDf.size)
-    val first = interp.getStruct(0, 8)
-    assert((first.getInt(0), first.getInt(1)) === (viaDf.head._1, viaDf.head._2))
+    for ((mode, rows) <- rowsInBothModes(Seq((m, 4)).toDF("m", "w")
+        .select(graft.functions.cc_objects(col("m"), col("w"))))) {
+      val objs = rows.head.getSeq[Row](0)
+      assert(objs.map(o => (o.getInt(0), o.getInt(1))) ===
+        viaDf.map(o => (o._1, o._2)), s"mode=$mode")
+    }
   }
 
   test("segmentObjects: centroids and bboxes on a planted blob") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.OmeOps
 
 /** GLCM moments kernel + textureReport features, hand-computed. */
-class TextureSpec extends SparkSpec {
+class TextureSpec extends SparkSpec with ModePairs {
 
   test("GlcmMoments: hand-counted co-occurrences on a 2x3 plane") {
     import spark.implicits._
@@ -65,9 +65,8 @@ class TextureSpec extends SparkSpec {
   }
 
   test("GlcmMoments: eval matches codegen and a brute-force recount") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import spark.implicits._
+    graft.functions.ensureRegistered(spark)
     val rnd = new scala.util.Random(42)
     val px = Seq.fill(35)(rnd.nextInt(256))
     val w = 7
@@ -79,16 +78,14 @@ class TextureSpec extends SparkSpec {
     val n = counts.values.sum
     val contrast = counts.map { case ((a, b), c) =>
       c * (a - b) * (a - b) }.sum
-    val e = graft.functions.PixelGlcmMoments(
-      Literal(new GenericArrayData(px.toArray),
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType, containsNull = false)),
-      Literal(w), 8, 256)
-    val row = e.eval(InternalRow.empty)
-      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
-    assert(row.getLong(0) === n)
-    assert(row.getLong(1) === contrast)
-    assert(row.getLong(3) === counts.values.map(c => c * c).sum)
+    for ((mode, rows) <- rowsInBothModes(Seq((px, w)).toDF("px", "w")
+        .select(graft.functions.glcm_moments(col("px"), col("w"), 8, 256)))) {
+      val row = rows.head.getStruct(0)
+      assert(row.getLong(0) === n, s"mode=$mode")
+      assert(row.getLong(1) === contrast, s"mode=$mode")
+      assert(row.getLong(3) === counts.values.map(c => c * c).sum,
+        s"mode=$mode")
+    }
   }
 
   test("segmentObjectsIntensity: integrated/mean/extreme intensity " +
