@@ -4,8 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal,
+  RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,12 +34,29 @@ private[functions] object InputCheck {
     }
 }
 
+/** The replacement of every `RuntimeReplaceable` native expression: one
+  * `StaticInvoke` of the `kernel` method on `owner`, a companion object
+  * (the generated code calls Scala's static forwarder). The kernel takes
+  * Catalyst physical values (`ArrayData`, `Int`, `Long`, `UTF8String`,
+  * `InternalRow`). `StaticInvoke` answers NULL for a NULL argument on
+  * the interpreted and the codegen path alike, and compiles to a direct
+  * static call, so the projection stays inside whole-stage codegen.
+  * `returnNullable`: the kernel itself can return null (the
+  * expression's own NULL cases, e.g. a length mismatch). */
+private[functions] object KernelCall {
+  def apply(owner: AnyRef, dataType: DataType, args: Seq[Expression],
+      returnNullable: Boolean = false): Expression =
+    StaticInvoke(owner.getClass, dataType, "kernel", args,
+      returnNullable = returnNullable)
+}
+
 /**
  * Native expressions for the sketch hot paths. The column-level versions
  * interpret one lambda call per array element (Spark HOFs don't codegen);
- * these run one tight JVM loop per row. `CodegenFallback` is deliberate:
- * the per-row virtual call is noise next to the md5 work, and fallback
- * keeps the surrounding projection inside whole-stage codegen.
+ * these run one tight JVM loop per row. They are `CodegenFallback`: a
+ * projection holding one is planned OUTSIDE whole-stage codegen (it runs
+ * as its own `Project`, whose generated projection calls `eval` per row
+ * and boxes the result). That cost is noise next to the md5 work.
  *
  * Both produce BYTE-IDENTICAL results to the column formulations (same
  * md5, same lowercase hex, same chunk semantics), so the DuckDB oracles
@@ -554,15 +573,14 @@ case class L2Sq(a: Expression, b: Expression)
  * the probe path (micro components ≤ ~10⁷ → a 64-dim distance tops
  * out near 6.4e15, well inside long range).
  *
- * Unlike this file's md5-dominated kernels (where CodegenFallback is
- * deliberate — the boxing is noise next to the digest), this one is a
- * bare subtract-multiply-add loop, so it codegens (r16, VERDICT r15
- * minor #4): the probe×cell ranking rows stay inside whole-stage
- * codegen with zero boxing, which matters when probe BATCHES scale
- * the row count (probes × nProbe cells), not just cell counts.
+ * Unlike this file's md5-dominated kernels, this one is a bare
+ * subtract-multiply-add loop, so it is a [[KernelCall]]: the probe×cell
+ * ranking rows stay inside whole-stage codegen with zero boxing, which
+ * matters when probe BATCHES scale the row count (probes × nProbe
+ * cells), not just cell counts.
  */
 case class MicroL2(a: Expression, b: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(a, b)
   override def dataType: DataType = LongType
@@ -577,11 +595,16 @@ case class MicroL2(a: Expression, b: Expression)
           s"(got ${ta.catalogString}, ${tb.catalogString})")
     }
 
-  override def eval(input: InternalRow): Any = {
-    val aAny = a.eval(input); val bAny = b.eval(input)
-    if (aAny == null || bAny == null) return null
-    val av = aAny.asInstanceOf[ArrayData]
-    val bv = bAny.asInstanceOf[ArrayData]
+  override lazy val replacement: Expression =
+    KernelCall(MicroL2, dataType, children)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(a = newChildren(0), b = newChildren(1))
+}
+
+object MicroL2 {
+  def kernel(av: ArrayData, bv: ArrayData): Long = {
     // RAISE on dimension mismatch (ADVICE r15): a null here would sort
     // FIRST under the probe path's `orderBy(d.asc)` cell-ranking window,
     // silently ranking the lowest-id cells "nearest" for a probe whose
@@ -600,45 +623,8 @@ case class MicroL2(a: Expression, b: Expression)
       acc += d * d
       i += 1
     }
-    java.lang.Long.valueOf(acc)
+    acc
   }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val aG = a.genCode(ctx); val bG = b.genCode(ctx)
-    val n = ctx.freshName("n"); val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-    val code =
-      code"""
-        ${aG.code}
-        ${bG.code}
-        boolean ${ev.isNull} = ${aG.isNull} || ${bG.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          int $n = ${aG.value}.numElements();
-          if ($n != ${bG.value}.numElements()) {
-            throw new IllegalArgumentException(
-              "graft_micro_l2: array length mismatch (" + $n + " vs " +
-              ${bG.value}.numElements() + ") - probe dims disagree with " +
-              "the codebook; rebuild the index or fix the probe projection");
-          }
-          long $acc = 0L;
-          for (int $i = 0; $i < $n; $i++) {
-            long $d = ${aG.value}.getLong($i) - ${bG.value}.getLong($i);
-            $acc += $d * $d;
-          }
-          ${ev.value} = $acc;
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(a = newChildren(0), b = newChildren(1))
 }
 
 /**
@@ -722,10 +708,9 @@ case class CdcBoundaries(text: Expression, window: Int, maskBits: Int)
  * bit-for-bit. The column version pays k interpreted `zip_with` +
  * `aggregate` lambdas per VECTOR (k·2·dims boxed evals — the r9 bench
  * measured the 2-round Lloyd trainer at ~7 s per run from this alone);
- * this is one tight long loop. CodegenFallback is deliberate (the
- * PqEncode rationale): the per-row virtual call is noise next to k·dims
- * multiplies, and fallback keeps the surrounding projection inside
- * whole-stage codegen.
+ * this is one tight long loop. CodegenFallback is deliberate: the
+ * per-row `eval` call (which also keeps the projection out of
+ * whole-stage codegen) is noise next to k·dims multiplies.
  *
  * `book` is the flattened codebook: centroid `c`'s components live at
  * `book[c*dims .. c*dims+dims)`. Returns the matching `ids[c]` (long);
@@ -778,24 +763,6 @@ case class MicroArgmin(qx: Expression, ids: Array[Long],
 }
 
 /**
- * Imperative core of [[NfcNormalize]] (static-forwarder pattern):
- * Unicode NFC normalization with an allocation-free fast path —
- * `Normalizer.isNormalized` is a quick-check table lookup that
- * answers YES for all-ASCII (and most already-composed) text without
- * building a new string, so the overwhelmingly common case costs one
- * scan and returns the input UTF8String as-is.
- */
-object NfcKernel {
-  def nfc(s: UTF8String): UTF8String = {
-    val str = s.toString
-    if (java.text.Normalizer.isNormalized(str,
-        java.text.Normalizer.Form.NFC)) s
-    else UTF8String.fromString(java.text.Normalizer.normalize(str,
-      java.text.Normalizer.Form.NFC))
-  }
-}
-
-/**
  * Unicode NFC normalization — the canonicalization every dedup /
  * fingerprint stage needs before hashing: "é" composed (U+00E9) and
  * decomposed (e + U+0301) are the SAME text to a reader but different
@@ -804,7 +771,7 @@ object NfcKernel {
  * implement the same Unicode canonical composition, so results are
  * oracle-checkable cross-engine.
  */
-case class NfcNormalize(child: Expression) extends Expression {
+case class NfcNormalize(child: Expression) extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(child)
   override def dataType: DataType = StringType
@@ -813,48 +780,26 @@ case class NfcNormalize(child: Expression) extends Expression {
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((child, StringType, "text")), "graft_nfc")
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else NfcKernel.nfc(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    val code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = ${c.isNull};
-        UTF8String ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.NfcKernel.nfc(${c.value});
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(NfcNormalize, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
 }
 
-/** Imperative core of [[ZValue2]]: Morton/Z-order interleave of the
-  * low `bits` bits of two non-negative longs — x on even result bits,
-  * y on odd. */
-object ZValueKernel {
-  def interleave(x: Long, y: Long, bits: Int): Long = {
-    var z = 0L
-    var b = 0
-    while (b < bits) {
-      z |= ((x >> b) & 1L) << (2 * b)
-      z |= ((y >> b) & 1L) << (2 * b + 1)
-      b += 1
-    }
-    z
+object NfcNormalize {
+  /** Allocation-free fast path: `Normalizer.isNormalized` is a
+    * quick-check table lookup that answers YES for all-ASCII (and most
+    * already-composed) text without building a new string, so the
+    * overwhelmingly common case costs one scan and returns the input
+    * UTF8String as-is. */
+  def kernel(s: UTF8String): UTF8String = {
+    val str = s.toString
+    if (java.text.Normalizer.isNormalized(str,
+        java.text.Normalizer.Form.NFC)) s
+    else UTF8String.fromString(java.text.Normalizer.normalize(str,
+      java.text.Normalizer.Form.NFC))
   }
 }
 
@@ -870,7 +815,7 @@ object ZValueKernel {
  * the result in a positive long.
  */
 case class ZValue2(x: Expression, y: Expression, bits: Int)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   require(bits > 0 && bits <= 31,
     s"graft_zvalue: bits must be in [1, 31] (got $bits)")
@@ -883,40 +828,27 @@ case class ZValue2(x: Expression, y: Expression, bits: Int)
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((x, LongType, "x"), (y, LongType, "y")), "graft_zvalue")
 
-  override def eval(input: InternalRow): Any = {
-    val xa = x.eval(input)
-    val ya = y.eval(input)
-    if (xa == null || ya == null) return null
-    val xv = xa.asInstanceOf[Long]
-    val yv = ya.asInstanceOf[Long]
-    if (xv < 0 || yv < 0) return null
-    java.lang.Long.valueOf(ZValueKernel.interleave(xv, yv, bits))
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val xg = x.genCode(ctx)
-    val yg = y.genCode(ctx)
-    val code =
-      code"""
-        ${xg.code}
-        ${yg.code}
-        boolean ${ev.isNull} = ${xg.isNull} || ${yg.isNull} ||
-          (!${xg.isNull} && !${yg.isNull} &&
-            (${xg.value} < 0L || ${yg.value} < 0L));
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.ZValueKernel.interleave(
-            ${xg.value}, ${yg.value}, $bits);
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression = KernelCall(ZValue2, dataType,
+    children :+ Literal(bits), returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(x = newChildren(0), y = newChildren(1))
+}
+
+object ZValue2 {
+  /** Morton/Z-order interleave of the low `bits` bits of two
+    * non-negative longs — x on even result bits, y on odd; null when
+    * either is negative. */
+  def kernel(x: Long, y: Long, bits: Int): java.lang.Long = {
+    if (x < 0 || y < 0) return null
+    var z = 0L
+    var b = 0
+    while (b < bits) {
+      z |= ((x >> b) & 1L) << (2 * b)
+      z |= ((y >> b) & 1L) << (2 * b + 1)
+      b += 1
+    }
+    z
+  }
 }

@@ -1,28 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import scala.annotation.switch
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  GenericInternalRow, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Catalyst expressions for the per-pixel hot paths (SURVEY.md §4.2
  * flagged `PixelCrop` as the codegen candidate "after measurement" — the
  * measurement happened: interpreted higher-order-function evaluation
- * dominates pixel pipelines, see SCALE.md). Both expressions implement
- * `doGenCode`, so unlike HOF lambdas they compile into whole-stage
- * codegen as tight int-array loops.
+ * dominates pixel pipelines, see SCALE.md). Each per-row expression here
+ * is a `RuntimeReplaceable` whose replacement is one [[KernelCall]] of
+ * the `kernel` on its companion: whole-stage codegen calls that kernel
+ * directly, the interpreted evaluator calls the same kernel, and a NULL
+ * argument answers NULL on both paths.
  */
 
 /** crop a flat row-major plane: rows [y0,y1), cols [x0,x1) of a sx-wide
   * image. Bounds are validated by the caller (query constants). */
 case class PixelCrop(pixels: Expression, sx: Expression,
     x0: Expression, x1: Expression, y0: Expression, y1: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, sx, x0, x1, y0, y1)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -33,17 +36,19 @@ case class PixelCrop(pixels: Expression, sx: Expression,
       (x0, IntegerType, "x0"), (x1, IntegerType, "x1"),
       (y0, IntegerType, "y0"), (y1, IntegerType, "y1")), "graft_pixel_crop")
 
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    if (pxAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    val w = sx.eval(input).asInstanceOf[Int]
-    val xa = x0.eval(input).asInstanceOf[Int]
-    val xb = x1.eval(input).asInstanceOf[Int]
-    val ya = y0.eval(input).asInstanceOf[Int]
-    val yb = y1.eval(input).asInstanceOf[Int]
-    val nw = xb - xa
-    val out = new Array[Int]((yb - ya) * nw)
+  override lazy val replacement: Expression =
+    KernelCall(PixelCrop, dataType, children)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), sx = newChildren(1), x0 = newChildren(2),
+      x1 = newChildren(3), y0 = newChildren(4), y1 = newChildren(5))
+}
+
+object PixelCrop {
+  def kernel(px: ArrayData, w: Int, xa: Int, xb: Int, ya: Int,
+      yb: Int): ArrayData = {
+    val out = new Array[Int]((yb - ya) * (xb - xa))
     var y = ya; var o = 0
     while (y < yb) {
       var x = xa
@@ -52,43 +57,6 @@ case class PixelCrop(pixels: Expression, sx: Expression,
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx)
-    val sxG = sx.genCode(ctx); val x0G = x0.genCode(ctx)
-    val x1G = x1.genCode(ctx); val y0G = y0.genCode(ctx)
-    val y1G = y1.genCode(ctx)
-    val arr = ctx.freshName("arr"); val o = ctx.freshName("o")
-    val y = ctx.freshName("y"); val x = ctx.freshName("x")
-    val code =
-      code"""
-        ${pxG.code}
-        ${sxG.code}
-        ${x0G.code}
-        ${x1G.code}
-        ${y0G.code}
-        ${y1G.code}
-        boolean ${ev.isNull} = ${pxG.isNull} || ${sxG.isNull} || ${x0G.isNull} ||
-          ${x1G.isNull} || ${y0G.isNull} || ${y1G.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          int[] $arr = new int[(${y1G.value} - ${y0G.value}) * (${x1G.value} - ${x0G.value})];
-          int $o = 0;
-          for (int $y = ${y0G.value}; $y < ${y1G.value}; $y++) {
-            for (int $x = ${x0G.value}; $x < ${x1G.value}; $x++) {
-              $arr[$o++] = ${pxG.value}.getInt($y * ${sxG.value} + $x);
-            }
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), sx = newChildren(1), x0 = newChildren(2),
-      x1 = newChildren(3), y0 = newChildren(4), y1 = newChildren(5))
 }
 
 /** Sum of an int-array plane as a long — the rollup reduction behind
@@ -96,7 +64,7 @@ case class PixelCrop(pixels: Expression, sx: Expression,
   * formulation pays an interpreted lambda + boxed Long PER PIXEL
   * (hundreds of millions of allocations in a corpus rollup and the
   * dominant GC noise in scale probes); this is one tight long loop. */
-case class PixelSum(pixels: Expression) extends Expression {
+case class PixelSum(pixels: Expression) extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels)
   override def dataType: DataType = LongType
@@ -105,46 +73,30 @@ case class PixelSum(pixels: Expression) extends Expression {
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((pixels, ArrayType(IntegerType), "pixels")), "graft_pixel_sum")
 
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    if (pxAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    var s = 0L
-    var i = 0
-    val n = px.numElements()
-    while (i < n) { s += px.getInt(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx)
-    val i = ctx.freshName("i")
-    val code =
-      code"""
-        ${pxG.code}
-        boolean ${ev.isNull} = ${pxG.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          for (int $i = 0; $i < ${pxG.value}.numElements(); $i++) {
-            ${ev.value} += ${pxG.value}.getInt($i);
-          }
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(PixelSum, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(pixels = newChildren(0))
 }
 
+object PixelSum {
+  def kernel(px: ArrayData): Long = {
+    var s = 0L
+    var i = 0
+    val n = px.numElements()
+    while (i < n) { s += px.getInt(i); i += 1 }
+    s
+  }
+}
+
 /** Count of plane pixels >= a threshold, as a long — the saturation /
   * clipping detector behind the QC report. Same rationale as
   * [[PixelSum]]: `size(filter(pixels, _ >= t))` pays an interpreted
-  * lambda + boxed Integer per pixel; this is one tight int loop in
-  * both the codegen and interpreted paths. */
+  * lambda + boxed Integer per pixel; this is one tight int loop. */
 case class PixelCountGe(pixels: Expression, threshold: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, threshold)
   override def dataType: DataType = LongType
@@ -154,41 +106,22 @@ case class PixelCountGe(pixels: Expression, threshold: Expression)
     Seq((pixels, ArrayType(IntegerType), "pixels"),
       (threshold, IntegerType, "threshold")), "graft_pixel_count_ge")
 
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    if (pxAny == null) return null
-    val tAny = threshold.eval(input)
-    if (tAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    val t = tAny.asInstanceOf[Int]
+  override lazy val replacement: Expression =
+    KernelCall(PixelCountGe, dataType, children)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), threshold = newChildren(1))
+}
+
+object PixelCountGe {
+  def kernel(px: ArrayData, t: Int): Long = {
     var n = 0L
     var i = 0
     val len = px.numElements()
     while (i < len) { if (px.getInt(i) >= t) n += 1; i += 1 }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx); val tG = threshold.genCode(ctx)
-    val i = ctx.freshName("i")
-    val code =
-      code"""
-        ${pxG.code}
-        ${tG.code}
-        boolean ${ev.isNull} = ${pxG.isNull} || ${tG.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          for (int $i = 0; $i < ${pxG.value}.numElements(); $i++) {
-            if (${pxG.value}.getInt($i) >= ${tG.value}) ${ev.value}++;
-          }
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), threshold = newChildren(1))
 }
 
 /** Closed-form synthetic plane: out[p] = (base + p) % 65536 for p in
@@ -196,10 +129,9 @@ case class PixelCountGe(pixels: Expression, threshold: Expression)
   * column formulation (`transform(sequence(...))`) the corpus generator
   * paid one interpreted lambda eval + one boxed Integer PER PIXEL
   * (~55 M per bench rep of `ome_scale_pipeline`); as a native
-  * expression it is one int-array loop per plane, in both the codegen
-  * and the interpreted (inside an outer HOF lambda) paths. */
+  * expression it is one int-array loop per plane. */
 case class SynthRampPixels(base: Expression, n: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(base, n)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -208,48 +140,27 @@ case class SynthRampPixels(base: Expression, n: Expression)
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((base, LongType, "base"), (n, IntegerType, "n")), "graft_synth_ramp")
 
-  override def eval(input: InternalRow): Any = {
-    val bAny = base.eval(input)
-    if (bAny == null) return null
-    val nAny = n.eval(input)
-    if (nAny == null) return null
-    val b = bAny.asInstanceOf[Long]
-    val len = nAny.asInstanceOf[Int]
-    val out = new Array[Int](len)
-    var p = 0
-    while (p < len) { out(p) = ((b + p) % 65536L).toInt; p += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bG = base.genCode(ctx); val nG = n.genCode(ctx)
-    val arr = ctx.freshName("arr"); val p = ctx.freshName("p")
-    val code =
-      code"""
-        ${bG.code}
-        ${nG.code}
-        boolean ${ev.isNull} = ${bG.isNull} || ${nG.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          int[] $arr = new int[${nG.value}];
-          for (int $p = 0; $p < ${nG.value}; $p++) {
-            $arr[$p] = (int) ((${bG.value} + $p) % 65536L);
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(SynthRampPixels, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(base = newChildren(0), n = newChildren(1))
 }
 
+object SynthRampPixels {
+  def kernel(b: Long, len: Int): ArrayData = {
+    val out = new Array[Int](len)
+    var p = 0
+    while (p < len) { out(p) = ((b + p) % 65536L).toInt; p += 1 }
+    new GenericArrayData(out)
+  }
+}
+
 /** 2x2 floor block mean of a flat sx*sy plane; floor-halved output sizes
   * with degenerate-axis clamp (matches OmeOps.downscale2x semantics). */
 case class BlockMean2x(pixels: Expression, sx: Expression, sy: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, sx, sy)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -259,48 +170,8 @@ case class BlockMean2x(pixels: Expression, sx: Expression, sy: Expression)
     Seq((pixels, ArrayType(IntegerType), "pixels"),
       (sx, IntegerType, "sx"), (sy, IntegerType, "sy")), "graft_block_mean_2x")
 
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    if (pxAny == null) return null
-    new GenericArrayData(BlockMean2x.mean(pxAny.asInstanceOf[ArrayData].toIntArray(),
-      sx.eval(input).asInstanceOf[Int], sy.eval(input).asInstanceOf[Int]))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx)
-    val sxG = sx.genCode(ctx); val syG = sy.genCode(ctx)
-    val arr = ctx.freshName("arr")
-    val nw = ctx.freshName("nw"); val nh = ctx.freshName("nh")
-    val dx = ctx.freshName("dx"); val dy = ctx.freshName("dy")
-    val by = ctx.freshName("by"); val bx = ctx.freshName("bx")
-    val base = ctx.freshName("base")
-    val code =
-      code"""
-        ${pxG.code}
-        ${sxG.code}
-        ${syG.code}
-        boolean ${ev.isNull} = ${pxG.isNull} || ${sxG.isNull} || ${syG.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          int $nw = java.lang.Math.max(${sxG.value} / 2, 1);
-          int $nh = java.lang.Math.max(${syG.value} / 2, 1);
-          int $dx = ${sxG.value} >= 2 ? 1 : 0;
-          int $dy = ${syG.value} >= 2 ? ${sxG.value} : 0;
-          int[] $arr = new int[$nw * $nh];
-          for (int $by = 0; $by < $nh; $by++) {
-            for (int $bx = 0; $bx < $nw; $bx++) {
-              int $base = ($by * 2) * ${sxG.value} + $bx * 2;
-              $arr[$by * $nw + $bx] = (${pxG.value}.getInt($base) +
-                ${pxG.value}.getInt($base + $dx) +
-                ${pxG.value}.getInt($base + $dy) +
-                ${pxG.value}.getInt($base + $dy + $dx)) / 4;
-            }
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(BlockMean2x, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -308,8 +179,11 @@ case class BlockMean2x(pixels: Expression, sx: Expression, sy: Expression)
 }
 
 object BlockMean2x {
-  /** The 2x2 floor block mean of a flat w*h plane (the kernel `eval`
-    * runs and `OmeZarr.write` builds pyramid levels with). */
+  def kernel(px: ArrayData, w: Int, h: Int): ArrayData =
+    new GenericArrayData(mean(px.toIntArray(), w, h))
+
+  /** The 2x2 floor block mean of a flat w*h plane (the one loop behind
+    * [[kernel]] and `OmeZarr.write`'s pyramid levels). */
   def mean(px: Array[Int], w: Int, h: Int): Array[Int] = {
     val nw = math.max(w / 2, 1); val nh = math.max(h / 2, 1)
     val dx = if (w >= 2) 1 else 0
@@ -397,7 +271,6 @@ case class PlaneStackFold(stack: Expression, how: String)
       newChildren: IndexedSeq[Expression]): Expression =
     copy(stack = newChildren(0))
 }
-
 /**
  * Brenner focus measure of a flat row-major sx-wide plane: the sum of
  * squared horizontal second-differences `(px[y, x+2] - px[y, x])^2`
@@ -405,8 +278,8 @@ case class PlaneStackFold(stack: Expression, how: String)
  * optics suppress high-frequency content, so out-of-focus planes score
  * low). The microscopy-QC substrate behind `OmeOps.focusReport`: the
  * reference's viewers surface focus picking interactively; at corpus
- * scale a per-plane scalar computed in one codegen'd int loop is the
- * shape that survives — no pixel explode, no lambda per pixel.
+ * scale a per-plane scalar computed in one int loop is the shape that
+ * survives — no pixel explode, no lambda per pixel.
  *
  * PRECONDITION: pixel values must fit uint16 (the OME surface's widest
  * integer dtype; `verify_ome_arrow` enforces it upstream). The exact-
@@ -421,7 +294,7 @@ case class PlaneStackFold(stack: Expression, how: String)
  * nullability purely child-driven like PixelSum/PixelCountGe.
  */
 case class PixelBrenner(pixels: Expression, sx: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, sx)
   override def dataType: DataType = LongType
@@ -431,12 +304,16 @@ case class PixelBrenner(pixels: Expression, sx: Expression)
     Seq((pixels, ArrayType(IntegerType), "pixels"),
       (sx, IntegerType, "sx")), "graft_pixel_brenner")
 
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    val sxAny = sx.eval(input)
-    if (pxAny == null || sxAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    val w = sxAny.asInstanceOf[Int]
+  override lazy val replacement: Expression =
+    KernelCall(PixelBrenner, dataType, children)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), sx = newChildren(1))
+}
+
+object PixelBrenner {
+  def kernel(px: ArrayData, w: Int): Long = {
     if (w <= 0) return 0L
     val n = px.numElements()
     var s = 0L
@@ -452,39 +329,6 @@ case class PixelBrenner(pixels: Expression, sx: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx)
-    val sxG = sx.genCode(ctx)
-    val rb = ctx.freshName("rowBase")
-    val x = ctx.freshName("x")
-    val d = ctx.freshName("d")
-    val n = ctx.freshName("n")
-    val code =
-      code"""
-        ${pxG.code}
-        ${sxG.code}
-        boolean ${ev.isNull} = ${pxG.isNull} || ${sxG.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull} && ${sxG.value} > 0) {
-          final int $n = ${pxG.value}.numElements();
-          int $rb = 0;
-          while ($rb + ${sxG.value} <= $n) {
-            for (int $x = 0; $x + 2 < ${sxG.value}; $x++) {
-              final long $d = (long) (${pxG.value}.getInt($rb + $x + 2) -
-                ${pxG.value}.getInt($rb + $x));
-              ${ev.value} += $d * $d;
-            }
-            $rb += ${sxG.value};
-          }
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), sx = newChildren(1))
 }
 
 /**
@@ -505,7 +349,7 @@ case class PixelBrenner(pixels: Expression, sx: Expression)
  * accumulator cannot wrap, so the result is engine-portable
  * bit-for-bit.
  */
-case class PixelDot(a: Expression, b: Expression) extends Expression {
+case class PixelDot(a: Expression, b: Expression) extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(a, b)
   override def dataType: DataType = LongType
@@ -516,12 +360,16 @@ case class PixelDot(a: Expression, b: Expression) extends Expression {
     Seq((a, ArrayType(IntegerType), "a"),
       (b, ArrayType(IntegerType), "b")), "graft_pixel_dot")
 
-  override def eval(input: InternalRow): Any = {
-    val aAny = a.eval(input)
-    val bAny = b.eval(input)
-    if (aAny == null || bAny == null) return null
-    val av = aAny.asInstanceOf[ArrayData]
-    val bv = bAny.asInstanceOf[ArrayData]
+  override lazy val replacement: Expression =
+    KernelCall(PixelDot, dataType, children, returnNullable = true)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(a = newChildren(0), b = newChildren(1))
+}
+
+object PixelDot {
+  def kernel(av: ArrayData, bv: ArrayData): java.lang.Long = {
     val n = av.numElements()
     if (n != bv.numElements()) return null
     var s = 0L
@@ -532,36 +380,6 @@ case class PixelDot(a: Expression, b: Expression) extends Expression {
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aG = a.genCode(ctx)
-    val bG = b.genCode(ctx)
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val code =
-      code"""
-        ${aG.code}
-        ${bG.code}
-        boolean ${ev.isNull} = ${aG.isNull} || ${bG.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          final int $n = ${aG.value}.numElements();
-          if ($n != ${bG.value}.numElements()) {
-            ${ev.isNull} = true;
-          } else {
-            for (int $i = 0; $i < $n; $i++) {
-              ${ev.value} += (long) ${aG.value}.getInt($i) *
-                ${bG.value}.getInt($i);
-            }
-          }
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(a = newChildren(0), b = newChildren(1))
 }
 
 /**
@@ -656,7 +474,6 @@ case class PixelSumAgg(child: Expression,
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
 }
-
 /**
  * Deterministic plane augmentation as a pure index permutation — the
  * vision-training augmentations (flips / right-angle rotations /
@@ -665,13 +482,11 @@ case class PixelSumAgg(child: Expression,
  * the plane dimensions (callers swap their `size_x`/`size_y` columns
  * alongside, see [[graft.operators.OmeOps.augmentPlanes]]).
  *
- * `mode` is a build-time literal, so codegen specializes the inner
- * loop to ONE index formula per mode — a tight int loop inside
- * whole-stage codegen, like [[PixelCrop]]. Modes: `hflip`, `vflip`,
- * `rot90` (clockwise), `rot180`, `transpose`.
+ * `mode` is a build-time literal passed to the kernel as an argument.
+ * Modes: `hflip`, `vflip`, `rot90` (clockwise), `rot180`, `transpose`.
  */
 case class PixelPermute(pixels: Expression, sx: Expression,
-    sy: Expression, mode: String) extends Expression {
+    sy: Expression, mode: String) extends RuntimeReplaceable {
 
   require(PixelPermute.modes.contains(mode),
     s"graft_pixel_permute: mode must be one of " +
@@ -687,73 +502,8 @@ case class PixelPermute(pixels: Expression, sx: Expression,
       (sx, IntegerType, "sx"), (sy, IntegerType, "sy")),
     "graft_pixel_permute")
 
-  /** input index for output position (o) given plane dims — the single
-    * formula both eval and codegen use (kept textually in sync with
-    * [[srcIndexJava]]). */
-  @inline private def srcIndex(o: Int, w: Int, h: Int): Int = mode match {
-    case "hflip"     => (o / w) * w + (w - 1 - o % w)
-    case "vflip"     => (h - 1 - o / w) * w + o % w
-    case "rot180"    => h * w - 1 - o
-    case "rot90"     => (h - 1 - o % h) * w + o / h   // out is w rows x h cols
-    case "transpose" => (o % h) * w + o / h
-  }
-
-  private def srcIndexJava(o: String, w: String, h: String): String =
-    mode match {
-      case "hflip"     => s"($o / $w) * $w + ($w - 1 - $o % $w)"
-      case "vflip"     => s"($h - 1 - $o / $w) * $w + $o % $w"
-      case "rot180"    => s"$h * $w - 1 - $o"
-      case "rot90"     => s"($h - 1 - $o % $h) * $w + $o / $h"
-      case "transpose" => s"($o % $h) * $w + $o / $h"
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val pxAny = pixels.eval(input)
-    val wAny = sx.eval(input)
-    val hAny = sy.eval(input)
-    if (pxAny == null || wAny == null || hAny == null) return null
-    val px = pxAny.asInstanceOf[ArrayData]
-    val w = wAny.asInstanceOf[Int]
-    val h = hAny.asInstanceOf[Int]
-    // NULL on ragged geometry (the PixelDot convention): a plane whose
-    // array disagrees with its declared dims would otherwise read out
-    // of bounds or silently permute garbage
-    if (w <= 0 || h <= 0 || px.numElements() != h * w) return null
-    val n = h * w
-    val out = new Array[Int](n)
-    var o = 0
-    while (o < n) { out(o) = px.getInt(srcIndex(o, w, h)); o += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pxG = pixels.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val hG = sy.genCode(ctx)
-    val arr = ctx.freshName("arr"); val o = ctx.freshName("o")
-    val n = ctx.freshName("n")
-    val idx = srcIndexJava(o, wG.value.toString, hG.value.toString)
-    val code =
-      code"""
-        ${pxG.code}
-        ${wG.code}
-        ${hG.code}
-        boolean ${ev.isNull} = ${pxG.isNull} || ${wG.isNull} || ${hG.isNull} ||
-          (!${pxG.isNull} && !${wG.isNull} && !${hG.isNull} &&
-            (${wG.value} <= 0 || ${hG.value} <= 0 ||
-              ${pxG.value}.numElements() != ${hG.value} * ${wG.value}));
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          int $n = ${hG.value} * ${wG.value};
-          int[] $arr = new int[$n];
-          for (int $o = 0; $o < $n; $o++) {
-            $arr[$o] = ${pxG.value}.getInt($idx);
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression = KernelCall(PixelPermute,
+    dataType, children :+ Literal(mode), returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -761,27 +511,45 @@ case class PixelPermute(pixels: Expression, sx: Expression,
 }
 
 object PixelPermute {
-  val modes: Set[String] =
-    Set("hflip", "vflip", "rot90", "rot180", "transpose")
+  val modes: Seq[String] =
+    Seq("hflip", "vflip", "rot90", "rot180", "transpose")
   /** do the plane dimensions swap under this mode? */
   def swapsDims(mode: String): Boolean =
     mode == "rot90" || mode == "transpose"
+
+  /** NULL on ragged geometry (the PixelDot convention): a plane whose
+    * array disagrees with its declared dims would otherwise read out
+    * of bounds or silently permute garbage. */
+  def kernel(px: ArrayData, w: Int, h: Int, mode: UTF8String): ArrayData = {
+    if (w <= 0 || h <= 0 || px.numElements().toLong != w.toLong * h)
+      return null
+    val n = h * w
+    val m = modes.indexOf(mode.toString)
+    val out = new Array[Int](n)
+    var o = 0
+    while (o < n) {
+      // input index for output position o; cases follow `modes`
+      out(o) = px.getInt((m: @switch) match {
+        case 0 => (o / w) * w + (w - 1 - o % w)     // hflip
+        case 1 => (h - 1 - o / w) * w + o % w       // vflip
+        case 2 => (h - 1 - o % h) * w + o / h       // rot90: w rows x h cols
+        case 3 => n - 1 - o                         // rot180
+        case 4 => (o % h) * w + o / h               // transpose
+      })
+      o += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /**
- * Imperative core of [[PixelCcObjects]] — kept in a standalone object
- * so the codegen path emits ONE static call to the same routine eval
- * uses (Scala emits static forwarders for top-level objects, so the
- * generated Java references `graft.functions.CcObjects.objects(...)`
- * directly). Union-find keeps the SMALLER root on every union, so a
- * component's root — and therefore its label — is the minimum linear
- * pixel index it contains: a deterministic, engine-portable labeling.
+ * Union-find labeling shared by [[PixelCcObjects]] and
+ * [[PixelCcObjectsIntensity]]. Union-find keeps the SMALLER root on
+ * every union, so a component's root — and therefore its label — is the
+ * minimum linear pixel index it contains: a deterministic,
+ * engine-portable labeling.
  */
 object CcObjects {
-  /** 4-connected components of `mask` (non-zero = foreground) as one
-    * struct per object, sorted by label ascending:
-    * `(label, area, y0, x0, y1, x1, sum_y, sum_x)` with an inclusive
-    * bounding box and integer centroid sums (callers divide/round). */
   /** union-find over the 4-connected foreground; returns the parent
     * array (background = −1) with min-index roots. */
   private def unionFind(mask: ArrayData, w: Int): Array[Int] = {
@@ -817,55 +585,19 @@ object CcObjects {
     parent
   }
 
-  def objects(mask: ArrayData, w: Int): ArrayData = {
+  /** 4-connected components of `mask` (non-zero = foreground) as one
+    * struct per object, sorted by label ascending:
+    * `(label, area, y0, x0, y1, x1, sum_y, sum_x)` with an inclusive
+    * bounding box and integer centroid sums (callers divide/round).
+    * With intensity `px` (same geometry; may be shorter — missing
+    * pixels read 0) each struct appends `(sum_v, min_v, max_v)`. */
+  private[functions] def objects(mask: ArrayData, px: ArrayData,
+      w: Int): ArrayData = {
     val n = mask.numElements()
+    val np = if (px == null) 0 else px.numElements()
     val parent = unionFind(mask, w)
-    def find(a: Int): Int = parent(a)
-    var i = 0
-
     // per-root stats; roots are min indexes, first-seen in ascending
     // index order, so insertion order == label order
-    val order = new scala.collection.mutable.ArrayBuffer[Int]()
-    val stats = new java.util.HashMap[Int, Array[Long]]()
-    i = 0
-    while (i < n) {
-      if (parent(i) >= 0) {
-        val r = find(i)
-        val y = i / w; val x = i % w
-        var s = stats.get(r)
-        if (s == null) {
-          s = Array[Long](0L, y, x, y, x, 0L, 0L)
-          stats.put(r, s); order += r
-        }
-        s(0) += 1L
-        if (y < s(1)) s(1) = y
-        if (x < s(2)) s(2) = x
-        if (y > s(3)) s(3) = y
-        if (x > s(4)) s(4) = x
-        s(5) += y; s(6) += x
-      }
-      i += 1
-    }
-    val rows = new Array[Any](order.length)
-    var o = 0
-    while (o < order.length) {
-      val r = order(o); val s = stats.get(r)
-      rows(o) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](r, s(0).toInt, s(1).toInt, s(2).toInt, s(3).toInt,
-          s(4).toInt, s(5), s(6)))
-      o += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  /** [[objects]] plus per-object intensity stats over `px` (same
-    * geometry): appends `(sum_v, min_v, max_v)` — the integrated /
-    * mean / extreme-intensity measurements CellProfiler reports per
-    * segmented object. */
-  def objectsIntensity(mask: ArrayData, px: ArrayData, w: Int): ArrayData = {
-    val n = mask.numElements()
-    val np = px.numElements()
-    val parent = unionFind(mask, w)
     val order = new scala.collection.mutable.ArrayBuffer[Int]()
     val stats = new java.util.HashMap[Int, Array[Long]]()
     var i = 0
@@ -891,16 +623,15 @@ object CcObjects {
       }
       i += 1
     }
-    val rows = new Array[Any](order.length)
-    var o = 0
-    while (o < order.length) {
-      val r = order(o); val s = stats.get(r)
-      rows(o) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](r, s(0).toInt, s(1).toInt, s(2).toInt, s(3).toInt,
-          s(4).toInt, s(5), s(6), s(7), s(8).toInt, s(9).toInt))
-      o += 1
+    val rows = order.map { r =>
+      val s = stats.get(r)
+      val shape = Array[Any](r, s(0).toInt, s(1).toInt, s(2).toInt,
+        s(3).toInt, s(4).toInt, s(5), s(6))
+      new GenericInternalRow(
+        if (px == null) shape else shape ++ Array[Any](s(7), s(8).toInt,
+          s(9).toInt))
     }
-    new GenericArrayData(rows)
+    new GenericArrayData(rows.toArray[Any])
   }
 }
 
@@ -918,7 +649,7 @@ object CcObjects {
  * hash-compare against a recursive-CTE oracle.
  */
 case class PixelCcObjects(mask: Expression, sx: Expression)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(mask, sx)
   override def dataType: DataType = PixelCcObjects.schema
@@ -928,28 +659,8 @@ case class PixelCcObjects(mask: Expression, sx: Expression)
     Seq((mask, ArrayType(IntegerType), "mask"), (sx, IntegerType, "sx")),
     "graft_cc_objects")
 
-  override def eval(input: InternalRow): Any = {
-    val mAny = mask.eval(input)
-    val wAny = sx.eval(input)
-    if (mAny == null || wAny == null) return null
-    CcObjects.objects(mAny.asInstanceOf[ArrayData], wAny.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mG = mask.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val code =
-      code"""
-        ${mG.code}
-        ${wG.code}
-        boolean ${ev.isNull} = ${mG.isNull} || ${wG.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.CcObjects.objects(${mG.value}, ${wG.value});
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(PixelCcObjects, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -967,25 +678,63 @@ object PixelCcObjects {
     StructField("sum_y", LongType, nullable = false),
     StructField("sum_x", LongType, nullable = false))),
     containsNull = false)
+
+  def kernel(mask: ArrayData, w: Int): ArrayData =
+    CcObjects.objects(mask, null, w)
 }
 
 /**
- * Imperative core of [[PixelGlcmMoments]] (static-forwarder pattern,
- * see [[CcObjects]]): horizontal (offset (0,1)) gray-level
- * co-occurrence moments over `bins` equal-width bins of `[0, maxv)`.
- * All moments are exact integers except `clnc = Σ c·ln c`, which is
- * accumulated in FIXED bin order so the double sum is deterministic.
+ * Gray-level co-occurrence texture moments per plane — the Haralick
+ * texture substrate (contrast, dissimilarity, energy, entropy derive
+ * from these by pure column arithmetic, see
+ * [[graft.operators.OmeOps.textureReport]]). One tight pass per plane
+ * over the horizontal neighbor pairs; pixels never leave the row and
+ * the co-occurrence matrix never materializes in the query — only the
+ * 5 scalar moments do.
  */
-object GlcmMoments {
+case class PixelGlcmMoments(pixels: Expression, sx: Expression,
+    bins: Int, maxv: Int) extends RuntimeReplaceable {
+
+  require(bins > 0 && maxv >= bins,
+    s"graft_glcm_moments: need 0 < bins <= maxv (got bins=$bins maxv=$maxv)")
+
+  override def children: Seq[Expression] = Seq(pixels, sx)
+  override def dataType: DataType = PixelGlcmMoments.schema
+  override def nullable: Boolean = children.exists(_.nullable)
+
+  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
+    Seq((pixels, ArrayType(IntegerType), "pixels"), (sx, IntegerType, "sx")),
+    "graft_glcm_moments")
+
+  override lazy val replacement: Expression = KernelCall(PixelGlcmMoments,
+    dataType, children ++ Seq(Literal(bins), Literal(maxv)))
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), sx = newChildren(1))
+}
+
+object PixelGlcmMoments {
+  val schema: DataType = StructType(Seq(
+    StructField("n_pairs", LongType, nullable = false),
+    StructField("contrast_num", LongType, nullable = false),
+    StructField("dissim_num", LongType, nullable = false),
+    StructField("energy_num", LongType, nullable = false),
+    StructField("clnc", DoubleType, nullable = false)))
+
   private def clampBin(v: Int, bins: Int, maxv: Int): Int = {
     val b = (v.toLong * bins / maxv).toInt
     if (b < 0) 0 else if (b > bins - 1) bins - 1 else b
   }
 
-  /** `(n_pairs, contrast_num, dissim_num, energy_num, clnc)` where
-    * contrast_num = Σ c·(i−j)², dissim_num = Σ c·|i−j|,
-    * energy_num = Σ c² over the bins² co-occurrence counts. */
-  def moments(px: ArrayData, w: Int, bins: Int, maxv: Int): InternalRow = {
+  /** Horizontal (offset (0,1)) co-occurrence moments over `bins`
+    * equal-width bins of `[0, maxv)`: `(n_pairs, contrast_num,
+    * dissim_num, energy_num, clnc)` where contrast_num = Σ c·(i−j)²,
+    * dissim_num = Σ c·|i−j|, energy_num = Σ c² over the bins²
+    * co-occurrence counts. All exact integers except `clnc = Σ c·ln c`,
+    * which is accumulated in FIXED bin order so the double sum is
+    * deterministic. */
+  def kernel(px: ArrayData, w: Int, bins: Int, maxv: Int): InternalRow = {
     val n = px.numElements()
     val counts = new Array[Long](bins * bins)
     var i = 0
@@ -1017,71 +766,8 @@ object GlcmMoments {
       }
       k += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nPairs, contrast, dissim, energy, clnc))
+    new GenericInternalRow(Array[Any](nPairs, contrast, dissim, energy, clnc))
   }
-}
-
-/**
- * Gray-level co-occurrence texture moments per plane — the Haralick
- * texture substrate (contrast, dissimilarity, energy, entropy derive
- * from these by pure column arithmetic, see
- * [[graft.operators.OmeOps.textureReport]]). One tight pass per plane
- * over the horizontal neighbor pairs; pixels never leave the row and
- * the co-occurrence matrix never materializes in the query — only the
- * 5 scalar moments do.
- */
-case class PixelGlcmMoments(pixels: Expression, sx: Expression,
-    bins: Int, maxv: Int) extends Expression {
-
-  require(bins > 0 && maxv >= bins,
-    s"graft_glcm_moments: need 0 < bins <= maxv (got bins=$bins maxv=$maxv)")
-
-  override def children: Seq[Expression] = Seq(pixels, sx)
-  override def dataType: DataType = PixelGlcmMoments.schema
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
-    Seq((pixels, ArrayType(IntegerType), "pixels"), (sx, IntegerType, "sx")),
-    "graft_glcm_moments")
-
-  override def eval(input: InternalRow): Any = {
-    val pAny = pixels.eval(input)
-    val wAny = sx.eval(input)
-    if (pAny == null || wAny == null) return null
-    GlcmMoments.moments(pAny.asInstanceOf[ArrayData],
-      wAny.asInstanceOf[Int], bins, maxv)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = pixels.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val code =
-      code"""
-        ${pG.code}
-        ${wG.code}
-        boolean ${ev.isNull} = ${pG.isNull} || ${wG.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.GlcmMoments.moments(
-            ${pG.value}, ${wG.value}, $bins, $maxv);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), sx = newChildren(1))
-}
-
-object PixelGlcmMoments {
-  val schema: DataType = StructType(Seq(
-    StructField("n_pairs", LongType, nullable = false),
-    StructField("contrast_num", LongType, nullable = false),
-    StructField("dissim_num", LongType, nullable = false),
-    StructField("energy_num", LongType, nullable = false),
-    StructField("clnc", DoubleType, nullable = false)))
 }
 
 /**
@@ -1092,7 +778,7 @@ object PixelGlcmMoments {
  * linear indexes, output sorted by label.
  */
 case class PixelCcObjectsIntensity(mask: Expression, pixels: Expression,
-    sx: Expression) extends Expression {
+    sx: Expression) extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(mask, pixels, sx)
   override def dataType: DataType = PixelCcObjectsIntensity.schema
@@ -1103,33 +789,8 @@ case class PixelCcObjectsIntensity(mask: Expression, pixels: Expression,
       (pixels, ArrayType(IntegerType), "pixels"), (sx, IntegerType, "sx")),
     "graft_cc_objects_intensity")
 
-  override def eval(input: InternalRow): Any = {
-    val mAny = mask.eval(input)
-    val pAny = pixels.eval(input)
-    val wAny = sx.eval(input)
-    if (mAny == null || pAny == null || wAny == null) return null
-    CcObjects.objectsIntensity(mAny.asInstanceOf[ArrayData],
-      pAny.asInstanceOf[ArrayData], wAny.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mG = mask.genCode(ctx)
-    val pG = pixels.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val code =
-      code"""
-        ${mG.code}
-        ${pG.code}
-        ${wG.code}
-        boolean ${ev.isNull} = ${mG.isNull} || ${pG.isNull} || ${wG.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.CcObjects.objectsIntensity(
-            ${mG.value}, ${pG.value}, ${wG.value});
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression =
+    KernelCall(PixelCcObjectsIntensity, dataType, children)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -1151,46 +812,9 @@ object PixelCcObjectsIntensity {
     StructField("min_v", IntegerType, nullable = false),
     StructField("max_v", IntegerType, nullable = false))),
     containsNull = false)
-}
 
-/**
- * Imperative core of [[PixelStretch]] (static-forwarder pattern, see
- * [[CcObjects]]): percentile contrast stretch of one plane. The
- * percentile is the SORTED-ARRAY INDEX form `sorted[(n−1)·p/100]`
- * (integer floor — deterministic under ties because the VALUE at a
- * sorted position never depends on tie order), and the rescale is the
- * integer-exact HALF_UP formula
- * `((clamp(v)−lo)·510 + (hi−lo)) / (2·(hi−lo))` — no doubles anywhere,
- * so the output is bit-identical across engines.
- */
-object StretchKernel {
-  /** `(lo, hi, stretched)`: 8-bit display-normalized plane. hi == lo
-    * (flat plane) maps everything to 0. */
-  def stretch(px: ArrayData, pLo: Int, pHi: Int): InternalRow = {
-    val n = px.numElements()
-    val sorted = px.toIntArray().clone()
-    java.util.Arrays.sort(sorted)
-    // Long sorted-index: (n-1)*pHi overflows Int above ~22.6M pixels
-    val lo = sorted(((n - 1).toLong * pLo / 100).toInt)
-    val hi = sorted(((n - 1).toLong * pHi / 100).toInt)
-    val out = new Array[Int](n)
-    if (hi > lo) {
-      // Long numerator: with 32-bit intensity data the window d (and
-      // (v-lo)*510) can exceed Int range — same class as the sorted-
-      // index overflow above
-      val d = (hi - lo).toLong
-      var i = 0
-      while (i < n) {
-        var v = px.getInt(i)
-        if (v < lo) v = lo
-        if (v > hi) v = hi
-        out(i) = (((v - lo).toLong * 510 + d) / (2 * d)).toInt
-        i += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](lo, hi, new GenericArrayData(out)))
-  }
+  def kernel(mask: ArrayData, px: ArrayData, w: Int): ArrayData =
+    CcObjects.objects(mask, px, w)
 }
 
 /**
@@ -1204,7 +828,7 @@ object StretchKernel {
  * normalized plane without a second sort.
  */
 case class PixelStretch(pixels: Expression, pLo: Int, pHi: Int)
-  extends Expression {
+  extends RuntimeReplaceable {
 
   require(pLo >= 0 && pHi <= 100 && pLo < pHi,
     s"graft_pixel_stretch: need 0 <= pLo < pHi <= 100 (got $pLo, $pHi)")
@@ -1217,29 +841,9 @@ case class PixelStretch(pixels: Expression, pLo: Int, pHi: Int)
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((pixels, ArrayType(IntegerType), "pixels")), "graft_pixel_stretch")
 
-  override def eval(input: InternalRow): Any = {
-    val pAny = pixels.eval(input)
-    if (pAny == null) return null
-    val px = pAny.asInstanceOf[ArrayData]
-    if (px.numElements() == 0) return null
-    StretchKernel.stretch(px, pLo, pHi)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = pixels.genCode(ctx)
-    val code =
-      code"""
-        ${pG.code}
-        boolean ${ev.isNull} = ${pG.isNull} || (!${pG.isNull} &&
-          ${pG.value}.numElements() == 0);
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.StretchKernel.stretch(
-            ${pG.value}, $pLo, $pHi);
-        }
-      """
-    ev.copy(code = code)
-  }
+  override lazy val replacement: Expression = KernelCall(PixelStretch,
+    dataType, children ++ Seq(Literal(pLo), Literal(pHi)),
+    returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -1252,6 +856,40 @@ object PixelStretch {
     StructField("hi", IntegerType, nullable = false),
     StructField("pixels", ArrayType(IntegerType, containsNull = false),
       nullable = false)))
+
+  /** `(lo, hi, stretched)`: 8-bit display-normalized plane; NULL on an
+    * empty plane. The percentile is the SORTED-ARRAY INDEX form
+    * `sorted[(n−1)·p/100]` (integer floor — deterministic under ties
+    * because the VALUE at a sorted position never depends on tie
+    * order), and the rescale is the integer-exact HALF_UP formula
+    * `((clamp(v)−lo)·510 + (hi−lo)) / (2·(hi−lo))` — no doubles
+    * anywhere, so the output is bit-identical across engines. hi == lo
+    * (flat plane) maps everything to 0. */
+  def kernel(px: ArrayData, pLo: Int, pHi: Int): InternalRow = {
+    val n = px.numElements()
+    if (n == 0) return null
+    val sorted = px.toIntArray().clone()
+    java.util.Arrays.sort(sorted)
+    // Long sorted-index: (n-1)*pHi overflows Int above ~22.6M pixels
+    val lo = sorted(((n - 1).toLong * pLo / 100).toInt)
+    val hi = sorted(((n - 1).toLong * pHi / 100).toInt)
+    val out = new Array[Int](n)
+    if (hi > lo) {
+      // Long window: with 32-bit intensity data hi - lo (and
+      // (v-lo)*510) can exceed Int range — same class as the sorted-
+      // index overflow above
+      val d = hi.toLong - lo
+      var i = 0
+      while (i < n) {
+        var v = px.getInt(i)
+        if (v < lo) v = lo
+        if (v > hi) v = hi
+        out(i) = (((v.toLong - lo) * 510 + d) / (2 * d)).toInt
+        i += 1
+      }
+    }
+    new GenericInternalRow(Array[Any](lo, hi, new GenericArrayData(out)))
+  }
 }
 
 /**
@@ -1261,10 +899,10 @@ object PixelStretch {
  * fill with 0), so a frame whose measured drift against its anchor is
  * `(dy, dx)` lands back on the anchor's coordinates. `dy`/`dx` are
  * COLUMN arguments (they come from the drift report's data), so the
- * kernel stays codegen'd while the shift varies per row.
+ * shift varies per row.
  */
 case class PixelShiftExpr(pixels: Expression, sx: Expression,
-    dy: Expression, dx: Expression) extends Expression {
+    dy: Expression, dx: Expression) extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, sx, dy, dx)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -1276,18 +914,18 @@ case class PixelShiftExpr(pixels: Expression, sx: Expression,
       (dy, IntegerType, "dy"), (dx, IntegerType, "dx")),
     "graft_pixel_shift")
 
-  override def eval(input: InternalRow): Any = {
-    val pAny = pixels.eval(input)
-    val wAny = sx.eval(input)
-    val dyAny = dy.eval(input)
-    val dxAny = dx.eval(input)
-    if (pAny == null || wAny == null || dyAny == null || dxAny == null)
-      return null
-    val px = pAny.asInstanceOf[ArrayData]
-    val w = wAny.asInstanceOf[Int]
+  override lazy val replacement: Expression =
+    KernelCall(PixelShiftExpr, dataType, children, returnNullable = true)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), sx = newChildren(1),
+      dy = newChildren(2), dx = newChildren(3))
+}
+
+object PixelShiftExpr {
+  def kernel(px: ArrayData, w: Int, sdy: Int, sdx: Int): ArrayData = {
     if (w <= 0) return null
-    val sdy = dyAny.asInstanceOf[Int]
-    val sdx = dxAny.asInstanceOf[Int]
     val n = px.numElements()
     val h = n / w
     val out = new Array[Int](n)
@@ -1301,45 +939,6 @@ case class PixelShiftExpr(pixels: Expression, sx: Expression,
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = pixels.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val dyG = dy.genCode(ctx)
-    val dxG = dx.genCode(ctx)
-    val arr = ctx.freshName("arr"); val o = ctx.freshName("o")
-    val n = ctx.freshName("n"); val h = ctx.freshName("h")
-    val y = ctx.freshName("y"); val x = ctx.freshName("x")
-    val code =
-      code"""
-        ${pG.code}
-        ${wG.code}
-        ${dyG.code}
-        ${dxG.code}
-        boolean ${ev.isNull} = ${pG.isNull} || ${wG.isNull} ||
-          ${dyG.isNull} || ${dxG.isNull} ||
-          (!${wG.isNull} && ${wG.value} <= 0);
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          int $n = ${pG.value}.numElements();
-          int $h = $n / ${wG.value};
-          int[] $arr = new int[$n];
-          for (int $o = 0; $o < $n; $o++) {
-            int $y = $o / ${wG.value} - ${dyG.value};
-            int $x = $o % ${wG.value} - ${dxG.value};
-            $arr[$o] = ($y >= 0 && $y < $h && $x >= 0 && $x < ${wG.value})
-              ? ${pG.value}.getInt($y * ${wG.value} + $x) : 0;
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), sx = newChildren(1),
-      dy = newChildren(2), dx = newChildren(3))
 }
 
 /**
@@ -1350,11 +949,34 @@ case class PixelShiftExpr(pixels: Expression, sx: Expression,
  * bit-identical across engines. `cdf(v)` = count of plane pixels
  * ≤ v (upper bound in the sorted copy, O(log n) per pixel);
  * `cdf_min` = multiplicity of the minimum. A constant plane maps to
- * all zeros.
+ * all zeros; an empty plane is NULL. `levels` is a build-time literal.
  */
-object EqualizeKernel {
-  def equalize(px: ArrayData, levels: Int): ArrayData = {
+case class PixelEqualize(pixels: Expression, levels: Int)
+  extends RuntimeReplaceable {
+
+  require(levels >= 2, s"graft_pixel_equalize: levels must be >= 2")
+
+  override def children: Seq[Expression] = Seq(pixels)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  // NULL on an empty plane, independent of child nullability
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
+    Seq((pixels, ArrayType(IntegerType), "pixels")),
+    "graft_pixel_equalize")
+
+  override lazy val replacement: Expression = KernelCall(PixelEqualize,
+    dataType, children :+ Literal(levels), returnNullable = true)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0))
+}
+
+object PixelEqualize {
+  def kernel(px: ArrayData, levels: Int): ArrayData = {
     val n = px.numElements()
+    if (n == 0) return null
     val sorted = px.toIntArray().clone()
     java.util.Arrays.sort(sorted)
     // cdf_min = how many pixels share the minimum value
@@ -1383,50 +1005,6 @@ object EqualizeKernel {
   }
 }
 
-/** see [[EqualizeKernel]]; `levels` is a build-time literal. */
-case class PixelEqualize(pixels: Expression, levels: Int)
-  extends Expression {
-
-  require(levels >= 2, s"graft_pixel_equalize: levels must be >= 2")
-
-  override def children: Seq[Expression] = Seq(pixels)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  // NULL on an empty plane, independent of child nullability
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
-    Seq((pixels, ArrayType(IntegerType), "pixels")),
-    "graft_pixel_equalize")
-
-  override def eval(input: InternalRow): Any = {
-    val pAny = pixels.eval(input)
-    if (pAny == null) return null
-    val px = pAny.asInstanceOf[ArrayData]
-    if (px.numElements() == 0) return null
-    EqualizeKernel.equalize(px, levels)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = pixels.genCode(ctx)
-    val code =
-      code"""
-        ${pG.code}
-        boolean ${ev.isNull} = ${pG.isNull} || (!${pG.isNull} &&
-          ${pG.value}.numElements() == 0);
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.EqualizeKernel.equalize(
-            ${pG.value}, $levels);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0))
-}
-
 /**
  * Rank-to-target remap of one plane — the per-plane half of
  * cross-sample QUANTILE NORMALIZATION
@@ -1437,9 +1015,31 @@ case class PixelEqualize(pixels: Expression, levels: Int)
  * output is engine-identical. NULL when the target profile's length
  * disagrees with the plane (the PixelDot convention).
  */
-object RankMapKernel {
-  def rankMap(px: ArrayData, targets: ArrayData): ArrayData = {
+case class PixelRankMap(pixels: Expression, targets: Expression)
+  extends RuntimeReplaceable {
+
+  override def children: Seq[Expression] = Seq(pixels, targets)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  // NULL on a length mismatch, independent of child nullability
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
+    Seq((pixels, ArrayType(IntegerType), "pixels"),
+      (targets, ArrayType(IntegerType), "targets")),
+    "graft_pixel_rank_map")
+
+  override lazy val replacement: Expression =
+    KernelCall(PixelRankMap, dataType, children, returnNullable = true)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(pixels = newChildren(0), targets = newChildren(1))
+}
+
+object PixelRankMap {
+  def kernel(px: ArrayData, targets: ArrayData): ArrayData = {
     val n = px.numElements()
+    if (n != targets.numElements()) return null
     // sort indices by (value, index)
     val idx = Array.tabulate(n)(identity)
     val vals = px.toIntArray()
@@ -1457,54 +1057,6 @@ object RankMapKernel {
   }
 }
 
-/** see [[RankMapKernel]]. */
-case class PixelRankMap(pixels: Expression, targets: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(pixels, targets)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  // NULL on a length mismatch, independent of child nullability
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
-    Seq((pixels, ArrayType(IntegerType), "pixels"),
-      (targets, ArrayType(IntegerType), "targets")),
-    "graft_pixel_rank_map")
-
-  override def eval(input: InternalRow): Any = {
-    val pAny = pixels.eval(input)
-    val tAny = targets.eval(input)
-    if (pAny == null || tAny == null) return null
-    val px = pAny.asInstanceOf[ArrayData]
-    val tg = tAny.asInstanceOf[ArrayData]
-    if (px.numElements() != tg.numElements()) return null
-    RankMapKernel.rankMap(px, tg)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = pixels.genCode(ctx)
-    val tG = targets.genCode(ctx)
-    val code =
-      code"""
-        ${pG.code}
-        ${tG.code}
-        boolean ${ev.isNull} = ${pG.isNull} || ${tG.isNull} ||
-          (!${pG.isNull} && !${tG.isNull} &&
-            ${pG.value}.numElements() != ${tG.value}.numElements());
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.RankMapKernel.rankMap(
-            ${pG.value}, ${tG.value});
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(pixels = newChildren(0), targets = newChildren(1))
-}
-
 /**
  * Focus stacking — the all-in-focus composite: for every pixel
  * position, take the value from the z-plane whose LOCAL sharpness at
@@ -1515,14 +1067,51 @@ case class PixelRankMap(pixels: Expression, targets: Expression)
  * plane PER PIXEL. Ties take the LOWEST z, and the stack is sorted by
  * z inside the kernel, so shuffle collect order cannot change the
  * result. Returns `struct(pixels, zmap)` — the composite plane plus
- * the chosen-z map (the QC view of where focus lives).
+ * the chosen-z map (the QC view of where focus lives). The stack is
+ * ARRAY<STRUCT<z INT, pixels ARRAY<INT>>> (any order).
  */
-object FocusStackKernel {
+case class FocusStack(stack: Expression, sx: Expression)
+  extends RuntimeReplaceable {
+
+  override def children: Seq[Expression] = Seq(stack, sx)
+  override def dataType: DataType = FocusStack.schema
+  // NULL on w <= 0 or a ragged stack, independent of child nullability
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (sx.dataType != IntegerType)
+      TypeCheckResult.TypeCheckFailure(
+        "graft_focus_stack: sx must be INT")
+    else stack.dataType match {
+      case ArrayType(StructType(fields), _) if fields.length == 2 &&
+        fields(0).dataType == IntegerType &&
+        fields(1).dataType.isInstanceOf[ArrayType] =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"graft_focus_stack: stack must be ARRAY<STRUCT<z INT, " +
+          s"pixels ARRAY<INT>>> (got ${other.simpleString})")
+    }
+
+  override lazy val replacement: Expression =
+    KernelCall(FocusStack, dataType, children, returnNullable = true)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(stack = newChildren(0), sx = newChildren(1))
+}
+
+object FocusStack {
+  val schema: DataType = StructType(Seq(
+    StructField("pixels", ArrayType(IntegerType, containsNull = false),
+      nullable = false),
+    StructField("zmap", ArrayType(IntegerType, containsNull = false),
+      nullable = false)))
+
   /** Returns null (→ SQL NULL) on a non-positive width or a ragged
     * stack (plane lengths disagree) — the PixelShiftExpr convention;
     * indexing every plane at the composite position otherwise reads
     * out of bounds on the shorter ones. */
-  def compose(stack: ArrayData, w: Int): InternalRow = {
+  def kernel(stack: ArrayData, w: Int): InternalRow = {
     if (w <= 0) return null
     val nz = stack.numElements()
     val planes = Array.tabulate(nz) { i =>
@@ -1558,70 +1147,7 @@ object FocusStackKernel {
       zmap(pos) = planes(bestIdx)._1
       pos += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new GenericInternalRow(
       Array[Any](new GenericArrayData(out), new GenericArrayData(zmap)))
   }
-}
-
-/** see [[FocusStackKernel]]; stack = ARRAY<STRUCT<z INT, pixels
-  * ARRAY<INT>>> (any order — the kernel sorts by z). */
-case class FocusStack(stack: Expression, sx: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(stack, sx)
-  override def dataType: DataType = FocusStack.schema
-  // NULL on w <= 0 or a ragged stack, independent of child nullability
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (sx.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_focus_stack: sx must be INT")
-    else stack.dataType match {
-      case ArrayType(StructType(fields), _) if fields.length == 2 &&
-        fields(0).dataType == IntegerType &&
-        fields(1).dataType.isInstanceOf[ArrayType] =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_focus_stack: stack must be ARRAY<STRUCT<z INT, " +
-          s"pixels ARRAY<INT>>> (got ${other.simpleString})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val sAny = stack.eval(input)
-    val wAny = sx.eval(input)
-    if (sAny == null || wAny == null) return null
-    FocusStackKernel.compose(sAny.asInstanceOf[ArrayData],
-      wAny.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sG = stack.genCode(ctx)
-    val wG = sx.genCode(ctx)
-    val code =
-      code"""
-        ${sG.code}
-        ${wG.code}
-        boolean ${ev.isNull} = ${sG.isNull} || ${wG.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.FocusStackKernel.compose(
-            ${sG.value}, ${wG.value});
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(stack = newChildren(0), sx = newChildren(1))
-}
-
-object FocusStack {
-  val schema: DataType = StructType(Seq(
-    StructField("pixels", ArrayType(IntegerType, containsNull = false),
-      nullable = false),
-    StructField("zmap", ArrayType(IntegerType, containsNull = false),
-      nullable = false)))
 }

@@ -961,9 +961,9 @@ object OmeOps {
    * the dimension-transposing modes.
    *
    * Scale shape: a UNION of per-mode narrow projections — each mode is
-   * a build-time literal so [[graft.functions.PixelPermute]] codegen
-   * specializes to one index formula per branch; no shuffle, no
-   * explode, output row count = planes × |modes| by construction.
+   * a build-time literal argument of the [[graft.functions.PixelPermute]]
+   * kernel; no shuffle, no explode, output row count = planes × |modes|
+   * by construction.
    */
   def augmentPlanes(planeDf: DataFrame, modes: Seq[String]): DataFrame = {
     require(modes.nonEmpty, "augmentPlanes: need at least one mode")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{EqualizeKernel, FocusStackKernel, GlcmMoments,
-  StretchKernel}
+import graft.functions.{FocusStack, PixelEqualize, PixelGlcmMoments,
+  PixelStretch}
 
 /** Regression tests for the r10 ADVICE hardening pass: value-range
   * and overflow guards in the imaging kernels. Each test reproduces
@@ -22,7 +22,7 @@ class HardeningSpec extends SparkSpec {
     // v == maxv previously computed bin = bins (out of range);
     // a negative v computed a negative bin. Both must land in edge bins.
     val px = Array(256, 300, -5, 10) // maxv=256, bins=8, w=4
-    val m = GlcmMoments.moments(ints(px), 4, 8, 256)
+    val m = PixelGlcmMoments.kernel(ints(px), 4, 8, 256)
     // pairs: (256,300)->bin(7,7) d=0; (300,-5)->(7,0) d=7; (-5,10)->(0,0) d=0
     assert(m.getLong(0) === 3L)          // n_pairs
     assert(m.getLong(1) === 49L)         // contrast = 7^2
@@ -32,7 +32,7 @@ class HardeningSpec extends SparkSpec {
   test("GlcmMoments: 16-bit values with maxv=256 (the ome_texture " +
       "caller-mismatch scenario) do not crash") {
     val px = Array.tabulate(64)(i => (i * 1021) % 65536)
-    val m = GlcmMoments.moments(ints(px), 8, 16, 256)
+    val m = PixelGlcmMoments.kernel(ints(px), 8, 16, 256)
     assert(m.getLong(0) === 56L) // 8 rows x 7 horizontal pairs
   }
 
@@ -43,7 +43,7 @@ class HardeningSpec extends SparkSpec {
     // (lo-cmin)*2*255 overflowed at lo > ~4.21M, producing garbage.
     val n = 4500000
     val px = Array.tabulate(n)(identity)
-    val out = EqualizeKernel.equalize(ints(px), 256)
+    val out = PixelEqualize.kernel(ints(px), 256)
     assert(out.getInt(0) === 0)
     assert(out.getInt(n - 1) === 255)
     // the position whose old Int numerator wrapped: lo = 4210753
@@ -61,7 +61,7 @@ class HardeningSpec extends SparkSpec {
     // AIOOBE before the fix. 23M-pixel ramp: idx lo = (n-1)*5/100.
     val n = 23000000
     val px = Array.tabulate(n)(identity)
-    val r = StretchKernel.stretch(ints(px), 5, 95)
+    val r = PixelStretch.kernel(ints(px), 5, 95)
     assert(r.getInt(0) === ((n - 1).toLong * 5 / 100).toInt)  // lo
     assert(r.getInt(1) === ((n - 1).toLong * 95 / 100).toInt) // hi
     val out = r.getArray(2)
@@ -74,12 +74,12 @@ class HardeningSpec extends SparkSpec {
       new GenericInternalRow(Array[Any](z, new GenericArrayData(px)))
     val ragged = new GenericArrayData(Array[Any](
       plane(0, Array(1, 2, 3, 4)), plane(1, Array(9, 9))))
-    assert(FocusStackKernel.compose(ragged, 2) === null)
+    assert(FocusStack.kernel(ragged, 2) === null)
     val ok = new GenericArrayData(Array[Any](
       plane(0, Array(1, 2, 3, 4)), plane(1, Array(9, 9, 9, 9))))
-    assert(FocusStackKernel.compose(ok, 0) === null)
-    assert(FocusStackKernel.compose(ok, -3) === null)
-    assert(FocusStackKernel.compose(ok, 2) !== null)
+    assert(FocusStack.kernel(ok, 0) === null)
+    assert(FocusStack.kernel(ok, -3) === null)
+    assert(FocusStack.kernel(ok, 2) !== null)
   }
 
   test("mmrTopK: a null-embedding neighbor is dropped from the " +

@@ -542,8 +542,8 @@ class IndexLifecycleSpec extends SparkSpec {
 
   test("pointer lifecycle covers ALL FOUR index families: bm25 " +
       "canonicalize, ivf-pq retrain-from-source, and the minhash " +
-      "retune all publish through generations and answer like their " +
-      "rename-swap twins") {
+      "retune all publish through generations and answer like a fresh " +
+      "build") {
     def tmpDir(p: String) =
       java.nio.file.Files.createTempDirectory(p).toString
 

@@ -21,13 +21,12 @@ class KernelModeSpec extends SparkSpec with ModePairs {
   /** `cases` (one Seq of argument values each) as a frame of `schema`,
     * projected through the registered `fn` with `params` appended as
     * literals; both modes must equal `ref` per case, then NULL once per
-    * column in `nullCols` (each a copy of the first case). */
+    * column (each a copy of the first case). */
   private def checkKernel(fn: String, schema: StructType,
-      cases: Seq[Seq[Any]], params: Seq[Any] = Nil,
-      nullCols: Option[Seq[Int]] = None)(ref: Seq[Any] => Any): Unit = {
+      cases: Seq[Seq[Any]], params: Seq[Any] = Nil)(
+      ref: Seq[Any] => Any): Unit = {
     graft.functions.ensureRegistered(spark)
-    val nullCases = nullCols.getOrElse(schema.indices)
-      .map(i => cases.head.updated(i, null))
+    val nullCases = schema.indices.map(i => cases.head.updated(i, null))
     val rows = (cases ++ nullCases).map(Row.fromSeq)
     val expected = cases.map(c => Row(ref(c))) ++ nullCases.map(_ => Row(null))
     assertBothModes(spark.createDataFrame(rows.asJava, schema)
@@ -53,7 +52,7 @@ class KernelModeSpec extends SparkSpec with ModePairs {
       Seq(plane(17), 5, 0, 5, 1, 3),        // ragged: 2 trailing pixels
       Seq(edges ++ edges, 3, 1, 3, 0, 4),
       Seq(plane(9), 3, 2, 2, 0, 3)),        // empty window
-      nullCols = Some(Seq(0))) { c =>
+      ) { c =>
       val px = arr(c(0)); val Seq(w, x0, x1, y0, y1) =
         c.drop(1).map(_.asInstanceOf[Int])
       for (y <- y0 until y1; x <- x0 until x1) yield px(y * w + x)
@@ -97,7 +96,7 @@ class KernelModeSpec extends SparkSpec with ModePairs {
       Seq(plane(16), 4, 4),
       Seq(Seq.fill(9)(65535), 3, 3),
       Seq(plane(20), 4, 4)),                // ragged: 4 trailing pixels
-      nullCols = Some(Seq(0))) { c =>
+      ) { c =>
       val px = arr(c(0))
       val w = c(1).asInstanceOf[Int]; val h = c(2).asInstanceOf[Int]
       val nw = math.max(w / 2, 1); val nh = math.max(h / 2, 1)
@@ -145,7 +144,9 @@ class KernelModeSpec extends SparkSpec with ModePairs {
         "sx" -> IntegerType, "sy" -> IntegerType), Seq(
         Seq(Seq(8), 1, 1), Seq(plane(6), 3, 2), Seq(plane(15), 5, 3),
         Seq(edges, 2, 3), Seq(plane(5), 3, 2), Seq(plane(6), 0, 2),
-        Seq(plane(6), 3, -1)), params = Seq(mode)) { c =>
+        Seq(plane(6), 3, -1),
+        Seq(Seq.empty[Int], 65536, 65536)),  // w*h wraps to 0 in Int
+        params = Seq(mode)) { c =>
         val px = arr(c(0))
         val w = c(1).asInstanceOf[Int]; val h = c(2).asInstanceOf[Int]
         if (w <= 0 || h <= 0 || px.length.toLong != w.toLong * h) null
@@ -258,7 +259,8 @@ class KernelModeSpec extends SparkSpec with ModePairs {
       "rescale; an empty plane is NULL") {
     checkKernel("graft_pixel_stretch", fields("px" -> ints), Seq(
       Seq(Seq(5)), Seq(plane(31)), Seq(plane(16, 300)),
-      Seq(Seq.fill(6)(42)), Seq(Seq.empty[Int])), params = Seq(2, 98)) { c =>
+      Seq(Seq.fill(6)(42)), Seq(edges ++ edges), Seq(Seq(Min, Max)),
+      Seq(Seq.empty[Int])), params = Seq(2, 98)) { c =>
       val px = arr(c(0))
       if (px.isEmpty) null
       else {

@@ -159,7 +159,7 @@ class KernelPropertySpec extends SparkSpec with ModePairs {
     val pts = Seq.fill(500)((rnd.nextInt(1024).toLong,
       rnd.nextInt(1024).toLong)).distinct
     val zs = pts.map { case (x, y) =>
-      graft.functions.ZValueKernel.interleave(x, y, bits) }
+      graft.functions.ZValue2.kernel(x, y, bits) }
     assert(zs.distinct.size === pts.size, "interleave must be injective")
     pts.zip(zs).foreach { case ((x, y), z) =>
       assert(deinterleave(z) === ((x, y)))
@@ -170,7 +170,7 @@ class KernelPropertySpec extends SparkSpec with ModePairs {
       "random combining sequences") {
     import org.apache.spark.unsafe.types.UTF8String
     def nfc(s: String): String =
-      graft.functions.NfcKernel.nfc(UTF8String.fromString(s)).toString
+      graft.functions.NfcNormalize.kernel(UTF8String.fromString(s)).toString
     val bases = "aeiouAEIOUcn"
     val combos = Seq('\u0300', '\u0301', '\u0302', '\u0303', '\u0308')
     for (_ <- 1 to 200) {

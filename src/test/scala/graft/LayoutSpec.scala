@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZValueKernel
+import graft.functions.ZValue2
 import graft.operators.LayoutOps
 
 /** Z-order layout: interleave math and the measurable clustering
@@ -11,12 +11,12 @@ class LayoutSpec extends SparkSpec {
 
   test("ZValueKernel: hand-computed interleaves; x rides even bits") {
     // x=3 (bits 0,1) -> result bits 0,2 = 5; y=1 (bit 0) -> bit 1 = 2
-    assert(ZValueKernel.interleave(3, 1, 2) === 7L)
-    assert(ZValueKernel.interleave(1, 2, 2) === 9L) // 1 | (bit1 of y -> 8)
-    assert(ZValueKernel.interleave(0, 0, 16) === 0L)
+    assert(ZValue2.kernel(3, 1, 2) === 7L)
+    assert(ZValue2.kernel(1, 2, 2) === 9L) // 1 | (bit1 of y -> 8)
+    assert(ZValue2.kernel(0, 0, 16) === 0L)
     // full 16-bit grid corner
-    assert(ZValueKernel.interleave(65535, 0, 16) === 0x55555555L)
-    assert(ZValueKernel.interleave(0, 65535, 16) === 0xAAAAAAAAL)
+    assert(ZValue2.kernel(65535, 0, 16) === 0x55555555L)
+    assert(ZValue2.kernel(0, 65535, 16) === 0xAAAAAAAAL)
   }
 
   test("z_value expression: NULL on negative input; matches the kernel " +

@@ -1093,4 +1093,32 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       s"label inequality fell out of the join:\n$p")
   }
+
+  test("every kernel-call expression projects inside whole-stage codegen") {
+    graft.functions.ensureRegistered(spark)
+    // columns derive from `id`, so constant folding cannot remove a call
+    val base = spark.range(4).select(
+      array(col("id").cast("int"), lit(1), lit(2), lit(3)).as("px"),
+      (col("id") + 2).cast("int").as("w"), col("id").as("l"),
+      array(col("id"), lit(1L)).as("lv"), col("id").cast("string").as("s"),
+      array(struct(lit(0).as("z"), array(col("id").cast("int"))
+        .as("pixels"))).as("st"),
+      array(col("id").cast("string")).as("toks"))
+    def wholeStage(call: String): Boolean = """\*\(\d+\) Project""".r
+      .findFirstIn(plan(base.selectExpr(call))).nonEmpty
+    for (call <- Seq("graft_pixel_crop(px, w, 0, 1, 0, 1)",
+        "graft_pixel_sum(px)", "graft_pixel_count_ge(px, w)",
+        "graft_synth_ramp(l, w)", "graft_block_mean_2x(px, w, w)",
+        "graft_pixel_brenner(px, w)", "graft_pixel_dot(px, px)",
+        "graft_pixel_permute(px, w, w, 'hflip')", "graft_cc_objects(px, w)",
+        "graft_glcm_moments(px, w, 8, 256)",
+        "graft_cc_objects_intensity(px, px, w)",
+        "graft_pixel_stretch(px, 2, 98)", "graft_pixel_shift(px, w, w, w)",
+        "graft_pixel_equalize(px, 256)", "graft_pixel_rank_map(px, px)",
+        "graft_focus_stack(st, w)", "graft_micro_l2(lv, lv)", "graft_nfc(s)",
+        "graft_zvalue(l, l, 16)"))
+      assert(wholeStage(call), s"$call left whole-stage codegen")
+    // the pin can fail: a CodegenFallback projection is planned outside
+    assert(!wholeStage("graft_simhash64(toks)"))
+  }
 }
