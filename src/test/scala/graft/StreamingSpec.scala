@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.OmeOps
-import graft.streaming.{OmeStreamIngest, StreamDrain}
+import graft.streaming.{DocStream, OmeStreamIngest, StreamDrain, VecStream}
 
 /** Streaming acquisition ingest: drop-directory of plane TIFFs ->
   * assembled canonical records (SURVEY.md §7.6 extension). */
@@ -336,6 +336,30 @@ class StreamingSpec extends SparkSpec {
     // a path the feed will only create later signs as absent, no throw
     assert(StreamDrain.inputSig(spark, Seq("/tmp/graft_no_such_dir"))
       .contains("absent"))
+  }
+
+  private val ingestCerts: Seq[(String, (org.apache.spark.sql.SparkSession,
+      String) => org.apache.spark.sql.DataFrame, Seq[String])] = Seq(
+    ("index", DocStream.indexIngestCheck(_, _), Seq("bands_missing",
+      "bands_extra", "shingles_missing", "shingles_extra", "empty_index")),
+    ("simhash", DocStream.simhashIngestCheck(_, _), Seq("bands_missing",
+      "bands_extra", "sigs_missing", "sigs_extra", "empty_index")),
+    ("bm25", DocStream.bm25IngestCheck(_, _), Seq("postings_missing",
+      "postings_extra", "doclens_missing", "doclens_extra",
+      "stats_mismatch", "empty_index")),
+    ("ivf", VecStream.ivfIngestCheck(_, _), Seq("vectors_missing",
+      "vectors_extra", "codebook_drift", "empty_index")),
+    ("ivfpq", VecStream.ivfPqIngestCheck(_, _), Seq("codes_missing",
+      "codes_extra", "pq_book_drift", "centroid_drift", "empty_index")))
+
+  test("the five index-ingest certs answer all zeros under their exact " +
+      "column lists") {
+    for ((name, cert, cols) <- ingestCerts) {
+      val out = cert(spark, "/root/testdata/sf0.001")
+      assert(out.columns.toSeq === cols, name)
+      assert(out.collect().toSeq.map(_.toSeq) === Seq(cols.map(_ => 0L)),
+        name)
+    }
   }
 
   test("partial image assembles zero-filled from buildRecord") {
