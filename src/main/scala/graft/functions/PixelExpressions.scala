@@ -22,14 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 
 /** crop a flat row-major plane: rows [y0,y1), cols [x0,x1) of a sx-wide
-  * image. Bounds are validated by the caller (query constants). */
+  * image. NULL unless the window is upright and inside the plane's full
+  * rows, `[0, sx) x [0, n / sx)`. */
 case class PixelCrop(pixels: Expression, sx: Expression,
     x0: Expression, x1: Expression, y0: Expression, y1: Expression)
   extends RuntimeReplaceable {
 
   override def children: Seq[Expression] = Seq(pixels, sx, x0, x1, y0, y1)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
+  // NULL on a window outside the plane, independent of child nullability
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((pixels, ArrayType(IntegerType), "pixels"), (sx, IntegerType, "sx"),
@@ -37,7 +39,7 @@ case class PixelCrop(pixels: Expression, sx: Expression,
       (y0, IntegerType, "y0"), (y1, IntegerType, "y1")), "graft_pixel_crop")
 
   override lazy val replacement: Expression =
-    KernelCall(PixelCrop, dataType, children)
+    KernelCall(PixelCrop, dataType, children, returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -48,6 +50,8 @@ case class PixelCrop(pixels: Expression, sx: Expression,
 object PixelCrop {
   def kernel(px: ArrayData, w: Int, xa: Int, xb: Int, ya: Int,
       yb: Int): ArrayData = {
+    if (w <= 0 || xa < 0 || xa > xb || xb > w || ya < 0 || ya > yb ||
+        yb > px.numElements() / w) return null
     val out = new Array[Int]((yb - ya) * (xb - xa))
     var y = ya; var o = 0
     while (y < yb) {
@@ -653,14 +657,15 @@ case class PixelCcObjects(mask: Expression, sx: Expression)
 
   override def children: Seq[Expression] = Seq(mask, sx)
   override def dataType: DataType = PixelCcObjects.schema
-  override def nullable: Boolean = children.exists(_.nullable)
+  // NULL on a non-positive width, independent of child nullability
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((mask, ArrayType(IntegerType), "mask"), (sx, IntegerType, "sx")),
     "graft_cc_objects")
 
   override lazy val replacement: Expression =
-    KernelCall(PixelCcObjects, dataType, children)
+    KernelCall(PixelCcObjects, dataType, children, returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -680,7 +685,7 @@ object PixelCcObjects {
     containsNull = false)
 
   def kernel(mask: ArrayData, w: Int): ArrayData =
-    CcObjects.objects(mask, null, w)
+    if (w <= 0) null else CcObjects.objects(mask, null, w)
 }
 
 /**
@@ -700,14 +705,16 @@ case class PixelGlcmMoments(pixels: Expression, sx: Expression,
 
   override def children: Seq[Expression] = Seq(pixels, sx)
   override def dataType: DataType = PixelGlcmMoments.schema
-  override def nullable: Boolean = children.exists(_.nullable)
+  // NULL on a non-positive width, independent of child nullability
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((pixels, ArrayType(IntegerType), "pixels"), (sx, IntegerType, "sx")),
     "graft_glcm_moments")
 
   override lazy val replacement: Expression = KernelCall(PixelGlcmMoments,
-    dataType, children ++ Seq(Literal(bins), Literal(maxv)))
+    dataType, children ++ Seq(Literal(bins), Literal(maxv)),
+    returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -735,6 +742,7 @@ object PixelGlcmMoments {
     * which is accumulated in FIXED bin order so the double sum is
     * deterministic. */
   def kernel(px: ArrayData, w: Int, bins: Int, maxv: Int): InternalRow = {
+    if (w <= 0) return null
     val n = px.numElements()
     val counts = new Array[Long](bins * bins)
     var i = 0
@@ -782,7 +790,8 @@ case class PixelCcObjectsIntensity(mask: Expression, pixels: Expression,
 
   override def children: Seq[Expression] = Seq(mask, pixels, sx)
   override def dataType: DataType = PixelCcObjectsIntensity.schema
-  override def nullable: Boolean = children.exists(_.nullable)
+  // NULL on a non-positive width, independent of child nullability
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = InputCheck.check(
     Seq((mask, ArrayType(IntegerType), "mask"),
@@ -790,7 +799,8 @@ case class PixelCcObjectsIntensity(mask: Expression, pixels: Expression,
     "graft_cc_objects_intensity")
 
   override lazy val replacement: Expression =
-    KernelCall(PixelCcObjectsIntensity, dataType, children)
+    KernelCall(PixelCcObjectsIntensity, dataType, children,
+      returnNullable = true)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -814,7 +824,7 @@ object PixelCcObjectsIntensity {
     containsNull = false)
 
   def kernel(mask: ArrayData, px: ArrayData, w: Int): ArrayData =
-    CcObjects.objects(mask, px, w)
+    if (w <= 0) null else CcObjects.objects(mask, px, w)
 }
 
 /**

@@ -1291,7 +1291,7 @@ object VectorOps {
       .select(col("vec_id").cast("long").as("neighbor_id"),
         col("embedding"), col("cluster").cast("long").as("cluster"))
     // replay absorption (ADVICE r16): an at-least-once ingest
-    // (VecStream.ivfIngestRun under foreachBatch) that crashes and
+    // (StreamDrain.run over appendToIvfIndex) that crashes and
     // replays a batch appends byte-identical (vec_id, cluster,
     // embedding) rows — without a dedup the duplicated neighbor takes
     // two ranks and displaces a genuine one. Duplicates score

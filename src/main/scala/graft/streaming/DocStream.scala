@@ -292,41 +292,35 @@ object DocStream {
    * Appends are serialized by the single writer — the engine-side
    * rule on [[graft.operators.TextOps.appendToMinhashIndex]].
    *
-   * Blocks until the AvailableNow drain finishes (bounded feeds /
-   * catch-up runs; a production caller wanting a continuous trigger
-   * can lift the body — it is three lines).
+   * Blocks until the AvailableNow drain finishes; a production caller
+   * wanting a continuous trigger can lift [[StreamDrain.run]]'s body —
+   * it is three lines.
    */
   def indexIngestRun(stream: DataFrame, indexPath: String,
       checkpoint: String, k: Int = 3, numHashes: Int = 12,
       bands: Int = 4, threshold: Double = 0.8,
-      timeoutMs: Long = 300000L): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestIncrement(b.toDF(), indexPath, k, numHashes, bands,
-          threshold))
-      .start()
-    // stop the query BEFORE surfacing a timeout (ADVICE r14): without
-    // the stop a failed drain leaves a live writer mutating the index
-    // after the caller observed failure — a retry would then violate
-    // the serialize-appends-per-path rule
-    val done =
-      try q.awaitTermination(timeoutMs)
-      finally if (q.isActive) q.stop()
-    require(done, s"indexIngestRun: drain did not finish in $timeoutMs ms")
+      timeoutMs: Long = 300000L): Unit =
+    StreamDrain.run(stream, checkpoint, timeoutMs)(
+      ingestIncrement(_, indexPath, k, numHashes, bands, threshold))
+
+  /** The reference split (every 25th doc) and two disjoint train
+    * increments the document-index ingest certs stage from. */
+  private def docSplit(docs: DataFrame) = {
+    val train = col("doc_id") % 25 =!= 0
+    (docs.filter(col("doc_id") % 25 === 0),
+      docs.filter(train && col("doc_id") % 4 === 1),
+      docs.filter(train && col("doc_id") % 4 === 3))
   }
 
-  private val ingestStaged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val docFeed = Seq(col("doc_id").cast("long").as("doc_id"),
+    col("text"))
 
   /**
-   * Structural self-check of the streaming ingest loop (all-zeros
-   * pattern): the corpus index is built from the eval split, two
-   * disjoint train increments stream through [[indexIngestRun]] as two
-   * strictly-ordered micro-batches (one file per increment,
-   * `maxFilesPerTrigger = 1`, mtimes pinned a minute apart — the file
-   * source drains oldest-first), and the FINAL index must be
+   * Structural self-check of the streaming ingest loop
+   * ([[StreamDrain.ingestCheck]]): the corpus index (k = 3, 12 hashes,
+   * 4 bands) is built from the eval split, two disjoint train
+   * increments stream through [[ingestIncrement]] at threshold 0.5 as
+   * two strictly-ordered micro-batches, and the FINAL index must be
    * row-identical to a batch replay calling [[ingestIncrement]] on the
    * same increments in the same order — bands (including every
    * maintained bn) and shingle sets both ways. The second batch is the
@@ -334,93 +328,18 @@ object DocStream {
    * which only happens if the foreachBatch append really landed.
    * Violations: `bands_missing`, `bands_extra`, `shingles_missing`,
    * `shingles_extra`, `empty_index`.
-   *
-   * Staging (index builds + the stream drain + the batch replay) is
-   * deterministic for a fixed input dir and memoized per process like
-   * [[StreamDrain.once]]; the timed portion is the index comparison.
    */
-  def indexIngestCheck(spark: SparkSession, dir: String, k: Int = 3,
-      numHashes: Int = 12, bands: Int = 4, threshold: Double = 0.5,
-      workDir: String = "/tmp/graft_stream_idxingest",
-      timeoutMs: Long = 300000L): DataFrame = {
-    val tag = java.lang.Long.toHexString(
-      (dir + s"|$k|$numHashes|$bands|$threshold").hashCode.toLong
-        & 0xffffffffL)
-    val root = s"$workDir/$tag"
-    ingestStaged.synchronized {
-      if (!ingestStaged.contains(root)) {
-        stageIngest(spark, dir, root, k, numHashes, bands, threshold,
-          timeoutMs)
-        ingestStaged.add(root)
-      }
-    }
-    def bandRows(p: String) = spark.read.parquet(s"$p/bands")
-      .select(col("ref_id"), col("band"), col("band_key"), col("bn"))
-    def shRows(p: String) = spark.read.parquet(s"$p/shingles")
-      .select(col("ref_id"), array_sort(col("sh")).as("sh"))
-    val sb = bandRows(s"$root/idx_stream")
-    val bb = bandRows(s"$root/idx_batch")
-    val ss = shRows(s"$root/idx_stream")
-    val bs = shRows(s"$root/idx_batch")
-    bb.exceptAll(sb)
-      .agg(count(lit(1)).cast("long").as("bands_missing"))
-      .crossJoin(sb.exceptAll(bb)
-        .agg(count(lit(1)).cast("long").as("bands_extra")))
-      .crossJoin(bs.exceptAll(ss)
-        .agg(count(lit(1)).cast("long").as("shingles_missing")))
-      .crossJoin(ss.exceptAll(bs)
-        .agg(count(lit(1)).cast("long").as("shingles_extra")))
-      .crossJoin(sb.agg(
-        (count(lit(1)) === 0).cast("long").as("empty_index")))
-  }
-
-  /** [[indexIngestCheck]]'s one-time staging: clean slate, twin index
-    * builds, the sequential batch replay, the two-file ordered feed,
-    * and the stream drain. */
-  private def stageIngest(spark: SparkSession, dir: String, root: String,
-      k: Int, numHashes: Int, bands: Int, threshold: Double,
-      timeoutMs: Long): Unit = {
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rmrf)
-      p.delete(): Unit
-    }
-    rmrf(new java.io.File(root))
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val ref = docs.filter(col("doc_id") % 25 === 0)
-    val inc1 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 1)
-    val inc2 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 3)
-    TextOps.buildMinhashIndex(ref, s"$root/idx_stream", k, numHashes,
-      bands)
-    TextOps.buildMinhashIndex(ref, s"$root/idx_batch", k, numHashes,
-      bands)
-    // the expected: the SAME increment step, run sequentially in batch
-    ingestIncrement(inc1, s"$root/idx_batch", k, numHashes, bands,
-      threshold)
-    ingestIncrement(inc2, s"$root/idx_batch", k, numHashes, bands,
-      threshold)
-    // feed: one data file per increment, mtimes pinned a minute apart
-    // so the file source's oldest-first drain is deterministic
-    val feed = s"$root/feed"
-    def dataFiles() = new java.io.File(feed).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_")
-        && !f.getName.startsWith("."))
-    inc1.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("overwrite").parquet(feed)
-    val t0 = 1700000000000L
-    dataFiles().foreach(_.setLastModified(t0))
-    inc2.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("append").parquet(feed)
-    dataFiles().filter(_.lastModified() != t0)
-      .foreach(_.setLastModified(t0 + 60000L))
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feed)
-    indexIngestRun(src, s"$root/idx_stream", s"$root/ckpt", k,
-      numHashes, bands, threshold, timeoutMs)
+  def indexIngestCheck(spark: SparkSession, dir: String): DataFrame = {
+    def step(b: DataFrame, idx: String) =
+      ingestIncrement(b, idx, 3, 12, 4, 0.5)
+    StreamDrain.ingestCheck(spark, dir, "idxingest", "documents.parquet",
+      docFeed, docSplit, TextOps.buildMinhashIndex(_, _, 3, 12, 4),
+      step, step, Seq(
+        StreamDrain.Twin("bands", Seq(col("ref_id"), col("band"),
+          col("band_key"), col("bn")), "bands_missing", "bands_extra"),
+        StreamDrain.Twin("shingles", Seq(col("ref_id"),
+          array_sort(col("sh")).as("sh")),
+          "shingles_missing", "shingles_extra")))
   }
 
   /**
@@ -437,6 +356,14 @@ object DocStream {
    * transitive-cluster keepers — the cheaper rule fits the cheaper
    * signal; chains that need one-keeper-per-cluster semantics should
    * run the minhash loop.
+   *
+   * As a stream, `StreamDrain.run(feed, ckpt)(simhashIngestIncrement(_,
+   * path))` runs it once per micro-batch. `foreachBatch` is
+   * at-least-once: a replayed COMPLETED batch re-flags its own keepers
+   * at hamming 0 and degenerates to a no-op; a crash inside the append
+   * recovers by the append's sigs-first write ordering (see
+   * [[graft.operators.TextOps.appendToSimhashIndex]]). Appends are
+   * serialized by the single writer.
    */
   def simhashIngestIncrement(batch: DataFrame, indexPath: String,
       maxHamming: Int = 8, bands: Int = 4): Unit =
@@ -458,254 +385,52 @@ object DocStream {
     }
 
   /**
-   * The STREAMING SimHash-index ingest runner — [[indexIngestRun]]
-   * for the Hamming family: each micro-batch runs
-   * [[simhashIngestIncrement]] through `foreachBatch`. Same
-   * at-least-once semantics as the minhash runner: a replayed
-   * COMPLETED batch re-flags its own keepers at hamming 0 and
-   * degenerates to a no-op; a crash inside the append recovers by the
-   * append's sigs-first write ordering (see
-   * [[graft.operators.TextOps.appendToSimhashIndex]]). Appends are
-   * serialized by the single writer. Blocks until the AvailableNow
-   * drain finishes; the query is stopped before a timeout surfaces.
+   * Structural self-check of the streaming SimHash ingest
+   * ([[StreamDrain.ingestCheck]], the [[indexIngestCheck]] split): the
+   * 4-band index is built from the eval split, two disjoint train
+   * increments stream through [[simhashIngestIncrement]] at hamming
+   * <= 10 as two strictly-ordered micro-batches, and the FINAL on-disk
+   * index must be row-identical to a sequential batch replay of the
+   * SAME step — bands (including every maintained bn) and sig rows
+   * both ways. The second batch is the load-bearing one: its flags
+   * must see the first batch's keepers. Violations: `bands_missing`,
+   * `bands_extra`, `sigs_missing`, `sigs_extra`, `empty_index`.
    */
-  def simhashIngestRun(stream: DataFrame, indexPath: String,
-      checkpoint: String, maxHamming: Int = 8, bands: Int = 4,
-      timeoutMs: Long = 300000L): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        simhashIngestIncrement(b.toDF(), indexPath, maxHamming, bands))
-      .start()
-    val done =
-      try q.awaitTermination(timeoutMs)
-      finally if (q.isActive) q.stop()
-    require(done,
-      s"simhashIngestRun: drain did not finish in $timeoutMs ms")
-  }
-
-  private val simhashIngestStaged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /**
-   * Structural self-check of the streaming SimHash ingest (all-zeros
-   * pattern, the [[indexIngestCheck]] discipline): the index is built
-   * from the eval split, two disjoint train increments stream through
-   * [[simhashIngestRun]] as two strictly-ordered micro-batches (one
-   * file each, pinned mtimes, `maxFilesPerTrigger = 1`), and the
-   * FINAL on-disk index must be row-identical to a sequential batch
-   * replay of the SAME [[simhashIngestIncrement]] step — bands
-   * (including every maintained bn) and sig rows both ways. The
-   * second batch is the load-bearing one: its flags must see the
-   * first batch's keepers. Violations: `bands_missing`, `bands_extra`,
-   * `sigs_missing`, `sigs_extra`, `empty_index`.
-   */
-  def simhashIngestCheck(spark: SparkSession, dir: String,
-      maxHamming: Int = 10, bands: Int = 4,
-      workDir: String = "/tmp/graft_stream_shingest",
-      timeoutMs: Long = 300000L): DataFrame = {
-    val tag = java.lang.Long.toHexString(
-      (dir + s"|$maxHamming|$bands").hashCode.toLong & 0xffffffffL)
-    val root = s"$workDir/$tag"
-    simhashIngestStaged.synchronized {
-      if (!simhashIngestStaged.contains(root)) {
-        stageSimhashIngest(spark, dir, root, maxHamming, bands,
-          timeoutMs)
-        simhashIngestStaged.add(root)
-      }
-    }
-    def bandRows(p: String) = spark.read.parquet(s"$p/bands")
-      .select(col("ref_id"), col("band"), col("chunk"), col("bn"))
-    def sigRows(p: String) = spark.read.parquet(s"$p/sigs")
-      .select(col("ref_id"), col("sig"))
-    val sb = bandRows(s"$root/idx_stream")
-    val bb = bandRows(s"$root/idx_batch")
-    val ss = sigRows(s"$root/idx_stream")
-    val bs = sigRows(s"$root/idx_batch")
-    bb.exceptAll(sb)
-      .agg(count(lit(1)).cast("long").as("bands_missing"))
-      .crossJoin(sb.exceptAll(bb)
-        .agg(count(lit(1)).cast("long").as("bands_extra")))
-      .crossJoin(bs.exceptAll(ss)
-        .agg(count(lit(1)).cast("long").as("sigs_missing")))
-      .crossJoin(ss.exceptAll(bs)
-        .agg(count(lit(1)).cast("long").as("sigs_extra")))
-      .crossJoin(sb.agg(
-        (count(lit(1)) === 0).cast("long").as("empty_index")))
-  }
-
-  /** [[simhashIngestCheck]]'s one-time staging: clean slate, twin
-    * index builds, the sequential batch replay, the two-file ordered
-    * feed, and the stream drain. */
-  private def stageSimhashIngest(spark: SparkSession, dir: String,
-      root: String, maxHamming: Int, bands: Int,
-      timeoutMs: Long): Unit = {
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rmrf)
-      p.delete(): Unit
-    }
-    rmrf(new java.io.File(root))
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val ref = docs.filter(col("doc_id") % 25 === 0)
-    val inc1 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 1)
-    val inc2 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 3)
-    TextOps.buildSimhashIndex(ref, s"$root/idx_stream", bands)
-    TextOps.buildSimhashIndex(ref, s"$root/idx_batch", bands)
-    // the expected: the SAME increment step, run sequentially in batch
-    simhashIngestIncrement(inc1, s"$root/idx_batch", maxHamming, bands)
-    simhashIngestIncrement(inc2, s"$root/idx_batch", maxHamming, bands)
-    // feed: one data file per increment, mtimes pinned a minute apart
-    // so the file source's oldest-first drain is deterministic
-    val feed = s"$root/feed"
-    def dataFiles() = new java.io.File(feed).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_")
-        && !f.getName.startsWith("."))
-    inc1.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("overwrite").parquet(feed)
-    val t0 = 1700000000000L
-    dataFiles().foreach(_.setLastModified(t0))
-    inc2.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("append").parquet(feed)
-    dataFiles().filter(_.lastModified() != t0)
-      .foreach(_.setLastModified(t0 + 60000L))
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feed)
-    simhashIngestRun(src, s"$root/idx_stream", s"$root/ckpt",
-      maxHamming, bands, timeoutMs)
+  def simhashIngestCheck(spark: SparkSession, dir: String): DataFrame = {
+    def step(b: DataFrame, idx: String) =
+      simhashIngestIncrement(b, idx, 10, 4)
+    StreamDrain.ingestCheck(spark, dir, "shingest", "documents.parquet",
+      docFeed, docSplit, TextOps.buildSimhashIndex(_, _, 4), step, step,
+      Seq(
+        StreamDrain.Twin("bands", Seq(col("ref_id"), col("band"),
+          col("chunk"), col("bn")), "bands_missing", "bands_extra"),
+        StreamDrain.Twin("sigs", Seq(col("ref_id"), col("sig")),
+          "sigs_missing", "sigs_extra")))
   }
 
   /**
-   * The STREAMING BM25-index ingest runner (r16) — the retrieval
-   * index's counterpart of [[indexIngestRun]]: each micro-batch of a
-   * documents stream appends to a [[graft.operators.TextOps
-   * .buildBm25Index]] index via `foreachBatch`, keeping a standing
-   * retrieval service's corpus current with no batch scheduler in the
-   * loop. No dedup stage here — a retrieval index is not a dedup
-   * gate; the batch body IS `appendToBm25Index` (pure posting/doclens
-   * appends + the stats refresh).
-   *
-   * Semantics note: `foreachBatch` is at-least-once — a replayed
-   * batch re-appends byte-identical rows, which the index absorbs BY
-   * DESIGN (stats dedup by doc_id, query-side candidate-bounded
-   * posting dedup — see the append's crash-semantics scaladoc), so
-   * replays converge to the exact single-append answers. Appends are
-   * serialized by the single writer, per the engine-side rule.
-   * Blocks until the AvailableNow drain finishes; the query is
-   * stopped before a timeout surfaces (no writer left mutating the
-   * index after an observed failure).
+   * Structural self-check of the streaming BM25 ingest
+   * ([[StreamDrain.ingestCheck]], the [[indexIngestCheck]] split): the
+   * index is built from the eval split, two disjoint train increments
+   * stream through `TextOps.appendToBm25Index` as two strictly-ordered
+   * micro-batches, and the FINAL on-disk index must be row-identical
+   * to a sequential batch replay appending the same increments —
+   * postings (term, doc_id, tf, dl), doclens, and the refreshed
+   * (n_docs, sum_dl) stats, all both ways. Violations:
+   * `postings_missing`, `postings_extra`, `doclens_missing`,
+   * `doclens_extra`, `stats_mismatch`, `empty_index`.
    */
-  def bm25IngestRun(stream: DataFrame, indexPath: String,
-      checkpoint: String, timeoutMs: Long = 300000L): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!b.isEmpty) TextOps.appendToBm25Index(b.toDF(), indexPath))
-      .start()
-    val done =
-      try q.awaitTermination(timeoutMs)
-      finally if (q.isActive) q.stop()
-    require(done, s"bm25IngestRun: drain did not finish in $timeoutMs ms")
-  }
-
-  private val bm25IngestStaged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /**
-   * Structural self-check of the streaming BM25 ingest (all-zeros
-   * pattern, the [[indexIngestCheck]] discipline): the index is built
-   * from the eval split, two disjoint train increments stream through
-   * [[bm25IngestRun]] as two strictly-ordered micro-batches (one file
-   * each, pinned mtimes, `maxFilesPerTrigger = 1`), and the FINAL
-   * on-disk index must be row-identical to a sequential batch replay
-   * appending the same increments — postings (term, doc_id, tf, dl),
-   * doclens, and the refreshed (n_docs, sum_dl) stats all ways.
-   * Violations: `postings_missing`, `postings_extra`,
-   * `doclens_missing`, `doclens_extra`, `stats_mismatch`,
-   * `empty_index`.
-   */
-  def bm25IngestCheck(spark: SparkSession, dir: String,
-      workDir: String = "/tmp/graft_stream_bm25ingest",
-      timeoutMs: Long = 300000L): DataFrame = {
-    val tag = java.lang.Long.toHexString(
-      dir.hashCode.toLong & 0xffffffffL)
-    val root = s"$workDir/$tag"
-    bm25IngestStaged.synchronized {
-      if (!bm25IngestStaged.contains(root)) {
-        stageBm25Ingest(spark, dir, root, timeoutMs)
-        bm25IngestStaged.add(root)
-      }
-    }
-    def postings(p: String) = spark.read.parquet(s"$p/postings")
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    def doclens(p: String) = spark.read.parquet(s"$p/doclens")
-      .select(col("doc_id"), col("dl"))
-    def stats(p: String) = spark.read.parquet(s"$p/stats")
-      .select(col("n_docs"), col("sum_dl"))
-    val sp = postings(s"$root/idx_stream")
-    val bp = postings(s"$root/idx_batch")
-    val sl = doclens(s"$root/idx_stream")
-    val bl = doclens(s"$root/idx_batch")
-    bp.exceptAll(sp)
-      .agg(count(lit(1)).cast("long").as("postings_missing"))
-      .crossJoin(sp.exceptAll(bp)
-        .agg(count(lit(1)).cast("long").as("postings_extra")))
-      .crossJoin(bl.exceptAll(sl)
-        .agg(count(lit(1)).cast("long").as("doclens_missing")))
-      .crossJoin(sl.exceptAll(bl)
-        .agg(count(lit(1)).cast("long").as("doclens_extra")))
-      .crossJoin(stats(s"$root/idx_stream")
-        .exceptAll(stats(s"$root/idx_batch"))
-        .agg(count(lit(1)).cast("long").as("stats_mismatch")))
-      .crossJoin(sp.agg(
-        (count(lit(1)) === 0).cast("long").as("empty_index")))
-  }
-
-  /** [[bm25IngestCheck]]'s one-time staging: clean slate, twin index
-    * builds, the sequential batch replay, the two-file ordered feed,
-    * and the stream drain. */
-  private def stageBm25Ingest(spark: SparkSession, dir: String,
-      root: String, timeoutMs: Long): Unit = {
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rmrf)
-      p.delete(): Unit
-    }
-    rmrf(new java.io.File(root))
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val ref = docs.filter(col("doc_id") % 25 === 0)
-    val inc1 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 1)
-    val inc2 = docs.filter(col("doc_id") % 25 =!= 0 &&
-      col("doc_id") % 4 === 3)
-    TextOps.buildBm25Index(ref, s"$root/idx_stream")
-    TextOps.buildBm25Index(ref, s"$root/idx_batch")
-    TextOps.appendToBm25Index(inc1, s"$root/idx_batch")
-    TextOps.appendToBm25Index(inc2, s"$root/idx_batch")
-    val feed = s"$root/feed"
-    def dataFiles() = new java.io.File(feed).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_")
-        && !f.getName.startsWith("."))
-    inc1.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("overwrite").parquet(feed)
-    val t0 = 1700000000000L
-    dataFiles().foreach(_.setLastModified(t0))
-    inc2.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.mode("append").parquet(feed)
-    dataFiles().filter(_.lastModified() != t0)
-      .foreach(_.setLastModified(t0 + 60000L))
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feed)
-    bm25IngestRun(src, s"$root/idx_stream", s"$root/ckpt", timeoutMs)
-  }
+  def bm25IngestCheck(spark: SparkSession, dir: String): DataFrame =
+    StreamDrain.ingestCheck(spark, dir, "bm25ingest", "documents.parquet",
+      docFeed, docSplit, TextOps.buildBm25Index(_, _),
+      TextOps.appendToBm25Index,
+      (b, idx) => if (!b.isEmpty) TextOps.appendToBm25Index(b, idx), Seq(
+        StreamDrain.Twin("postings", Seq(col("term"), col("doc_id"),
+          col("tf"), col("dl")), "postings_missing", "postings_extra"),
+        StreamDrain.Twin("doclens", Seq(col("doc_id"), col("dl")),
+          "doclens_missing", "doclens_extra"),
+        StreamDrain.Twin("stats", Seq(col("n_docs"), col("sum_dl")),
+          "stats_mismatch")))
 
   /**
    * Streaming decontamination — the STREAM-STATIC join pattern:

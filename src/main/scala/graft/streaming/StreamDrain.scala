@@ -1,41 +1,48 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
 
 /**
- * Process-level drain-once memoization for the structural stream checks.
+ * How a bounded feed is drained, and memoized per process, for the
+ * structural stream checks.
  *
  * Every `*Check` operator runs a FINITE AvailableNow feed to completion
- * into a memory sink, then compares the sink against a batch
- * recomputation. The drain is deterministic for fixed inputs, so
- * draining the same (view, inputs) twice in one process only repeats
- * stream startup cost: the r7 bench timed exactly that — 3 reps +
- * warm-up per check re-drained identical feeds for ~75 s of its 282 s
- * total. With the memo, the first invocation pays the drain and later
- * ones reuse the sink; the batch comparison itself stays fully timed.
+ * — into a memory sink ([[once]]) or through a `foreachBatch` step
+ * ([[run]], the index-ingest certs of [[ingestCheck]]) — then compares
+ * the result against a batch recomputation. The drain is deterministic
+ * for fixed inputs, so draining the same (view, inputs) twice in one
+ * process only repeats stream startup cost: the r7 bench timed exactly
+ * that — 3 reps + warm-up per check re-drained identical feeds for
+ * ~75 s of its 282 s total. With the memo, the first invocation pays
+ * the drain and later ones reuse its output; the batch comparison
+ * itself stays fully timed.
  *
  * Concurrency + staleness (r8 ADVICE): the check-then-drain section is
- * serialized per sink view (two threads racing the same view would both
- * pass a bare `contains` check and concurrently drop/start against one
- * memory sink), and the memo key folds in a signature of the INPUT
+ * serialized per memo slot (two threads racing the same view would
+ * both pass a bare `contains` check and concurrently drop/start against
+ * one memory sink), and the memo key folds in a signature of the INPUT
  * FILES (name/mtime/length, recursive) — if the data under the same
- * path changes within a process, the key changes and the view
- * re-drains instead of comparing a stale sink against fresh batch
- * output.
+ * path changes within a process, the key changes and the slot
+ * re-drains instead of comparing stale output against fresh batch
+ * output. Output that disappeared (a dropped view, a deleted staging
+ * directory) re-drains too.
  */
 object StreamDrain {
 
   private val drained =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val viewLocks =
+  private val slotLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Content signature of `paths`: order-stable hash over each file's
-    * (relative name, mtime, length), recursive. Listing footers/status
-    * only — no data read, cheap at any corpus size. Missing paths sign
-    * as `absent` (a feed dir created inside the memoized thunk must not
-    * throw here). */
+    * (relative name, mtime, length), recursive. Listing status only — no
+    * data read, cheap at any corpus size. A plain `listStatus` walk, not
+    * `listFiles`: located statuses look up owner and permissions per
+    * file, which on the local file system costs a process per file
+    * (SCALE.md). Missing paths sign as `absent` (a feed dir created
+    * inside the memoized thunk must not throw here). */
   private[graft] def inputSig(spark: SparkSession, paths: Seq[String]): String = {
     val conf = spark.sessionState.newHadoopConf()
     paths.map { p =>
@@ -44,11 +51,11 @@ object StreamDrain {
       if (!fs.exists(hp)) s"$p:absent"
       else {
         val acc = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-        val it = fs.listFiles(hp, true)
-        while (it.hasNext) {
-          val s = it.next()
-          acc += ((s.getPath.toUri.getPath, s.getModificationTime, s.getLen))
-        }
+        def walk(s: org.apache.hadoop.fs.FileStatus): Unit =
+          if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk)
+          else acc += ((s.getPath.toUri.getPath, s.getModificationTime,
+            s.getLen))
+        walk(fs.getFileStatus(hp))
         var h = 1125899906842597L
         acc.sortBy(_._1).foreach { case (n, m, l) =>
           h = h * 31 + n.hashCode; h = h * 31 + m; h = h * 31 + l
@@ -57,6 +64,21 @@ object StreamDrain {
       }
     }.mkString(",")
   }
+
+  /** Runs `make` under `slot`'s lock unless the last completed run for
+    * `slot` had the same `key` and input signature and `present` still
+    * holds. One live memo entry per slot: the slot's output holds only
+    * the latest run, so stale keys must not claim it. */
+  private def memo(spark: SparkSession, slot: String, key: String,
+      inputs: Seq[String], present: => Boolean)(make: => Unit): Unit =
+    slotLocks.computeIfAbsent(slot, _ => new Object).synchronized {
+      val k = s"$slot|$key|${inputSig(spark, inputs)}"
+      if (!drained.contains(k) || !present) {
+        drained.removeIf((e: String) => e.startsWith(s"$slot|"))
+        make
+        drained.add(k)
+      }
+    }
 
   /**
    * Build (first call only) and drain `feed` into memory sink `view`,
@@ -68,24 +90,137 @@ object StreamDrain {
    */
   def once(spark: SparkSession, view: String, key: String,
       timeoutMs: Long, inputs: Seq[String] = Nil)(feed: => DataFrame): DataFrame = {
-    val lock = viewLocks.computeIfAbsent(view, _ => new Object)
-    lock.synchronized {
-      val k = s"$view|$key|${inputSig(spark, inputs)}"
-      if (!drained.contains(k) || !spark.catalog.tableExists(view)) {
-        if (spark.catalog.tableExists(view)) spark.catalog.dropTempView(view)
-        val q = feed.writeStream.format("memory").queryName(view)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try require(q.awaitTermination(timeoutMs),
-          s"$view: stream did not drain within ${timeoutMs} ms")
-        finally q.stop()
-        // one live memo entry per view: the sink holds only the latest
-        // drain, so stale keys for this view must not claim it
-        drained.removeIf((e: String) => e.startsWith(s"$view|"))
-        drained.add(k)
-      }
+    memo(spark, view, key, inputs, spark.catalog.tableExists(view)) {
+      if (spark.catalog.tableExists(view)) spark.catalog.dropTempView(view)
+      val q = feed.writeStream.format("memory").queryName(view)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try require(q.awaitTermination(timeoutMs),
+        s"$view: stream did not drain within ${timeoutMs} ms")
+      finally q.stop()
     }
     spark.table(view)
+  }
+
+  /**
+   * Drains `stream` through `step`, one call per micro-batch
+   * (`foreachBatch`, checkpointed at `checkpoint`), and blocks until the
+   * AvailableNow drain finishes — bounded feeds and catch-up runs. This
+   * is every streaming index-ingest path: `step` is the family's
+   * increment ([[DocStream.ingestIncrement]],
+   * [[DocStream.simhashIngestIncrement]]) or its append operator
+   * (`TextOps.appendToBm25Index`, `VectorOps.appendToIvfIndex`,
+   * `VectorOps.appendToIvfPqIndex`). `foreachBatch` is at-least-once:
+   * what a replayed batch does to an index is stated on each step's
+   * scaladoc. Steps that append must be serialized per index path.
+   */
+  def run(stream: DataFrame, checkpoint: String,
+      timeoutMs: Long = 300000L)(step: DataFrame => Unit): Unit = {
+    val q = stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((b: Dataset[Row], _: Long) => step(b.toDF()))
+      .start()
+    // stop the query BEFORE surfacing a timeout (ADVICE r14): without
+    // the stop a failed drain leaves a live writer mutating the index
+    // after the caller observed failure — a retry would then violate
+    // the serialize-appends-per-path rule
+    val done =
+      try q.awaitTermination(timeoutMs)
+      finally if (q.isActive) q.stop()
+    require(done, s"drain into $checkpoint did not finish in $timeoutMs ms")
+  }
+
+  /** Writes `increments` to `feed` as one coalesced parquet file each,
+    * mtimes pinned a minute apart, so a file source reading it with
+    * `maxFilesPerTrigger = 1` drains one increment per micro-batch,
+    * oldest first, deterministically. */
+  private def writeOrderedFeed(feed: String,
+      increments: Seq[DataFrame]): Unit = {
+    def dataFiles() = new java.io.File(feed).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith("_")
+        && !f.getName.startsWith("."))
+    increments.zipWithIndex.foreach { case (inc, i) =>
+      val before = if (i == 0) Set.empty[String]
+        else dataFiles().map(_.getName).toSet
+      inc.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
+        .parquet(feed)
+      dataFiles().filterNot(f => before(f.getName))
+        .foreach(_.setLastModified(1700000000000L + 60000L * i))
+    }
+  }
+
+  /** Where the index-ingest cert `name` stages its twin indexes for the
+    * input directory `dir`. */
+  private[graft] def stagedAt(name: String, dir: String): String =
+    s"/tmp/graft_stream_$name/" +
+      java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
+
+  /** One table both twin indexes hold: `sub` under each index root,
+    * projected to `cols`. `names` is either the (missing, extra) pair of
+    * counts — batch rows the stream side lacks, stream rows the batch
+    * side lacks — or one name for their sum. */
+  private[streaming] case class Twin(sub: String, cols: Seq[Column],
+      names: String*)
+
+  /**
+   * Structural self-check of a streaming index-ingest path (all-zeros
+   * pattern). Staging, once per process and input signature (re-staged
+   * when the input changes or the staging directory is gone): `split`
+   * divides the `input` table of `dir` into a base and two disjoint
+   * increments; `build` indexes the base twice; `replay` appends both
+   * increments to the batch twin in order; the increments, projected to
+   * `feedCols`, become the two-file ordered feed ([[writeOrderedFeed]])
+   * and stream into the stream twin through [[run]] with `step`. The
+   * second micro-batch is the load-bearing one: where the step flags
+   * against the index, its flags must see the first batch's appends.
+   *
+   * The answer is one row: for each of `tables` both-way row diffs of
+   * the final twins (missing / extra, or their sum), then `empty_index`
+   * — 1 when the stream twin's first table is empty. The timed portion
+   * is this comparison.
+   */
+  private[streaming] def ingestCheck(spark: SparkSession, dir: String,
+      name: String, input: String, feedCols: Seq[Column],
+      split: DataFrame => (DataFrame, DataFrame, DataFrame),
+      build: (DataFrame, String) => Unit,
+      replay: (DataFrame, String) => Unit,
+      step: (DataFrame, String) => Unit,
+      tables: Seq[Twin]): DataFrame = {
+    val root = stagedAt(name, dir)
+    val (stream, batch) = (s"$root/idx_stream", s"$root/idx_batch")
+    memo(spark, root, "", Seq(s"$dir/$input"),
+        new java.io.File(root).exists) {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      val (base, inc1, inc2) = split(spark.read.parquet(s"$dir/$input"))
+      build(base, stream)
+      build(base, batch)
+      replay(inc1, batch)
+      replay(inc2, batch)
+      val feed = Seq(inc1, inc2).map(_.select(feedCols: _*))
+      writeOrderedFeed(s"$root/feed", feed)
+      run(spark.readStream.schema(feed.head.schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
+        s"$root/ckpt")(step(_, stream))
+    }
+    def n(df: DataFrame, as: String) =
+      df.agg(count(lit(1)).cast("long").as(as))
+    // each table read once a side: a read of a partitioned table lists
+    // its directories, a job of its own past Spark's discovery threshold
+    val twins = tables.map { t =>
+      def rows(idx: String) =
+        spark.read.parquet(s"$idx/${t.sub}").select(t.cols: _*)
+      (t.names, rows(stream), rows(batch))
+    }
+    val counts = twins.flatMap {
+      case (Seq(missing, extra), s, b) =>
+        Seq(n(b.exceptAll(s), missing), n(s.exceptAll(b), extra))
+      case (Seq(both), s, b) =>
+        Seq(n(s.exceptAll(b).unionByName(b.exceptAll(s)), both))
+    }
+    (counts :+ twins.head._2.agg(
+      (count(lit(1)) === 0).cast("long").as("empty_index")))
+      .reduce(_.crossJoin(_))
   }
 }

@@ -51,11 +51,20 @@ class KernelModeSpec extends SparkSpec with ModePairs {
       Seq(plane(15), 5, 1, 4, 0, 2),
       Seq(plane(17), 5, 0, 5, 1, 3),        // ragged: 2 trailing pixels
       Seq(edges ++ edges, 3, 1, 3, 0, 4),
-      Seq(plane(9), 3, 2, 2, 0, 3)),        // empty window
+      Seq(plane(9), 3, 2, 2, 0, 3),         // empty window
+      Seq(Seq(1, 2, 3, 4), 4, 0, 4, 0, 3), // rows past a short plane
+      Seq(plane(17), 5, 0, 5, 0, 4),        // into the ragged last row
+      Seq(plane(15), 5, 1, 6, 0, 1),        // past the right edge
+      Seq(plane(15), 5, -1, 2, 0, 1), Seq(plane(15), 5, 0, 2, -1, 1),
+      Seq(plane(15), 5, 3, 2, 0, 1), Seq(plane(15), 5, 0, 2, 2, 1),
+      Seq(plane(15), 5, 0, 1, 0, 10), Seq(plane(15), 5, Min, Max, 0, 1),
+      Seq(plane(6), 0, 0, 0, 0, 0), Seq(plane(6), -3, 0, 1, 0, 1)),
       ) { c =>
       val px = arr(c(0)); val Seq(w, x0, x1, y0, y1) =
         c.drop(1).map(_.asInstanceOf[Int])
-      for (y <- y0 until y1; x <- x0 until x1) yield px(y * w + x)
+      if (w <= 0 || x0 < 0 || x0 > x1 || x1 > w || y0 < 0 || y0 > y1 ||
+          y1 > px.length / w) null
+      else for (y <- y0 until y1; x <- x0 until x1) yield px(y * w + x)
     }
   }
 
@@ -205,13 +214,16 @@ class KernelModeSpec extends SparkSpec with ModePairs {
     Seq(Seq.fill(15)(rnd.nextInt(2)), 5),
     Seq(Seq.fill(35)(rnd.nextInt(2)), 7),
     Seq(Seq.fill(17)(rnd.nextInt(2)), 5),   // ragged last row
-    Seq(Seq.fill(12)(1), 3), Seq(Seq.empty[Int], 4))
+    Seq(Seq.fill(12)(1), 3), Seq(Seq.empty[Int], 4),
+    Seq(Seq(1, 0, 1, 1), 0), Seq(Seq(1, 0, 1, 1), -2),
+    Seq(Seq(1, 0, 1, 1), Min))              // non-positive widths: NULL
 
   test("graft_cc_objects: both modes match a flood-fill labeling") {
     checkKernel("graft_cc_objects",
       fields("mask" -> ints, "sx" -> IntegerType), masks) { c =>
       val w = c(1).asInstanceOf[Int]
-      components(arr(c(0)), w).map(comp => Row.fromSeq(objectRow(comp, w)))
+      if (w <= 0) null
+      else components(arr(c(0)), w).map(comp => Row.fromSeq(objectRow(comp, w)))
     }
   }
 
@@ -224,7 +236,8 @@ class KernelModeSpec extends SparkSpec with ModePairs {
     checkKernel("graft_cc_objects_intensity", fields("mask" -> ints,
       "px" -> ints, "sx" -> IntegerType), cases) { c =>
       val px = arr(c(1)); val w = c(2).asInstanceOf[Int]
-      components(arr(c(0)), w).map { comp =>
+      if (w <= 0) null
+      else components(arr(c(0)), w).map { comp =>
         val vs = comp.map(i => if (i < px.length) px(i) else 0)
         Row.fromSeq(objectRow(comp, w) ++
           Seq(vs.map(_.toLong).sum, vs.min, vs.max))
@@ -237,20 +250,25 @@ class KernelModeSpec extends SparkSpec with ModePairs {
       checkKernel("graft_glcm_moments", fields("px" -> ints,
         "sx" -> IntegerType), Seq(
         Seq(Seq(3), 1), Seq(plane(35, maxv), 7), Seq(plane(17, maxv), 5),
-        Seq(edges ++ edges, 3), Seq(Seq.empty[Int], 2)),
+        Seq(edges ++ edges, 3), Seq(Seq.empty[Int], 2),
+        Seq(plane(12, maxv), 0), Seq(plane(12, maxv), -2),
+        Seq(plane(12, maxv), Min)),
         params = Seq(bins, maxv)) { c =>
         val px = arr(c(0)); val w = c(1).asInstanceOf[Int]
-        def bin(v: Int): Int =
-          math.min(math.max((v.toLong * bins / maxv).toInt, 0), bins - 1)
-        val counts = new Array[Long](bins * bins)
-        for (i <- 0 until px.length - 1 if i % w < w - 1)
-          counts(bin(px(i)) * bins + bin(px(i + 1))) += 1
-        val cells = counts.indices.filter(counts(_) > 0)
-          .map(k => (counts(k), k / bins - k % bins))
-        Row(cells.map(_._1).sum, cells.map { case (n, d) => n * d * d }.sum,
-          cells.map { case (n, d) => n * math.abs(d) }.sum,
-          cells.map { case (n, _) => n * n }.sum,
-          cells.foldLeft(0.0) { case (s, (n, _)) => s + n * math.log(n) })
+        if (w <= 0) null
+        else {
+          def bin(v: Int): Int =
+            math.min(math.max((v.toLong * bins / maxv).toInt, 0), bins - 1)
+          val counts = new Array[Long](bins * bins)
+          for (i <- 0 until px.length - 1 if i % w < w - 1)
+            counts(bin(px(i)) * bins + bin(px(i + 1))) += 1
+          val cells = counts.indices.filter(counts(_) > 0)
+            .map(k => (counts(k), k / bins - k % bins))
+          Row(cells.map(_._1).sum, cells.map { case (n, d) => n * d * d }.sum,
+            cells.map { case (n, d) => n * math.abs(d) }.sum,
+            cells.map { case (n, _) => n * n }.sum,
+            cells.foldLeft(0.0) { case (s, (n, _)) => s + n * math.log(n) })
+        }
       }
     }
   }

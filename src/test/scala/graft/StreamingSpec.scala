@@ -362,6 +362,47 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("an index-ingest cert re-stages when its input corpus changes") {
+    val dir = "/tmp/graft_test_ingest_restage"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def stagedRefs(corpus: org.apache.spark.sql.DataFrame): Set[Long] = {
+      corpus.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+      DocStream.indexIngestCheck(spark, dir).collect()
+      spark.read.parquet(
+          s"${StreamDrain.stagedAt("idxingest", dir)}/idx_stream/bands")
+        .select(col("ref_id").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet
+    }
+    val half = stagedRefs(docs.filter(col("doc_id") < 250))
+    assert(half.nonEmpty && half.max < 250)
+    // the same path, a new corpus: the reference split's new ids must
+    // be in the staged stream index, not the first corpus's leftovers
+    val full = stagedRefs(docs)
+    assert((250L until 500L by 25).forall(full), full.toSeq.sorted)
+  }
+
+  test("the ivf ingest cert counts a codebook row the stream index lost, " +
+      "and re-stages once the staging is gone") {
+    val dir = "/tmp/graft_test_ingest_codebook"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    def drift(): Long = VecStream.ivfIngestCheck(spark, dir).head()
+      .getAs[Long]("codebook_drift")
+    assert(drift() === 0L)
+    val root = StreamDrain.stagedAt("ivfingest", dir)
+    val book = s"$root/idx_stream/centroids"
+    val books = spark.read.parquet(book)
+    val kept = books.collect().toSeq.tail
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), books.schema)
+      .coalesce(1).write.mode("overwrite").parquet(book)
+    assert(drift() >= 1L, "a centroid the stream side lost must count")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    assert(drift() === 0L)
+  }
+
   test("partial image assembles zero-filled from buildRecord") {
     // unit-level check of the timeout-flush path (processing-time timeouts
     // don't fire under AvailableNow)
