@@ -1,7 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Physical data-layout operators — the write-side techniques that
@@ -227,6 +237,153 @@ object LayoutOps {
           (col("y_max") - col("y_min")).cast("double") /
             greatest(col("gy_max") - col("gy_min"), lit(1L))) / 2, 6)
           .as("extent_frac"))
+  }
+
+  // --- index table reads ----------------------------------------------
+
+  /** The footer key under which Spark's parquet writer stores the Spark
+    * schema of a file's data columns. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data files under `dir` in path order, walking partition
+    * directories depth-first and skipping `_`/`.` names (commit
+    * markers, checksums, staging) as Spark's file index does. Lazy: the
+    * first file costs one listing per directory level. */
+  private def tableFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).sortBy(_.getPath.getName).iterator
+      .filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+      .flatMap(s =>
+        if (s.isDirectory) tableFiles(fs, s.getPath) else Iterator(s))
+
+  /** The `name=value` directory segments between `root` and `file`,
+    * each typed as Spark's partition inference types a graft `part`
+    * key: int, else long, else string. */
+  private def partitionValues(root: Path,
+      file: Path): Seq[(StructField, Any)] =
+    file.getParent.toUri.getPath.stripPrefix(root.toUri.getPath)
+      .split('/').toSeq.filter(_.contains('=')).map { seg =>
+        val Array(k, raw) = seg.split("=", 2)
+        val v = ExternalCatalogUtils.unescapePathName(raw)
+        v.toIntOption.map(StructField(k, IntegerType) -> (_: Any))
+          .orElse(v.toLongOption.map(StructField(k, LongType) -> _))
+          .getOrElse(StructField(k, StringType) -> v)
+      }
+
+  /** The Spark schema of one file's data columns: the row metadata
+    * Spark's parquet writer puts in every footer. */
+  private def footerSchema(r: ParquetFileReader, file: Path): StructType =
+    Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalArgumentException(
+        s"$file carries no Spark schema: not a table Spark wrote"))
+
+  /** `t` with every field and element nullable — the schema a parquet
+    * read reports. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case other => other
+  }
+
+  /** Field `i` of a parquet record as the value `collect()` returns for
+    * Spark type `t`, for the column types graft's index tables use.
+    * Arrays are Spark's three-level lists. */
+  private def fieldValue(g: Group, i: Int, t: DataType): Any =
+    if (g.getFieldRepetitionCount(i) == 0) null
+    else t match {
+      case IntegerType => g.getInteger(i, 0)
+      case LongType => g.getLong(i, 0)
+      case FloatType => g.getFloat(i, 0)
+      case DoubleType => g.getDouble(i, 0)
+      case StringType => g.getString(i, 0)
+      case ArrayType(et, _) =>
+        val list = g.getGroup(i, 0)
+        scala.collection.mutable.ArraySeq.make(
+          Array.tabulate[Any](list.getFieldRepetitionCount(0))(j =>
+            fieldValue(list.getGroup(0, j), 0, et)))
+      case other => throw new UnsupportedOperationException(
+        s"indexRows: no driver-side decoding of $other columns")
+    }
+
+  /** The fields of `s` read by name from a record; a column the file
+    * lacks reads NULL, as in a Spark scan. */
+  private def recordFields(g: Group, s: StructType): Array[Any] =
+    s.fields.map { f =>
+      if (g.getType.containsField(f.name))
+        fieldValue(g, g.getType.getFieldIndex(f.name), f.dataType)
+      else null
+    }
+
+  /** `dir`'s file system, its qualified path and the session's Hadoop
+    * configuration. */
+  private def qualified(spark: SparkSession,
+      dir: String): (FileSystem, Path, Configuration) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val hp = new Path(dir)
+    val fs = hp.getFileSystem(conf)
+    (fs, fs.makeQualified(hp), conf)
+  }
+
+  /**
+   * A Spark scan of a table graft wrote (an index sub-table such as
+   * `bands`, `postings` or `vectors`), with the schema given instead of
+   * inferred: the data columns come from the Spark schema in ONE
+   * footer, and the partition columns (the `part` key) from that
+   * file's directory names. Spark's schema inference would run a job
+   * to read the same footer; this reads it on the driver and runs
+   * none. The scan itself, its partition pruning and its pushed
+   * filters are those of `spark.read.parquet(dir)`, and so is the
+   * schema, column order included. Raises, as that read does, when
+   * `dir` is missing or holds no data file.
+   */
+  def indexScan(spark: SparkSession, dir: String): DataFrame = {
+    val (fs, root, conf) = qualified(spark, dir)
+    val first = tableFiles(fs, root).nextOption().getOrElse(
+      throw new java.io.FileNotFoundException(s"no data files under $dir"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+    val data = try footerSchema(r, first.getPath) finally r.close()
+    spark.read
+      .schema(StructType(data.fields ++
+        partitionValues(root, first.getPath).map(_._1)))
+      .parquet(dir)
+  }
+
+  /**
+   * The rows of a SMALL table graft wrote (an index manifest or
+   * codebook: `params`, `stats`, `pq_book`, `centroids`), read on the
+   * driver with no Spark job: every data file under `dir` is decoded
+   * by the parquet reader in this JVM. Rows equal those of
+   * `spark.read.parquet(dir).collect()`, with the same schema (partition
+   * columns last), in file order. Callers use it only where those rows
+   * were collected to the driver anyway; every distributed read stays
+   * an [[indexScan]]. Raises when `dir` is missing; an empty table
+   * yields no rows.
+   */
+  def indexRows(spark: SparkSession, dir: String): Array[Row] = {
+    val (fs, root, conf) = qualified(spark, dir)
+    tableFiles(fs, root).toArray.flatMap { st =>
+      val parts = partitionValues(root, st.getPath)
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try {
+        val data = footerSchema(r, st.getPath)
+        val schema = nullable(StructType(data.fields ++ parts.map(_._1)))
+          .asInstanceOf[StructType]
+        val msg = r.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(msg)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { pages =>
+            val rec = io.getRecordReader(pages, new GroupRecordConverter(msg))
+            Iterator.fill(pages.getRowCount.toInt) {
+              new GenericRowWithSchema(
+                recordFields(rec.read(), data) ++ parts.map(_._2), schema)
+            }
+          }.toArray[Row]
+      } finally r.close()
+    }
   }
 
   // --- pointer-publish index lifecycle --------------------------------

@@ -568,12 +568,13 @@ object TextOps {
         "so it is refused")
   }
 
-  /** Manifest reader shared by the index consumers; raises with a
+  /** Manifest reader shared by the index consumers, read on the
+    * driver with no Spark job ([[LayoutOps.indexRows]]); raises with a
     * build-vs-query explanation when the manifest is absent. */
   private def minhashIndexParams(spark: SparkSession,
       path: String): (Int, Int, Int, Int) = {
     val r =
-      try spark.read.parquet(s"$path/params").head()
+      try LayoutOps.indexRows(spark, s"$path/params").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"minhash index at $path has no params manifest — rebuild " +
@@ -740,7 +741,7 @@ object TextOps {
     require(bb * rows == nh,
       "rebuildMinhashIndexPointer: numHashes must divide into bands")
     graft.functions.ensureRegistered(spark)
-    val sh = Caches.persist(spark.read.parquet(s"$live/shingles")
+    val sh = Caches.persist(LayoutOps.indexScan(spark, s"$live/shingles")
       .dropDuplicates(Seq("ref_id")))
     val wBucket = Window.partitionBy(col("band"), col("band_key"))
     try LayoutOps.withPointerGeneration(spark, root) { gen =>
@@ -768,7 +769,7 @@ object TextOps {
     * untouched dirs are never opened). */
   private[graft] def touchedBandPartitions(spark: SparkSession,
       path: String, touched: Seq[Int]): DataFrame =
-    spark.read.parquet(s"$path/bands")
+    LayoutOps.indexScan(spark, s"$path/bands")
       .filter(col("part").isin(touched.map(Integer.valueOf): _*))
 
   /**
@@ -804,7 +805,7 @@ object TextOps {
     val shDocs = Caches.persist(docs.select(
       col("doc_id").cast("long").as("doc_id"),
       shingles(col("text"), k).as("sh")))
-    val idx = spark.read.parquet(s"$path/bands")
+    val idx = LayoutOps.indexScan(spark, s"$path/bands")
     val refOk =
       if (maxBucketSize <= 0) idx
       else idx.filter(col("bn") <= maxBucketSize)
@@ -815,7 +816,7 @@ object TextOps {
           bands, rows)).as(Seq("band", "band_key")))
       .join(refOk, Seq("band", "band_key"))
       .select(col("doc_id"), col("ref_id")).distinct()
-    val shRef = spark.read.parquet(s"$path/shingles")
+    val shRef = LayoutOps.indexScan(spark, s"$path/shingles")
     cand
       .join(shDocs.select(col("doc_id"), col("sh").as("sh_d")), Seq("doc_id"))
       .join(shRef.select(col("ref_id"), col("sh").as("sh_r")), Seq("ref_id"))
@@ -1552,8 +1553,10 @@ object TextOps {
       val sp = pairsIn.sparkSession
       import sp.implicits._
       // primitive collection end-to-end: no boxed Rows/maps on the
-      // driver (a graph at the 1M-edge cap stays in the tens of MB)
-      val it = pairs.toLocalIterator()
+      // driver (a graph at the 1M-edge cap stays in the tens of MB).
+      // One partition, so one job: toLocalIterator runs a job per
+      // partition, and the counted edges are already persisted
+      val it = pairs.coalesce(1).toLocalIterator()
       val ea = new Array[Long](nPairs.toInt)
       val eb = new Array[Long](nPairs.toInt)
       var i = 0
@@ -2123,12 +2126,13 @@ object TextOps {
       nParts: Int): Column =
     pmod(xxhash64(band, chunk), lit(nParts.toLong)).cast("int")
 
-  /** Manifest reader for the SimHash index consumers; raises with a
+  /** Manifest reader for the SimHash index consumers, read on the
+    * driver with no Spark job ([[LayoutOps.indexRows]]); raises with a
     * build recipe when absent (the unverifiable-index refusal). */
   private def simhashIndexParams(spark: SparkSession,
       path: String): (Int, Int) = {
     val r =
-      try spark.read.parquet(s"$path/params").head()
+      try LayoutOps.indexRows(spark, s"$path/params").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"simhash index at $path has no params manifest — rebuild " +
@@ -2238,7 +2242,7 @@ object TextOps {
     val sigsD = Caches.persist(docs.select(
       col("doc_id").cast("long").as("doc_id"),
       graft.functions.simhash64(tokens(col("text"))).as("sig")))
-    val idx = spark.read.parquet(s"$path/bands")
+    val idx = LayoutOps.indexScan(spark, s"$path/bands")
     requireSigBands(idx, "simhashAgainstIndex", path, "querying")
     val refOk =
       if (maxBucketSize <= 0) idx
@@ -2351,7 +2355,7 @@ object TextOps {
     val np = if (nParts > 0) nParts else bNp
     requireSimhashBands(bb, "rebuildSimhashIndexPointer")
     graft.functions.ensureRegistered(spark)
-    val sigs = Caches.persist(spark.read.parquet(s"$live/sigs")
+    val sigs = Caches.persist(LayoutOps.indexScan(spark, s"$live/sigs")
       .dropDuplicates(Seq("ref_id")))
     val wBucket = Window.partitionBy(col("band"), col("chunk"))
     try LayoutOps.withPointerGeneration(spark, root) { gen =>
@@ -2409,7 +2413,7 @@ object TextOps {
    */
   def simhashIndexStats(spark: SparkSession, path: String): DataFrame = {
     simhashIndexParams(spark, path): Unit // manifest gate: refuse bare dirs
-    lshBandStats(spark.read.parquet(s"$path/bands"), "chunk")
+    lshBandStats(LayoutOps.indexScan(spark, s"$path/bands"), "chunk")
   }
 
   /** [[simhashIndexStats]] for the MinHash index — same rollup over
@@ -2418,7 +2422,7 @@ object TextOps {
     * [[rebuildMinhashIndexPointer]]'s numHashes/bands). */
   def minhashIndexStats(spark: SparkSession, path: String): DataFrame = {
     minhashIndexParams(spark, path): Unit // manifest gate: refuse bare dirs
-    lshBandStats(spark.read.parquet(s"$path/bands"), "band_key")
+    lshBandStats(LayoutOps.indexScan(spark, s"$path/bands"), "band_key")
   }
 
   /** Per-document quality score: length/token/punctuation heuristics in
@@ -3526,17 +3530,18 @@ object TextOps {
     * crash window yields the exact full-corpus values. One narrow
     * (doc_id, dl) scan — bytes-per-doc, not corpus text. */
   def refreshBm25Stats(spark: SparkSession, path: String): Unit =
-    spark.read.parquet(s"$path/doclens")
+    LayoutOps.indexScan(spark, s"$path/doclens")
       .dropDuplicates(Seq("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("dl")).cast("long").as("sum_dl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
 
-  /** Constant-manifest reader (n_parts); raises with a rebuild message
+  /** Constant-manifest reader (n_parts), read on the driver with no
+    * Spark job ([[LayoutOps.indexRows]]); raises with a rebuild message
     * when absent — the [[buildMinhashIndex]] refuse-unverifiable rule. */
   private def bm25IndexNParts(spark: SparkSession, path: String): Int = {
     val row =
-      try spark.read.parquet(s"$path/params").head()
+      try LayoutOps.indexRows(spark, s"$path/params").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"bm25 index at $path has no params manifest — rebuild with " +
@@ -3549,12 +3554,13 @@ object TextOps {
     row.getAs[Int]("n_parts")
   }
 
-  /** Corpus-stats reader; stats are refreshable, so the absence error
-    * names the repair tool rather than demanding a rebuild. */
+  /** Corpus-stats reader, read on the driver with no Spark job
+    * ([[LayoutOps.indexRows]]); stats are refreshable, so the absence
+    * error names the repair tool rather than demanding a rebuild. */
   private def bm25IndexStats(spark: SparkSession,
       path: String): (Long, Long) = {
     val row =
-      try spark.read.parquet(s"$path/stats").head()
+      try LayoutOps.indexRows(spark, s"$path/stats").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"bm25 index at $path has no stats table (a crash between an " +
@@ -3643,10 +3649,10 @@ object TextOps {
     val live = LayoutOps.resolveIndexPointer(spark, root)
     val np = if (nParts > 0) nParts else bm25IndexNParts(spark, live)
     LayoutOps.withPointerGeneration(spark, root) { gen =>
-      spark.read.parquet(s"$live/doclens")
+      LayoutOps.indexScan(spark, s"$live/doclens")
         .dropDuplicates(Seq("doc_id"))
         .write.mode("overwrite").parquet(s"$gen/doclens")
-      spark.read.parquet(s"$live/postings")
+      LayoutOps.indexScan(spark, s"$live/postings")
         .select(col("term"), col("doc_id"), col("tf"), col("dl"))
         .dropDuplicates(Seq("term", "doc_id"))
         .withColumn("part", termPart(col("term"), np))
@@ -3667,8 +3673,11 @@ object TextOps {
     * and the `term` predicate is PUSHED to the parquet reader where
     * the build-time term sort turns it into row-group skips. The part
     * set is computed DRIVER-SIDE with the same Catalyst XxHash64
-    * (seed 42) the build's `xxhash64` column evaluates — zero jobs,
-    * and a hash disagreement is structurally impossible. */
+    * (seed 42) the build's `xxhash64` column evaluates, and the scan's
+    * schema comes from one footer ([[LayoutOps.indexScan]]) — zero
+    * jobs, and a hash disagreement is structurally impossible. The
+    * frame is lazy and unpersisted: [[bm25AgainstIndex]] consumes it
+    * once, through its one term-keyed exchange. */
   private[graft] def termPostings(spark: SparkSession, path: String,
       terms: Seq[String], nParts: Int): DataFrame = {
     val parts = terms.map { t =>
@@ -3679,7 +3688,7 @@ object TextOps {
         .eval(null).asInstanceOf[Long]
       (((h % nParts) + nParts) % nParts).toInt
     }.distinct.sorted
-    spark.read.parquet(s"$path/postings")
+    LayoutOps.indexScan(spark, s"$path/postings")
       .filter(col("part").isin(parts.map(Integer.valueOf): _*) &&
         col("term").isin(terms: _*))
   }
@@ -3700,11 +3709,16 @@ object TextOps {
    * longs — equal to any engine's mean of integer-valued doubles.
    * Hash-certified against the `bm25_topk` oracle chain.
    *
-   * Scale shape: the scan opens ONLY the query terms' part directories
-   * and row-group-skips to their lists; everything downstream is
-   * candidate-bounded (Σ df rows). The df table is |terms| rows
-   * (broadcast); the global top-k is TakeOrdered; the final rnk window
-   * runs over kTop rows.
+   * Scale shape: the manifests are read on the driver
+   * ([[LayoutOps.indexRows]], no Spark job) and the scan opens ONLY the
+   * query terms' part directories and row-group-skips to their lists;
+   * everything downstream is candidate-bounded (Σ df rows). ONE
+   * exchange keyed on `term` feeds two windows over the same
+   * partitioning: the replayed-append dedup and the df count — no
+   * persisted posting frame, no df table, no broadcast. The per-doc
+   * sums take one `doc_id`-keyed exchange; the global top-k is
+   * TakeOrdered; the final rnk window runs over kTop rows. A collect
+   * runs three jobs (PlanSpec-pinned).
    *
    * Mega-bag caveat (VERDICT r16): the fixed-order sum emits one
    * conditional aggregate per query term, so the PLAN grows linearly
@@ -3723,21 +3737,24 @@ object TextOps {
     val (nDocs, sumDl) = bm25IndexStats(spark, path)
     require(nDocs > 0, s"bm25 index at $path is empty")
     val avgdl = sumDl.toDouble / nDocs
-    // candidate-bounded dedup absorbs replayed-append duplicates (the
-    // crash story above); persisted because both the df aggregation
-    // and the scoring pass consume it
-    val posts = Caches.persist(
-      termPostings(spark, path, terms, nParts)
-        .dropDuplicates(Seq("term", "doc_id")))
-    val dfTab = posts.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
+    // one term-keyed exchange serves both windows: the lag flag drops
+    // replayed-append duplicates (byte-identical (term, doc_id) rows,
+    // the crash story above; ADJACENT under the doc_id order, and the
+    // row_number guard keeps a NULL group's first row), then df is the
+    // deduplicated list's row count over the same partitioning
+    val wTerm = Window.partitionBy(col("term"))
+    val wOrd = wTerm.orderBy(col("doc_id").asc)
+    val posts = termPostings(spark, path, terms, nParts)
+      .withColumn("dup", row_number().over(wOrd) > 1 &&
+        (col("doc_id") <=> lag(col("doc_id"), 1).over(wOrd)))
+      .filter(!col("dup"))
+      .withColumn("df", count(lit(1)).over(wTerm).cast("double"))
     val tf = col("tf").cast("double")
     val idf = log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) /
       (col("df") + 0.5))
     val w = idf * (tf * (k1 + 1.0)) / (tf + lit(k1) *
       (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
-    val perTerm = posts.join(broadcast(dfTab), "term")
-      .select(col("doc_id"), col("term"), w.as("w"))
+    val perTerm = posts.select(col("doc_id"), col("term"), w.as("w"))
     // fixed-order sum: one conditional aggregate per query term (each
     // sees <= 1 row), added in bag order — bm25TopK's expression order
     val agg = perTerm.groupBy(col("doc_id")).agg(
@@ -3827,7 +3844,7 @@ object TextOps {
         // broadcast is the optimizer's choice, not forced (the
         // domainCap lesson: a pathological batch could carry a
         // corpus-scale vocabulary and a forced broadcast would OOM)
-        spark.read.parquet(s"$path/postings")
+        LayoutOps.indexScan(spark, s"$path/postings")
           .join(termFrame, Seq("term"), "left_semi")
     val posts = Caches.persist(read.dropDuplicates(Seq("term", "doc_id")))
     val dfTab = posts.groupBy(col("term"))

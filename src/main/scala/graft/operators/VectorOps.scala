@@ -980,7 +980,8 @@ object VectorOps {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
-  /** Guarded manifest reader: raises the rebuild message when the
+  /** Guarded manifest reader, read on the driver with no Spark job
+    * ([[LayoutOps.indexRows]]): raises the rebuild message when the
     * manifest is absent or missing any of `fields` (an index without a
     * readable manifest cannot be read correctly — the
     * [[TextOps.buildMinhashIndex]] discipline; field guards per
@@ -990,7 +991,7 @@ object VectorOps {
       path: String,
       fields: Seq[String]): org.apache.spark.sql.Row = {
     val row =
-      try spark.read.parquet(s"$path/params").head()
+      try LayoutOps.indexRows(spark, s"$path/params").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"ivf index at $path has no params manifest — rebuild with " +
@@ -1010,13 +1011,15 @@ object VectorOps {
       path: String): Int =
     ivfIndexManifest(spark, path, Seq("n_parts")).getAs[Int]("n_parts")
 
-  /** Codebook reader shared by the index consumers; raises when the
-    * index has no codebook (refusing an unverifiable layout, the
-    * [[TextOps.buildMinhashIndex]] manifest discipline). */
+  /** Codebook reader shared by the index consumers, read on the driver
+    * with no Spark job ([[LayoutOps.indexRows]]; the rows are driver
+    * constants anyway); raises when the index has no codebook (refusing
+    * an unverifiable layout, the [[TextOps.buildMinhashIndex]] manifest
+    * discipline). */
   private def readIvfCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[(Long, Array[Long])] = {
     val rows =
-      try spark.read.parquet(s"$path/centroids").collect()
+      try LayoutOps.indexRows(spark, s"$path/centroids")
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"ivf index at $path has no codebook — rebuild with " +
@@ -1031,7 +1034,7 @@ object VectorOps {
     * [[readIvfCodebook]] when the index has no codebook. */
   private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    try spark.read.parquet(s"$path/centroids")
+    try LayoutOps.indexScan(spark, s"$path/centroids")
       .select(col("centroid_id").cast("long").as("centroid_id"), col("qc"))
     catch {
       case e: Throwable => throw new IllegalArgumentException(
@@ -1128,7 +1131,7 @@ object VectorOps {
     // persisted: the build consumes the corpus once per Lloyd round
     // plus once for the layout write — without the barrier the dedup
     // shuffle would re-run per consumer
-    val corpus = Caches.persist(spark.read.parquet(s"$live/vectors")
+    val corpus = Caches.persist(LayoutOps.indexScan(spark, s"$live/vectors")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .dropDuplicates("vec_id"))
     try LayoutOps.withPointerGeneration(spark, root)(gen =>
@@ -1168,9 +1171,9 @@ object VectorOps {
    */
   def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String, sub: String = "vectors"): DataFrame = {
-    val cells = spark.read.parquet(s"$path/centroids")
+    val cells = LayoutOps.indexScan(spark, s"$path/centroids")
       .select(col("centroid_id").cast("long").as("cluster"))
-    val counts = spark.read.parquet(s"$path/$sub")
+    val counts = LayoutOps.indexScan(spark, s"$path/$sub")
       .groupBy(col("cluster").cast("long").as("cluster"))
       .agg(count(lit(1)).cast("long").as("n_vecs"))
     val filled = cells.join(counts, Seq("cluster"), "left")
@@ -1366,7 +1369,7 @@ object VectorOps {
       path: String, touched: Seq[Long], sub: String = "vectors",
       nParts: Int): DataFrame = {
     val parts = touched.map(c => (c % nParts).toInt).distinct.sorted
-    spark.read.parquet(s"$path/$sub")
+    LayoutOps.indexScan(spark, s"$path/$sub")
       .filter(col("part").isin(parts.map(Integer.valueOf): _*) &&
         col("cluster").isin(
           touched.map(java.lang.Long.valueOf).toIndexedSeq: _*))
@@ -1895,12 +1898,14 @@ object VectorOps {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_book")
   }
 
-  /** Reads the IVF-PQ manifest + codebooks; raises on an unverifiable
-    * index (missing books — the manifest discipline). */
+  /** Reads the IVF-PQ manifest + sub-quantizer book on the driver with
+    * no Spark job ([[LayoutOps.indexRows]]) and the coarse centroids as
+    * a scan ([[LayoutOps.indexScan]]); raises on an unverifiable index
+    * (missing books — the manifest discipline). */
   private def readIvfPqBooks(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Array[Float], DataFrame, Int) = {
     val row =
-      try spark.read.parquet(s"$path/pq_book").head()
+      try LayoutOps.indexRows(spark, s"$path/pq_book").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"ivf-pq index at $path has no codebooks — rebuild with " +
@@ -1913,7 +1918,7 @@ object VectorOps {
         s"ivf-pq index at $path predates the partitioned layout (pq_book " +
           "carries no n_parts) — rebuild with buildIvfPqIndex")
     (row.getAs[Int]("m"), row.getSeq[Float](row.fieldIndex("book")).toArray,
-      spark.read.parquet(s"$path/centroids"), row.getAs[Int]("n_parts"))
+      LayoutOps.indexScan(spark, s"$path/centroids"), row.getAs[Int]("n_parts"))
   }
 
   /**
@@ -1970,7 +1975,7 @@ object VectorOps {
     // guarded manifest read (the raw read surfaced opaque Spark errors
     // on missing/legacy layouts — r17 review)
     val row =
-      try spark.read.parquet(s"$live/pq_book").head()
+      try LayoutOps.indexRows(spark, s"$live/pq_book").head
       catch {
         case e: Throwable => throw new IllegalArgumentException(
           s"ivf-pq index at $live has no codebooks — rebuild with " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.operators.TextOps
+import graft.operators.{LayoutOps, TextOps}
 
 /**
  * Streaming LLM-pipeline operators over a documents feed — the
@@ -141,11 +141,11 @@ object DocStream {
     // duplicates flowing through an at-ingest dedup gate — so refuse it
     TextOps.requireIndexParams(spark, indexPath, k, numHashes, bands,
       "nearDupIndexStream")
-    val idx = spark.read.parquet(s"$indexPath/bands")
+    val idx = LayoutOps.indexScan(spark, s"$indexPath/bands")
     val refOk =
       if (maxBucketSize <= 0) idx
       else idx.filter(col("bn") <= maxBucketSize)
-    val shRef = spark.read.parquet(s"$indexPath/shingles")
+    val shRef = LayoutOps.indexScan(spark, s"$indexPath/shingles")
       .select(col("ref_id"), col("sh").as("sh_r"))
     docs
       .withWatermark("ingest_ts", lateness)
@@ -245,24 +245,27 @@ object DocStream {
   def ingestIncrement(batch: DataFrame, indexPath: String, k: Int = 3,
       numHashes: Int = 12, bands: Int = 4,
       threshold: Double = 0.8): Unit =
-    if (!batch.isEmpty) graft.operators.Caches.scoped {
+    graft.operators.Caches.scoped {
       // Caches.persist, not raw .persist (ADVICE r18): the scoped block
-      // then unpersists these even when a mid-batch throw skips the
-      // happy-path unpersists — under streaming retries raw persists
-      // leaked two cached frames per failed micro-batch
+      // unpersists both frames on exit, a mid-batch throw included —
+      // under streaming retries raw persists leaked two cached frames
+      // per failed micro-batch
       val b = graft.operators.Caches.persist(batch
         .select(col("doc_id").cast("long").as("doc_id"), col("text")))
-      val flagged = TextOps.nearDupAgainstIndex(b, indexPath, k,
-        numHashes, bands, threshold).select(col("doc_id")).distinct()
-      val fresh = graft.operators.Caches.persist(
-        b.join(flagged, Seq("doc_id"), "left_anti"))
-      val losers = TextOps
-        .nearDupClustersMinhash(fresh, k, numHashes, bands, threshold)
-        .filter(col("is_keeper") === 0).select(col("doc_id"))
-      val keepers = fresh.join(losers, Seq("doc_id"), "left_anti")
-      TextOps.appendToMinhashIndex(keepers, indexPath)
-      b.unpersist(false)
-      fresh.unpersist(false)
+      // emptiness is tested on the persisted frame, so the test fills
+      // the cache and the source is read once (a raw-batch isEmpty
+      // read it a second time)
+      if (!b.isEmpty) {
+        val flagged = TextOps.nearDupAgainstIndex(b, indexPath, k,
+          numHashes, bands, threshold).select(col("doc_id")).distinct()
+        val fresh = graft.operators.Caches.persist(
+          b.join(flagged, Seq("doc_id"), "left_anti"))
+        val losers = TextOps
+          .nearDupClustersMinhash(fresh, k, numHashes, bands, threshold)
+          .filter(col("is_keeper") === 0).select(col("doc_id"))
+        val keepers = fresh.join(losers, Seq("doc_id"), "left_anti")
+        TextOps.appendToMinhashIndex(keepers, indexPath)
+      }
     }
 
   /**
@@ -367,21 +370,21 @@ object DocStream {
    */
   def simhashIngestIncrement(batch: DataFrame, indexPath: String,
       maxHamming: Int = 8, bands: Int = 4): Unit =
-    if (!batch.isEmpty) graft.operators.Caches.scoped {
-      // Caches.persist, not raw .persist (ADVICE r18) — see
-      // ingestIncrement
+    graft.operators.Caches.scoped {
+      // Caches.persist, not raw .persist (ADVICE r18), and emptiness
+      // tested on the persisted frame — see ingestIncrement
       val b = graft.operators.Caches.persist(batch
         .select(col("doc_id").cast("long").as("doc_id"), col("text")))
-      val flagged = TextOps.simhashAgainstIndex(b, indexPath,
-        maxHamming, bands).select(col("doc_id")).distinct()
-      val fresh = graft.operators.Caches.persist(
-        b.join(flagged, Seq("doc_id"), "left_anti"))
-      val losers = TextOps.simhashPairs(fresh, maxHamming)
-        .select(col("doc_b").as("doc_id")).distinct()
-      val keepers = fresh.join(losers, Seq("doc_id"), "left_anti")
-      TextOps.appendToSimhashIndex(keepers, indexPath)
-      b.unpersist(false)
-      fresh.unpersist(false)
+      if (!b.isEmpty) {
+        val flagged = TextOps.simhashAgainstIndex(b, indexPath,
+          maxHamming, bands).select(col("doc_id")).distinct()
+        val fresh = graft.operators.Caches.persist(
+          b.join(flagged, Seq("doc_id"), "left_anti"))
+        val losers = TextOps.simhashPairs(fresh, maxHamming)
+          .select(col("doc_b").as("doc_id")).distinct()
+        val keepers = fresh.join(losers, Seq("doc_id"), "left_anti")
+        TextOps.appendToSimhashIndex(keepers, indexPath)
+      }
     }
 
   /**

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.operators.LayoutOps
+
 /**
  * How a bounded feed is drained, and memoized per process, for the
  * structural stream checks.
@@ -210,7 +212,7 @@ object StreamDrain {
     // its directories, a job of its own past Spark's discovery threshold
     val twins = tables.map { t =>
       def rows(idx: String) =
-        spark.read.parquet(s"$idx/${t.sub}").select(t.cols: _*)
+        LayoutOps.indexScan(spark, s"$idx/${t.sub}").select(t.cols: _*)
       (t.names, rows(stream), rows(batch))
     }
     val counts = twins.flatMap {

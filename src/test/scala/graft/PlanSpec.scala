@@ -16,6 +16,25 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private object Aqe
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every node of the executed plan, inside adaptive plans and their
+    * query stages too (the final plan once the frame has run). */
+  private def nodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    Aqe.collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** Cached-frame scans in the executed plan, counted per cached
+    * relation and keyed by that relation's column names. */
+  private def cachedScans(
+      df: org.apache.spark.sql.DataFrame): Map[Seq[String], Int] =
+    nodes(df).collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s.relation
+    }.groupBy(_.cacheBuilder).values
+      .map(rs => rs.head.cachedPlan.output.map(_.name) -> rs.size).toMap
+
   test("describe over parquet prunes planes out of the read schema") {
     val d = Files.createTempDirectory("planspec_pq").toString
     graft.sources.OmeParquet.write(Fixtures.corpus4d(spark), d)
@@ -543,21 +562,22 @@ class PlanSpec extends SparkSpec {
     // EXACT mode: PPJoin — prefix frame cached (2 scans for the
     // candidate join) + shingle frame cached (2 scans for the verify
     // joins); the explode/df-window/rank-window subtree must NOT repeat
-    val exact = plan(graft.operators.TextOps.ngramJaccardPairs(docs))
-    val exactScans = "InMemoryTableScan".r.findAllIn(exact).length
-    assert(exactScans >= 4,
-      s"exact mode expected >=4 cached scans (2 prefix + 2 shingle), " +
-        s"got $exactScans:\n$exact")
+    val exactDf = graft.operators.TextOps.ngramJaccardPairs(docs)
+    val exact = plan(exactDf)
+    assert(cachedScans(exactDf) === Map(
+        Seq("doc_id", "n_sh", "shingle") -> 2, Seq("doc_id", "sh") -> 2),
+      s"exact mode: the prefix frame and the shingle frame should each " +
+        s"be scanned twice from the cache:\n$exact")
     assert(exact.contains("array_intersect"),
       "exact mode lost the set-verification stage")
     // CAPPED mode: the capped posting frame cached, both join sides
     // read it (r19 left the explode + cap window evaluating twice)
-    val capped = plan(
-      graft.operators.TextOps.ngramJaccardPairs(docs, maxPostings = 64))
-    val cappedScans = "InMemoryTableScan".r.findAllIn(capped).length
-    assert(cappedScans >= 2,
-      s"capped mode expected both join sides on the cached posting " +
-        s"frame, got $cappedScans scans:\n$capped")
+    val cappedDf =
+      graft.operators.TextOps.ngramJaccardPairs(docs, maxPostings = 64)
+    assert(cachedScans(cappedDf) ===
+        Map(Seq("doc_id", "n_sh", "shingle") -> 2),
+      s"capped mode: both join sides should scan the cached posting " +
+        s"frame:\n${plan(cappedDf)}")
     spark.catalog.clearCache()
   }
 
@@ -708,6 +728,49 @@ class PlanSpec extends SparkSpec {
     // end-to-end: scoring over the pruned read returns ranked rows
     assert(graft.operators.TextOps.bm25AgainstIndex(
       spark, path, Seq("w3"), kTop = 5).count() > 0)
+    spark.catalog.clearCache()
+  }
+
+  test("bm25AgainstIndex: ONE term-keyed exchange below the per-doc " +
+      "aggregate serves the replay dedup and the df window — no cached " +
+      "posting frame, no broadcast — and a collect runs <= 3 jobs") {
+    import spark.implicits._
+    val docs = (0L until 32L).map(i =>
+      (i, (0 to 6).map(j => s"w${(i * 7 + j) % 29}").mkString(" "),
+        "en", "s", 20L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val path = Files.createTempDirectory("planspec_bm25shape").toString
+    graft.operators.TextOps.buildBm25Index(docs, path, nParts = 8)
+    val q = graft.operators.TextOps.bm25AgainstIndex(
+      spark, path, Seq("w3", "w11", "w20"), kTop = 5)
+    val (rows, jobs) = jobsDuring(q.collect())
+    assert(rows.nonEmpty)
+    assert(jobs.size <= 3, s"a bm25AgainstIndex collect ran ${jobs.size} jobs")
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    def keyedOn(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect {
+        case a: Attribute => a.name }
+      case _ => Nil
+    }
+    val all = nodes(q)
+    val p = plan(q)
+    val termEx = all.collect {
+      case e: ShuffleExchangeExec if keyedOn(e) == Seq("term") => e }
+    assert(termEx.size === 1, s"expected one term-keyed exchange:\n$p")
+    val perDoc = all.collect { case a: HashAggregateExec
+      if a.groupingExpressions.map(_.name) == Seq("doc_id") => a }
+    assert(perDoc.nonEmpty && perDoc.forall(a =>
+        Aqe.find(a)(_ eq termEx.head).nonEmpty),
+      s"the term exchange is not below the per-doc aggregate:\n$p")
+    assert(!all.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar
+          .InMemoryTableScanExec]) &&
+      !all.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"cached posting frame or broadcast df table is back:\n$p")
     spark.catalog.clearCache()
   }
 

@@ -22,6 +22,28 @@ object SparkTestBase {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
 
+  /** Runs `f` and returns its value with the Spark jobs it started, in
+    * start order (the listener bus is drained on both sides). */
+  protected def jobsDuring[T](f: => T)
+      : (T, Seq[org.apache.spark.scheduler.SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e)
+    }
+    org.apache.spark.graftmetrics.BusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.graftmetrics.BusDrain.drain(sc)
+      (out, jobs.toArray(Array.empty[
+        org.apache.spark.scheduler.SparkListenerJobStart]).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Stop any streaming query a test (or a helper it called) left
     * active — a timed-out `awaitTermination` or an assertion throwing
     * before a `stop()` leaves a runner that races session teardown at

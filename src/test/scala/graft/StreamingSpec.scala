@@ -316,6 +316,39 @@ class StreamingSpec extends SparkSpec {
     assert(streamed(1L)._2 > streamed(0L)._2)
   }
 
+  test("the MinHash and SimHash ingest steps read each micro-batch once: " +
+      "a one-file increment of n docs reports numInputRows = n") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_ingest_rows").toString
+    val n = 40
+    (0L until n).map(i => (i, s"document $i about ${i % 7} shared words"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/feed")
+    val ref = Seq((1000L, "an unrelated reference corpus document"))
+      .toDF("doc_id", "text")
+    graft.operators.TextOps.buildMinhashIndex(ref, s"$dir/mh", nParts = 4)
+    graft.operators.TextOps.buildSimhashIndex(ref, s"$dir/sh", nParts = 4)
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) rows.add(e.progress.numInputRows)
+    }
+    def feed = spark.readStream.schema("doc_id long, text string")
+      .parquet(s"$dir/feed")
+    spark.streams.addListener(l)
+    try {
+      DocStream.indexIngestRun(feed, s"$dir/mh", s"$dir/ckpt_mh",
+        threshold = 0.5)
+      StreamDrain.run(feed, s"$dir/ckpt_sh")(
+        DocStream.simhashIngestIncrement(_, s"$dir/sh"))
+      org.apache.spark.graftmetrics.BusDrain.drain(spark.sparkContext)
+    } finally spark.streams.removeListener(l)
+    assert(rows.toArray.toSeq === Seq(n.toLong, n.toLong))
+    spark.catalog.clearCache()
+  }
+
   test("StreamDrain.inputSig tracks input file content changes") {
     // r8 ADVICE: the drain memo key must fold in input signatures so a
     // feed dir whose DATA changes under an unchanged path re-drains

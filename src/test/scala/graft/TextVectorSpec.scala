@@ -604,6 +604,23 @@ class TextVectorSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("connectedComponents' driver path collects an 8-partition edge " +
+      "list in one job, labels unchanged") {
+    // eight 8-node paths, each edge written high id first
+    val edges = (0L until 64L).filter(_ % 8 != 7).map(i => (i + 1, i))
+      .toDF("doc_a", "doc_b").repartition(8)
+    val (got, jobs) = jobsDuring(TextOps.connectedComponents(edges))
+    // toLocalIterator launches its jobs from the iterator's hasNext:
+    // count the jobs whose result stage carries that call site
+    assert(jobs.count(_.stageInfos.maxBy(_.stageId).name
+      .startsWith("hasNext at")) === 1,
+      "edge collect ran one job per partition")
+    assert(got.as[(Long, Long, Long, Int)].collect().toSet ===
+      (0L until 64L).map(n =>
+        (n, n / 8 * 8, 8L, if (n % 8 == 0) 1 else 0)).toSet)
+    spark.catalog.clearCache()
+  }
+
   test("nearDupClustersMinhash matches the exact clusters when every " +
       "edge survives banding") {
     // Docs 0 and 3 are byte-identical (identical signatures -> every band
