@@ -32,23 +32,12 @@ object EventOps {
     * by the testdata convention. Footer-only: free at any corpus size. */
   private[graft] def tsUnitNanosOf(spark: SparkSession, path: String): Long = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val st = fs.getFileStatus(root)
-    val parts =
-      if (st.isFile) Array(root)
-      else fs.listStatus(root)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).map(_.getPath)
+    import graft.sources.ParquetTable
+    val parts = ParquetTable.dataFiles(spark, path).toArray
     require(parts.nonEmpty, s"tsUnitNanosOf: no parquet part files under $path")
-    def unitOf(part: org.apache.hadoop.fs.Path): Long = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
-      val schema =
-        try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    def unitOf(part: ParquetTable.DataFile): Long = {
+      val schema = part.read(_.getFooter.getFileMetaData.getSchema)
       schema.getFields.asScala.find(_.getName == "ts")
         .flatMap(f => Option(f.asPrimitiveType().getLogicalTypeAnnotation))
         .collect {
@@ -71,7 +60,7 @@ object EventOps {
     require(distinctUnits.length == 1,
       s"tsUnitNanosOf: mixed ts units across part files of $path: " +
         units.groupBy(_._2).map { case (u, ps) =>
-          s"${u}ns/unit -> ${ps.take(3).map(_._1.getName).mkString(",")}" +
+          s"${u}ns/unit -> ${ps.take(3).map(_._1.path.getName).mkString(",")}" +
             (if (ps.length > 3) s" (+${ps.length - 3} more)" else "")
         }.mkString("; "))
     distinctUnits.head

@@ -1,17 +1,14 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sources.ParquetTable
 
 /**
  * Physical data-layout operators — the write-side techniques that
@@ -241,45 +238,6 @@ object LayoutOps {
 
   // --- index table reads ----------------------------------------------
 
-  /** The footer key under which Spark's parquet writer stores the Spark
-    * schema of a file's data columns. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The data files under `dir` in path order, walking partition
-    * directories depth-first and skipping `_`/`.` names (commit
-    * markers, checksums, staging) as Spark's file index does. Lazy: the
-    * first file costs one listing per directory level. */
-  private def tableFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
-    fs.listStatus(dir).sortBy(_.getPath.getName).iterator
-      .filterNot { s =>
-        val n = s.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
-      .flatMap(s =>
-        if (s.isDirectory) tableFiles(fs, s.getPath) else Iterator(s))
-
-  /** The `name=value` directory segments between `root` and `file`,
-    * each typed as Spark's partition inference types a graft `part`
-    * key: int, else long, else string. */
-  private def partitionValues(root: Path,
-      file: Path): Seq[(StructField, Any)] =
-    file.getParent.toUri.getPath.stripPrefix(root.toUri.getPath)
-      .split('/').toSeq.filter(_.contains('=')).map { seg =>
-        val Array(k, raw) = seg.split("=", 2)
-        val v = ExternalCatalogUtils.unescapePathName(raw)
-        v.toIntOption.map(StructField(k, IntegerType) -> (_: Any))
-          .orElse(v.toLongOption.map(StructField(k, LongType) -> _))
-          .getOrElse(StructField(k, StringType) -> v)
-      }
-
-  /** The Spark schema of one file's data columns: the row metadata
-    * Spark's parquet writer puts in every footer. */
-  private def footerSchema(r: ParquetFileReader, file: Path): StructType =
-    Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalArgumentException(
-        s"$file carries no Spark schema: not a table Spark wrote"))
-
   /** `t` with every field and element nullable — the schema a parquet
     * read reports. */
   private def nullable(t: DataType): DataType = t match {
@@ -318,16 +276,6 @@ object LayoutOps {
       else null
     }
 
-  /** `dir`'s file system, its qualified path and the session's Hadoop
-    * configuration. */
-  private def qualified(spark: SparkSession,
-      dir: String): (FileSystem, Path, Configuration) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val hp = new Path(dir)
-    val fs = hp.getFileSystem(conf)
-    (fs, fs.makeQualified(hp), conf)
-  }
-
   /**
    * A Spark scan of a table graft wrote (an index sub-table such as
    * `bands`, `postings` or `vectors`), with the schema given instead of
@@ -341,14 +289,11 @@ object LayoutOps {
    * `dir` is missing or holds no data file.
    */
   def indexScan(spark: SparkSession, dir: String): DataFrame = {
-    val (fs, root, conf) = qualified(spark, dir)
-    val first = tableFiles(fs, root).nextOption().getOrElse(
+    val first = ParquetTable.dataFiles(spark, dir).nextOption().getOrElse(
       throw new java.io.FileNotFoundException(s"no data files under $dir"))
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
-    val data = try footerSchema(r, first.getPath) finally r.close()
+    val data = first.sparkSchema.getOrElse(notSparkWritten(first))
     spark.read
-      .schema(StructType(data.fields ++
-        partitionValues(root, first.getPath).map(_._1)))
+      .schema(StructType(data.fields ++ first.partitionValues.map(_._1)))
       .parquet(dir)
   }
 
@@ -363,13 +308,11 @@ object LayoutOps {
    * an [[indexScan]]. Raises when `dir` is missing; an empty table
    * yields no rows.
    */
-  def indexRows(spark: SparkSession, dir: String): Array[Row] = {
-    val (fs, root, conf) = qualified(spark, dir)
-    tableFiles(fs, root).toArray.flatMap { st =>
-      val parts = partitionValues(root, st.getPath)
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try {
-        val data = footerSchema(r, st.getPath)
+  def indexRows(spark: SparkSession, dir: String): Array[Row] =
+    ParquetTable.dataFiles(spark, dir).toArray.flatMap { f =>
+      val parts = f.partitionValues
+      f.read { r =>
+        val data = ParquetTable.sparkSchemaOf(r).getOrElse(notSparkWritten(f))
         val schema = nullable(StructType(data.fields ++ parts.map(_._1)))
           .asInstanceOf[StructType]
         val msg = r.getFooter.getFileMetaData.getSchema
@@ -382,9 +325,12 @@ object LayoutOps {
                 recordFields(rec.read(), data) ++ parts.map(_._2), schema)
             }
           }.toArray[Row]
-      } finally r.close()
+      }
     }
-  }
+
+  private def notSparkWritten(f: ParquetTable.DataFile): Nothing =
+    throw new IllegalArgumentException(
+      s"${f.path} carries no Spark schema: not a table Spark wrote")
 
   // --- pointer-publish index lifecycle --------------------------------
 

@@ -1,8 +1,18 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.`type`.TypeReference
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.OmeOps
 import graft.schema.OmeSchema
@@ -18,14 +28,15 @@ import graft.schema.OmeSchema
  *    written (Spark cannot write Parquet NullType); the reference's
  *    lenient field-set matcher ignores it, so interop holds both ways;
  *  - file-level KV metadata (`ome.arrow.type`/`version` tags,
- *    export.py:405-414) is stamped into every part file's parquet
- *    FOOTER after the Spark write (Spark exposes no write-time hook for
- *    custom key-values): a distributed parquet-hadoop rewrite that
- *    byte-copies row groups (`ParquetFileWriter.appendFile` — no
- *    decode/re-encode, one sequential read+write per file, each file
- *    independent) and ends with the merged key-value map, so pyarrow
- *    and the reference's tag check (ingest.py:923-930) see real footer
- *    metadata. The footer is the tags' only carrier.
+ *    export.py:405-414) is written into every part file's parquet
+ *    FOOTER by the parquet write itself ([[OmeParquetFormat]]), so
+ *    pyarrow and the reference's tag check (ingest.py:923-930) see real
+ *    footer metadata. The footer is the tags' only carrier.
+ *
+ * A read of a Spark-written table plans with no Spark job: its schema
+ * comes from one footer's Spark row metadata, read on the driver. Only
+ * files other writers made (pyarrow, the reference) and partitioned
+ * directories go through Spark's schema inference.
  */
 object OmeParquet {
 
@@ -40,7 +51,8 @@ object OmeParquet {
    */
   def read(spark: SparkSession, path: String,
       column: Option[String] = None, strict: Boolean = false): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     val colName = column match {
       case Some(c) =>
         require(raw.schema.fieldNames.contains(c),
@@ -100,114 +112,88 @@ object OmeParquet {
     }
   }
 
+  /** The schema `spark.read.parquet(path)` infers, taken from the first
+    * data file's Spark row metadata with no Spark job. None where
+    * inference must run: `path` is missing (so the read raises as
+    * Spark's does), its first file was not written by Spark, or the
+    * table is partitioned (Spark types the partition columns). */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] =
+    ParquetTable.firstDataFile(spark, path)
+      .filter(_.partitionValues.isEmpty)
+      .flatMap(_.sparkSchema)
+
   /**
    * Write the `ome_arrow` column as OME-Parquet: zstd, chosen column name
    * (reference raw-writer default is "image", class API uses "ome_arrow"),
-   * with the OME tags stamped into every part file's footer.
+   * with the OME tags and `fileMetadata` in every part file's footer.
+   * One Spark job: the tags ride the parquet write ([[OmeParquetFormat]]).
    */
   def write(df: DataFrame, path: String,
       columnName: String = OmeSchema.DefaultColumn,
       sourceColumn: String = OmeSchema.DefaultColumn,
       fileMetadata: Map[String, String] = Map.empty,
       compression: String = "zstd"): Unit = {
-    df.select(col(sourceColumn).as(columnName))
-      .write.mode("overwrite")
-      .option("compression", compression)
-      .parquet(path)
     val tags = Map(
       "ome.arrow.type" -> OmeSchema.TagType,
       "ome.arrow.version" -> OmeSchema.Version) ++ fileMetadata
-    stampFooterMetadata(df.sparkSession, path, tags)
-  }
-
-  /**
-   * Stamp `tags` into the footer key-value metadata of every part file
-   * under `dir` — the real thing the reference writes (export.py:405-414,
-   * via pyarrow), readable back by any parquet implementation.
-   *
-   * Spark's parquet sink exposes no hook for custom file metadata, so
-   * this is a post-write rewrite through parquet-hadoop:
-   * `ParquetFileWriter.appendFile` byte-copies the row groups (no
-   * decode/re-encode — pure sequential I/O) and `end(...)` writes the
-   * merged key-value map. Files rewrite INDEPENDENTLY on executors (one
-   * task per file, temp-file + rename), so the pass distributes across
-   * the cluster and costs one extra read+write of the export — borne
-   * only by this sink, never by queries.
-   */
-  private[graft] def stampFooterMetadata(spark: SparkSession, dir: String,
-      tags: Map[String, String]): Unit = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf.value)
-    val parts = fs.listStatus(root)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toSeq
-    if (parts.nonEmpty) {
-      // parallelize with one exact slice per file — a Dataset
-      // repartition here would add a full (if tiny) shuffle job to
-      // every export
-      spark.sparkContext.parallelize(parts, parts.length)
-        .foreachPartition { it: Iterator[String] =>
-          it.foreach(p => stampOne(new Path(p), conf.value, tags))
-        }
-    }
-  }
-
-  private def stampOne(path: Path,
-      conf: org.apache.hadoop.conf.Configuration,
-      tags: Map[String, String]): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val in = HadoopInputFile.fromPath(path, conf)
-    val reader = ParquetFileReader.open(in)
-    val (schema, existing) = try {
-      val fmd = reader.getFooter.getFileMetaData
-      (fmd.getSchema, fmd.getKeyValueMetaData)
-    } finally reader.close()
-    val merged = new java.util.HashMap[String, String](existing)
-    tags.foreach { case (k, v) => merged.put(k, v) }
-    val tmp = new Path(path.getParent, s".${path.getName}.kvstamp")
-    val writer = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf),
-      schema, ParquetFileWriter.Mode.OVERWRITE,
-      128L * 1024 * 1024 /* row groups are copied verbatim */, 0)
-    writer.start()
-    writer.appendFile(in)
-    writer.end(merged)
-    val fs = path.getFileSystem(conf)
-    // delete-then-rename (NOT rename-over): ChecksumFileSystem keeps a
-    // sibling .crc per file — a POSIX rename over the original would
-    // leave the original's stale checksum behind and poison every
-    // subsequent read. Delete drops the crc; rename carries tmp's along.
-    fs.delete(path, false)
-    require(fs.rename(tmp, path),
-      s"OmeParquet: could not replace $path with its stamped rewrite")
+    df.select(col(sourceColumn).as(columnName))
+      .write.format(classOf[OmeParquetFormat].getName).mode("overwrite")
+      .option("compression", compression)
+      .option(FooterTagsKey, json.writeValueAsString(tags.asJava))
+      .save(path)
   }
 
   /** Read the OME tags back: the footer key-value metadata of the first
-    * part file under `dir` (or of `dir` itself when it is a single file)
+    * data file of `dir` (or of `dir` itself when it is a single file)
     * — what the reference writes and checks (ingest.py:923-930), one
     * positioned footer read, no row groups touched. Empty when absent:
     * soft, like the reference's warning-only check. Any Spark-written
     * file also carries Spark's own row-metadata key. */
-  def readMetadata(spark: SparkSession, dir: String): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Map.empty
-    val st = fs.getFileStatus(root)
-    val partOpt =
-      if (st.isFile) Some(root)
-      else fs.listStatus(root)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).headOption.map(_.getPath)
-    partOpt.fold(Map.empty[String, String]) { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
-      finally reader.close()
+  def readMetadata(spark: SparkSession, dir: String): Map[String, String] =
+    ParquetTable.firstDataFile(spark, dir).fold(Map.empty[String, String])(
+      _.keyValues)
+
+  /** The writer option, and then the Hadoop job conf key, that carries
+    * the footer tags from [[write]] to [[OmeFooterWriteSupport]]: one
+    * JSON object, so the tag keys keep their case (Spark lower-cases
+    * option KEYS, never values). */
+  private[sources] val FooterTagsKey = "graft.ome.footer.tags"
+
+  private[sources] val json = new ObjectMapper()
+}
+
+/**
+ * Spark's parquet file format, writing the footer tags [[OmeParquet.write]]
+ * passes into every part file it writes. Addressed by class name only —
+ * never registered under a short name — so `format("parquet")` stays
+ * Spark's own; reads of what it writes are plain parquet reads.
+ */
+class OmeParquetFormat extends ParquetFileFormat {
+  override def prepareWrite(sparkSession: SparkSession, job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    val conf = job.getConfiguration
+    options.get(OmeParquet.FooterTagsKey)
+      .foreach(conf.set(OmeParquet.FooterTagsKey, _))
+    conf.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS,
+      classOf[OmeFooterWriteSupport].getName)
+    factory
+  }
+}
+
+/** Spark's parquet write support, adding the job's footer tags to the
+  * key-value metadata every file it writes ends with. A tag wins over a
+  * Spark key of the same name. */
+class OmeFooterWriteSupport extends ParquetWriteSupport {
+  override def init(conf: Configuration): WriteSupport.WriteContext = {
+    val ctx = super.init(conf)
+    val extra = new java.util.HashMap[String, String](ctx.getExtraMetaData)
+    Option(conf.get(OmeParquet.FooterTagsKey)).foreach { tags =>
+      extra.putAll(OmeParquet.json.readValue(tags,
+        new TypeReference[java.util.Map[String, String]] {}))
     }
+    new WriteSupport.WriteContext(ctx.getSchema, extra)
   }
 }

@@ -130,6 +130,22 @@ class IndexReadSpec extends SparkSpec {
     assert(LayoutOps.indexRows(spark, empty).isEmpty)
   }
 
+  test("a single-file path under a k=v directory has no partition " +
+      "column, as in spark.read.parquet") {
+    val root = Files.createTempDirectory("idxread_file").toString
+    docs.coalesce(1).write.parquet(s"$root/k=1/t")
+    val part = new java.io.File(s"$root/k=1/t").listFiles()
+      .find(_.getName.startsWith("part-")).get
+    val file = new java.io.File(s"$root/k=1/x.parquet")
+    Files.copy(part.toPath, file.toPath)
+    val ref = spark.read.parquet(file.getPath)
+    assert(ref.schema.fieldNames.toSeq === Seq("doc_id", "text"))
+    assert(LayoutOps.indexScan(spark, file.getPath).schema === ref.schema)
+    val rows = LayoutOps.indexRows(spark, file.getPath)
+    assert(rows.forall(_.schema == ref.schema))
+    assert(sorted(rows) === sorted(ref.collect()))
+  }
+
   test("a pre-r15 IVF-PQ pq_book without n_parts is refused with the " +
       "rebuild message") {
     val pq = families.last._2

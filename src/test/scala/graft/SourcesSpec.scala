@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.OmeOps
 import graft.schema.Fixtures
-import graft.sources.{OmeParquet, OmeStack, OmeTiff, OmeXml, TiffCodec}
+import graft.sources.{OmeParquet, OmeStack, OmeTiff, OmeXml, ParquetTable, TiffCodec}
 
 /** Source/sink layer: parquet interop, TIFF codec, pattern grammar. */
 class SourcesSpec extends SparkSpec {
@@ -31,8 +31,11 @@ class SourcesSpec extends SparkSpec {
 
   test("O10+O6: write/read round-trip under a foreign column name + footer tags") {
     val dir = "/tmp/graft_test_rt"
-    OmeParquet.write(Fixtures.mixedCorpus(spark), dir, columnName = "image",
-      fileMetadata = Map("k" -> "v"))
+    val tags = Map("k" -> "v", "Plate.ID" -> "P-01")
+    // one job: the tags ride the data write
+    val (_, jobs) = jobsDuring(OmeParquet.write(Fixtures.mixedCorpus(spark),
+      dir, columnName = "image", fileMetadata = tags))
+    assert(jobs.size === 1, s"write ran ${jobs.size} jobs")
     val back = OmeParquet.read(spark, dir)
     assert(OmeOps.describe(back).exceptAll(
       OmeOps.describe(Fixtures.mixedCorpus(spark))).count() === 0)
@@ -42,13 +45,85 @@ class SourcesSpec extends SparkSpec {
     assert(footer("ome.arrow.type") === "ome.arrow")
     assert(footer("ome.arrow.version") === graft.schema.OmeSchema.Version)
     assert(footer("k") === "v")
+    // in EVERY part file's footer, beside Spark's own keys, key case kept
+    val parts = ParquetTable.dataFiles(spark, dir).toSeq
+    assert(parts.size >= 2, s"want a multi-file write, got ${parts.size}")
+    for (p <- parts) {
+      val kv = p.keyValues
+      assert(kv.get("ome.arrow.type") === Some("ome.arrow"), p.path)
+      assert(tags.forall { case (k, v) => kv.get(k) === Some(v) }, p.path)
+      assert(p.sparkSchema.nonEmpty, p.path)
+    }
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath.getName).toSeq
     assert(files.filterNot(n => n.startsWith("part-") || n.startsWith(".") ||
       n == "_SUCCESS").isEmpty, s"unexpected files: $files")
+    assert(!files.exists(_.contains("kvstamp")), s"stray files: $files")
     assert(OmeParquet.read(spark, dir).count() === 16)
+  }
+
+  test("O6: a Spark-written read plans with no job and round-trips " +
+      "the schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ome_rt").toString
+    val df = Fixtures.mixedCorpus(spark)
+    OmeParquet.write(df, dir)
+    val (back, jobs) = jobsDuring(OmeParquet.read(spark, dir))
+    assert(jobs.isEmpty, s"read planned with ${jobs.size} jobs")
+    // the footer's schema is the one inference finds (all nullable)
+    assert(back.schema === spark.read.parquet(dir).schema)
+    assert(back.exceptAll(df).count() === 0 && df.exceptAll(back).count() === 0)
+    // a round trip of what a read returns keeps its schema
+    val again = java.nio.file.Files.createTempDirectory("graft_ome_rt2").toString
+    OmeParquet.write(back, again)
+    assert(OmeParquet.read(spark, again).schema === back.schema)
+    // a single part file under a `k=v` directory is no partitioned table
+    val file = ParquetTable.dataFiles(spark, dir).next().path
+    val nested = new java.io.File(s"$dir/k=1/x.parquet")
+    nested.getParentFile.mkdirs()
+    java.nio.file.Files.copy(new java.io.File(file.toUri).toPath, nested.toPath)
+    val (one, oneJobs) = jobsDuring(OmeParquet.read(spark, nested.getPath))
+    assert(oneJobs.isEmpty && one.schema === back.schema)
+  }
+
+  test("O6: files with no Spark row metadata read through inference, " +
+      "with the footer path's rows and schema") {
+    val scrambled = getClass.getResource("/scrambled_order.parquet").getPath
+    for (f <- Seq(fixturePath, scrambled)) {
+      assert(ParquetTable.dataFiles(spark, f).next().sparkSchema.isEmpty, f)
+      val (df, jobs) = jobsDuring(OmeParquet.read(spark, f))
+      assert(jobs.nonEmpty, s"$f: no inference job")
+      // a Spark-written copy reads by footer, to the same rows and schema
+      val dir = java.nio.file.Files.createTempDirectory("graft_ome_fb").toString
+      OmeParquet.write(df, dir)
+      val (copy, copyJobs) = jobsDuring(OmeParquet.read(spark, dir))
+      assert(copyJobs.isEmpty, f)
+      assert(copy.schema === df.schema, f)
+      assert(copy.collect().toSeq === df.collect().toSeq, f)
+    }
+  }
+
+  test("O6: a footer-schema read refuses as an inferred one: missing " +
+      "or non-OME column, no OME column, missing path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ome_ref").toString
+    Fixtures.conftestDf(spark).withColumn("n", lit(1))
+      .write.mode("overwrite").parquet(dir)
+    val missing = intercept[IllegalArgumentException](
+      OmeParquet.read(spark, dir, column = Some("nope")))
+    assert(missing.getMessage.contains("Column 'nope' not found"))
+    val notOme = intercept[IllegalArgumentException](
+      OmeParquet.read(spark, dir, column = Some("n")))
+    assert(notOme.getMessage.contains("Column 'n' in") &&
+      notOme.getMessage.contains("is not an OME-Arrow struct"))
+    val none = java.nio.file.Files.createTempDirectory("graft_ome_none").toString
+    spark.range(2).write.mode("overwrite").parquet(none)
+    val undetected = intercept[IllegalArgumentException](
+      OmeParquet.read(spark, none))
+    assert(undetected.getMessage.contains("No OME-Arrow struct column detected"))
+    val gone = intercept[org.apache.spark.sql.AnalysisException](
+      OmeParquet.read(spark, s"$none/absent"))
+    assert(gone.getCondition === "PATH_NOT_FOUND")
   }
 
   test("TiffCodec: encode -> decode round-trips pixels exactly") {
