@@ -516,7 +516,7 @@ object BloscCodec {
     frame
   }
 
-  private def zlibDeflate(data: Array[Byte]): Array[Byte] = ZlibUtil.deflate(data)
+  private def zlibDeflate(data: Array[Byte]): Array[Byte] = Codecs.deflate(data)
 
   /** Real LZ4 block compression (lz4-java ships in Spark's jars; its
     * block output is exactly the public LZ4 block format our decoder

@@ -201,7 +201,7 @@ object OmeZarr {
   }
 
   // zlib-wrapped, numcodecs zlib compatible
-  private def zlibCompress(data: Array[Byte]): Array[Byte] = ZlibUtil.deflate(data)
+  private def zlibCompress(data: Array[Byte]): Array[Byte] = Codecs.deflate(data)
 
   private def zlibDecompress(data: Array[Byte], expect: Int): Array[Byte] = {
     val cap = boundedCap(expect)

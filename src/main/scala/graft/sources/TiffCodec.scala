@@ -848,5 +848,5 @@ object TiffCodec {
     out.toByteArray
   }
 
-  private def deflateBytes(data: Array[Byte]): Array[Byte] = ZlibUtil.deflate(data)
+  private def deflateBytes(data: Array[Byte]): Array[Byte] = Codecs.deflate(data)
 }
