@@ -2866,7 +2866,7 @@ chunks AS (
 
     // LZMA TIFF decode (compression 34925): the fixture's strip is a
     // real liblzma XZ stream (generated by python stdlib lzma), decoded
-    // by the pure-JVM XzLzma implementation — closed-form pixel oracle
+    // by xz-java with its CRC64 check verified — closed-form pixel oracle
     ("ome_tiff_lzma", (s: SparkSession, _: String) =>
       planeStatsRows(graft.sources.OmeTiff.read(s,
         "/root/repo/src/test/resources/lzma/gray16_lzma.tif"))

@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.util.zip.Inflater
-
 /**
- * Self-contained Blosc-1 chunk codec (decode + encode), JDK-only.
+ * Self-contained Blosc-1 chunk codec (decode + encode).
  *
  * Real-world OME-Zarr overwhelmingly uses Blosc (the reference writes it
  * by default through numcodecs / zarr v3, export.py:265–289), so reads
@@ -26,11 +24,11 @@ import java.util.zip.Inflater
  *     streams, zlib/zstd/snappy never split) so the ambiguous
  *     wrong-policy-parses case cannot arise for conformant frames.
  *
- * Codecs: lz4 (hand-rolled block decode per the public LZ4 block spec),
- * blosclz (hand-rolled decode per c-blosc's public FastLZ-derived
- * format — c-blosc's own default codec, so third-party NGFF stores
- * need it), zlib (JDK Inflater), zstd (zstd-jni, bundled with Spark)
- * and snappy (snappy-java, likewise bundled) — together covering every
+ * Codecs: lz4 (lz4-java), zstd (zstd-jni) and snappy (snappy-java),
+ * all bundled with Spark; zlib (the shared JDK inflate in [[Codecs]]);
+ * blosclz (hand-written decode per c-blosc's public FastLZ-derived
+ * format, which no shipped jar implements — c-blosc's own default
+ * codec, so third-party NGFF stores need it) — together covering every
  * codec the reference's numcodecs path emits (export.py:265–289; its
  * default is zstd) plus c-blosc's writer default.
  *
@@ -138,7 +136,7 @@ object BloscCodec {
       if (cb == neblock) {
         System.arraycopy(frame, off, out, s * neblock, neblock)
       } else codec match {
-        case 1 => lz4Decompress(frame, off, cb, out, s * neblock, neblock)
+        case 1 => lz4Decode(frame, off, cb, out, s * neblock, neblock)
         case 3 => zlibInflate(frame, off, cb, out, s * neblock, neblock)
         case 2 => snappyUncompress(frame, off, cb, out, s * neblock, neblock)
         case 4 => zstdDecompress(frame, off, cb, out, s * neblock, neblock)
@@ -150,45 +148,6 @@ object BloscCodec {
       s += 1
     }
     out
-  }
-
-  /** LZ4 block format decode (public spec): sequences of
-    * [token][literals][2-byte LE match offset][match], 255-continued
-    * lengths, min-match 4; the last sequence is literals-only. */
-  private[graft] def lz4Decompress(src: Array[Byte], srcOff: Int, srcLen: Int,
-      dst: Array[Byte], dstOff: Int, dstLen: Int): Unit = {
-    var s = srcOff
-    val end = srcOff + srcLen
-    var d = dstOff
-    val dEnd = dstOff + dstLen
-    while (s < end) {
-      val token = src(s) & 0xff; s += 1
-      // literals
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var b = 0xff
-        while (b == 0xff) { b = src(s) & 0xff; s += 1; litLen += b }
-      }
-      require(s + litLen <= end && d + litLen <= dEnd, "LZ4: literal overrun")
-      System.arraycopy(src, s, dst, d, litLen)
-      s += litLen; d += litLen
-      if (s < end) { // last sequence carries no match
-        val offset = (src(s) & 0xff) | ((src(s + 1) & 0xff) << 8)
-        s += 2
-        require(offset > 0 && d - offset >= dstOff, "LZ4: bad match offset")
-        var matchLen = token & 0xf
-        if (matchLen == 15) {
-          var b = 0xff
-          while (b == 0xff) { b = src(s) & 0xff; s += 1; matchLen += b }
-        }
-        matchLen += 4
-        require(d + matchLen <= dEnd, "LZ4: match overrun")
-        var i = 0 // byte-at-a-time: offsets < matchLen overlap by design
-        while (i < matchLen) { dst(d + i) = dst(d + i - offset); i += 1 }
-        d += matchLen
-      }
-    }
-    require(d == dEnd, s"LZ4: decoded ${d - dstOff} bytes, expected $dstLen")
   }
 
   /**
@@ -326,26 +285,24 @@ object BloscCodec {
       s"Blosc: snappy stream decoded $n bytes, expected $dstLen")
   }
 
+  // lz4-java's safe decoder: bounds-checked, and it refuses a block that
+  // breaks the spec's end-of-block rule (a last sequence with a match)
+  private def lz4Decode(src: Array[Byte], off: Int, len: Int,
+      dst: Array[Byte], dstOff: Int, dstLen: Int): Unit = {
+    val n = net.jpountz.lz4.LZ4Factory.fastestJavaInstance().safeDecompressor()
+      .decompress(src, off, len, dst, dstOff, dstLen)
+    require(n == dstLen, s"Blosc: lz4 stream decoded $n bytes, expected $dstLen")
+  }
+
+  // a stream holding MORE than dstLen means the split guess cut a larger
+  // stream in half; the bounded inflate refuses it so the caller flips
+  // the candidate
   private def zlibInflate(src: Array[Byte], off: Int, len: Int,
       dst: Array[Byte], dstOff: Int, dstLen: Int): Unit = {
-    val inf = new Inflater(false)
-    inf.setInput(src, off, len)
-    var done = 0
-    while (done < dstLen && !inf.finished()) {
-      val n = inf.inflate(dst, dstOff + done, dstLen - done)
-      if (n == 0 && inf.needsInput())
-        throw new IllegalArgumentException("Blosc: truncated zlib stream")
-      done += n
-    }
-    // a stream holding MORE than dstLen means the split guess cut a
-    // larger stream in half — reject so the caller flips the candidate
-    val over = !inf.finished() && {
-      val probe = new Array[Byte](1)
-      inf.inflate(probe) > 0
-    }
-    inf.end()
-    require(done == dstLen && !over,
-      s"Blosc: zlib stream size mismatch (got $done of $dstLen, over=$over)")
+    val plain = Codecs.inflate(src, off, len, dstLen)
+    require(plain.length == dstLen,
+      s"Blosc: zlib stream decoded ${plain.length} bytes, expected $dstLen")
+    System.arraycopy(plain, 0, dst, dstOff, dstLen)
   }
 
   // --- shuffles --------------------------------------------------------

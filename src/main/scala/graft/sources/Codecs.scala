@@ -1,14 +1,14 @@
 package graft.sources
 
 import java.io.{ByteArrayInputStream, IOException}
-import java.util.zip.Deflater
+import java.util.zip.{DataFormatException, Deflater, Inflater}
 
 import org.tukaani.xz.{LZMAInputStream, XZInputStream}
 
 /** The codecs the TIFF, Zarr and Blosc readers and writers share, one
-  * path each: zlib deflate (JDK) and XZ / LZMA-alone decode (xz-java,
-  * shipped in Spark's jars). Every decoder takes the caller's output
-  * bound and refuses a stream that holds more. */
+  * path each: zlib deflate and inflate (JDK) and XZ / LZMA-alone decode
+  * (xz-java, shipped in Spark's jars). Every decoder takes the caller's
+  * output bound and refuses a stream that holds more. */
 private[graft] object Codecs {
   def deflate(data: Array[Byte], level: Int = 6): Array[Byte] = {
     val d = new Deflater(level, false)
@@ -18,6 +18,32 @@ private[graft] object Codecs {
     while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
     d.end()
     out.toByteArray
+  }
+
+  /** Inflate the zlib stream in `src[off, off + len)` to at most `cap`
+    * bytes. The buffer grows from a guess up to `cap`, never past it; a
+    * stream holding more than `cap` bytes, a truncated one and a corrupt
+    * one raise `IllegalArgumentException`. */
+  def inflate(src: Array[Byte], off: Int, len: Int, cap: Int): Array[Byte] = {
+    val inf = new Inflater()
+    inf.setInput(src, off, len)
+    var out = new Array[Byte](math.min(cap, math.max(64L, 4L * len)).toInt)
+    val probe = new Array[Byte](1) // at the cap: the stream's end, or more?
+    var n = 0
+    try {
+      while (!inf.finished()) {
+        if (n == out.length && n < cap)
+          out = java.util.Arrays.copyOf(out, math.min(cap, 2L * n).toInt)
+        val k = if (n < out.length) inf.inflate(out, n, out.length - n) else inf.inflate(probe)
+        require(n < out.length || k == 0, s"zlib: stream inflates past its bound of $cap bytes")
+        if (k == 0 && (inf.needsInput() || inf.needsDictionary()))
+          throw new IllegalArgumentException("zlib: truncated stream")
+        n += k
+      }
+    } catch { case e: DataFormatException =>
+      throw new IllegalArgumentException(s"zlib: ${e.getMessage}", e)
+    } finally inf.end()
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
   // liblzma's presets 0-9 use at most a 64 MiB dictionary; this limit

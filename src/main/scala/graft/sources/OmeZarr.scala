@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.sql.Timestamp
-import java.util.zip.{GZIPInputStream, GZIPOutputStream, Inflater}
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,7 +34,7 @@ import graft.schema._
  * `ometiff` source — one store's chunks encode or decode in one task,
  * and the record is one row anyway.
  *
- * Codecs: `null` (raw), `zlib` (JDK Inflater; v3 writes its `gzip`
+ * Codecs: `null` (raw), `zlib` (JDK inflate; v3 writes its `gzip`
  * codec), `zstd` (zstd-jni from Spark's own jars; raw frames, matching
  * numcodecs' v2 `{"id": "zstd"}` and the v3 `zstd` codec — the
  * REFERENCE'S DEFAULT compressor, export.py:265–289), and **Blosc**
@@ -170,13 +170,13 @@ object OmeZarr {
   private[sources] def decodeChunk(raw: Array[Byte], comp: String,
       expect: Int): Array[Byte] = comp match {
     case "null" => raw
-    case "zlib" => zlibDecompress(raw, expect)
+    case "zlib" => Codecs.inflate(raw, 0, raw.length, boundedCap(expect))
     case "gzip" => gzipDecompress(raw, expect)
     case "zstd" => zstdDecompress(raw, expect)
     case "blosc" => BloscCodec.decompress(raw, maxOut = boundedCap(expect))
     // numcodecs LZMA writes liblzma XZ streams (format 2 is the legacy
     // alone container — both sniffed); decode bounded by the chunk size
-    case "lzma" => XzLzma.decode(raw, expect)
+    case "lzma" => Codecs.lzmaDecode(raw, boundedCap(expect))
     case other => throw new IllegalArgumentException(
       s"Zarr: compressor '$other' unsupported")
   }
@@ -203,24 +203,6 @@ object OmeZarr {
   // zlib-wrapped, numcodecs zlib compatible
   private def zlibCompress(data: Array[Byte]): Array[Byte] = Codecs.deflate(data)
 
-  private def zlibDecompress(data: Array[Byte], expect: Int): Array[Byte] = {
-    val cap = boundedCap(expect)
-    val inf = new Inflater(false)
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(math.max(math.min(expect, cap), 64))
-    val tmp = new Array[Byte](16384)
-    while (!inf.finished()) {
-      val n = inf.inflate(tmp)
-      if (n == 0 && inf.needsInput())
-        throw new IllegalArgumentException("Zarr: truncated zlib chunk")
-      out.write(tmp, 0, n)
-      require(out.size() <= cap,
-        s"Zarr: zlib chunk inflates past $cap bytes (expected $expect)")
-    }
-    inf.end()
-    out.toByteArray
-  }
-
   /** Decompression cap: the exact expected size when known, else a sane
     * ceiling so unknown-size paths still can't expand unboundedly. */
   private def boundedCap(expect: Int): Int =
@@ -236,17 +218,10 @@ object OmeZarr {
   private def gzipDecompress(data: Array[Byte], expect: Int): Array[Byte] = {
     val cap = boundedCap(expect)
     val gz = new GZIPInputStream(new java.io.ByteArrayInputStream(data))
-    val out = new java.io.ByteArrayOutputStream(math.max(math.min(expect, cap), 64))
-    val tmp = new Array[Byte](16384)
-    var n = gz.read(tmp)
-    while (n >= 0) {
-      out.write(tmp, 0, n)
-      require(out.size() <= cap,
-        s"Zarr: gzip chunk inflates past $cap bytes (expected $expect)")
-      n = gz.read(tmp)
-    }
-    gz.close()
-    out.toByteArray
+    val out = try gz.readNBytes(cap + 1) finally gz.close()
+    require(out.length <= cap,
+      s"Zarr: gzip chunk inflates past $cap bytes (expected $expect)")
+    out
   }
 
   // --- write ----------------------------------------------------------

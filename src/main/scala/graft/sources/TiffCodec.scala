@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.Inflater
 
 /**
  * Minimal self-contained TIFF codec (SURVEY.md §7.5) for the subset the
@@ -23,12 +22,15 @@ import java.util.zip.Inflater
  *    (the reference accepts these via BioIO, ingest.py:293-400);
  *  - palette color (PhotometricInterpretation 3): indices expand
  *    through the 16-bit ColorMap (tag 320) into R/G/B channel planes;
+ *  - LZMA (34925, liblzma XZ as tifffile writes it) — decode only;
  *  - `ImageDescription` carried verbatim so OME-XML sizes can be parsed.
  *
- * Floating-point predictor 3 and exotic codecs (lzma/jpegxl) are out of
- * scope and raise clear errors (horizontal predictor 2 IS undone on
- * strips, per-sample for chunky RGB). Pure JVM (java.util.zip), no
- * external libraries — usable inside executor tasks.
+ * Floating-point predictor 3 and jpegxl are out of scope and raise clear
+ * errors (horizontal predictor 2 IS undone on strips, per-sample for
+ * chunky RGB). Deflate and LZMA decode through the shared [[Codecs]]
+ * (JDK zlib, xz-java from Spark's jars); LZW and PackBits are written
+ * here, since no shipped jar implements them. Pure JVM — usable inside
+ * executor tasks.
  */
 object TiffCodec {
 
@@ -321,20 +323,22 @@ object TiffCodec {
     require(predictor == 1 || predictor == 2,
       s"TIFF: predictor $predictor unsupported (none/horizontal only)")
 
-    def segment(off: Long, len: Long, what: String): Array[Byte] = {
+    // `cap` is the segment's decoded size from the page geometry (a
+    // strip's page bytes, a tile's padded tile bytes); every decoder
+    // refuses output past it, so a small strip cannot expand unboundedly
+    def segment(off: Long, len: Long, what: String, cap: Int): Array[Byte] = {
       // a plain copy would silently zero-pad past EOF -> corrupt pixels
       require(off >= 0 && len >= 0 && off + len <= buf.length,
         s"TIFF: $what [$off, ${off + len}) exceeds file size ${buf.length} (truncated file?)")
       val seg = buf.slice(off, len.toInt)
       compression match {
         case 1 => seg
-        case 5 => lzwDecode(seg)
-        case 32773 => unpackBits(seg)
+        case 5 => lzwDecode(seg, cap)
+        case 32773 => unpackBits(seg, cap)
         // lzma (34925): liblzma XZ streams from tifffile/imagecodecs, or
-        // the legacy alone container — segment size bounds the decode
-        case 34925 => XzLzma.decode(seg,
-          width * height * (bits / 8) * samplesPerPx)
-        case _ => inflate(seg)
+        // the legacy alone container
+        case 34925 => Codecs.lzmaDecode(seg, cap)
+        case _ => Codecs.inflate(seg, 0, seg.length, cap)
       }
     }
 
@@ -357,7 +361,7 @@ object TiffCodec {
       if (stripOffsets.nonEmpty) {
         val raw = new java.io.ByteArrayOutputStream()
         for (i <- stripOffsets.indices)
-          raw.write(segment(stripOffsets(i), stripCounts(i), s"strip $i"))
+          raw.write(segment(stripOffsets(i), stripCounts(i), s"strip $i", expected))
         raw.toByteArray
       } else {
         // tiled organization (tags 322-325): fixed-size tiles in row-major
@@ -385,7 +389,7 @@ object TiffCodec {
         val tileBytes = tw * th * bpp * pxStride
         for (s <- 0 until planes; ty <- 0 until down; tx <- 0 until across) {
           val i = s * across * down + ty * across + tx
-          val t = segment(tileOffsets(i), tileCounts(i), s"tile $i")
+          val t = segment(tileOffsets(i), tileCounts(i), s"tile $i", tileBytes)
           require(t.length >= tileBytes,
             s"TIFF: tile $i decoded ${t.length} bytes, expected >= $tileBytes")
           val copyW = math.min(tw, width - tx * tw) * bpp * pxStride
@@ -494,20 +498,23 @@ object TiffCodec {
   }
 
   /** PackBits (compression 32773): runs of literal or repeated bytes. */
-  private def unpackBits(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length * 2)
+  private def unpackBits(data: Array[Byte], maxOut: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(math.min(maxOut, data.length * 2))
     var i = 0
     while (i < data.length) {
       val n = data(i).toInt
       i += 1
       if (n >= 0) { // n+1 literal bytes
+        require(i + n + 1 <= data.length, "TIFF PackBits: truncated literal run")
         out.write(data, i, n + 1)
         i += n + 1
       } else if (n != -128) { // next byte repeated 1-n times
+        require(i < data.length, "TIFF PackBits: truncated repeat run")
         val b = data(i); i += 1
         var k = 1 - n
         while (k > 0) { out.write(b); k -= 1 }
       } // -128: no-op
+      require(out.size() <= maxOut, s"TIFF PackBits: output exceeds bound of $maxOut bytes")
     }
     out.toByteArray
   }
@@ -519,16 +526,18 @@ object TiffCodec {
    * reaches 511/1023/2047 (one entry before the power of two, unlike
    * GIF). Table entries are (prefix code, suffix byte) pairs;
    * strings materialize through an explicit stack, so decode is
-   * allocation-free per code.
+   * allocation-free per code. Output past `maxOut` is refused.
    */
-  private[graft] def lzwDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
+  private[graft] def lzwDecode(data: Array[Byte], maxOut: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(
+      math.min(maxOut, math.max(64L, data.length * 3L)).toInt)
     val prefix = new Array[Int](4096)
     val suffix = new Array[Byte](4096)
     val stack = new Array[Byte](4096)
     var next = 258; var width = 9
     var acc = 0; var nacc = 0; var pos = 0
-    def read(): Int = {
+    def read(): Int = { // every emission is followed by a read
+      require(out.size() <= maxOut, s"TIFF LZW: output exceeds bound of $maxOut bytes")
       while (nacc < width) {
         if (pos >= data.length) return 257 // truncated stream: treat as EOI
         acc = (acc << 8) | (data(pos) & 0xff); nacc += 8; pos += 1
@@ -639,20 +648,6 @@ object TiffCodec {
     }
     write(257)
     if (nacc > 0) out.write(((acc << (8 - nacc)) & 0xff).toInt) // flush
-    out.toByteArray
-  }
-
-  private def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(data.length * 4)
-    val tmp = new Array[Byte](16384)
-    while (!inf.finished()) {
-      val n = inf.inflate(tmp)
-      if (n == 0 && inf.needsInput()) throw new IllegalArgumentException("TIFF: truncated deflate strip")
-      out.write(tmp, 0, n)
-    }
-    inf.end()
     out.toByteArray
   }
 

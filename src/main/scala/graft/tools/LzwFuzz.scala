@@ -28,7 +28,7 @@ object LzwFuzz {
         }
       } else rnd.nextBytes(a)
       val back = graft.sources.TiffCodec.lzwDecode(
-        graft.sources.TiffCodec.lzwEncode(a))
+        graft.sources.TiffCodec.lzwEncode(a), a.length)
       if (!back.sameElements(a)) {
         failures += 1
         println(s"FAIL iter=$i n=$n structured=$structured " +

@@ -56,11 +56,33 @@ class BloscZarrSpec extends SparkSpec {
     System.arraycopy(payload, 0, frame, 16, 10)
     assert(BloscCodec.decompress(frame).toSeq === payload.toSeq)
     // LZ4 stream with a real (overlapping) match: 3 literals "abc",
-    // then a 9-byte match at offset 3 -> "abcabcabcabc"
-    val lz4 = Array[Byte](0x35, 'a', 'b', 'c', 0x03, 0x00)
-    val out = new Array[Byte](12)
-    BloscCodec.lz4Decompress(lz4, 0, lz4.length, out, 0, 12)
-    assert(new String(out, "UTF-8") === "abcabcabcabc")
+    // then a 9-byte match at offset 3, then the spec's literals-only last
+    // sequence "defgh" -> "abcabcabcabcdefgh"
+    val lz4 = Array[Byte](0x35, 'a', 'b', 'c', 0x03, 0x00, 0x50, 'd', 'e', 'f', 'g', 'h')
+    assert(new String(BloscCodec.decompress(lz4Frame(lz4, 17)), "UTF-8") ===
+      "abcabcabcabcdefgh")
+  }
+
+  /** One-block, one-stream lz4 Blosc frame (typesize 1, no shuffle). */
+  private def lz4Frame(stream: Array[Byte], nbytes: Int): Array[Byte] = {
+    val frame = new Array[Byte](24 + stream.length)
+    frame(0) = 2; frame(1) = 1; frame(2) = (1 << 5).toByte; frame(3) = 1
+    def putLe(off: Int, v: Int): Unit = for (i <- 0 until 4)
+      frame(off + i) = ((v >> (8 * i)) & 0xff).toByte
+    putLe(4, nbytes); putLe(8, nbytes); putLe(12, frame.length)
+    putLe(16, 20); putLe(20, stream.length)
+    System.arraycopy(stream, 0, frame, 24, stream.length)
+    frame
+  }
+
+  test("Blosc: an LZ4 block whose last sequence carries a match is refused") {
+    // "abc" + a 9-byte match at offset 3 and nothing after: the LZ4 spec
+    // requires the last sequence to be literals only (c-blosc never
+    // writes this), so the block is corrupt even though it could expand
+    val endsInMatch = Array[Byte](0x35, 'a', 'b', 'c', 0x03, 0x00)
+    intercept[IllegalArgumentException] {
+      BloscCodec.decompress(lz4Frame(endsInMatch, 12))
+    }
   }
 
   test("Blosc: unsupported codec ids raise a clear error") {

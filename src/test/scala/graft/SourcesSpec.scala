@@ -315,6 +315,58 @@ class SourcesSpec extends SparkSpec {
     assert(ex.getMessage.contains("predictor"))
   }
 
+  /** Classic LE TIFF of one 16-bit gray page held in ONE compressed
+    * segment: a strip, or a `tile` x `tile` tile. */
+  private def oneSegmentTiff(w: Int, h: Int, compression: Int,
+      seg: Array[Byte], tile: Option[Int] = None): Array[Byte] = {
+    val ifd = 8 + seg.length + seg.length % 2
+    val tags = Seq(256 -> w, 257 -> h, 258 -> 16, 259 -> compression) ++
+      (tile match {
+        case Some(t) => Seq(322 -> t, 323 -> t, 324 -> 8, 325 -> seg.length)
+        case None => Seq(273 -> 8, 279 -> seg.length)
+      })
+    val out = java.nio.ByteBuffer.allocate(ifd + 2 + 12 * tags.length + 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    out.put('I'.toByte).put('I'.toByte).putShort(42).putInt(ifd).put(seg)
+    out.position(ifd)
+    out.putShort(tags.length.toShort)
+    tags.foreach { case (tag, v) => // all LONG, one value inline
+      out.putShort(tag.toShort).putShort(4).putInt(1).putInt(v)
+    }
+    out.putInt(0).array()
+  }
+
+  test("TIFF: a deflate strip that inflates past its page is refused") {
+    // a 4x2 16-bit page holds 16 bytes; this strip inflates to 160
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(bos)
+    z.write(new Array[Byte](160)); z.close()
+    val ex = intercept[IllegalArgumentException] {
+      TiffCodec.decode(oneSegmentTiff(4, 2, 8, bos.toByteArray))
+    }
+    assert(ex.getMessage.contains("bound"))
+  }
+
+  test("TIFF: a tiled LZMA page whose tile is larger than the page decodes") {
+    // 20x20 page, one 32x32 tile: the tile decodes to 2,048 bytes, more
+    // than the page's 800, and only its top-left 20x20 is the page
+    val tile = new Array[Byte](32 * 32 * 2)
+    for (i <- 0 until 32 * 32) { tile(2 * i) = (i & 0xff).toByte; tile(2 * i + 1) = (i >> 8).toByte }
+    val bos = new java.io.ByteArrayOutputStream()
+    val xz = new org.tukaani.xz.XZOutputStream(bos, new org.tukaani.xz.LZMA2Options())
+    xz.write(tile); xz.close()
+    val page = TiffCodec.decode(oneSegmentTiff(20, 20, 34925, bos.toByteArray, Some(32))).head
+    assert(page.pixels.toSeq === (0 until 400).map(i => (i / 20) * 32 + i % 20))
+  }
+
+  test("TIFF: a truncated PackBits strip throws IllegalArgumentException") {
+    // a literal run of 6 with 2 bytes left; a repeat run with no byte
+    for (strip <- Seq(Array[Byte](5, 1, 2), Array[Byte](0, 1, -3)))
+      intercept[IllegalArgumentException] {
+        TiffCodec.decode(oneSegmentTiff(4, 2, 32773, strip))
+      }
+  }
+
   test("foreign v2 store with '/' dimension_separator reads") {
     val one = Fixtures.corpus4d(spark).filter(col("ome_arrow.id") === "i4d-0001")
     val root = "/tmp/graft_test_v2slash/i4d-0001.zarr"
