@@ -430,6 +430,87 @@ class SegmentSpec extends SparkSpec with ModePairs {
     spark.catalog.clearCache()
   }
 
+  /** A seeded movie of cells random-walking on an integer grid (so
+    * centroid distances tie often): each step a cell may divide into
+    * two neighbours, fuse with a cell at most two grid steps away, or
+    * miss exactly one frame's detection. Rows are `(image_id, c, z, t,
+    * label, cy, cx)`, labels unique per frame. */
+  private def eventCorpus(seed: Long): Seq[(String, Int, Int, Int, Int,
+      Double, Double)] = {
+    val rnd = new scala.util.Random(seed)
+    case class Cell(y: Int, x: Int, hidden: Boolean)
+    for {
+      (img, c) <- Seq(("ev0", 0), ("ev0", 1), ("ev1", 0))
+      row <- {
+        var cells = Vector.fill(6)(
+          Cell(rnd.nextInt(14), rnd.nextInt(14), hidden = false))
+        (0 until 7).flatMap { t =>
+          val rows = cells.filterNot(_.hidden).zipWithIndex.map {
+            case (o, i) => (img, c, 0, t, i + 1, o.y.toDouble, o.x.toDouble)
+          }
+          var next = Vector.empty[Cell]
+          var fused = Set.empty[Int]
+          for ((o, i) <- cells.zipWithIndex if !fused(i)) {
+            val (y, x) = (o.y + rnd.nextInt(3) - 1, o.x + rnd.nextInt(3) - 1)
+            val r = rnd.nextDouble()
+            val mate = cells.indices.find(j => j > i && !fused(j) &&
+              math.abs(cells(j).y - o.y) + math.abs(cells(j).x - o.x) <= 2)
+            if (r < 0.15)
+              next ++= Vector(Cell(y - 1, x, false), Cell(y + 1, x, false))
+            else if (r < 0.35 && mate.isDefined) {
+              fused += mate.get
+              val m = cells(mate.get)
+              next :+= Cell((o.y + m.y) / 2, (o.x + m.x) / 2, false)
+            } else next :+= Cell(y, x, r < 0.42 && !o.hidden)
+          }
+          cells = next.take(24)
+          rows
+        }
+      }
+    } yield row
+  }
+
+  test("trackEvents, trackLineage, trackMerges and trackAssignments " +
+      "agree per object on the edges and identities they share") {
+    import spark.implicits._
+    val objs = eventCorpus(20261019L)
+      .toDF("image_id", "c", "z", "t", "label", "cy", "cx")
+    type Key = (String, Int, Int, Int, Int)
+    def byObject(df: org.apache.spark.sql.DataFrame,
+        cols: String*): Map[Key, Seq[Any]] =
+      df.collect().map(r => (r.getAs[String]("image_id"),
+        r.getAs[Int]("c"), r.getAs[Int]("z"), r.getAs[Int]("t"),
+        r.getAs[Int]("label")) -> cols.map(r.getAs[Any])).toMap
+    val ev = byObject(OmeOps.trackEvents(objs), "parent_t", "parent_label",
+      "is_division_child", "merge_parent_t", "merge_parent_label",
+      "is_merge_child")
+    val lin = byObject(OmeOps.trackLineage(objs), "parent_t",
+      "parent_label", "is_division_child", "lineage_t", "lineage_label")
+    val mrg = byObject(OmeOps.trackMerges(objs), "merge_parent_t",
+      "merge_parent_label", "is_merge_child")
+    val asg = byObject(OmeOps.trackAssignments(objs), "track_t",
+      "track_label")
+    val n = objs.count()
+    assert(Seq(ev, lin, mrg, asg).forall(_.size == n))
+    for ((k, e) <- ev) {
+      assert(e.take(3) === lin(k).take(3), s"division parent of $k")
+      assert(e.drop(3) === mrg(k), s"merge parent of $k")
+    }
+    // a lineage without a division edge is exactly one one-to-one track
+    def lineage(k: Key, v: Seq[Any]) = (k._1, k._2, k._3, v(3), v(4))
+    val divided = lin.collect { case (k, v) if v(2) == 1 => lineage(k, v) }
+      .toSet
+    val plain = lin.filter { case (k, v) => !divided(lineage(k, v)) }
+    for ((k, v) <- plain)
+      assert(v.drop(3) === asg(k), s"lineage vs track id of $k")
+    // the corpus exercises every rule the identities cover
+    assert(divided.nonEmpty, "no division in the corpus")
+    assert(mrg.values.exists(_(2) == 1), "no merge in the corpus")
+    assert(plain.map { case (k, v) => lineage(k, v) }.toSet.size <
+      plain.size, "no multi-object lineage without a division")
+    spark.catalog.clearCache()
+  }
+
   test("trackIntensityTrends: exact least-squares slope per track; " +
       "NULL for a singleton") {
     import spark.implicits._
