@@ -19,9 +19,11 @@ import org.apache.spark.storage.StorageLevel
  * leak for a long-lived session composing many operators.
  *
  * [[scoped]] is the explicit release hook: every frame an operator
- * persists inside the block is unpersisted (non-blocking) when the block
- * exits, success or failure. Run the ACTION inside the scope so the
- * caches are live while the plan executes and released right after:
+ * persists or locally checkpoints inside the block is released
+ * (non-blocking) when the block exits, success or failure. Run the
+ * ACTION inside the scope so the caches are live while the plan
+ * executes and released right after — a released checkpoint, unlike an
+ * unpersisted cache, cannot be recomputed:
  *
  * {{{
  * val pairs = Caches.scoped {
@@ -37,29 +39,52 @@ import org.apache.spark.storage.StorageLevel
  */
 object Caches {
 
-  private val active = new ThreadLocal[ArrayBuffer[DataFrame]]
+  private val active = new ThreadLocal[ArrayBuffer[() => Unit]]
+
+  /** Register `release` with the innermost active [[scoped]] block (no-op
+    * when no scope is active — the pre-existing plan-lifetime behavior). */
+  private def register(release: () => Unit): Unit = {
+    val scope = active.get()
+    if (scope != null) scope += release
+  }
 
   /** Persist `df`, registering it with the innermost active [[scoped]]
-    * block (no-op registration when no scope is active — the pre-existing
-    * plan-lifetime behavior). Operators call this instead of
-    * `df.persist`. */
+    * block. Operators call this instead of `df.persist`. */
   private[graft] def persist(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val p = df.persist(level)
-    val scope = active.get()
-    if (scope != null) scope += p
+    register(() => p.unpersist(false))
     p
   }
 
-  /** Run `f`; unpersist every frame graft operators persisted during it. */
+  /** Eagerly checkpoint `df` into executor blocks, registering the
+    * blocks with the innermost active [[scoped]] block. Operators call
+    * this instead of `df.localCheckpoint`. */
+  private[graft] def localCheckpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint()
+    register(() => release(c))
+    c
+  }
+
+  /** Free a [[localCheckpoint]]'s blocks now. A local checkpoint keeps
+    * no file copy — its blocks ARE the checkpoint — and
+    * `Dataset.unpersist` does not reach them, so the RDD itself is
+    * unpersisted. Only for a frame nothing reads again. */
+  private[graft] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(false))
+
+  /** Run `f`; release every frame graft operators persisted or
+    * checkpointed during it. */
   def scoped[T](f: => T): T = {
     val outer = active.get()
-    val mine = ArrayBuffer.empty[DataFrame]
+    val mine = ArrayBuffer.empty[() => Unit]
     active.set(mine)
     try f
     finally {
       if (outer != null) active.set(outer) else active.remove()
-      mine.foreach(_.unpersist(false))
+      mine.foreach(_())
     }
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
  * event_type, value, props)`.
  *
  * The events parquet has stored `ts` two ways across testdata
- * generations: epoch-nanos int64 (which Spark's vectorized reader only
- * accepts as raw longs via `spark.sql.legacy.parquet.nanosAsLong`) and
+ * generations: epoch-nanos int64 (which Spark's schema inference
+ * refuses, but an explicit LongType read schema accepts) and
  * `timestamp[us]`. [[readEvents]] normalizes both to epoch-nanos longs,
  * so all downstream time arithmetic is integer — exact, timezone-free,
  * and portable to any oracle engine.
@@ -28,7 +28,7 @@ object EventOps {
     * from the footer's logical-type annotation — the AUTHORITATIVE
     * source (r7's red wave came from assuming one physical encoding;
     * a Spark-level schema probe cannot distinguish ms from µs). Plain
-    * int64 (no annotation, or NANOS under nanosAsLong) is epoch-nanos
+    * int64 (no annotation, or NANOS) is epoch-nanos
     * by the testdata convention. Footer-only: free at any corpus size. */
   private[graft] def tsUnitNanosOf(spark: SparkSession, path: String): Long = {
     import scala.jdk.CollectionConverters._
@@ -67,26 +67,17 @@ object EventOps {
   }
 
   /** Read the events table with `ts` normalized to epoch-nanos long,
-    * whatever unit the file stores. A nanos-unit file reads as LongType
-    * directly (nanosAsLong); an annotated timestamp file is re-read
-    * with a forced-long schema — the raw int64, no timezone cast
-    * anywhere — and rescaled by the footer-declared unit
-    * ([[tsUnitNanosOf]]), so ms/µs/ns generations all normalize. */
+    * whatever unit the file stores: the raw int64 is read through
+    * [[graft.streaming.EventStream.eventsSchema]] (LongType `ts` — no
+    * schema inference, no timezone cast, no session conf) and rescaled
+    * by the footer-declared unit ([[tsUnitNanosOf]]), so ms/µs/ns
+    * generations all normalize. */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
-    val df = spark.read.parquet(path)
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => df
-      case _ =>
-        val forced = org.apache.spark.sql.types.StructType(
-          df.schema.fields.map(f =>
-            if (f.name == "ts")
-              f.copy(dataType = org.apache.spark.sql.types.LongType)
-            else f))
-        spark.read.schema(forced).parquet(path)
-          .withColumn("ts", col("ts") * lit(tsUnitNanosOf(spark, path)))
-    }
+    val df = spark.read.schema(graft.streaming.EventStream.eventsSchema)
+      .parquet(path)
+    val unit = tsUnitNanosOf(spark, path)
+    if (unit == 1L) df else df.withColumn("ts", col("ts") * lit(unit))
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.schema.OmeSchema
 
@@ -1007,25 +1008,11 @@ object OmeOps {
    * the end-minus-start centroid delta, `path_len`/`max_step` the
    * summed / largest per-step Euclidean displacement (6 dp). Unlinked
    * objects are singleton tracks (n_obs = 1, zero displacement).
-   *
-   * Scale shape: candidate links come from ONE equi-join keyed by
-   * (image, c, z, adjacent-t) — objects meet only objects of the SAME
-   * stack's next frame, Σ per-frame-pair |A_t|·|A_t+1|, never a global
-   * cross join; mutual-nearest is two object-keyed rank windows; chain
-   * assembly reuses [[graft.operators.TextOps.connectedComponents]].
-   * Links are one-to-one so components ARE paths — the DRIVER
-   * union-find handles any single-run corpus (edges ≈ objects,
-   * comfortably under `driverEdgeLimit`), and beyond the cap the
-   * star-contraction fallback (r14) converges in O(log n) rounds even
-   * though a track's diameter is its LENGTH — the r13 "set maxIters ≥
-   * the longest movie" caveat is gone. String/compound
-   * object ids bridge to the CC engine's long domain via xxhash64 with
-   * a loud collision check, and every OUTPUT is hash-independent.
+   * Linking runs through the shared object linker (below).
    */
   def trackObjects(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L,
       maxGap: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val assigned = trackAssignments(objects, maxDisp, maxIters,
       driverEdgeLimit, maxGap)
     val wTrack = Window.partitionBy(col("image_id"), col("c"), col("z"),
@@ -1055,14 +1042,110 @@ object OmeOps {
         round(col("raw_max"), 6).as("max_step"))
   }
 
-  /** One aggregation job checks that the xxhash64 object keys are
-    * distinct: a collision would silently merge two objects' tracks. */
-  private def requireDistinctKeys(withKeys: DataFrame, op: String): Unit = {
+  // ---- the shared object linker -----------------------------------
+  //
+  // Every tracker below (`trackAssignments`, `trackLineage`,
+  // `trackMerges`, `trackEvents`) is the same three steps with its own
+  // edge rule in the middle: `linkedObjects` types and persists the
+  // object frame; `rankedCandidates` pairs each object with the
+  // objects `gap` frames later in ONE equi-join keyed by (image, c, z,
+  // frame) — Σ per-frame-pair |A_t|·|A_t+gap| per stack, never a
+  // global cross join — and ranks every candidate from both ends with
+  // two object-keyed windows; `componentRoots` assembles the kept
+  // edges through `TextOps.connectedComponents` and names each
+  // component by its earliest (t, label). An event rule's has-primary
+  // flag (`hasPrimary`) is one more aggregate window on a rank
+  // window's own partitioning, so it adds no exchange. Every rule pins
+  // rank 1 or 2 on each side, so an object keeps at most two edges
+  // per side and edges ≈ objects: the driver union-find handles any
+  // single-run corpus, and beyond `driverEdgeLimit` the
+  // star-contraction fallback converges in O(log n) rounds whatever a
+  // track's length. Object ids bridge to the CC engine's long domain
+  // via xxhash64 with a loud collision check, and every OUTPUT is
+  // hash-independent.
+
+  /** The typed object frame a linker reads three times (candidates,
+    * keys, output) — persisted once. */
+  private def linkedObjects(objects: DataFrame): DataFrame =
+    Caches.persist(objects.select(col("image_id"),
+      col("c").cast("int").as("c"), col("z").cast("int").as("z"),
+      col("t").cast("int").as("t"), col("label").cast("int").as("label"),
+      col("cy").cast("double").as("cy"), col("cx").cast("double").as("cx")))
+
+  private val srcKey = Seq("image_id", "c", "z", "ta", "la")
+  private val dstKey = Seq("image_id", "c", "z", "tb", "lb")
+  private val objKey = Seq("image_id", "c", "z", "t", "label")
+  private def edgeCols: Seq[Column] = (srcKey ++ Seq("tb", "lb")).map(col)
+
+  /** Every `src` object (`ta`, `la`) paired with every `dst` object
+    * (`tb`, `lb`) of its stack `gap` frames later within `maxDisp`,
+    * with `rs` its rank among the source's candidates and `rd` among
+    * the destination's (squared distance `d2`, ties by partner label). */
+  private def rankedCandidates(src: DataFrame, dst: DataFrame, gap: Int,
+      maxDisp: Double): DataFrame = {
+    val a = src.select(col("image_id"), col("c"), col("z"),
+      col("t").as("ta"), col("label").as("la"),
+      col("cy").as("ya"), col("cx").as("xa"), (col("t") + gap).as("tb"))
+    val b = dst.select(col("image_id"), col("c"), col("z"),
+      col("t").as("tb"), col("label").as("lb"),
+      col("cy").as("yb"), col("cx").as("xb"))
+    a.join(b, Seq("image_id", "c", "z", "tb"))
+      .withColumn("d2",
+        (col("yb") - col("ya")) * (col("yb") - col("ya")) +
+          (col("xb") - col("xa")) * (col("xb") - col("xa")))
+      .filter(col("d2") <= lit(maxDisp * maxDisp))
+      .withColumn("rs", row_number().over(Window.partitionBy(
+        srcKey.map(col): _*).orderBy(col("d2").asc, col("lb").asc)))
+      .withColumn("rd", row_number().over(Window.partitionBy(
+        dstKey.map(col): _*).orderBy(col("d2").asc, col("la").asc)))
+  }
+
+  /** The mutual-nearest edge every tracker keeps. */
+  private def primary: Column = col("rs") === 1 && col("rd") === 1
+
+  /** 1 when the object `key` names has a [[primary]] edge, else 0. */
+  private def hasPrimary(key: Seq[String]): Column =
+    max(when(primary, 1).otherwise(0))
+      .over(Window.partitionBy(key.map(col): _*))
+
+  /** `links`' destination objects keyed as objects, with their source
+    * as `<name>_t`/`<name>_label`. */
+  private def incoming(links: DataFrame, name: String,
+      extra: Column*): DataFrame =
+    links.select(Seq(col("image_id"), col("c"), col("z"),
+      col("tb").as("t"), col("lb").as("label"),
+      col("ta").as(s"${name}_t"), col("la").as(s"${name}_label")) ++ extra: _*)
+
+  /** `obj` with `root`, the earliest (t, label) of its component over
+    * the (ta, la) → (tb, lb) `links`. `op` names the operator in the
+    * key-collision refusal. */
+  private def componentRoots(obj: DataFrame, links: DataFrame, op: String,
+      maxIters: Int, driverEdgeLimit: Long): DataFrame = {
+    def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
+      col("c"), col("z"), t, l)
+    val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
+    // a collision would silently merge two objects' components
     val chk = withKeys.agg(count(lit(1)), count_distinct(col("nid"))).head()
     require(chk.getLong(0) == chk.getLong(1),
       s"$op: xxhash64 collision across object keys — renumber " +
         "object labels before tracking")
+    val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
+      key(col("tb"), col("lb")).as("nid_b"))
+    val cc = TextOps.connectedComponents(edges, maxIters,
+      driverEdgeLimit, idCol = "nid")
+    withKeys
+      .join(cc.select(col("nid"), col("cluster_id")), Seq("nid"), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("nid")))
+      .withColumn("root", min(struct(col("t"), col("label"))).over(
+        Window.partitionBy(col("image_id"), col("c"), col("z"),
+          col("cluster_id"))))
   }
+
+  /** The per-object columns every tracker returns, with the component
+    * root as `<name>_t`/`<name>_label` after `middle`. */
+  private def perObject(name: String, middle: Column*): Seq[Column] =
+    (objKey ++ Seq("cy", "cx")).map(col) ++ middle ++ Seq(
+      col("root.t").as(s"${name}_t"), col("root.label").as(s"${name}_label"))
 
   /**
    * The per-OBJECT half of [[trackObjects]]: every input object with
@@ -1096,37 +1179,10 @@ object OmeOps {
     require(maxGap >= 0 && maxGap <= 5,
       s"trackObjects: maxGap $maxGap not in [0,5] (each gap level adds " +
         "a candidate-join round; bridge longer dropouts upstream)")
-    import org.apache.spark.sql.expressions.Window
-    val obj = Caches.persist(objects.select(col("image_id"),
-      col("c").cast("int").as("c"), col("z").cast("int").as("z"),
-      col("t").cast("int").as("t"), col("label").cast("int").as("label"),
-      col("cy").cast("double").as("cy"), col("cx").cast("double").as("cx")))
-    val wSrc = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la")).orderBy(col("d2").asc, col("lb").asc)
-    val wDst = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb")).orderBy(col("d2").asc, col("la").asc)
-    // one mutual-nearest pass linking `src` frames to `dst` frames
-    // `gap` frames later — shared by the adjacent pass and gap rounds
-    def mutualNearest(src: DataFrame, dst: DataFrame,
-        gap: Int): DataFrame = {
-      val a = src.select(col("image_id"), col("c"), col("z"),
-        col("t").as("ta"), col("label").as("la"),
-        col("cy").as("ya"), col("cx").as("xa"),
-        (col("t") + gap).as("tb"))
-      val b = dst.select(col("image_id"), col("c"), col("z"),
-        col("t").as("tb"), col("label").as("lb"),
-        col("cy").as("yb"), col("cx").as("xb"))
-      a.join(b, Seq("image_id", "c", "z", "tb"))
-        .withColumn("d2",
-          (col("yb") - col("ya")) * (col("yb") - col("ya")) +
-            (col("xb") - col("xa")) * (col("xb") - col("xa")))
-        .filter(col("d2") <= lit(maxDisp * maxDisp))
-        .withColumn("rs", row_number().over(wSrc))
-        .withColumn("rd", row_number().over(wDst))
-        .filter(col("rs") === 1 && col("rd") === 1)
-        .select(col("image_id"), col("c"), col("z"),
-          col("ta"), col("la"), col("tb"), col("lb"))
-    }
+    val obj = linkedObjects(objects)
+    def mutualNearest(src: DataFrame, dst: DataFrame, gap: Int) =
+      rankedCandidates(src, dst, gap, maxDisp).filter(primary)
+        .select(edgeCols: _*)
     // gap rounds persist each round's NEW links exactly once, and only
     // when a LATER round's open-endpoint anti-joins will re-read them
     // (before r13 each round re-persisted the ACCUMULATED union —
@@ -1140,33 +1196,15 @@ object OmeOps {
       val fixed = fixedRounds.reduce(_.unionByName(_))
       val openSrc = obj.join(fixed.select(col("image_id"), col("c"),
         col("z"), col("ta").as("t"), col("la").as("label")),
-        Seq("image_id", "c", "z", "t", "label"), "left_anti")
+        objKey, "left_anti")
       val openDst = obj.join(fixed.select(col("image_id"), col("c"),
         col("z"), col("tb").as("t"), col("lb").as("label")),
-        Seq("image_id", "c", "z", "t", "label"), "left_anti")
+        objKey, "left_anti")
       newest = mutualNearest(openSrc, openDst, g)
     }
     val links = (fixedRounds :+ newest).reduce(_.unionByName(_))
-    def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
-      col("c"), col("z"), t, l)
-    val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    requireDistinctKeys(withKeys, "trackObjects")
-    val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
-      key(col("tb"), col("lb")).as("nid_b"))
-    val cc = TextOps.connectedComponents(edges, maxIters,
-      driverEdgeLimit, idCol = "nid")
-    val assigned = withKeys
-      .join(cc.select(col("nid"), col("cluster_id")), Seq("nid"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("nid")))
-    // track id = earliest (t, label) of the chain — computed per
-    // cluster, so the internal hash ids never surface
-    val wRoot = Window
-      .partitionBy(col("image_id"), col("c"), col("z"), col("cluster_id"))
-    assigned
-      .withColumn("root", min(struct(col("t"), col("label"))).over(wRoot))
-      .select(col("image_id"), col("c"), col("z"), col("t"), col("label"),
-        col("cy"), col("cx"),
-        col("root.t").as("track_t"), col("root.label").as("track_label"))
+    componentRoots(obj, links, "trackObjects", maxIters, driverEdgeLimit)
+      .select(perObject("track"): _*)
   }
 
   /**
@@ -1203,77 +1241,24 @@ object OmeOps {
    * parent_label, is_division_child, lineage_t, lineage_label)` —
    * `parent_*` NULL for founders, `is_division_child` 1 iff the
    * incoming edge was a division edge. EAGER like every CC caller.
-   *
-   * Scale shape: the [[trackAssignments]] candidate equi-join
-   * (Σ|A_t|·|A_t+1| per stack, never global) with ONE extra
-   * aggregate window sharing wSrc's partitioning (the has-primary
-   * flag); lineage assembly through the same CC engine (driver
-   * union-find for edges ≈ objects; the star-contraction fallback
-   * beyond the cap is diameter-independent — see [[trackAssignments]]).
    */
   def trackLineage(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackLineage: maxDisp must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val obj = Caches.persist(objects.select(col("image_id"),
-      col("c").cast("int").as("c"), col("z").cast("int").as("z"),
-      col("t").cast("int").as("t"), col("label").cast("int").as("label"),
-      col("cy").cast("double").as("cy"), col("cx").cast("double").as("cx")))
-    val a = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("ta"), col("label").as("la"),
-      col("cy").as("ya"), col("cx").as("xa"), (col("t") + 1).as("tb"))
-    val b = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("tb"), col("label").as("lb"),
-      col("cy").as("yb"), col("cx").as("xb"))
-    val wSrc = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la")).orderBy(col("d2").asc, col("lb").asc)
-    val wDst = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb")).orderBy(col("d2").asc, col("la").asc)
-    val wPar = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la"))
+    val obj = linkedObjects(objects)
     // links feed BOTH the CC edge list and the parent attachment —
     // persist once
-    val links = Caches.persist(a.join(b, Seq("image_id", "c", "z", "tb"))
-      .withColumn("d2",
-        (col("yb") - col("ya")) * (col("yb") - col("ya")) +
-          (col("xb") - col("xa")) * (col("xb") - col("xa")))
-      .filter(col("d2") <= lit(maxDisp * maxDisp))
-      .withColumn("rs", row_number().over(wSrc))
-      .withColumn("rd", row_number().over(wDst))
-      .withColumn("has_primary",
-        max(when(col("rs") === 1 && col("rd") === 1, 1).otherwise(0))
-          .over(wPar))
-      .filter((col("rs") === 1 && col("rd") === 1) ||
+    val links = Caches.persist(rankedCandidates(obj, obj, 1, maxDisp)
+      .withColumn("has_primary", hasPrimary(srcKey))
+      .filter(primary ||
         (col("rs") === 2 && col("rd") === 1 && col("has_primary") === 1))
-      .select(col("image_id"), col("c"), col("z"), col("ta"), col("la"),
-        col("tb"), col("lb"),
-        when(col("rs") === 2, 1).otherwise(0).cast("int").as("is_div")))
-    def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
-      col("c"), col("z"), t, l)
-    val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    requireDistinctKeys(withKeys, "trackLineage")
-    val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
-      key(col("tb"), col("lb")).as("nid_b"))
-    val cc = TextOps.connectedComponents(edges, maxIters,
-      driverEdgeLimit, idCol = "nid")
-    val assigned = withKeys
-      .join(cc.select(col("nid"), col("cluster_id")), Seq("nid"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("nid")))
-    val wRoot = Window
-      .partitionBy(col("image_id"), col("c"), col("z"), col("cluster_id"))
-    val parents = links.select(col("image_id"), col("c"), col("z"),
-      col("tb").as("t"), col("lb").as("label"),
-      col("ta").as("parent_t"), col("la").as("parent_label"),
-      col("is_div"))
-    assigned
-      .withColumn("root", min(struct(col("t"), col("label"))).over(wRoot))
-      .join(parents, Seq("image_id", "c", "z", "t", "label"), "left")
-      .select(col("image_id"), col("c"), col("z"), col("t"), col("label"),
-        col("cy"), col("cx"),
-        col("parent_t"), col("parent_label"),
+      .select(edgeCols :+
+        when(col("rs") === 2, 1).otherwise(0).cast("int").as("is_div"): _*))
+    componentRoots(obj, links, "trackLineage", maxIters, driverEdgeLimit)
+      .join(incoming(links, "parent", col("is_div")), objKey, "left")
+      .select(perObject("lineage", col("parent_t"), col("parent_label"),
         coalesce(col("is_div"), lit(0)).cast("int")
-          .as("is_division_child"),
-        col("root.t").as("lineage_t"), col("root.label").as("lineage_label"))
+          .as("is_division_child")): _*)
   }
 
   /**
@@ -1317,80 +1302,26 @@ object OmeOps {
    * (NULL for founders), `merge_parent_*` the second predecessor
    * (NULL unless this object absorbed a merge), `is_merge_child` 1
    * iff a merge edge targets the object. EAGER like every CC caller.
-   *
-   * Scale shape: identical to [[trackLineage]] — the per-stack
-   * adjacent-frame candidate equi-join, ONE extra aggregate window
-   * (the has-primary flag, here over the DESTINATION key, sharing
-   * wDst's partitioning), CC through the shared engine (driver
-   * union-find under the cap, diameter-independent star contraction
-   * beyond it).
    */
   def trackMerges(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackMerges: maxDisp must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val obj = Caches.persist(objects.select(col("image_id"),
-      col("c").cast("int").as("c"), col("z").cast("int").as("z"),
-      col("t").cast("int").as("t"), col("label").cast("int").as("label"),
-      col("cy").cast("double").as("cy"), col("cx").cast("double").as("cx")))
-    val a = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("ta"), col("label").as("la"),
-      col("cy").as("ya"), col("cx").as("xa"), (col("t") + 1).as("tb"))
-    val b = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("tb"), col("label").as("lb"),
-      col("cy").as("yb"), col("cx").as("xb"))
-    val wSrc = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la")).orderBy(col("d2").asc, col("lb").asc)
-    val wDst = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb")).orderBy(col("d2").asc, col("la").asc)
-    val wTgt = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb"))
-    val links = Caches.persist(a.join(b, Seq("image_id", "c", "z", "tb"))
-      .withColumn("d2",
-        (col("yb") - col("ya")) * (col("yb") - col("ya")) +
-          (col("xb") - col("xa")) * (col("xb") - col("xa")))
-      .filter(col("d2") <= lit(maxDisp * maxDisp))
-      .withColumn("rs", row_number().over(wSrc))
-      .withColumn("rd", row_number().over(wDst))
-      .withColumn("has_primary",
-        max(when(col("rs") === 1 && col("rd") === 1, 1).otherwise(0))
-          .over(wTgt))
-      .filter((col("rs") === 1 && col("rd") === 1) ||
+    val obj = linkedObjects(objects)
+    val links = Caches.persist(rankedCandidates(obj, obj, 1, maxDisp)
+      .withColumn("has_primary", hasPrimary(dstKey))
+      .filter(primary ||
         (col("rs") === 1 && col("rd") === 2 && col("has_primary") === 1))
-      .select(col("image_id"), col("c"), col("z"), col("ta"), col("la"),
-        col("tb"), col("lb"),
-        when(col("rd") === 2, 1).otherwise(0).cast("int").as("is_merge")))
-    def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
-      col("c"), col("z"), t, l)
-    val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    requireDistinctKeys(withKeys, "trackMerges")
-    val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
-      key(col("tb"), col("lb")).as("nid_b"))
-    val cc = TextOps.connectedComponents(edges, maxIters,
-      driverEdgeLimit, idCol = "nid")
-    val assigned = withKeys
-      .join(cc.select(col("nid"), col("cluster_id")), Seq("nid"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("nid")))
-    val wRoot = Window
-      .partitionBy(col("image_id"), col("c"), col("z"), col("cluster_id"))
-    val primaries = links.filter(col("is_merge") === 0)
-      .select(col("image_id"), col("c"), col("z"),
-        col("tb").as("t"), col("lb").as("label"),
-        col("ta").as("parent_t"), col("la").as("parent_label"))
-    val mergers = links.filter(col("is_merge") === 1)
-      .select(col("image_id"), col("c"), col("z"),
-        col("tb").as("t"), col("lb").as("label"),
-        col("ta").as("merge_parent_t"), col("la").as("merge_parent_label"))
-    assigned
-      .withColumn("root", min(struct(col("t"), col("label"))).over(wRoot))
-      .join(primaries, Seq("image_id", "c", "z", "t", "label"), "left")
-      .join(mergers, Seq("image_id", "c", "z", "t", "label"), "left")
-      .select(col("image_id"), col("c"), col("z"), col("t"), col("label"),
-        col("cy"), col("cx"),
-        col("parent_t"), col("parent_label"),
+      .select(edgeCols :+
+        when(col("rd") === 2, 1).otherwise(0).cast("int").as("is_merge"): _*))
+    componentRoots(obj, links, "trackMerges", maxIters, driverEdgeLimit)
+      .join(incoming(links.filter(col("is_merge") === 0), "parent"),
+        objKey, "left")
+      .join(incoming(links.filter(col("is_merge") === 1), "merge_parent"),
+        objKey, "left")
+      .select(perObject("lineage", col("parent_t"), col("parent_label"),
         col("merge_parent_t"), col("merge_parent_label"),
-        col("merge_parent_t").isNotNull.cast("int").as("is_merge_child"),
-        col("root.t").as("lineage_t"), col("root.label").as("lineage_label"))
+        col("merge_parent_t").isNotNull.cast("int")
+          .as("is_merge_child")): _*)
   }
 
   /**
@@ -1432,89 +1363,56 @@ object OmeOps {
    * parent_label, is_division_child, merge_parent_t,
    * merge_parent_label, is_merge_child, lineage_t, lineage_label)`.
    * EAGER like every CC caller.
-   *
-   * Scale shape: the same single per-stack adjacent-frame candidate
-   * equi-join as the specialists, now with BOTH one-column aggregate
-   * windows (source-has-primary sharing wSrc's partitioning,
-   * target-has-primary sharing wDst's) — the second window is the
-   * only cost over [[trackLineage]]; CC through the shared engine.
    */
   def trackEvents(objects: DataFrame, maxDisp: Double = 3.0,
       maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxDisp > 0, "trackEvents: maxDisp must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val obj = Caches.persist(objects.select(col("image_id"),
-      col("c").cast("int").as("c"), col("z").cast("int").as("z"),
-      col("t").cast("int").as("t"), col("label").cast("int").as("label"),
-      col("cy").cast("double").as("cy"), col("cx").cast("double").as("cx")))
-    val a = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("ta"), col("label").as("la"),
-      col("cy").as("ya"), col("cx").as("xa"), (col("t") + 1).as("tb"))
-    val b = obj.select(col("image_id"), col("c"), col("z"),
-      col("t").as("tb"), col("label").as("lb"),
-      col("cy").as("yb"), col("cx").as("xb"))
-    val wSrc = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la")).orderBy(col("d2").asc, col("lb").asc)
-    val wDst = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb")).orderBy(col("d2").asc, col("la").asc)
-    val wPar = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("ta"), col("la"))
-    val wTgt = Window.partitionBy(col("image_id"), col("c"), col("z"),
-      col("tb"), col("lb"))
-    val isPrimary = col("rs") === 1 && col("rd") === 1
-    val links = Caches.persist(a.join(b, Seq("image_id", "c", "z", "tb"))
-      .withColumn("d2",
-        (col("yb") - col("ya")) * (col("yb") - col("ya")) +
-          (col("xb") - col("xa")) * (col("xb") - col("xa")))
-      .filter(col("d2") <= lit(maxDisp * maxDisp))
-      .withColumn("rs", row_number().over(wSrc))
-      .withColumn("rd", row_number().over(wDst))
-      .withColumn("src_primary",
-        max(when(isPrimary, 1).otherwise(0)).over(wPar))
-      .withColumn("dst_primary",
-        max(when(isPrimary, 1).otherwise(0)).over(wTgt))
-      .filter(isPrimary ||
+    val obj = linkedObjects(objects)
+    val links = Caches.persist(rankedCandidates(obj, obj, 1, maxDisp)
+      .withColumn("src_primary", hasPrimary(srcKey))
+      .withColumn("dst_primary", hasPrimary(dstKey))
+      .filter(primary ||
         (col("rs") === 2 && col("rd") === 1 && col("src_primary") === 1) ||
         (col("rs") === 1 && col("rd") === 2 && col("dst_primary") === 1))
-      .select(col("image_id"), col("c"), col("z"), col("ta"), col("la"),
-        col("tb"), col("lb"),
+      .select(edgeCols ++ Seq(
         when(col("rs") === 2, 1).otherwise(0).cast("int").as("is_div"),
-        when(col("rd") === 2, 1).otherwise(0).cast("int").as("is_merge")))
-    def key(t: Column, l: Column): Column = xxhash64(col("image_id"),
-      col("c"), col("z"), t, l)
-    val withKeys = obj.withColumn("nid", key(col("t"), col("label")))
-    requireDistinctKeys(withKeys, "trackEvents")
-    val edges = links.select(key(col("ta"), col("la")).as("nid_a"),
-      key(col("tb"), col("lb")).as("nid_b"))
-    val cc = TextOps.connectedComponents(edges, maxIters,
-      driverEdgeLimit, idCol = "nid")
-    val assigned = withKeys
-      .join(cc.select(col("nid"), col("cluster_id")), Seq("nid"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("nid")))
-    val wRoot = Window
-      .partitionBy(col("image_id"), col("c"), col("z"), col("cluster_id"))
-    val parents = links.filter(col("is_merge") === 0)
-      .select(col("image_id"), col("c"), col("z"),
-        col("tb").as("t"), col("lb").as("label"),
-        col("ta").as("parent_t"), col("la").as("parent_label"),
-        col("is_div"))
-    val mergers = links.filter(col("is_merge") === 1)
-      .select(col("image_id"), col("c"), col("z"),
-        col("tb").as("t"), col("lb").as("label"),
-        col("ta").as("merge_parent_t"), col("la").as("merge_parent_label"))
-    assigned
-      .withColumn("root", min(struct(col("t"), col("label"))).over(wRoot))
-      .join(parents, Seq("image_id", "c", "z", "t", "label"), "left")
-      .join(mergers, Seq("image_id", "c", "z", "t", "label"), "left")
-      .select(col("image_id"), col("c"), col("z"), col("t"), col("label"),
-        col("cy"), col("cx"),
-        col("parent_t"), col("parent_label"),
+        when(col("rd") === 2, 1).otherwise(0).cast("int").as("is_merge")): _*))
+    componentRoots(obj, links, "trackEvents", maxIters, driverEdgeLimit)
+      .join(incoming(links.filter(col("is_merge") === 0), "parent",
+        col("is_div")), objKey, "left")
+      .join(incoming(links.filter(col("is_merge") === 1), "merge_parent"),
+        objKey, "left")
+      .select(perObject("lineage", col("parent_t"), col("parent_label"),
         coalesce(col("is_div"), lit(0)).cast("int")
           .as("is_division_child"),
         col("merge_parent_t"), col("merge_parent_label"),
-        col("merge_parent_t").isNotNull.cast("int").as("is_merge_child"),
-        col("root.t").as("lineage_t"), col("root.label").as("lineage_label"))
+        col("merge_parent_t").isNotNull.cast("int")
+          .as("is_merge_child")): _*)
   }
+
+  /** One row per lineage of a per-object tracker frame: `n_obs`, the
+    * caller's `counts`, `t_start`/`t_end`, and `max_cells` (the most
+    * objects in one frame). Two lineage-keyed aggregations, both with
+    * map-side partials (the per-t count nests inside the lineage key
+    * space); the frame persists for the two consumers. */
+  private def lineageRollup(tracked: DataFrame,
+      counts: Column*): DataFrame = {
+    val keys = Seq("image_id", "c", "z", "lineage_t", "lineage_label")
+    val lin = Caches.persist(tracked)
+    val maxCells = lin
+      .groupBy((keys :+ "t").map(col): _*)
+      .agg(count(lit(1)).as("nc"))
+      .groupBy(keys.map(col): _*)
+      .agg(max(col("nc")).cast("long").as("max_cells"))
+    lin.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).cast("long").as("n_obs"), counts ++ Seq(
+        min(col("t")).as("t_start"), max(col("t")).as("t_end")): _*)
+      .join(maxCells, keys)
+  }
+
+  private def nDivisions: Column =
+    coalesce(sum(col("is_division_child")), lit(0L)).cast("long")
+      .as("n_divisions")
 
   /**
    * Per-LINEAGE rollup of [[trackLineage]] — the population-dynamics
@@ -1527,34 +1425,16 @@ object OmeOps {
    * `t_start`/`t_end` span. The relation to [[trackLineage]] mirrors
    * [[trackObjects]] vs [[trackAssignments]]: per-entity stats over
    * the per-object identity frame.
-   *
-   * Scale shape: [[trackLineage]]'s cost plus two lineage-keyed
-   * aggregations (both with map-side partial aggregation; the per-t
-   * cell count nests inside the same lineage key space). The lineage
-   * frame persists for the two consumers' lifetime.
    */
   def lineageStats(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
-    val keys = Seq("image_id", "c", "z", "lineage_t", "lineage_label")
-    val lin = Caches.persist(trackLineage(objects, maxDisp, maxIters,
-      driverEdgeLimit))
-    val maxCells = lin
-      .groupBy((keys :+ "t").map(col): _*)
-      .agg(count(lit(1)).as("nc"))
-      .groupBy(keys.map(col): _*)
-      .agg(max(col("nc")).cast("long").as("max_cells"))
-    lin.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).cast("long").as("n_obs"),
-        coalesce(sum(col("is_division_child")), lit(0L)).cast("long")
-          .as("n_divisions"),
-        min(col("t")).as("t_start"), max(col("t")).as("t_end"))
-      .join(maxCells, keys)
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame =
+    lineageRollup(trackLineage(objects, maxDisp, maxIters,
+        driverEdgeLimit), nDivisions)
       .select(col("image_id"), col("c"), col("z"),
         col("lineage_t"), col("lineage_label"),
         col("n_obs"), col("n_divisions"),
         (col("n_divisions") + 1L).cast("long").as("n_terminal"),
         col("max_cells"), col("t_start"), col("t_end"))
-  }
 
   /**
    * Per-LINEAGE rollup of [[trackEvents]] — [[lineageStats]]
@@ -1571,30 +1451,15 @@ object OmeOps {
    * lineage_label, n_obs, n_founders, n_divisions, n_merges,
    * n_terminal, max_cells, t_start, t_end)`; a founder is an object
    * with neither a primary nor a merge parent.
-   *
-   * Scale shape: [[trackEvents]]' cost plus the same two lineage-keyed
-   * map-side-partial aggregations as [[lineageStats]].
    */
   def eventStats(objects: DataFrame, maxDisp: Double = 3.0,
-      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame = {
-    val keys = Seq("image_id", "c", "z", "lineage_t", "lineage_label")
-    val ev = Caches.persist(trackEvents(objects, maxDisp, maxIters,
-      driverEdgeLimit))
-    val maxCells = ev
-      .groupBy((keys :+ "t").map(col): _*)
-      .agg(count(lit(1)).as("nc"))
-      .groupBy(keys.map(col): _*)
-      .agg(max(col("nc")).cast("long").as("max_cells"))
-    ev.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).cast("long").as("n_obs"),
+      maxIters: Int = 25, driverEdgeLimit: Long = 1000000L): DataFrame =
+    lineageRollup(trackEvents(objects, maxDisp, maxIters, driverEdgeLimit),
         sum((col("parent_t").isNull && col("merge_parent_t").isNull)
           .cast("long")).cast("long").as("n_founders"),
-        coalesce(sum(col("is_division_child")), lit(0L)).cast("long")
-          .as("n_divisions"),
+        nDivisions,
         coalesce(sum(col("is_merge_child")), lit(0L)).cast("long")
-          .as("n_merges"),
-        min(col("t")).as("t_start"), max(col("t")).as("t_end"))
-      .join(maxCells, keys)
+          .as("n_merges"))
       .select(col("image_id"), col("c"), col("z"),
         col("lineage_t"), col("lineage_label"),
         col("n_obs"), col("n_founders"), col("n_divisions"),
@@ -1602,7 +1467,6 @@ object OmeOps {
         (col("n_founders") + col("n_divisions") - col("n_merges"))
           .cast("long").as("n_terminal"),
         col("max_cells"), col("t_start"), col("t_end"))
-  }
 
   /**
    * Grid tile STITCHING — assemble a stage-scan mosaic from a tile

@@ -690,7 +690,8 @@ object TextOps {
       .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
       .repartition(col("part"))
       .sortWithinPartitions(col("band_key"))
-      .localCheckpoint(true) // materialize BEFORE overwriting the source
+      // materialize BEFORE overwriting the source
+      .transform(Caches.localCheckpoint)
     // shingles FIRST (crash ordering — see scaladoc): shingles without
     // bands are invisible; bands without shingles inflate bn on retry
     sh.write.mode("append").parquet(s"$path/shingles")
@@ -701,6 +702,7 @@ object TextOps {
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("part").parquet(s"$path/bands")
+    Caches.release(merged)
     inc.unpersist(false)
     sh.unpersist(false)
   }
@@ -1668,24 +1670,15 @@ object TextOps {
     // node set fixed up front: star rounds keep every node of a
     // component, but nodes appearing ONLY in self-loop pairs drop out
     // of the edge iteration and must still be labeled (as themselves)
-    val nodes = pairsIn.select(col("doc_a").as("node"))
-      .union(pairsIn.select(col("doc_b").as("node"))).distinct()
-      .localCheckpoint()
-    var edges = pairsIn.filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a").as("a"), col("doc_b").as("b")).distinct()
-      .localCheckpoint()
+    val nodes = Caches.localCheckpoint(
+      pairsIn.select(col("doc_a").as("node"))
+        .union(pairsIn.select(col("doc_b").as("node"))).distinct())
+    var edges = Caches.localCheckpoint(pairsIn
+      .filter(col("doc_a") =!= col("doc_b"))
+      .select(col("doc_a").as("a"), col("doc_b").as("b")).distinct())
     var n = edges.count()
     var converged = n == 0L
     var rounds = 0
-    // a localCheckpoint's blocks ARE the checkpoint (LocalRDDCheckpoint
-    // keeps no file copy) — freeing a PRIOR round's blocks once its
-    // successor is materialized keeps the loop at O(1) cached rounds
-    // instead of O(rounds) (ADVICE r14); only rounds never referenced
-    // again are released, the final round stays live for the labels join
-    def checkpointRdd(df: DataFrame) =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
     while (!converged && rounds < maxIters) {
       // set equality (both sides distinct): |next| and |next \ edges|
       // decide the fixpoint — the count held and nothing in next is new.
@@ -1697,18 +1690,21 @@ object TextOps {
       // (a, b), the partitioning smallStar's distinct just established,
       // so only the (prior-round, checkpointed) edges side exchanges.
       val obs = org.apache.spark.sql.Observation(s"cc_round_$rounds")
-      val next = smallStar(largeStar(edges))
+      val next = Caches.localCheckpoint(smallStar(largeStar(edges))
         .join(edges.select(col("a"), col("b"), lit(1).as("seen")),
           Seq("a", "b"), "left")
         .observe(obs, count(lit(1)).as("n"),
           coalesce(sum(when(col("seen").isNull, 1L).otherwise(0L)),
             lit(0L)).as("fresh"))
-        .select(col("a"), col("b"))
-        .localCheckpoint()
+        .select(col("a"), col("b")))
       val m = obs.get
       val nNext = m("n").asInstanceOf[Long]
       converged = nNext == n && m("fresh").asInstanceOf[Long] == 0L
-      checkpointRdd(edges).foreach(_.unpersist(false))
+      // freeing the PRIOR round once its successor is materialized keeps
+      // the loop at O(1) checkpointed rounds instead of O(rounds)
+      // (ADVICE r14); the final round and `nodes` stay live for the
+      // labels join until the caller's scope ends
+      Caches.release(edges)
       edges = next
       n = nNext
       rounds += 1
@@ -1720,45 +1716,6 @@ object TextOps {
         Seq("node"), "left")
       .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
     (labels, converged, rounds)
-  }
-
-  /**
-   * The r6–r13 distributed strategy, retained ONLY as the measured
-   * baseline for [[ccStarLabels]] (OpsSpec pins the round-count gap on
-   * a chain graph): per round, every node takes the min label over its
-   * neighbors — correct, but needs one round per unit of component
-   * DIAMETER. Returns (labels, converged?, rounds used); does NOT
-   * raise on the cap (the measurement needs the capped round count).
-   */
-  private[graft] def ccLabelPropLabels(pairsIn: DataFrame,
-      maxIters: Int): (DataFrame, Boolean, Int) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pairs = pairsIn.select(col("doc_a"), col("doc_b"))
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst").persist(lvl)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")).localCheckpoint()
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("lbl").as("dst_lbl")),
-          "dst")
-        .groupBy(col("src")).agg(min(col("dst_lbl")).as("nbr_lbl"))
-      val next = labels
-        .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-      converged = next
-        .join(labels.select(col("node"), col("lbl").as("old")), "node")
-        .filter(col("lbl") =!= col("old")).isEmpty
-      labels = next
-      it += 1
-    }
-    edges.unpersist()
-    (labels, converged, it)
   }
 
   /** Email/phone regexes shared by the scrub and its external oracles —
@@ -2321,12 +2278,14 @@ object TextOps {
       .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
       .repartition(col("part"))
       .sortWithinPartitions(col("chunk"))
-      .localCheckpoint(true) // materialize BEFORE overwriting the source
+      // materialize BEFORE overwriting the source
+      .transform(Caches.localCheckpoint)
     sigsI.write.mode("append").parquet(s"$path/sigs")
     // per-WRITE dynamic mode (ADVICE r18) — see appendToMinhashIndex
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("part").parquet(s"$path/bands")
+    Caches.release(merged)
     inc.unpersist(false)
     sigsI.unpersist(false)
   }

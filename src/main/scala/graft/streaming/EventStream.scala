@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
 object EventStream {
 
   /** Explicit schema (streaming file sources cannot infer), with the
-    * timestamp read as a raw int64 whatever its unit — epoch-nanos
-    * files via nanosAsLong, `timestamp[us]` files as the raw µs
-    * payload. [[tsUnitNanos]] says which. */
+    * timestamp read as a raw int64 whatever its unit — a declared
+    * LongType reads the payload of an int64 `ts` column annotated with
+    * any unit, or none. [[tsUnitNanos]] says which unit. */
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType), // raw int64: epoch nanos OR epoch µs
@@ -26,16 +26,14 @@ object EventStream {
     StructField("props", StringType)))
 
   /** Nanoseconds per raw `ts` unit in the dir's events parquet. The
-    * testdata generation has stored ts both as epoch-nanos int64 (which
-    * infers as LongType under nanosAsLong) and as `timestamp[us]` (whose
-    * raw int64 the forced-long [[eventsSchema]] reads as epoch-µs); the
-    * parquet footer's logical-type annotation is the authoritative unit
-    * (ms/µs/ns all normalize — `EventOps.tsUnitNanosOf`), probed once
-    * at plan-build time, so every generation stays green. */
-  private[graft] def tsUnitNanos(spark: SparkSession, dir: String): Long = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * testdata generation has stored ts both as epoch-nanos int64 and as
+    * `timestamp[us]` (whose raw int64 the forced-long [[eventsSchema]]
+    * reads as epoch-µs); the parquet footer's logical-type annotation
+    * is the authoritative unit (ms/µs/ns all normalize —
+    * `EventOps.tsUnitNanosOf`), probed once at plan-build time, so
+    * every generation stays green. */
+  private[graft] def tsUnitNanos(spark: SparkSession, dir: String): Long =
     graft.operators.EventOps.tsUnitNanosOf(spark, s"$dir/events.parquet")
-  }
 
   /** Event-time from the raw `ts` int64: scale to nanos (integer-exact,
     * timezone-free), truncate to the µs Spark timestamps carry. */
@@ -50,7 +48,6 @@ object EventStream {
   def windowedRollup(spark: SparkSession, dir: String,
       windowLength: String = "6 hours",
       lateness: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.readStream
       .schema(eventsSchema)
       .option("pathGlobFilter", "events.parquet")
@@ -81,7 +78,6 @@ object EventStream {
   def attributionJoinStream(spark: SparkSession, dir: String,
       maxDelay: String = "2 hours",
       lateness: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.readStream
       .schema(eventsSchema)
       .option("pathGlobFilter", "events.parquet")
@@ -231,7 +227,6 @@ object EventStream {
    */
   def sessionStream(spark: SparkSession, dir: String,
       gapMinutes: Int = 30, lateness: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.readStream
       .schema(eventsSchema)
       .option("pathGlobFilter", "events.parquet")

@@ -253,6 +253,31 @@ class EventMultimodalSpec extends SparkSpec {
     }
   }
 
+  test("the event readers leave the session's parquet nanos flag as " +
+      "they found it") {
+    import spark.implicits._
+    import graft.streaming.EventStream
+    val dir = java.nio.file.Files.createTempDirectory("graft_events")
+      .toString
+    Seq((1L, 86400L * 1000000000L, 1L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getAll.get(flag)
+    spark.conf.unset(flag)
+    try for ((name, call) <- Seq[(String, () => Any)](
+        "readEvents" -> (() => EventOps.readEvents(spark, dir).collect()),
+        "tsUnitNanos" -> (() => EventStream.tsUnitNanos(spark, dir)),
+        "windowedRollup" -> (() => EventStream.windowedRollup(spark, dir)),
+        "attributionJoinStream" ->
+          (() => EventStream.attributionJoinStream(spark, dir)),
+        "sessionStream" -> (() => EventStream.sessionStream(spark, dir)))) {
+      call()
+      assert(spark.conf.getAll.get(flag).isEmpty, s"$name set $flag")
+    } finally before.foreach(spark.conf.set(flag, _))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("tsUnitNanosOf rejects a mixed-unit part directory loudly") {
     // r8 ADVICE: probing only the first part would rescale a
     // mixed-generation lake by one part's unit, silently corrupting

@@ -569,6 +569,42 @@ class TextVectorSpec extends SparkSpec {
     assert(out1 === out2)
   }
 
+  /** Min-label propagation, the distributed strategy
+    * [[TextOps.ccStarLabels]] replaced, kept as its measured baseline:
+    * per round every node takes the min label over its neighbors —
+    * correct, but one round per unit of component DIAMETER. Returns
+    * (labels, converged?, rounds used) and does NOT raise on the cap
+    * (the measurement needs the capped round count). */
+  private def ccLabelPropLabels(pairsIn: org.apache.spark.sql.DataFrame,
+      maxIters: Int): (org.apache.spark.sql.DataFrame, Boolean, Int) = {
+    val pairs = pairsIn.select(col("doc_a"), col("doc_b"))
+    val edges = pairs
+      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .toDF("src", "dst").persist()
+    var labels = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")).localCheckpoint()
+    var converged = false
+    var it = 0
+    while (!converged && it < maxIters) {
+      val nbrMin = edges
+        .join(labels.select(col("node").as("dst"), col("lbl").as("dst_lbl")),
+          "dst")
+        .groupBy(col("src")).agg(min(col("dst_lbl")).as("nbr_lbl"))
+      val next = labels
+        .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
+        .select(col("node"),
+          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
+        .localCheckpoint()
+      converged = next
+        .join(labels.select(col("node"), col("lbl").as("old")), "node")
+        .filter(col("lbl") =!= col("old")).isEmpty
+      labels = next
+      it += 1
+    }
+    edges.unpersist()
+    (labels, converged, it)
+  }
+
   test("star-contraction CC: equality vs driver union-find on adversarial " +
       "topologies, and O(log n) rounds where label propagation needs " +
       "O(diameter)") {
@@ -595,7 +631,7 @@ class TextVectorSpec extends SparkSpec {
     // converged — while the star alternation finishes in <= 8
     val pathOnly = spark.createDataFrame(chain).toDF("doc_a", "doc_b")
     val (_, starConv, starRounds) = TextOps.ccStarLabels(pathOnly, 16)
-    val (_, lpConv, lpRounds) = TextOps.ccLabelPropLabels(pathOnly, 16)
+    val (_, lpConv, lpRounds) = ccLabelPropLabels(pathOnly, 16)
     assert(starConv && starRounds <= 8,
       s"star contraction took $starRounds rounds on a ${n}-path")
     assert(!lpConv && lpRounds == 16,
@@ -1213,6 +1249,32 @@ class TextVectorSpec extends SparkSpec {
     assert(!cachesEmpty)
     spark.catalog.clearCache()
     assert(cachesEmpty)
+  }
+
+  test("index appends and a scoped star-contraction CC leave no " +
+      "persistent RDD behind, without a GC") {
+    def rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val corpus = Seq.tabulate(12)(i =>
+      (i.toLong, s"alpha beta gamma w${i % 4} x$i")).toDF("doc_id", "text")
+    val mh = java.nio.file.Files.createTempDirectory("lt_mh").toString
+    val sh = java.nio.file.Files.createTempDirectory("lt_sh").toString
+    TextOps.buildMinhashIndex(corpus.filter($"doc_id" < 6L), mh)
+    TextOps.buildSimhashIndex(corpus.filter($"doc_id" < 6L), sh)
+    spark.catalog.clearCache()
+    val before = rdds
+    TextOps.appendToMinhashIndex(corpus.filter($"doc_id" >= 6L), mh)
+    assert((rdds -- before).isEmpty, "appendToMinhashIndex")
+    TextOps.appendToSimhashIndex(corpus.filter($"doc_id" >= 6L), sh)
+    assert((rdds -- before).isEmpty, "appendToSimhashIndex")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L))
+      .toDF("doc_a", "doc_b")
+    val labelled = Caches.scoped {
+      TextOps.connectedComponents(pairs, driverEdgeLimit = 0).collect()
+    }
+    assert(labelled.length === 6)
+    assert((rdds -- before).isEmpty, "connectedComponents")
+    for (d <- Seq(mh, sh))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
   }
 
   test("lshBucket puts identical vectors in the same bucket") {
