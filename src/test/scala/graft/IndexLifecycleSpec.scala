@@ -25,7 +25,10 @@ import graft.operators.{LayoutOps, TextOps, VectorOps}
  *  - `ivfIndexStats` reports NULL ratios (never NaN) on an index with
  *    zero indexed vectors;
  *  - `semanticContaminationIndexed` at nProbe >= nCells equals the
- *    broadcast path exactly.
+ *    broadcast path exactly;
+ *  - each family's written tables (schema with `part`, and an
+ *    order-independent row digest) after build, append, replayed append
+ *    and retune, and its missing- and legacy-manifest refusal texts.
  */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -882,6 +885,316 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(LayoutOps.resolveIndexPointer(spark, root) === g4)
     LayoutOps.recoverPointerSwap(spark, root) // must not throw
     assert(LayoutOps.resolveIndexPointer(spark, root) === g4)
+    spark.catalog.clearCache()
+  }
+
+  // --- the five families' written layout and refusal texts ----------
+
+  private val pinDocs = (0L until 12L).map { i =>
+    (i, s"index layout pin ${i % 4} shared words alpha beta gamma " +
+      s"token${i % 5} tail$i")
+  }.toDF("doc_id", "text")
+
+  /** `(family, build into a generation, append, retune the root,
+    * sub-tables)` for the five index families: built over the first
+    * half of their input, the second half appended. */
+  private def pinFamilies: Seq[(String, String => Unit, String => Unit,
+      String => Unit, Seq[String])] = {
+    val (dBase, dInc) =
+      (pinDocs.filter($"doc_id" < 6), pinDocs.filter($"doc_id" >= 6))
+    val (e, e16) = (emb(48, patterns = 6), emb(48, dims = 16, patterns = 6))
+    val (eBase, eInc) = ($"vec_id" < 24, $"vec_id" >= 24)
+    Seq(
+      ("minhash", g => TextOps.buildMinhashIndex(dBase, g, nParts = 4),
+        g => TextOps.appendToMinhashIndex(dInc, g),
+        r => TextOps.rebuildMinhashIndexPointer(spark, r, bands = 6,
+          nParts = 3),
+        Seq("bands", "shingles", "params")),
+      ("simhash", g => TextOps.buildSimhashIndex(dBase, g, nParts = 4),
+        g => TextOps.appendToSimhashIndex(dInc, g),
+        r => TextOps.rebuildSimhashIndexPointer(spark, r, bands = 8,
+          nParts = 3),
+        Seq("bands", "sigs", "params")),
+      ("bm25", g => TextOps.buildBm25Index(dBase, g, nParts = 4),
+        g => TextOps.appendToBm25Index(dInc, g),
+        r => TextOps.rebuildBm25IndexPointer(spark, r, nParts = 3),
+        Seq("postings", "doclens", "params", "stats")),
+      ("ivf", g => VectorOps.buildIvfIndex(e.filter(eBase), g,
+          nCentroids = 6, iters = 1, nParts = 4),
+        g => VectorOps.appendToIvfIndex(e.filter(eInc), g),
+        r => VectorOps.rebuildIvfIndexPointer(spark, r, nParts = 3),
+        Seq("vectors", "centroids", "params")),
+      ("ivfpq", g => VectorOps.buildIvfPqIndex(e16.filter(eBase), g,
+          m = 4, kCent = 8, nCentroids = 6, nParts = 4),
+        g => VectorOps.appendToIvfPqIndex(e16.filter(eInc), g),
+        r => VectorOps.rebuildIvfPqIndexPointer(e16, r, nParts = 3),
+        Seq("codes", "centroids", "pq_book")))
+  }
+
+  /** A table's schema (the `part` partition column included), row count
+    * and order-independent row digest (the sum of each row's xxhash64). */
+  private def tableDigest(dir: String): String = {
+    val t = spark.read.parquet(dir)
+    val schema = t.schema
+      .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+    val r = t.agg(count(lit(1)),
+      sum(xxhash64(t.columns.map(col): _*).cast("decimal(38,0)"))).head()
+    s"$schema|${r.getLong(0)}|${r.getDecimal(1)}"
+  }
+
+  /** The digests the layout test pins, keyed `family/state/table`. */
+  private val pinnedLayout: Map[String, String] = Map(
+    "minhash/build/bands" ->
+      "ref_id:bigint,band:int,band_key:string,bn:int,part:int|24|-25461793049447552300",
+    "minhash/build/shingles" ->
+      "ref_id:bigint,sh:array<string>|6|-20823500930225689477",
+    "minhash/build/params" ->
+      "k:int,num_hashes:int,bands:int,n_parts:int|1|-1644631584255578651",
+    "minhash/append/bands" ->
+      "ref_id:bigint,band:int,band_key:string,bn:int,part:int|48|-5949082125627054495",
+    "minhash/append/shingles" ->
+      "ref_id:bigint,sh:array<string>|12|-28803346129074278625",
+    "minhash/append/params" ->
+      "k:int,num_hashes:int,bands:int,n_parts:int|1|-1644631584255578651",
+    "minhash/replay/bands" ->
+      "ref_id:bigint,band:int,band_key:string,bn:int,part:int|48|-5949082125627054495",
+    "minhash/replay/shingles" ->
+      "ref_id:bigint,sh:array<string>|18|-36783191327922867773",
+    "minhash/replay/params" ->
+      "k:int,num_hashes:int,bands:int,n_parts:int|1|-1644631584255578651",
+    "minhash/retune/bands" ->
+      "ref_id:bigint,band:int,band_key:string,bn:int,part:int|72|-30102845894500037480",
+    "minhash/retune/shingles" ->
+      "ref_id:bigint,sh:array<string>|12|-28803346129074278625",
+    "minhash/retune/params" ->
+      "k:int,num_hashes:int,bands:int,n_parts:int|1|6857636035164547814",
+    "simhash/build/bands" ->
+      "ref_id:bigint,sig:bigint,band:int,chunk:bigint,bn:int,part:int|24|1209812558079358539",
+    "simhash/build/sigs" ->
+      "ref_id:bigint,sig:bigint|6|-4294903766891495811",
+    "simhash/build/params" ->
+      "bands:int,n_parts:int|1|-1632806079006174488",
+    "simhash/append/bands" ->
+      "ref_id:bigint,sig:bigint,band:int,chunk:bigint,bn:int,part:int|48|78622094634812900831",
+    "simhash/append/sigs" ->
+      "ref_id:bigint,sig:bigint|12|15459443042133694574",
+    "simhash/append/params" ->
+      "bands:int,n_parts:int|1|-1632806079006174488",
+    "simhash/replay/bands" ->
+      "ref_id:bigint,sig:bigint,band:int,chunk:bigint,bn:int,part:int|48|78622094634812900831",
+    "simhash/replay/sigs" ->
+      "ref_id:bigint,sig:bigint|18|35213789851158884959",
+    "simhash/replay/params" ->
+      "bands:int,n_parts:int|1|-1632806079006174488",
+    "simhash/retune/bands" ->
+      "ref_id:bigint,sig:bigint,band:int,chunk:bigint,bn:int,part:int|96|-38308119666039210574",
+    "simhash/retune/sigs" ->
+      "ref_id:bigint,sig:bigint|12|15459443042133694574",
+    "simhash/retune/params" ->
+      "bands:int,n_parts:int|1|2726056847418893469",
+    "bm25/build/postings" ->
+      "term:string,doc_id:bigint,tf:bigint,dl:bigint,part:int|66|40265161805905983416",
+    "bm25/build/doclens" ->
+      "doc_id:bigint,dl:bigint|6|-24516504455453417963",
+    "bm25/build/params" ->
+      "n_parts:int|1|-8344648708406692296",
+    "bm25/build/stats" ->
+      "n_docs:bigint,sum_dl:bigint|1|1221553457200055756",
+    "bm25/append/postings" ->
+      "term:string,doc_id:bigint,tf:bigint,dl:bigint,part:int|132|31253876963906999715",
+    "bm25/append/doclens" ->
+      "doc_id:bigint,dl:bigint|12|-27465948005253451145",
+    "bm25/append/params" ->
+      "n_parts:int|1|-8344648708406692296",
+    "bm25/append/stats" ->
+      "n_docs:bigint,sum_dl:bigint|1|-1606634607006951749",
+    "bm25/replay/postings" ->
+      "term:string,doc_id:bigint,tf:bigint,dl:bigint,part:int|198|22242592121908016014",
+    "bm25/replay/doclens" ->
+      "doc_id:bigint,dl:bigint|18|-30415391555053484327",
+    "bm25/replay/params" ->
+      "n_parts:int|1|-8344648708406692296",
+    "bm25/replay/stats" ->
+      "n_docs:bigint,sum_dl:bigint|1|-1606634607006951749",
+    "bm25/retune/postings" ->
+      "term:string,doc_id:bigint,tf:bigint,dl:bigint,part:int|132|-22972693137665789955",
+    "bm25/retune/doclens" ->
+      "doc_id:bigint,dl:bigint|12|-27465948005253451145",
+    "bm25/retune/params" ->
+      "n_parts:int|1|6258084186791473711",
+    "bm25/retune/stats" ->
+      "n_docs:bigint,sum_dl:bigint|1|-1606634607006951749",
+    "ivf/build/vectors" ->
+      "vec_id:bigint,embedding:array<float>,cluster:bigint,part:int|24|-5782807386441984359",
+    "ivf/build/centroids" ->
+      "centroid_id:bigint,qc:array<bigint>|6|-30276747299711726203",
+    "ivf/build/params" ->
+      "n_centroids:int,iters:int,dims:int,n_parts:int|1|-641373462275248626",
+    "ivf/append/vectors" ->
+      "vec_id:bigint,embedding:array<float>,cluster:bigint,part:int|48|-17881046006857998887",
+    "ivf/append/centroids" ->
+      "centroid_id:bigint,qc:array<bigint>|6|-30276747299711726203",
+    "ivf/append/params" ->
+      "n_centroids:int,iters:int,dims:int,n_parts:int|1|-641373462275248626",
+    "ivf/replay/vectors" ->
+      "vec_id:bigint,embedding:array<float>,cluster:bigint,part:int|72|-29979284627274013415",
+    "ivf/replay/centroids" ->
+      "centroid_id:bigint,qc:array<bigint>|6|-30276747299711726203",
+    "ivf/replay/params" ->
+      "n_centroids:int,iters:int,dims:int,n_parts:int|1|-641373462275248626",
+    "ivf/retune/vectors" ->
+      "vec_id:bigint,embedding:array<float>,cluster:bigint,part:int|48|-41453268015471974492",
+    "ivf/retune/centroids" ->
+      "centroid_id:bigint,qc:array<bigint>|6|-30276747299711726203",
+    "ivf/retune/params" ->
+      "n_centroids:int,iters:int,dims:int,n_parts:int|1|-8141272749001421688",
+    "ivfpq/build/codes" ->
+      "cluster:bigint,vec_id:bigint,codes:array<int>,part:int|24|-36065952086025924044",
+    "ivfpq/build/centroids" ->
+      "centroid_id:bigint,c_emb:array<float>|6|-7456945596149361902",
+    "ivfpq/build/pq_book" ->
+      "m:int,k_cent:int,n_centroids:int,dims:int,book:array<float>,n_parts:int|1|3652819638111719881",
+    "ivfpq/append/codes" ->
+      "cluster:bigint,vec_id:bigint,codes:array<int>,part:int|48|-43267060749226215389",
+    "ivfpq/append/centroids" ->
+      "centroid_id:bigint,c_emb:array<float>|6|-7456945596149361902",
+    "ivfpq/append/pq_book" ->
+      "m:int,k_cent:int,n_centroids:int,dims:int,book:array<float>,n_parts:int|1|3652819638111719881",
+    "ivfpq/replay/codes" ->
+      "cluster:bigint,vec_id:bigint,codes:array<int>,part:int|72|-50468169412426506734",
+    "ivfpq/replay/centroids" ->
+      "centroid_id:bigint,c_emb:array<float>|6|-7456945596149361902",
+    "ivfpq/replay/pq_book" ->
+      "m:int,k_cent:int,n_centroids:int,dims:int,book:array<float>,n_parts:int|1|3652819638111719881",
+    "ivfpq/retune/codes" ->
+      "cluster:bigint,vec_id:bigint,codes:array<int>,part:int|48|20681625723619210334",
+    "ivfpq/retune/centroids" ->
+      "centroid_id:bigint,c_emb:array<float>|6|-7456945596149361902",
+    "ivfpq/retune/pq_book" -> "m:int,k_cent:int,n_centroids:int,dims:int,book:array<float>,n_parts:int|1|-701807544581076266")
+
+  test("the five index families' written tables keep their schema and " +
+      "rows after build, append, replayed append and pointer retune") {
+    val got = for ((fam, build, append, retune, tables) <- pinFamilies)
+      yield {
+        val root = java.nio.file.Files
+          .createTempDirectory(s"ilc_pin_$fam").toString
+        val gen = LayoutOps.withPointerGeneration(spark, root)(build)
+        def snap(state: String, dir: String) =
+          tables.map(t => s"$fam/$state/$t" -> tableDigest(s"$dir/$t"))
+        val built = snap("build", gen)
+        append(gen)
+        val appended = snap("append", gen)
+        append(gen) // byte-identical replay
+        val replayed = snap("replay", gen)
+        retune(root)
+        val retuned = snap("retune", LayoutOps.resolveIndexPointer(spark, root))
+        spark.catalog.clearCache()
+        built ++ appended ++ replayed ++ retuned
+      }
+    assert(got.flatten.map(_._1).toSet === pinnedLayout.keySet)
+    for ((key, digest) <- got.flatten)
+      assert(digest === pinnedLayout(key), key)
+  }
+
+  test("missing and legacy manifests are refused with their exact texts " +
+      "through query, append, rebuild and stats") {
+    val fams = pinFamilies.map(f => f._1 -> f).toMap
+    val e = emb(48, patterns = 6)
+    val e16 = emb(48, dims = 16, patterns = 6)
+    val bag = Seq((0L, Seq("alpha", "tail3"))).toDF("query_id", "terms")
+    /** A published generation of `fam` with `edit` applied to it. */
+    def damaged(fam: String)(edit: String => Unit): (String, String) = {
+      val root = java.nio.file.Files
+        .createTempDirectory(s"ilc_refuse_$fam").toString
+      val gen = LayoutOps.withPointerGeneration(spark, root)(fams(fam)._2)
+      edit(gen)
+      (root, gen)
+    }
+    def drop(table: String)(gen: String): Unit =
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$gen/$table"))
+    def rewrite(table: String, f: DataFrame => DataFrame)(gen: String): Unit = {
+      val t = f(spark.read.parquet(s"$gen/$table"))
+      spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/$table")
+    }
+    def refusal(call: => Any): String =
+      intercept[IllegalArgumentException](call).getMessage
+    def expectAll(calls: Seq[(String, () => Any)], want: String): Unit =
+      for ((entry, call) <- calls)
+        assert(refusal(call()) === want, entry)
+
+    val (mhRoot, mh) = damaged("minhash")(drop("params"))
+    expectAll(Seq(
+      "query" -> (() => TextOps.nearDupAgainstIndex(pinDocs, mh)),
+      "append" -> (() => TextOps.appendToMinhashIndex(pinDocs, mh)),
+      "rebuild" -> (() => TextOps.rebuildMinhashIndexPointer(spark, mhRoot)),
+      "stats" -> (() => TextOps.minhashIndexStats(spark, mh))),
+      s"minhash index at $mh has no params manifest — rebuild with " +
+        "buildMinhashIndex (a parameter mismatch between build and query " +
+        "silently returns zero matches, so unverifiable indexes are " +
+        "refused)")
+
+    val (shRoot, sh) = damaged("simhash")(drop("params"))
+    expectAll(Seq(
+      "query" -> (() => TextOps.simhashAgainstIndex(pinDocs, sh)),
+      "append" -> (() => TextOps.appendToSimhashIndex(pinDocs, sh)),
+      "rebuild" -> (() => TextOps.rebuildSimhashIndexPointer(spark, shRoot)),
+      "stats" -> (() => TextOps.simhashIndexStats(spark, sh))),
+      s"simhash index at $sh has no params manifest — rebuild with " +
+        "buildSimhashIndex (a banding mismatch between build and query " +
+        "silently returns zero matches, so unverifiable indexes are " +
+        "refused)")
+
+    def bm25Calls(root: String, gen: String) = Seq(
+      "query" -> (() => TextOps.bm25AgainstIndex(spark, gen, Seq("alpha"))),
+      "batch" -> (() => TextOps.bm25BatchAgainstIndex(bag, gen)),
+      "append" -> (() => TextOps.appendToBm25Index(pinDocs, gen)),
+      "rebuild" -> (() => TextOps.rebuildBm25IndexPointer(spark, root)))
+    val (bmRoot, bm) = damaged("bm25")(drop("params"))
+    expectAll(bm25Calls(bmRoot, bm),
+      s"bm25 index at $bm has no params manifest — rebuild with " +
+        "buildBm25Index")
+    val (bmlRoot, bml) = damaged("bm25")(
+      rewrite("params", _.select($"n_parts".as("parts"))))
+    expectAll(bm25Calls(bmlRoot, bml),
+      s"bm25 index at $bml has an unrecognized params layout — rebuild " +
+        "with buildBm25Index")
+    val (_, bms) = damaged("bm25")(drop("stats"))
+    expectAll(bm25Calls("", bms).take(2),
+      s"bm25 index at $bms has no stats table (a crash between an " +
+        "append's postings write and its stats refresh can drop it) — " +
+        "run refreshBm25Stats to restore it from doclens")
+
+    def ivfCalls(root: String, gen: String) = Seq(
+      "query" -> (() => VectorOps.ivfIndexTopK(e.limit(2), gen, k = 3)),
+      "append" -> (() => VectorOps.appendToIvfIndex(e.limit(2), gen)),
+      "rebuild" -> (() => VectorOps.rebuildIvfIndexPointer(spark, root)))
+    val (ivfRoot, ivf) = damaged("ivf")(drop("params"))
+    expectAll(ivfCalls(ivfRoot, ivf),
+      s"ivf index at $ivf has no params manifest — rebuild with " +
+        "buildIvfIndex")
+    val (ivflRoot, ivfl) = damaged("ivf")(rewrite("params", _.drop("n_parts")))
+    expectAll(ivfCalls(ivflRoot, ivfl),
+      s"ivf index at $ivfl predates the current layout (params carries " +
+        "no n_parts) — rebuild with buildIvfIndex")
+
+    def pqCalls(root: String, gen: String) = Seq(
+      "query" -> (() => VectorOps.ivfPqIndexTopK(e16.limit(2), gen, k = 3)),
+      "append" -> (() => VectorOps.appendToIvfPqIndex(e16.limit(2), gen)),
+      "rebuild" -> (() => VectorOps.rebuildIvfPqIndexPointer(e16, root)))
+    val (pqRoot, pq) = damaged("ivfpq")(drop("pq_book"))
+    expectAll(pqCalls(pqRoot, pq),
+      s"ivf-pq index at $pq has no codebooks — rebuild with " +
+        "buildIvfPqIndex")
+    val (pqlRoot, pql) = damaged("ivfpq")(
+      rewrite("pq_book", _.drop("n_parts")))
+    expectAll(pqCalls(pqlRoot, pql).take(2),
+      s"ivf-pq index at $pql predates the partitioned layout (pq_book " +
+        "carries no n_parts) — rebuild with buildIvfPqIndex")
+    expectAll(pqCalls(pqlRoot, pql).drop(2),
+      s"ivf-pq index at $pql predates the current layout (pq_book " +
+        "carries no n_parts) — rebuild with buildIvfPqIndex")
     spark.catalog.clearCache()
   }
 }
