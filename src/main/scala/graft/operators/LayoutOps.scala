@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -331,6 +331,102 @@ object LayoutOps {
   private def notSparkWritten(f: ParquetTable.DataFile): Nothing =
     throw new IllegalArgumentException(
       s"${f.path} carries no Spark schema: not a table Spark wrote")
+
+  // --- the persisted-index layout -------------------------------------
+
+  /**
+   * The layout all five index families write: the MinHash and SimHash
+   * `bands`, the BM25 `postings`, the IVF `vectors` and the IVF-PQ
+   * `codes`. Each row carries an int `part`, the append unit, computed
+   * from the family's key ([[hashPart]] of a band bucket or a term; the
+   * cell id mod `n_parts` for the IVF twins), so every row of one
+   * bucket, term or cell lands in one `part=` directory. The table is
+   * clustered on `part` and sorted within partitions by `key`: a reader
+   * prunes to its keys' part directories (PartitionFilters), and the
+   * pushed key predicate skips row groups inside them. `n_parts` caps
+   * the directory count, so the file listing stays bounded however many
+   * keys the index holds. Beside it sit one-file tables (a manifest, a
+   * codebook, BM25's stats) that only [[manifestRows]] and
+   * [[manifestScan]] read.
+   *
+   * `mode` is "overwrite" (a build, or a rebuild into a new generation),
+   * "append" (new files under the touched parts, nothing rewritten) or
+   * "dynamic" (rewrite only the parts the frame holds: the per-write
+   * `partitionOverwriteMode`, which takes precedence over the session
+   * conf, so maintenance on two index paths never turns the other's
+   * overwrite into a full-table one). `stage` runs between the layout
+   * and the write: an append whose plan reads the parts it overwrites
+   * materializes there first. Returns the staged frame.
+   */
+  private[graft] def writeParts(df: DataFrame, dir: String, key: String,
+      mode: String = "overwrite",
+      stage: DataFrame => DataFrame = identity): DataFrame = {
+    val laid = stage(df.repartition(col("part")).sortWithinPartitions(col(key)))
+    val w = laid.write
+    (if (mode == "dynamic")
+       w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     else w.mode(mode)).partitionBy("part").parquet(dir)
+    laid
+  }
+
+  /** The `part` of hashed keys: `xxhash64(keys) mod nParts`. */
+  private[graft] def hashPart(nParts: Int, keys: Column*): Column =
+    pmod(xxhash64(keys: _*), lit(nParts.toLong)).cast("int")
+
+  /** [[hashPart]] of one string key, evaluated on the driver by the same
+    * Catalyst `XxHash64` (seed 42), so a reader computes the part
+    * directories of its keys with no job and cannot disagree with the
+    * writer. */
+  private[graft] def hashPartOf(nParts: Int, key: String): Int = {
+    val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.unsafe.types.UTF8String.fromString(key),
+        StringType))).eval(null).asInstanceOf[Long]
+    (((h % nParts) + nParts) % nParts).toInt
+  }
+
+  /** Writes a one-row int manifest (`params`) to `dir`. */
+  private[graft] def writeManifest(spark: SparkSession, dir: String,
+      fields: (String, Int)*): Unit =
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(fields.map(_._2))),
+        StructType(fields.map(f => StructField(f._1, IntegerType, false))))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /**
+   * The one guarded reader of an index's one-file tables (`params`,
+   * `pq_book`, `centroids`, BM25's `stats`): the rows of `path/table`,
+   * read on the driver with no job ([[indexRows]]). A parameter
+   * mismatch between build and query can return wrong or no answers
+   * silently, so an index whose table is missing or empty is refused
+   * with `"<family> index at <path> has no <absent>"`, and one whose
+   * first row lacks any of `fields` (a layout that predates them) with
+   * `"<family> index at <path> " + legacy(<missing fields, /-joined>)`.
+   */
+  private[graft] def manifestRows(spark: SparkSession, path: String,
+      table: String, family: String, absent: String,
+      fields: Seq[String] = Nil,
+      legacy: String => String = identity): Array[Row] = {
+    val rows = guarded(path, family, absent)(indexRows(spark, s"$path/$table"))
+    if (rows.isEmpty) refuseIndex(path, family, s"has no $absent")
+    val missing = fields.filterNot(rows.head.schema.fieldNames.contains)
+    if (missing.nonEmpty) refuseIndex(path, family, legacy(missing.mkString("/")))
+    rows
+  }
+
+  /** [[manifestRows]]' guard on a one-file table read as a scan (a
+    * codebook joined in the plan rather than collected). */
+  private[graft] def manifestScan(spark: SparkSession, path: String,
+      table: String, family: String, absent: String): DataFrame =
+    guarded(path, family, absent)(indexScan(spark, s"$path/$table"))
+
+  private def guarded[A](path: String, family: String, absent: String)(
+      read: => A): A =
+    try read
+    catch { case e: Throwable => refuseIndex(path, family, s"has no $absent", e) }
+
+  private def refuseIndex(path: String, family: String, what: String,
+      cause: Throwable = null): Nothing =
+    throw new IllegalArgumentException(s"$family index at $path $what", cause)
 
   // --- pointer-publish index lifecycle --------------------------------
 

@@ -490,20 +490,15 @@ object TextOps {
    * re-shingling and re-signing 100 TB of reference text per increment
    * is the bottleneck [[nearDupAgainst]] cannot avoid (both sides of
    * its band join are computed from raw text at call time). This
-   * operator pays the reference-side work ONCE: it writes
+   * operator pays the reference-side work ONCE, writing the shared LSH
+   * layout ([[writeLshIndex]]) with
    *
-   *  - `path/bands` — `(band, band_key, ref_id, bn)`, one row per
-   *    (doc, band), HASH-PARTITIONED into `nParts` directories by
-   *    `part = xxhash64(band_key) mod nParts` (the append unit — see
-   *    [[appendToMinhashIndex]]) and sorted within partitions by
-   *    `band_key` so parquet row-group stats support runtime/pushed
-   *    filtering; `bn` is the BUCKET SIZE (docs sharing this band
-   *    key), precomputed so query-time boilerplate-bucket caps become
-   *    a pushed parquet predicate instead of a per-query aggregation
-   *    over the index;
-   *  - `path/shingles` — `(ref_id, sh)`, the shingle sets the
-   *    verification stage intersects (fetched for matched candidates
-   *    only, never scanned for scoring);
+   *  - `path/bands` — `(ref_id, band, band_key, bn)`, the bucket key
+   *    `band_key` (md5 of a signature slice) hashed into `part`;
+   *  - `path/shingles` — `(ref_id, sh)`, the payload: the shingle sets
+   *    the verification stage intersects (fetched for matched
+   *    candidates only, never scanned for scoring) and the retune's
+   *    input;
    *  - `path/params` — a 1-row manifest `(k, num_hashes, bands,
    *    n_parts)`. Band keys are md5 of signature slices, so a
    *    k/numHashes/bands mismatch between build and query would
@@ -525,35 +520,33 @@ object TextOps {
     val rows = numHashes / bands
     require(bands * rows == numHashes, "numHashes must divide into bands")
     require(nParts >= 1, "buildMinhashIndex: nParts must be >= 1")
-    val spark = reference.sparkSession
-    graft.functions.ensureRegistered(spark)
-    val sh = Caches.persist(reference.select(
-      col("doc_id").cast("long").as("ref_id"),
+    graft.functions.ensureRegistered(reference.sparkSession)
+    writeMinhashIndex(minhashShingles(reference, k), path, k, numHashes,
+      bands, nParts)
+  }
+
+  /** The persisted `(ref_id, sh)` shingle frame of `docs`. */
+  private def minhashShingles(docs: DataFrame, k: Int): DataFrame =
+    Caches.persist(docs.select(col("doc_id").cast("long").as("ref_id"),
       shingles(col("text"), k).as("sh")))
-    val wBucket = Window.partitionBy(col("band"), col("band_key"))
+
+  /** The band rows `(ref_id, band, band_key, part)` of a shingle frame;
+    * `part` hashes the band key. */
+  private def minhashBands(sh: DataFrame, numHashes: Int, bands: Int,
+      nParts: Int): DataFrame =
     sh.select(col("ref_id"),
         posexplode(bandKeys(
           graft.functions.minhash_signature(col("sh"), numHashes),
-          bands, rows)).as(Seq("band", "band_key")))
-      .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-      .withColumn("part", bandPart(col("band_key"), nParts))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("band_key"))
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$path/bands")
-    sh.write.mode("overwrite").parquet(s"$path/shingles")
-    import spark.implicits._
-    Seq((k, numHashes, bands, nParts))
-      .toDF("k", "num_hashes", "bands", "n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-  }
+          bands, numHashes / bands)).as(Seq("band", "band_key")))
+      .withColumn("part", LayoutOps.hashPart(nParts, col("band_key")))
 
-  /** The append-unit partition of a band key: every row of one
-    * (band, band_key) bucket lands in one `part` directory, so an
-    * increment's bn maintenance touches exactly the part dirs its
-    * band keys hash to. */
-  private def bandPart(bandKey: Column, nParts: Int): Column =
-    pmod(xxhash64(bandKey), lit(nParts.toLong)).cast("int")
+  /** The MinHash index of a shingle frame, written by the build and the
+    * retune alike. */
+  private def writeMinhashIndex(sh: DataFrame, path: String, k: Int,
+      numHashes: Int, bands: Int, nParts: Int): Unit =
+    writeLshIndex(path, minhashBands(sh, numHashes, bands, nParts),
+      "band_key", sh, "shingles", "k" -> k, "num_hashes" -> numHashes,
+      "bands" -> bands, "n_parts" -> nParts)
 
   /** Manifest equality gate shared by every index CONSUMER (batch and
     * streaming): band keys are md5 of signature slices, so mismatched
@@ -573,138 +566,37 @@ object TextOps {
     * build-vs-query explanation when the manifest is absent. */
   private def minhashIndexParams(spark: SparkSession,
       path: String): (Int, Int, Int, Int) = {
-    val r =
-      try LayoutOps.indexRows(spark, s"$path/params").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"minhash index at $path has no params manifest — rebuild " +
-            "with buildMinhashIndex (a parameter mismatch between " +
-            "build and query silently returns zero matches, so " +
-            "unverifiable indexes are refused)", e)
-      }
+    val r = LayoutOps.manifestRows(spark, path, "params", "minhash",
+      "params manifest — rebuild with buildMinhashIndex (a parameter " +
+        "mismatch between build and query silently returns zero " +
+        "matches, so unverifiable indexes are refused)").head
     (r.getAs[Int]("k"), r.getAs[Int]("num_hashes"),
       r.getAs[Int]("bands"), r.getAs[Int]("n_parts"))
   }
 
   /**
-   * INCREMENTAL index append — the missing half of the
-   * [[buildMinhashIndex]] story (VERDICT r13 #2): the daily pipeline
-   * the index exists for deduplicates increment N against the
-   * accumulated corpus, then adds increment N's KEEPERS to the index
-   * for increment N+1. A full rebuild would re-shingle and re-sign
-   * the whole corpus — exactly the re-pay-the-corpus cost the index
-   * exists to avoid. This appends `newDocs` touching ONLY the
-   * partition directories their band keys hash to:
-   *
-   *  1. shingle + sign the increment (increment-sized work);
-   *  2. the touched `part` set = the increment's distinct band-key
-   *     hashes (≤ n_parts values, a bounded driver collect);
-   *  3. re-read ONLY those partitions of `path/bands` (partition
-   *     pruning — the scan never opens an untouched directory),
-   *     recompute `bn` over base ∪ increment rows (bucket sizes
-   *     change only where the increment collides, and recomputing an
-   *     unchanged bucket's bn is idempotent), and overwrite JUST the
-   *     touched partitions (dynamic partition overwrite);
-   *  4. append the increment's shingle sets to `path/shingles`.
-   *
-   * Parameters come FROM the manifest — an append cannot mismatch the
-   * build. The merged rows are `localCheckpoint`ed before the write
-   * (the plan reads the same files the overwrite replaces; the
-   * checkpoint materializes first, so the swap is safe), and rebuilt
-   * bn values keep the pushed-predicate contract: after any number of
-   * appends the index is row-identical to a fresh
-   * [[buildMinhashIndex]] over the full corpus (spec-pinned, and the
-   * `near_dup_index_incr` registry row hash-certifies build+append ==
-   * full-rebuild query results).
-   *
-   * Scale shape: cost is increment-sized + the touched partitions'
-   * re-read/re-write — never corpus-sized (a 100 TB index at the
-   * default 64 parts re-writes at most 1/64th per touched part; size
-   * `nParts` at build time so one part ≈ one comfortable task). Not
-   * concurrency-safe: serialize appends per index path (a lost-update
-   * race between two writers is a pipeline-orchestration concern, not
-   * an engine one). Repeated appends accumulate one file set per
-   * increment; both layouts compact in place with
-   * [[LayoutOps.compactParquet]] (partition-aware, crash-restoring)
-   * when file counts grow.
-   *
-   * Crash semantics (ADVICE r14): the two writes cannot be atomic
-   * together, so they are ORDERED for the safer failure — shingles
-   * first, bands second. A crash between them leaves docs with
-   * shingle sets but no band rows: such docs are merely INVISIBLE
-   * (they never surface as candidates — no bn inflation, no wrong
-   * scores), and the natural retry completes the append; the bands
-   * half re-derives bn over base ∪ increment where base does NOT yet
-   * contain the increment, so the recomputed sizes stay exact. The
-   * retry's second shingle write duplicates the orphaned shingle rows
-   * byte-identically; [[nearDupAgainstIndex]] deduplicates its output
-   * (candidate-bounded — never corpus-scale) so a recovered index
-   * answers queries identically to a fresh rebuild. The inverse order
-   * would instead inflate bn silently on replay — band rows present,
-   * shingles absent, docs never self-flagging.
+   * INCREMENTAL index append: the daily pipeline the index exists for
+   * deduplicates increment N against the accumulated corpus, then adds
+   * increment N's KEEPERS to the index for increment N+1 without
+   * re-shingling or re-signing the corpus. The increment is shingled
+   * and signed (increment-sized work) with the parameters FROM the
+   * manifest, so an append cannot mismatch the build, and joins the
+   * index through the shared LSH append ([[appendLshBands]]: only the
+   * touched part directories are re-read and rewritten, bn stays
+   * exact, replays converge). Crash order: `shingles` first, `bands`
+   * second; the retry's duplicate shingle rows are byte-identical, and
+   * [[nearDupAgainstIndex]] deduplicates its output (candidate-bounded,
+   * never corpus-scale), so a recovered index answers queries
+   * identically to a fresh rebuild. The `near_dup_index_incr` registry
+   * row hash-certifies build+append == full-rebuild query results.
    */
   def appendToMinhashIndex(newDocs: DataFrame, path: String): Unit = {
     val spark = newDocs.sparkSession
     val (k, numHashes, bands, nParts) = minhashIndexParams(spark, path)
-    val rows = numHashes / bands
     graft.functions.ensureRegistered(spark)
-    val sh = Caches.persist(newDocs.select(
-      col("doc_id").cast("long").as("ref_id"),
-      shingles(col("text"), k).as("sh")))
-    val inc = Caches.persist(sh.select(col("ref_id"),
-        posexplode(bandKeys(
-          graft.functions.minhash_signature(col("sh"), numHashes),
-          bands, rows)).as(Seq("band", "band_key")))
-      .withColumn("part", bandPart(col("band_key"), nParts)))
-    val touched = inc.select(col("part")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by n_parts
-    val base = touchedBandPartitions(spark, path, touched)
-    val wBucket = Window.partitionBy(col("band"), col("band_key"))
-    // idempotency for EVERY crash window (ADVICE r15): a crash during
-    // the bands dynamic-overwrite commit (per-partition renames are
-    // not atomic) can leave some touched partitions already holding
-    // the increment's rows; without this the retry's union would
-    // double-count them, inflating bn and duplicating band rows. A
-    // valid index has exactly one row per (ref_id, band), so the
-    // dedup is a no-op on clean appends. It dedups via a lag flag
-    // over the bn window's OWN partitioning (`part` is a function of
-    // band_key, so within a (band, band_key) partition equal ref_ids
-    // ARE the duplicates, and the ref_id ordering makes them
-    // adjacent): one exchange serves both the dedup and the bn count
-    // — the r16 dropDuplicates on all four columns hash-partitioned
-    // differently and cost the append a second increment+touched-
-    // partition-sized shuffle (ADVICE r16).
-    val wOrd = wBucket.orderBy(col("ref_id").asc)
-    val merged = inc
-      .unionByName(base.select(col("ref_id"), col("band"),
-        col("band_key"), col("part"))) // stale bn dropped, recomputed
-      // null-exact dedup (ADVICE r17): <=> treats equal-NULL ref_ids as
-      // duplicates like the dropDuplicates this replaced, and the
-      // row_number guard (same window spec → same Window exec, no new
-      // exchange) keeps a NULL group's first row
-      .withColumn("dupb",
-        row_number().over(wOrd) > 1 &&
-          (col("ref_id") <=> lag(col("ref_id"), 1).over(wOrd)))
-      .filter(!col("dupb"))
-      .drop("dupb")
-      .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("band_key"))
-      // materialize BEFORE overwriting the source
-      .transform(Caches.localCheckpoint)
-    // shingles FIRST (crash ordering — see scaladoc): shingles without
-    // bands are invisible; bands without shingles inflate bn on retry
-    sh.write.mode("append").parquet(s"$path/shingles")
-    // per-WRITE dynamic mode (ADVICE r18): the option takes precedence
-    // over the session conf, so two maintenance threads on DIFFERENT
-    // index paths can no longer interleave a conf restore into each
-    // other's overwrite and turn it full-table
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(s"$path/bands")
-    Caches.release(merged)
-    inc.unpersist(false)
-    sh.unpersist(false)
+    val sh = minhashShingles(newDocs, k)
+    appendLshBands(path, minhashBands(sh, numHashes, bands, nParts),
+      "band_key", sh, "shingles")
   }
 
   /**
@@ -714,11 +606,11 @@ object TextOps {
    * LSH banding can be re-parameterized (`numHashes`/`bands` — the
    * recall/precision dial [[lshRecallReport]] tunes; also `nParts`
    * re-fanning) WITHOUT re-reading or re-tokenizing the corpus text.
-   * Signatures recompute from the LIVE generation's stored shingles,
-   * bands rewrite in the pristine build layout with bn recomputed
-   * globally, shingles rewrite deduplicated by ref_id (purging rows a
-   * crashed-and-replayed append duplicated — the repair half), and
-   * the whole new index publishes as a NEW generation of the pointer
+   * The LIVE generation's stored shingles, deduplicated by ref_id
+   * (purging rows a crashed-and-replayed append duplicated — the repair
+   * half), go through the build's own writer, so bands rewrite in the
+   * pristine build layout with bn recomputed globally, and the whole
+   * new index publishes as a NEW generation of the pointer
    * root `root` ([[graft.operators.LayoutOps.withPointerGeneration]];
    * every crash window leaves the old generation serving). Readers
    * resolve the live generation via
@@ -739,30 +631,114 @@ object TextOps {
     val nh = if (numHashes > 0) numHashes else bNh
     val bb = if (bands > 0) bands else bBands
     val np = if (nParts > 0) nParts else bNp
-    val rows = nh / bb
-    require(bb * rows == nh,
+    require(nh % bb == 0,
       "rebuildMinhashIndexPointer: numHashes must divide into bands")
     graft.functions.ensureRegistered(spark)
     val sh = Caches.persist(LayoutOps.indexScan(spark, s"$live/shingles")
       .dropDuplicates(Seq("ref_id")))
-    val wBucket = Window.partitionBy(col("band"), col("band_key"))
-    try LayoutOps.withPointerGeneration(spark, root) { gen =>
-      sh.select(col("ref_id"),
-          posexplode(bandKeys(
-            graft.functions.minhash_signature(col("sh"), nh),
-            bb, rows)).as(Seq("band", "band_key")))
-        .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-        .withColumn("part", bandPart(col("band_key"), np))
-        .repartition(col("part"))
-        .sortWithinPartitions(col("band_key"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$gen/bands")
-      sh.write.mode("overwrite").parquet(s"$gen/shingles")
-      import spark.implicits._
-      Seq((k, nh, bb, np))
-        .toDF("k", "num_hashes", "bands", "n_parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
-    } finally sh.unpersist(false)
+    try LayoutOps.withPointerGeneration(spark, root)(gen =>
+      writeMinhashIndex(sh, gen, k, nh, bb, np))
+    finally sh.unpersist(false)
+  }
+
+  // --- the LSH band layout, shared by the MinHash and SimHash indexes ---
+  //
+  // Both write `path/bands`: one row per (doc, band) carrying the band
+  // number, the family's bucket key (`band_key` / `chunk`), the doc's
+  // `ref_id` and `bn`, the bucket size, precomputed so a query-time
+  // boilerplate-bucket cap is a pushed parquet predicate rather than a
+  // per-query aggregation. `part` hashes the whole bucket, so an
+  // increment's bn maintenance touches exactly the part directories its
+  // buckets hash to ([[LayoutOps.writeParts]] has the layout). Beside
+  // the bands sits the per-doc payload table the band rows are derived
+  // from (`shingles` / `sigs`, the retune's complete input) and the
+  // `params` manifest.
+
+  /** `banded` with its bucket sizes `bn`. */
+  private def withBucketSizes(banded: DataFrame, key: String): DataFrame =
+    banded.withColumn("bn", count(lit(1)).over(
+      Window.partitionBy(col("band"), col(key))).cast("int"))
+
+  /** Writes an LSH index into `path` from its payload frame `payload`
+    * `(ref_id, ...)` and that frame's band rows `banded` (carrying
+    * `part`): the bands in the part layout, the payload table `table`,
+    * then the manifest. */
+  private def writeLshIndex(path: String, banded: DataFrame, key: String,
+      payload: DataFrame, table: String, manifest: (String, Int)*): Unit = {
+    LayoutOps.writeParts(withBucketSizes(banded, key), s"$path/bands", key)
+    payload.write.mode("overwrite").parquet(s"$path/$table")
+    LayoutOps.writeManifest(payload.sparkSession, s"$path/params",
+      manifest: _*)
+  }
+
+  /**
+   * The incremental append of both LSH indexes, touching only the part
+   * directories the increment's band rows `inc` hash to:
+   *
+   *  1. the touched `part` set is the increment's distinct parts (at
+   *     most n_parts values, a bounded driver collect);
+   *  2. only those partitions of `path/bands` are re-read (partition
+   *     pruning: the scan never opens an untouched directory), `bn` is
+   *     recomputed over base ∪ increment (bucket sizes change only where
+   *     the increment collides, and recomputing an unchanged bucket's bn
+   *     is idempotent), and just the touched partitions are overwritten
+   *     (dynamic partition overwrite);
+   *  3. the increment's `payload` rows are appended to `path/table`.
+   *
+   * The merged rows are local-checkpointed before the write: the plan
+   * reads the files the overwrite replaces, so it materializes first.
+   * After any number of appends the index is row-identical to a fresh
+   * build over the full corpus (spec-pinned).
+   *
+   * Crash order: the two writes cannot be atomic together, so the
+   * payload goes first. A crash between them leaves docs with a payload
+   * but no band rows, which are merely invisible (they never surface as
+   * candidates: no bn inflation, no wrong scores), and the natural retry
+   * completes the append. The inverse order would inflate bn silently on
+   * replay, and band rows whose payload is missing would vanish at the
+   * next retune. The replay's duplicate payload rows are byte-identical:
+   * the queries' candidate-bounded dedup absorbs them and the retune's
+   * ref_id dedup purges them. A crash inside the dynamic overwrite's
+   * commit (per-partition renames are not atomic) can leave some touched
+   * partitions already holding the increment's rows; a valid index has
+   * exactly one row per (ref_id, band), so a lag flag over the bn
+   * window's own partitioning drops them (`part` is a function of the
+   * bucket, so within one bucket equal ref_ids ARE the duplicates, and
+   * the ref_id order makes them adjacent): one exchange serves both the
+   * dedup and the bn count, and the dedup is a no-op on clean appends.
+   * The `<=>` test treats equal NULL ref_ids as duplicates, and the
+   * row_number guard keeps a NULL group's first row.
+   *
+   * Cost is increment-sized plus the touched partitions' re-read and
+   * re-write, never corpus-sized (size `nParts` at build time so one
+   * part is one comfortable task). Not concurrency-safe: serialize
+   * appends per index path. Repeated appends accumulate one file set per
+   * increment; [[LayoutOps.compactParquet]] compacts in place.
+   */
+  private def appendLshBands(path: String, inc: DataFrame, key: String,
+      payload: DataFrame, table: String): Unit = {
+    val spark = inc.sparkSession
+    val incP = Caches.persist(inc)
+    val touched = incP.select(col("part")).distinct()
+      .collect().map(_.getInt(0)).sorted // bounded by n_parts
+    val base = touchedBandPartitions(spark, path, touched)
+      .select(incP.columns.map(col): _*) // stale bn dropped, recomputed
+    val wOrd = Window.partitionBy(col("band"), col(key))
+      .orderBy(col("ref_id").asc)
+    val deduped = incP.unionByName(base)
+      .withColumn("dupb", row_number().over(wOrd) > 1 &&
+        (col("ref_id") <=> lag(col("ref_id"), 1).over(wOrd)))
+      .filter(!col("dupb"))
+      .drop("dupb")
+    val merged = LayoutOps.writeParts(withBucketSizes(deduped, key),
+      s"$path/bands", key, mode = "dynamic", stage = { laid =>
+        val m = Caches.localCheckpoint(laid) // BEFORE overwriting the source
+        payload.write.mode("append").parquet(s"$path/$table")
+        m
+      })
+    Caches.release(merged)
+    incP.unpersist(false)
+    payload.unpersist(false)
   }
 
   /** The append's base read, factored out so PlanSpec can pin that an
@@ -2076,27 +2052,35 @@ object TextOps {
     require(bands >= 2 && bands <= 32 && 64 % bands == 0,
       s"$op: bands must divide 64 (2/4/8/16/32), got $bands")
 
-  /** The append-unit partition of a simhash bucket: every row of one
-    * (band, chunk) bucket lands in one `part` directory — the
-    * [[buildMinhashIndex]] `bandPart` discipline on integer chunks. */
-  private def simhashPart(band: Column, chunk: Column,
-      nParts: Int): Column =
-    pmod(xxhash64(band, chunk), lit(nParts.toLong)).cast("int")
+  /** The persisted `(ref_id, sig)` signature frame of `docs`. */
+  private def simhashSigs(docs: DataFrame): DataFrame =
+    Caches.persist(docs.select(col("doc_id").cast("long").as("ref_id"),
+      graft.functions.simhash64(tokens(col("text"))).as("sig")))
+
+  /** The band rows `(ref_id, sig, band, chunk, part)` of a signature
+    * frame; `part` hashes the (band, chunk) bucket. */
+  private def simhashBands(sigs: DataFrame, bands: Int,
+      nParts: Int): DataFrame =
+    sigs.select(col("ref_id"), col("sig"),
+        posexplode(simhashChunks(col("sig"), bands)).as(Seq("band", "chunk")))
+      .withColumn("part", LayoutOps.hashPart(nParts, col("band"), col("chunk")))
+
+  /** The SimHash index of a signature frame, written by the build and
+    * the retune alike. */
+  private def writeSimhashIndex(sigs: DataFrame, path: String, bands: Int,
+      nParts: Int): Unit =
+    writeLshIndex(path, simhashBands(sigs, bands, nParts), "chunk", sigs,
+      "sigs", "bands" -> bands, "n_parts" -> nParts)
 
   /** Manifest reader for the SimHash index consumers, read on the
-    * driver with no Spark job ([[LayoutOps.indexRows]]); raises with a
-    * build recipe when absent (the unverifiable-index refusal). */
+    * driver with no Spark job; raises with a build recipe when absent
+    * (the unverifiable-index refusal). */
   private def simhashIndexParams(spark: SparkSession,
       path: String): (Int, Int) = {
-    val r =
-      try LayoutOps.indexRows(spark, s"$path/params").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"simhash index at $path has no params manifest — rebuild " +
-            "with buildSimhashIndex (a banding mismatch between build " +
-            "and query silently returns zero matches, so unverifiable " +
-            "indexes are refused)", e)
-      }
+    val r = LayoutOps.manifestRows(spark, path, "params", "simhash",
+      "params manifest — rebuild with buildSimhashIndex (a banding " +
+        "mismatch between build and query silently returns zero " +
+        "matches, so unverifiable indexes are refused)").head
     (r.getAs[Int]("bands"), r.getAs[Int]("n_parts"))
   }
 
@@ -2109,22 +2093,19 @@ object TextOps {
    * 64-bit simhashes — the cheaper signal (8 bytes per doc vs a
    * shingle set) that large crawls screen with first.
    *
-   * Layout (the minhash index's discipline, one-for-one):
-   *  - `path/bands` — `(band, chunk, ref_id, sig, bn)`, one row per
-   *    (doc, band), hash-partitioned into `n_parts` directories by
-   *    `part = xxhash64(band, chunk) mod n_parts` and sorted within
-   *    partitions by `chunk` (row-group skips for the bucket join);
-   *    `bn` is the precomputed bucket size so query-time
-   *    boilerplate-bucket caps are a PUSHED parquet predicate; `sig`
-   *    is the full 8-byte signature DENORMALIZED onto the band row
+   * It writes the shared LSH layout ([[writeLshIndex]]) with
+   *  - `path/bands` — `(ref_id, sig, band, chunk, bn)`, the bucket key
+   *    `chunk` (the band's signature slice) hashed with `band` into
+   *    `part`; `sig` is the full 8-byte signature DENORMALIZED onto
+   *    the band row
    *    (r19 — VERDICT r18 #2: +8 B/row buys Hamming verification ON
    *    the bucket-join row itself, eliminating the sigs fetch join
    *    and its candidate-sized shuffles — SCALE.md r18 measured the
    *    index-exact path shuffling 4.5× MORE than direct-exact purely
    *    from that verify join);
-   *  - `path/sigs` — `(ref_id, sig)`, the RETUNE's complete input
-   *    (re-banding needs no corpus text) and the layout's per-doc
-   *    source of truth;
+   *  - `path/sigs` — `(ref_id, sig)`, the payload: the RETUNE's
+   *    complete input (re-banding needs no corpus text) and the
+   *    layout's per-doc source of truth;
    *  - `path/params` — 1-row `(bands, n_parts)` manifest, REQUIRED
    *    equal at query/append time (chunk values depend on the band
    *    split, so a mismatch silently matches nothing — refused loudly,
@@ -2142,25 +2123,8 @@ object TextOps {
       bands: Int = 4, nParts: Int = 64): Unit = {
     requireSimhashBands(bands, "buildSimhashIndex")
     require(nParts >= 1, "buildSimhashIndex: nParts must be >= 1")
-    val spark = reference.sparkSession
-    graft.functions.ensureRegistered(spark)
-    val sigs = Caches.persist(reference.select(
-      col("doc_id").cast("long").as("ref_id"),
-      graft.functions.simhash64(tokens(col("text"))).as("sig")))
-    val wBucket = Window.partitionBy(col("band"), col("chunk"))
-    sigs.select(col("ref_id"), col("sig"),
-        posexplode(simhashChunks(col("sig"), bands))
-          .as(Seq("band", "chunk")))
-      .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-      .withColumn("part", simhashPart(col("band"), col("chunk"), nParts))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("chunk"))
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$path/bands")
-    sigs.write.mode("overwrite").parquet(s"$path/sigs")
-    import spark.implicits._
-    Seq((bands, nParts)).toDF("bands", "n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    graft.functions.ensureRegistered(reference.sparkSession)
+    writeSimhashIndex(simhashSigs(reference), path, bands, nParts)
   }
 
   /**
@@ -2233,61 +2197,26 @@ object TextOps {
         s"buildSimhashIndex) before $use")
 
   /**
-   * INCREMENTAL append for the SimHash index — the
-   * [[appendToMinhashIndex]] discipline verbatim: sign the increment
-   * (increment-sized work), collect its touched `part` set (bounded
-   * <= n_parts), re-read ONLY those partitions, recompute `bn` over
-   * base ∪ increment with the null-exact lag dedup making replays
-   * convergent, dynamic-overwrite JUST the touched directories.
-   * Writes sigs FIRST: sigs without bands are invisible (no candidate
-   * ever forms), while band rows whose docs are missing from `sigs`
-   * would silently VANISH at the next retune (sigs is the rebuild's
-   * complete input) — the crash ordering protects the
-   * no-false-negative contract across the whole lifecycle.
-   * Parameters come from the manifest. Refuses a pre-r19 legacy
-   * layout (no `sig` on band rows): mixing schemas within one bands
-   * table would make the parquet read flaky — rebuild to migrate.
-   * Not concurrency-safe: serialize maintenance per index path.
+   * INCREMENTAL append for the SimHash index: the increment is signed
+   * (increment-sized work) with the banding from the manifest and
+   * joins the index through the shared LSH append ([[appendLshBands]]).
+   * Crash order: `sigs` FIRST, `bands` second: sigs without bands are
+   * invisible (no candidate ever forms), while band rows whose docs are
+   * missing from `sigs` would silently VANISH at the next retune (sigs
+   * is the rebuild's complete input), so the order protects the
+   * no-false-negative contract across the whole lifecycle. Refuses a
+   * pre-r19 legacy layout (no `sig` on band rows): mixing schemas
+   * within one bands table would make the parquet read flaky — rebuild
+   * to migrate.
    */
   def appendToSimhashIndex(newDocs: DataFrame, path: String): Unit = {
     val spark = newDocs.sparkSession
     val (bands, np) = simhashIndexParams(spark, path)
+    requireSigBands(LayoutOps.indexScan(spark, s"$path/bands"),
+      "appendToSimhashIndex", path, "appending")
     graft.functions.ensureRegistered(spark)
-    val sigsI = Caches.persist(newDocs.select(
-      col("doc_id").cast("long").as("ref_id"),
-      graft.functions.simhash64(tokens(col("text"))).as("sig")))
-    val inc = Caches.persist(sigsI
-      .select(col("ref_id"), col("sig"),
-        posexplode(simhashChunks(col("sig"), bands))
-          .as(Seq("band", "chunk")))
-      .withColumn("part", simhashPart(col("band"), col("chunk"), np)))
-    val touched = inc.select(col("part")).distinct()
-      .collect().map(_.getInt(0)).toIndexedSeq
-    val base = touchedBandPartitions(spark, path, touched)
-    requireSigBands(base, "appendToSimhashIndex", path, "appending")
-    val wBucket = Window.partitionBy(col("band"), col("chunk"))
-    val wOrd = wBucket.orderBy(col("ref_id").asc)
-    val merged = inc
-      .unionByName(base.select(col("ref_id"), col("sig"), col("band"),
-        col("chunk"), col("part"))) // stale bn dropped, recomputed
-      .withColumn("dupb",
-        row_number().over(wOrd) > 1 &&
-          (col("ref_id") <=> lag(col("ref_id"), 1).over(wOrd)))
-      .filter(!col("dupb"))
-      .drop("dupb")
-      .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("chunk"))
-      // materialize BEFORE overwriting the source
-      .transform(Caches.localCheckpoint)
-    sigsI.write.mode("append").parquet(s"$path/sigs")
-    // per-WRITE dynamic mode (ADVICE r18) — see appendToMinhashIndex
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(s"$path/bands")
-    Caches.release(merged)
-    inc.unpersist(false)
-    sigsI.unpersist(false)
+    val sigs = simhashSigs(newDocs)
+    appendLshBands(path, simhashBands(sigs, bands, np), "chunk", sigs, "sigs")
   }
 
   /**
@@ -2297,8 +2226,8 @@ object TextOps {
    * guaranteed below hamming < bands) re-parameterizes from the LIVE
    * generation's `sigs` alone, no corpus text re-read, no signature
    * recompute. Sigs dedup by ref_id (purging crashed-and-replayed
-   * append rows — the repair half), bn recomputes globally, and the new
-   * index publishes as a NEW generation of the pointer root `root`
+   * append rows — the repair half) and go through the build's own
+   * writer, so bn recomputes globally, and the new index publishes as a NEW generation of the pointer root `root`
    * ([[graft.operators.LayoutOps.withPointerGeneration]]; every crash
    * window leaves the old generation serving). Readers resolve the
    * live generation via [[graft.operators.LayoutOps.resolveIndexPointer]]
@@ -2316,22 +2245,9 @@ object TextOps {
     graft.functions.ensureRegistered(spark)
     val sigs = Caches.persist(LayoutOps.indexScan(spark, s"$live/sigs")
       .dropDuplicates(Seq("ref_id")))
-    val wBucket = Window.partitionBy(col("band"), col("chunk"))
-    try LayoutOps.withPointerGeneration(spark, root) { gen =>
-      sigs.select(col("ref_id"), col("sig"),
-          posexplode(simhashChunks(col("sig"), bb))
-            .as(Seq("band", "chunk")))
-        .withColumn("bn", count(lit(1)).over(wBucket).cast("int"))
-        .withColumn("part", simhashPart(col("band"), col("chunk"), np))
-        .repartition(col("part"))
-        .sortWithinPartitions(col("chunk"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$gen/bands")
-      sigs.write.mode("overwrite").parquet(s"$gen/sigs")
-      import spark.implicits._
-      Seq((bb, np)).toDF("bands", "n_parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
-    } finally sigs.unpersist(false)
+    try LayoutOps.withPointerGeneration(spark, root)(gen =>
+      writeSimhashIndex(sigs, gen, bb, np))
+    finally sigs.unpersist(false)
   }
 
   /** The shared LSH bucket-balance rollup: one row per band over a
@@ -3415,18 +3331,16 @@ object TextOps {
    *  - `path/postings` — `(term, doc_id, tf, dl)`, the classic
    *    inverted lists with the document length DENORMALIZED onto each
    *    posting (dl never changes after ingest, so queries score
-   *    without a corpus-scale doc-length join), HASH-PARTITIONED into
-   *    `nParts` directories by `part = xxhash64(term) mod nParts` and
-   *    sorted within partitions by `term` — a query bag prunes to its
-   *    terms' part directories (PartitionFilters) and its pushed
-   *    `term` predicate row-group-skips inside them (spec-pinned);
+   *    without a corpus-scale doc-length join), in the shared index
+   *    layout ([[LayoutOps.writeParts]]) keyed on `term`: a query bag
+   *    prunes to its terms' part directories and its pushed `term`
+   *    predicate row-group-skips inside them (spec-pinned);
    *  - `path/doclens` — `(doc_id, dl)` for EVERY document (including
    *    token-free ones that emit no postings): the durable source of
    *    truth the corpus stats are recomputed from;
-   *  - `path/params` — the 1-row constant manifest `(n_parts)`, the
-   *    [[buildMinhashIndex]] manifest discipline (a reader guessing
-   *    the partition-unit count would silently prune to the wrong
-   *    directories);
+   *  - `path/params` — the 1-row constant manifest `(n_parts)` (a
+   *    reader guessing the partition-unit count would silently prune
+   *    to the wrong directories);
    *  - `path/stats` — `(n_docs, sum_dl)` as exact longs, REFRESHED by
    *    every append. Kept separate from the constant manifest so the
    *    one piece an append must overwrite is also the one piece that
@@ -3442,44 +3356,52 @@ object TextOps {
    *
    * Build cost: one tokenize pass, one (term, doc_id) aggregation,
    * one `part`-keyed shuffle clustering the layout — all corpus-scale
-   * work that every subsequent query now skips.
+   * work that every subsequent query now skips. The build, the append
+   * and the rebuild all write through [[writeBm25Index]].
    */
   def buildBm25Index(docs: DataFrame, path: String,
       nParts: Int = 64): Unit = {
     require(nParts >= 1, "buildBm25Index: nParts must be >= 1")
-    val spark = docs.sparkSession
+    tokenizedBm25(docs, path, nParts, "overwrite")
+  }
+
+  /** Tokenizes `docs` once and writes its doclens and postings to the
+    * index at `path` (the build, or an append with mode "append"). dl
+    * rides the explode (one small long per token row), so the
+    * per-(term, doc) rollup carries it with `first`: no corpus-scale
+    * doc-length join. */
+  private def tokenizedBm25(docs: DataFrame, path: String, nParts: Int,
+      mode: String): Unit = {
     val base = Caches.persist(docs.select(
       col("doc_id").cast("long").as("doc_id"),
       tokens(col("text")).as("toks")))
-    base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .write.mode("overwrite").parquet(s"$path/doclens")
-    bm25Postings(base, nParts)
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$path/postings")
-    import spark.implicits._
-    Seq(nParts).toDF("n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-    refreshBm25Stats(spark, path)
+    writeBm25Index(
+      base.select(col("doc_id"), size(col("toks")).cast("long").as("dl")),
+      base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+          explode(col("toks")).as("term"))
+        .groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).cast("long").as("tf"), first(col("dl")).as("dl")),
+      path, nParts, mode)
     base.unpersist(false)
   }
 
-  /** The inverted-list projection shared by build and append: dl rides
-    * the explode (one small long per token row) so the per-(term, doc)
-    * rollup carries it with `first` — no corpus-scale doc-length join. */
-  private def bm25Postings(base: DataFrame, nParts: Int): DataFrame =
-    base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("tf"), first(col("dl")).as("dl"))
-      .withColumn("part", termPart(col("term"), nParts))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("term"))
-
-  /** The append-unit partition of a term: every posting of one term
-    * lands in one `part` directory, so a query bag reads exactly the
-    * directories its terms hash to. */
-  private def termPart(term: Column, nParts: Int): Column =
-    pmod(xxhash64(term), lit(nParts.toLong)).cast("int")
+  /** Writes the BM25 index at `path` from its doclens `(doc_id, dl)` and
+    * postings `(term, doc_id, tf, dl)`, in crash order: doclens, the
+    * postings in the part layout (`part` hashes the term, so a query
+    * bag reads exactly the directories its terms hash to), the manifest
+    * (unless appending), then the stats refreshed from doclens. The
+    * build, the append and the rebuild all write through here. */
+  private def writeBm25Index(doclens: DataFrame, postings: DataFrame,
+      path: String, nParts: Int, mode: String): Unit = {
+    doclens.write.mode(mode).parquet(s"$path/doclens")
+    LayoutOps.writeParts(
+      postings.withColumn("part", LayoutOps.hashPart(nParts, col("term"))),
+      s"$path/postings", "term", mode)
+    if (mode != "append")
+      LayoutOps.writeManifest(doclens.sparkSession, s"$path/params",
+        "n_parts" -> nParts)
+    refreshBm25Stats(doclens.sparkSession, path)
+  }
 
   /** Recompute `path/stats` (n_docs, sum_dl) from `path/doclens` and
     * overwrite it — the repair/refresh half of the index's crash
@@ -3498,34 +3420,21 @@ object TextOps {
   /** Constant-manifest reader (n_parts), read on the driver with no
     * Spark job ([[LayoutOps.indexRows]]); raises with a rebuild message
     * when absent — the [[buildMinhashIndex]] refuse-unverifiable rule. */
-  private def bm25IndexNParts(spark: SparkSession, path: String): Int = {
-    val row =
-      try LayoutOps.indexRows(spark, s"$path/params").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"bm25 index at $path has no params manifest — rebuild with " +
-            "buildBm25Index", e)
-      }
-    if (!row.schema.fieldNames.contains("n_parts"))
-      throw new IllegalArgumentException(
-        s"bm25 index at $path has an unrecognized params layout — " +
-          "rebuild with buildBm25Index")
-    row.getAs[Int]("n_parts")
-  }
+  private def bm25IndexNParts(spark: SparkSession, path: String): Int =
+    LayoutOps.manifestRows(spark, path, "params", "bm25",
+      "params manifest — rebuild with buildBm25Index", Seq("n_parts"),
+      _ => "has an unrecognized params layout — rebuild with buildBm25Index")
+      .head.getAs[Int]("n_parts")
 
   /** Corpus-stats reader, read on the driver with no Spark job
     * ([[LayoutOps.indexRows]]); stats are refreshable, so the absence
     * error names the repair tool rather than demanding a rebuild. */
   private def bm25IndexStats(spark: SparkSession,
       path: String): (Long, Long) = {
-    val row =
-      try LayoutOps.indexRows(spark, s"$path/stats").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"bm25 index at $path has no stats table (a crash between an " +
-            "append's postings write and its stats refresh can drop it) " +
-            "— run refreshBm25Stats to restore it from doclens", e)
-      }
+    val row = LayoutOps.manifestRows(spark, path, "stats", "bm25",
+      "stats table (a crash between an append's postings write and its " +
+        "stats refresh can drop it) — run refreshBm25Stats to restore " +
+        "it from doclens").head
     (row.getAs[Long]("n_docs"), row.getAs[Long]("sum_dl"))
   }
 
@@ -3542,7 +3451,8 @@ object TextOps {
    * every window. A crash after `doclens` leaves docs invisible (no
    * postings — never surfaced, stats untouched); a crash after
    * `postings` leaves the increment searchable under slightly-stale
-   * (N, avgdl) until the retry completes. The natural retry replays
+   * (N, avgdl) until the retry completes (the order is
+   * [[writeBm25Index]]'s). The natural retry replays
    * the whole append: duplicate doclens rows converge inside
    * [[refreshBm25Stats]]'s doc_id dedup, and duplicate posting rows
    * (byte-identical) are absorbed by [[bm25AgainstIndex]]'s
@@ -3564,18 +3474,8 @@ object TextOps {
    * [[rebuildBm25IndexPointer]] after removing the stale rows upstream).
    */
   def appendToBm25Index(newDocs: DataFrame, path: String): Unit = {
-    val spark = newDocs.sparkSession
-    val nParts = bm25IndexNParts(spark, path)
-    val base = Caches.persist(newDocs.select(
-      col("doc_id").cast("long").as("doc_id"),
-      tokens(col("text")).as("toks")))
-    base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .write.mode("append").parquet(s"$path/doclens")
-    bm25Postings(base, nParts)
-      .write.mode("append").partitionBy("part")
-      .parquet(s"$path/postings")
-    refreshBm25Stats(spark, path)
-    base.unpersist(false)
+    tokenizedBm25(newDocs, path,
+      bm25IndexNParts(newDocs.sparkSession, path), "append")
   }
 
   /**
@@ -3586,7 +3486,7 @@ object TextOps {
    * the LIVE generation's postings and doclens are read back,
    * deduplicated ((term, doc_id) / doc_id — purging any byte-identical
    * rows that crashed-and-replayed at-least-once appends accumulated),
-   * rewritten in the pristine build layout (term-hash part directories,
+   * rewritten through the build's own writer in the pristine layout (term-hash part directories,
    * term-sorted row groups — appends degrade row-group tightness; this
    * restores it, and `nParts > 0` re-sizes the directory fan-out for a
    * corpus that outgrew its build-time value), stats recomputed, and
@@ -3607,23 +3507,13 @@ object TextOps {
       nParts: Int = 0): Unit = {
     val live = LayoutOps.resolveIndexPointer(spark, root)
     val np = if (nParts > 0) nParts else bm25IndexNParts(spark, live)
-    LayoutOps.withPointerGeneration(spark, root) { gen =>
+    LayoutOps.withPointerGeneration(spark, root)(gen => writeBm25Index(
       LayoutOps.indexScan(spark, s"$live/doclens")
-        .dropDuplicates(Seq("doc_id"))
-        .write.mode("overwrite").parquet(s"$gen/doclens")
+        .dropDuplicates(Seq("doc_id")),
       LayoutOps.indexScan(spark, s"$live/postings")
         .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .dropDuplicates(Seq("term", "doc_id"))
-        .withColumn("part", termPart(col("term"), np))
-        .repartition(col("part"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$gen/postings")
-      import spark.implicits._
-      Seq(np).toDF("n_parts")
-        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
-      refreshBm25Stats(spark, gen)
-    }
+        .dropDuplicates(Seq("term", "doc_id")),
+      gen, np, "overwrite"))
   }
 
   /** The query-time posting read, factored out so PlanSpec can pin
@@ -3639,14 +3529,7 @@ object TextOps {
     * once, through its one term-keyed exchange. */
   private[graft] def termPostings(spark: SparkSession, path: String,
       terms: Seq[String], nParts: Int): DataFrame = {
-    val parts = terms.map { t =>
-      val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(t),
-          org.apache.spark.sql.types.StringType)))
-        .eval(null).asInstanceOf[Long]
-      (((h % nParts) + nParts) % nParts).toInt
-    }.distinct.sorted
+    val parts = terms.map(LayoutOps.hashPartOf(nParts, _)).distinct.sorted
     LayoutOps.indexScan(spark, s"$path/postings")
       .filter(col("part").isin(parts.map(Integer.valueOf): _*) &&
         col("term").isin(terms: _*))
@@ -3695,25 +3578,9 @@ object TextOps {
     val nParts = bm25IndexNParts(spark, path)
     val (nDocs, sumDl) = bm25IndexStats(spark, path)
     require(nDocs > 0, s"bm25 index at $path is empty")
-    val avgdl = sumDl.toDouble / nDocs
-    // one term-keyed exchange serves both windows: the lag flag drops
-    // replayed-append duplicates (byte-identical (term, doc_id) rows,
-    // the crash story above; ADJACENT under the doc_id order, and the
-    // row_number guard keeps a NULL group's first row), then df is the
-    // deduplicated list's row count over the same partitioning
-    val wTerm = Window.partitionBy(col("term"))
-    val wOrd = wTerm.orderBy(col("doc_id").asc)
-    val posts = termPostings(spark, path, terms, nParts)
-      .withColumn("dup", row_number().over(wOrd) > 1 &&
-        (col("doc_id") <=> lag(col("doc_id"), 1).over(wOrd)))
-      .filter(!col("dup"))
-      .withColumn("df", count(lit(1)).over(wTerm).cast("double"))
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) /
-      (col("df") + 0.5))
-    val w = idf * (tf * (k1 + 1.0)) / (tf + lit(k1) *
-      (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
-    val perTerm = posts.select(col("doc_id"), col("term"), w.as("w"))
+    val perTerm = weighedPostings(termPostings(spark, path, terms, nParts),
+        nDocs, sumDl, k1, b)
+      .select(col("doc_id"), col("term"), col("w"))
     // fixed-order sum: one conditional aggregate per query term (each
     // sees <= 1 row), added in bag order — bm25TopK's expression order
     val agg = perTerm.groupBy(col("doc_id")).agg(
@@ -3730,6 +3597,31 @@ object TextOps {
     topped.withColumn("rnk", row_number().over(
         Window.orderBy(col("score").desc, col("doc_id").asc)))
       .select(col("rnk").cast("int").as("rnk"), col("doc_id"), col("score"))
+  }
+
+  /** The BM25 weight `w` of each posting read from an index of `nDocs`
+    * documents of total length `sumDl`. One term-keyed exchange serves
+    * both windows: the lag flag drops replayed-append duplicates
+    * (byte-identical (term, doc_id) rows, the [[appendToBm25Index]]
+    * crash story; ADJACENT under the doc_id order, and the row_number
+    * guard keeps a NULL group's first row), then df is the deduplicated
+    * list's row count over the same partitioning. */
+  private def weighedPostings(posts: DataFrame, nDocs: Long, sumDl: Long,
+      k1: Double, b: Double): DataFrame = {
+    val avgdl = sumDl.toDouble / nDocs
+    val wTerm = Window.partitionBy(col("term"))
+    val wOrd = wTerm.orderBy(col("doc_id").asc)
+    val df = count(lit(1)).over(wTerm).cast("double")
+    val tf = col("tf").cast("double")
+    val idf = log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) /
+      (col("df") + 0.5))
+    posts
+      .withColumn("dup", row_number().over(wOrd) > 1 &&
+        (col("doc_id") <=> lag(col("doc_id"), 1).over(wOrd)))
+      .filter(!col("dup"))
+      .withColumn("df", df)
+      .withColumn("w", idf * (tf * (k1 + 1.0)) / (tf + lit(k1) *
+        (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl)))
   }
 
   /**
@@ -3754,9 +3646,11 @@ object TextOps {
    * Scale shape: ONE postings read pruned to the batch's distinct
    * vocabulary (a bounded driver collect — the term union of the
    * batch; the parts filter and the pushed term predicate work
-   * exactly as in the single-bag path), df derived once for all
-   * queries, then an equi-join of the (query_id, term) pairs against
-   * the candidate-bounded posting rows and a per-query rank window
+   * exactly as in the single-bag path), the replay dedup and df as
+   * the single-bag path's two windows over one term-keyed exchange
+   * (no cached posting frame, no df table, no broadcast), then an
+   * equi-join of the (query_id, term) pairs against the
+   * candidate-bounded posting rows and a per-query rank window
    * (query_id partitions — no skew wider than one query's
    * candidates). Above `maxLiteralTerms` distinct terms the read
    * switches from the isin literals to a SEMI-JOIN on the term frame:
@@ -3781,7 +3675,6 @@ object TextOps {
     val nParts = bm25IndexNParts(spark, path)
     val (nDocs, sumDl) = bm25IndexStats(spark, path)
     require(nDocs > 0, s"bm25 index at $path is empty")
-    val avgdl = sumDl.toDouble / nDocs
     val qt = Caches.persist(queries.select(
       col("query_id").cast("long").as("query_id"),
       explode(array_distinct(col("terms"))).as("term")))
@@ -3805,17 +3698,9 @@ object TextOps {
         // corpus-scale vocabulary and a forced broadcast would OOM)
         LayoutOps.indexScan(spark, s"$path/postings")
           .join(termFrame, Seq("term"), "left_semi")
-    val posts = Caches.persist(read.dropDuplicates(Seq("term", "doc_id")))
-    val dfTab = posts.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) /
-      (col("df") + 0.5))
-    val w = idf * (tf * (k1 + 1.0)) / (tf + lit(k1) *
-      (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
-    qt.join(posts.join(broadcast(dfTab), "term"), Seq("term"))
+    qt.join(weighedPostings(read, nDocs, sumDl, k1, b), Seq("term"))
       .select(col("query_id"), col("doc_id"),
-        round(w * 1e9, 0).cast("long").as("w_nano"))
+        round(col("w") * 1e9, 0).cast("long").as("w_nano"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("w_nano")).as("s_nano"))
       .select(col("query_id"), col("doc_id"),

@@ -24,18 +24,6 @@ import org.apache.spark.sql.functions._
  */
 object VectorOps {
 
-  /** Sequential-fold double dot product. */
-  def dotD(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0d), (acc, v) => acc + v)
-
-  def normD(a: Column): Column = sqrt(dotD(a, a))
-
-  /** Column-level cosine — the reference formulation the native
-    * expression is tested against. */
-  def cosine6Columnar(a: Column, b: Column): Column =
-    round(dotD(a, b) / (normD(a) * normD(b)), 6)
-
   /** cosine(a,b) rounded to 6dp (native single-pass expression;
     * bit-identical to the columnar fold). Callers must have invoked
     * `graft.functions.ensureRegistered` — the operators here do. */
@@ -436,19 +424,6 @@ object VectorOps {
     require(cents.nonEmpty, "nearestMicroL2: empty codebook")
     graft.functions.micro_argmin(qx, cents.map(_._1),
       cents.flatMap(_._2))
-  }
-
-  /** The pre-r9 column formulation of [[nearestMicroL2]] — kept ONLY as
-    * the equivalence-test oracle for the native kernel. */
-  private[graft] def nearestMicroL2Columns(qx: Column,
-      cents: Array[(Long, Array[Long])]): Column = {
-    require(cents.nonEmpty, "nearestMicroL2Columns: empty codebook")
-    def dist(c: Array[Long]): Column =
-      aggregate(zip_with(qx, array(c.toIndexedSeq.map(lit): _*),
-        (a, b) => (a - b) * (a - b)), lit(0L), (acc, d) => acc + d)
-    val dists = array(cents.toIndexedSeq.map { case (_, c) => dist(c) }: _*)
-    val ids = array(cents.toIndexedSeq.map { case (id, _) => lit(id) }: _*)
-    element_at(ids, array_position(dists, array_min(dists)).cast("int"))
   }
 
   /** The deterministic Lloyd loop of [[ivfTopKLloyd]]: returns the
@@ -931,21 +906,17 @@ object VectorOps {
    * [[ivfTopKLloyd]] — oracle-replicable, no RNG) and the corpus is
    * written as its inverted lists:
    *
-   *  - `path/vectors` — `(cluster, vec_id, embedding)` PARTITIONED BY
-   *    `part = cluster % nParts` and SORTED by `cluster` within each
-   *    partition: probe-time reads prune to the probed cells' part
-   *    directories via the partition filter, then to the cells
-   *    themselves via parquet row-group stats on the sorted `cluster`
-   *    column (both PlanSpec-pinned); appends add files only under
-   *    the touched parts. `nParts` caps the DIRECTORY count — one dir
-   *    per cell was the r14 layout, and the r15 4096-cell measurement
-   *    showed its O(nCentroids) listing/footer metadata dominating
-   *    the probe (6.3 s vs 2.0 s at 16 cells, SCALE.md); production
-   *    `nCentroids ~ √N` is 10⁴–10⁶, where a per-cell directory
-   *    tree is unusable on object storage while `nParts` dirs of
-   *    cell-sorted row groups keep pruning byte-equivalent (the
-   *    [[graft.operators.TextOps.buildMinhashIndex]] `bandPart`
-   *    discipline, applied to cells);
+   *  - `path/vectors` — `(vec_id, embedding, cluster)` in the shared
+   *    index layout ([[LayoutOps.writeParts]]) keyed on the cell:
+   *    `part = cluster % nParts`, so probe-time reads prune to the
+   *    probed cells' part directories via the partition filter, then
+   *    to the cells themselves via row-group stats on the sorted
+   *    `cluster` column (both PlanSpec-pinned); appends add files only
+   *    under the touched parts. One dir per cell was the r14 layout,
+   *    and the r15 4096-cell measurement showed its O(nCentroids)
+   *    listing/footer metadata dominating the probe (6.3 s vs 2.0 s at
+   *    16 cells, SCALE.md); production `nCentroids ~ √N` is 10⁴–10⁶,
+   *    where a per-cell directory tree is unusable on object storage;
    *  - `path/centroids` — `(centroid_id, qc)`, the micro-unit codebook;
    *  - `path/params` — `(n_centroids, iters, dims, n_parts)` manifest.
    *
@@ -962,85 +933,64 @@ object VectorOps {
     val spark = emb.sparkSession
     graft.functions.ensureRegistered(spark)
     val cents = lloydCentroidsMicro(emb, nCentroids, iters)
-    emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        nearestMicroL2(quantizeMicro(col("embedding")), cents)
-          .as("cluster"))
-      .withColumn("part", pmod(col("cluster"), lit(nParts.toLong))
-        .cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("cluster"))
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$path/vectors")
+    writeIvfCells(emb, cents, s"$path/vectors", nParts, "overwrite")
     import spark.implicits._
     cents.toSeq.map { case (cid, qc) => (cid, qc.toSeq) }
       .toDF("centroid_id", "qc")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((nCentroids, iters, cents.head._2.length, nParts))
-      .toDF("n_centroids", "iters", "dims", "n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    LayoutOps.writeManifest(spark, s"$path/params", "n_centroids" -> nCentroids,
+      "iters" -> iters, "dims" -> cents.head._2.length, "n_parts" -> nParts)
   }
 
-  /** Guarded manifest reader, read on the driver with no Spark job
-    * ([[LayoutOps.indexRows]]): raises the rebuild message when the
-    * manifest is absent or missing any of `fields` (an index without a
-    * readable manifest cannot be read correctly — the
-    * [[TextOps.buildMinhashIndex]] discipline; field guards per
-    * ADVICE r15: a legacy layout must get the rebuild message, not an
-    * opaque "field does not exist"). */
+  /** Assigns `emb` to the frozen micro-unit codebook and writes its
+    * `(vec_id, embedding, cluster)` rows in the part layout (the build,
+    * or an append with mode "append"). */
+  private def writeIvfCells(emb: DataFrame, cents: Array[(Long, Array[Long])],
+      dir: String, nParts: Int, mode: String): Unit =
+    LayoutOps.writeParts(
+      emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
+          nearestMicroL2(quantizeMicro(col("embedding")), cents)
+            .as("cluster"))
+        .withColumn("part", cellPart(col("cluster"), nParts)),
+      dir, "cluster", mode)
+
+  /** The `part` of a cell id: `cluster mod nParts`, so [[touchedCells]]
+    * derives the directories of the probed cells on the driver. */
+  private def cellPart(cluster: Column, nParts: Int): Column =
+    pmod(cluster.cast("long"), lit(nParts.toLong)).cast("int")
+
+  /** The IVF manifest row, refused when absent or missing any of
+    * `fields` (a legacy layout gets the rebuild message, not an opaque
+    * "field does not exist"). */
   private def ivfIndexManifest(spark: org.apache.spark.sql.SparkSession,
       path: String,
-      fields: Seq[String]): org.apache.spark.sql.Row = {
-    val row =
-      try LayoutOps.indexRows(spark, s"$path/params").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"ivf index at $path has no params manifest — rebuild with " +
-            "buildIvfIndex", e)
-      }
-    val missing = fields.filterNot(row.schema.fieldNames.contains)
-    if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"ivf index at $path predates the current layout (params " +
-          s"carries no ${missing.mkString("/")}) — rebuild with " +
-          "buildIvfIndex")
-    row
-  }
+      fields: Seq[String]): org.apache.spark.sql.Row =
+    LayoutOps.manifestRows(spark, path, "params", "ivf",
+      "params manifest — rebuild with buildIvfIndex", fields,
+      m => s"predates the current layout (params carries no $m) — " +
+        "rebuild with buildIvfIndex").head
 
   /** Manifest reader for the partition-unit count. */
   private def ivfIndexNParts(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
     ivfIndexManifest(spark, path, Seq("n_parts")).getAs[Int]("n_parts")
 
-  /** Codebook reader shared by the index consumers, read on the driver
-    * with no Spark job ([[LayoutOps.indexRows]]; the rows are driver
-    * constants anyway); raises when the index has no codebook (refusing
-    * an unverifiable layout, the [[TextOps.buildMinhashIndex]] manifest
-    * discipline). */
+  private val ivfNoCodebook = "codebook — rebuild with buildIvfIndex"
+
+  /** The codebook rows, read on the driver (they are driver constants
+    * anyway), sorted by centroid id. */
   private def readIvfCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[(Long, Array[Long])] = {
-    val rows =
-      try LayoutOps.indexRows(spark, s"$path/centroids")
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"ivf index at $path has no codebook — rebuild with " +
-            "buildIvfIndex", e)
-      }
-    rows.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-  }
+      path: String): Array[(Long, Array[Long])] =
+    LayoutOps.manifestRows(spark, path, "centroids", "ivf", ivfNoCodebook)
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
 
   /** The codebook as a FRAME `(centroid_id, qc)` for the probe-side
     * broadcast join — never collected, never embedded in the plan
-    * (the [[ivfIndexTopK]] constant-plan contract); raises like
-    * [[readIvfCodebook]] when the index has no codebook. */
+    * (the [[ivfIndexTopK]] constant-plan contract). */
   private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    try LayoutOps.indexScan(spark, s"$path/centroids")
+    LayoutOps.manifestScan(spark, path, "centroids", "ivf", ivfNoCodebook)
       .select(col("centroid_id").cast("long").as("centroid_id"), col("qc"))
-    catch {
-      case e: Throwable => throw new IllegalArgumentException(
-        s"ivf index at $path has no codebook — rebuild with " +
-          "buildIvfIndex", e)
-    }
 
   /**
    * INCREMENTAL add to a [[buildIvfIndex]] index — FAISS `add`
@@ -1075,17 +1025,8 @@ object VectorOps {
     val spark = newEmb.sparkSession
     graft.functions.ensureRegistered(spark)
     val cents = readIvfCodebook(spark, path)
-    val nParts = ivfIndexNParts(spark, path)
-    newEmb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding"),
-        nearestMicroL2(quantizeMicro(col("embedding")), cents)
-          .as("cluster"))
-      .withColumn("part", pmod(col("cluster"), lit(nParts.toLong))
-        .cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("cluster")) // keep row-group stats tight
-      .write.mode("append").partitionBy("part")
-      .parquet(s"$path/vectors")
+    writeIvfCells(newEmb, cents, s"$path/vectors", ivfIndexNParts(spark, path),
+      "append")
   }
 
   /**
@@ -1480,30 +1421,14 @@ object VectorOps {
     }.reduce(_ unionByName _)
   }
 
-  /** Deterministic pseudo-random projection weight for output dim `j`,
-    * input dim `d`: ((j*37 + d*11) % 19) - 9, as double — engine-portable
-    * (same closed form in oracle SQL), zero-mean-ish over dims. */
-  private def projComponent(j: Column, d: Column): Column =
-    ((j * 37 + d * 11) % 19 - 9).cast("double")
-
   /** Project embeddings to `outDims` dimensions with the deterministic
     * pseudo-random matrix — the cheap coarse representation for
     * two-stage retrieval. A narrow projection (no data movement);
     * native single-pass kernel (callers must have `ensureRegistered`d —
-    * the operators here do). [[projectEmbeddingsColumnar]] is the
-    * reference formulation it is tested bit-identical against. */
+    * the operators here do). TextVectorSpec tests it bit-identical
+    * against the columnar reference formulation. */
   def projectEmbeddings(v: Column, outDims: Int): Column =
     graft.functions.project_embedding(v, outDims)
-
-  /** Columnar (interpreted-HOF) projection — the oracle-shaped reference
-    * for [[projectEmbeddings]]; outDims×dim boxed lambda calls per row,
-    * so never on a hot path. */
-  def projectEmbeddingsColumnar(v: Column, outDims: Int): Column =
-    transform(sequence(lit(0), lit(outDims - 1)), j =>
-      aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, d) => x.cast("double") * projComponent(j, d)),
-        lit(0.0d), (acc, x) => acc + x))
 
   /**
    * Two-stage retrieval — the third standard ANN scale pattern beside
@@ -1861,11 +1786,10 @@ object VectorOps {
   /**
    * PERSISTED IVF-PQ index — the on-disk form of FAISS `IVFx,PQy`
    * (IVFADC), and the index that actually FITS a 100 TB corpus: the
-   * inverted lists store `(vec_id, m codes)` — m ints standing in for
-   * `dim` floats, the 32× footprint cut at m=8/dim=64 — laid out
-   * exactly like [[buildIvfIndex]] (`part = cluster % nParts`
-   * directories, cell-sorted row groups — the directory-count cap
-   * measured in SCALE.md "IVF cell-count"), plus the two frozen
+   * inverted lists `codes` store `(cluster, vec_id, m codes)` — m ints
+   * standing in for `dim` floats, the 32× footprint cut at m=8/dim=64
+   * — in the shared index layout keyed on the cell, like
+   * [[buildIvfIndex]]'s vectors, plus the two frozen
    * codebooks ([[pqCodebook]] sub-quantizers, [[firstNCentroids]]
    * coarse cells — both deterministic, oracle-replicable) and a
    * `(m, k_cent, n_centroids, dims, n_parts)` manifest. Build cost:
@@ -1880,15 +1804,7 @@ object VectorOps {
     graft.functions.ensureRegistered(spark)
     val book = pqCodebook(emb, m, kCent)
     val cents = firstNCentroids(emb, nCentroids)
-    assignClusters(emb, cents)
-      .select(col("cluster"), col("vec_id").cast("long").as("vec_id"),
-        graft.functions.pq_encode(col("embedding"), book, m).as("codes"))
-      .withColumn("part", pmod(col("cluster").cast("long"),
-        lit(nParts.toLong)).cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("cluster"))
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$path/codes")
+    writePqCells(emb, cents, book, m, s"$path/codes", nParts, "overwrite")
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/centroids")
     import spark.implicits._
@@ -1898,25 +1814,37 @@ object VectorOps {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_book")
   }
 
-  /** Reads the IVF-PQ manifest + sub-quantizer book on the driver with
-    * no Spark job ([[LayoutOps.indexRows]]) and the coarse centroids as
-    * a scan ([[LayoutOps.indexScan]]); raises on an unverifiable index
-    * (missing books — the manifest discipline). */
+  /** Assigns `emb` to the frozen coarse cells and encodes it with the
+    * frozen sub-quantizer book, writing its `(cluster, vec_id, codes)`
+    * rows in the part layout (the build, or an append with mode
+    * "append"). */
+  private def writePqCells(emb: DataFrame, cents: DataFrame,
+      book: Array[Float], m: Int, dir: String, nParts: Int,
+      mode: String): Unit =
+    LayoutOps.writeParts(
+      assignClusters(emb, cents)
+        .select(col("cluster"), col("vec_id").cast("long").as("vec_id"),
+          graft.functions.pq_encode(col("embedding"), book, m).as("codes"))
+        .withColumn("part", cellPart(col("cluster"), nParts)),
+      dir, "cluster", mode)
+
+  /** The IVF-PQ manifest + sub-quantizer book row, read on the driver
+    * with no Spark job; a pq_book that predates any manifest field (a
+    * pre-r15 one has no n_parts) gets the rebuild message, not a
+    * field-missing error. */
+  private def ivfPqManifest(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.Row =
+    LayoutOps.manifestRows(spark, path, "pq_book", "ivf-pq",
+      "codebooks — rebuild with buildIvfPqIndex",
+      Seq("m", "k_cent", "n_centroids", "n_parts"),
+      m => s"predates the partitioned layout (pq_book carries no $m) — " +
+        "rebuild with buildIvfPqIndex").head
+
+  /** The manifest's `m`, sub-quantizer book and `n_parts`, with the
+    * coarse centroids as a scan. */
   private def readIvfPqBooks(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Array[Float], DataFrame, Int) = {
-    val row =
-      try LayoutOps.indexRows(spark, s"$path/pq_book").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"ivf-pq index at $path has no codebooks — rebuild with " +
-            "buildIvfPqIndex", e)
-      }
-    // legacy-layout guard (ADVICE r15): a pre-r15 index's pq_book has no
-    // n_parts — surface the rebuild message, not a field-missing error
-    if (!row.schema.fieldNames.contains("n_parts"))
-      throw new IllegalArgumentException(
-        s"ivf-pq index at $path predates the partitioned layout (pq_book " +
-          "carries no n_parts) — rebuild with buildIvfPqIndex")
+    val row = ivfPqManifest(spark, path)
     (row.getAs[Int]("m"), row.getSeq[Float](row.fieldIndex("book")).toArray,
       LayoutOps.indexScan(spark, s"$path/centroids"), row.getAs[Int]("n_parts"))
   }
@@ -1941,15 +1869,7 @@ object VectorOps {
     val spark = newEmb.sparkSession
     graft.functions.ensureRegistered(spark)
     val (m, book, cents, nParts) = readIvfPqBooks(spark, path)
-    assignClusters(newEmb, cents)
-      .select(col("cluster"), col("vec_id").cast("long").as("vec_id"),
-        graft.functions.pq_encode(col("embedding"), book, m).as("codes"))
-      .withColumn("part", pmod(col("cluster").cast("long"),
-        lit(nParts.toLong)).cast("int"))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("cluster")) // keep row-group stats tight
-      .write.mode("append").partitionBy("part")
-      .parquet(s"$path/codes")
+    writePqCells(newEmb, cents, book, m, s"$path/codes", nParts, "append")
   }
 
   /**
@@ -1972,22 +1892,7 @@ object VectorOps {
       kCent: Int = 0, nCentroids: Int = 0, nParts: Int = 0): Unit = {
     val spark = emb.sparkSession
     val live = LayoutOps.resolveIndexPointer(spark, root)
-    // guarded manifest read (the raw read surfaced opaque Spark errors
-    // on missing/legacy layouts — r17 review)
-    val row =
-      try LayoutOps.indexRows(spark, s"$live/pq_book").head
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"ivf-pq index at $live has no codebooks — rebuild with " +
-            "buildIvfPqIndex", e)
-      }
-    val needed = Seq("m", "k_cent", "n_centroids", "n_parts")
-    val missing = needed.filterNot(row.schema.fieldNames.contains)
-    if (missing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"ivf-pq index at $live predates the current layout (pq_book " +
-          s"carries no ${missing.mkString("/")}) — rebuild with " +
-          "buildIvfPqIndex")
+    val row = ivfPqManifest(spark, live)
     val mm = if (m > 0) m else row.getAs[Int]("m")
     val kc = if (kCent > 0) kCent else row.getAs[Int]("k_cent")
     val nc = if (nCentroids > 0) nCentroids else row.getAs[Int]("n_centroids")

@@ -137,6 +137,21 @@ class Bm25IndexSpec extends SparkSpec {
         r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
     assert(viaJoin.sortBy(t => (t._1, t._2)).toSeq ===
       out.sortBy(t => (t._1, t._2)).toSeq)
+    // an index whose append was replayed holds byte-identical duplicate
+    // postings: both branches must answer as on the clean index
+    val replayed = java.nio.file.Files.createTempDirectory("bm25batch_rp")
+      .toString
+    TextOps.buildBm25Index(corpus.filter($"doc_id" < 4L), replayed)
+    for (_ <- 1 to 2)
+      TextOps.appendToBm25Index(corpus.filter($"doc_id" >= 4L), replayed)
+    for (maxLiteral <- Seq(4096, 1)) {
+      val got = TextOps.bm25BatchAgainstIndex(bags, replayed, kTop = 20,
+        maxLiteralTerms = maxLiteral).collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rnk"),
+          r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
+      assert(got.sortBy(t => (t._1, t._2)).toSeq ===
+        out.sortBy(t => (t._1, t._2)).toSeq, s"maxLiteralTerms=$maxLiteral")
+    }
     spark.catalog.clearCache()
   }
 

@@ -774,6 +774,41 @@ class PlanSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("bm25BatchAgainstIndex: the replay dedup and df are windows over " +
+      "the posting read — no cached posting frame, no broadcast df table") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.window.WindowExec
+    val docs = (0L until 32L).map(i =>
+      (i, (0 to 6).map(j => s"w${(i * 7 + j) % 29}").mkString(" "),
+        "en", "s", 20L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val path = Files.createTempDirectory("planspec_bm25batch").toString
+    graft.operators.TextOps.buildBm25Index(docs, path, nParts = 8)
+    val bags = Seq((0L, Seq("w3", "w11")), (1L, Seq("w20")))
+      .toDF("query_id", "terms")
+    for (maxLiteral <- Seq(4096, 1)) {
+      val q = graft.operators.TextOps.bm25BatchAgainstIndex(bags, path,
+        kTop = 5, maxLiteralTerms = maxLiteral)
+      assert(q.collect().nonEmpty)
+      val all = nodes(q)
+      val p = plan(q)
+      // the only cached frame is the (query_id, term) bag explode
+      assert(all.collect { case c: InMemoryTableScanExec => c }
+          .forall(!_.output.exists(_.name == "doc_id")),
+        s"cached posting frame is back (maxLiteralTerms=$maxLiteral):\n$p")
+      assert(!all.exists { case b: BroadcastExchangeExec =>
+          b.output.exists(_.name == "df"); case _ => false },
+        s"broadcast df table is back (maxLiteralTerms=$maxLiteral):\n$p")
+      assert(all.exists { case w: WindowExec =>
+          w.partitionSpec.collect { case a: Attribute => a.name } == Seq("term"); case _ => false },
+        s"df is not a term window over the posting read:\n$p")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("ivfIndexTopK: the vectors read PRUNES to the probed cells' " +
       "partition directories — the inverted-list contract") {
     import spark.implicits._

@@ -569,6 +569,38 @@ class TextVectorSpec extends SparkSpec {
     assert(out1 === out2)
   }
 
+  /** Deterministic pseudo-random projection weight for output dim `j`,
+    * input dim `d`: ((j*37 + d*11) % 19) - 9, as double — engine-portable
+    * (same closed form in oracle SQL), zero-mean-ish over dims. */
+  private def projComponent(j: org.apache.spark.sql.Column,
+      d: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    ((j * 37 + d * 11) % 19 - 9).cast("double")
+
+  /** Columnar (interpreted-HOF) projection — the oracle-shaped reference
+    * for [[VectorOps.projectEmbeddings]]; outDims×dim boxed lambda calls
+    * per row, so never on a hot path. */
+  private def projectEmbeddingsColumnar(v: org.apache.spark.sql.Column,
+      outDims: Int): org.apache.spark.sql.Column =
+    transform(sequence(lit(0), lit(outDims - 1)), j =>
+      aggregate(
+        zip_with(v, sequence(lit(0), size(v) - 1),
+          (x, d) => x.cast("double") * projComponent(j, d)),
+        lit(0.0d), (acc, x) => acc + x))
+
+  /** The pre-r9 column formulation of the IVF nearest-centroid
+    * assignment — the equivalence-test oracle for the native
+    * `micro_argmin` kernel. */
+  private def nearestMicroL2Columns(qx: org.apache.spark.sql.Column,
+      cents: Array[(Long, Array[Long])]): org.apache.spark.sql.Column = {
+    require(cents.nonEmpty, "nearestMicroL2Columns: empty codebook")
+    def dist(c: Array[Long]): org.apache.spark.sql.Column =
+      aggregate(zip_with(qx, array(c.toIndexedSeq.map(lit): _*),
+        (a, b) => (a - b) * (a - b)), lit(0L), (acc, d) => acc + d)
+    val dists = array(cents.toIndexedSeq.map { case (_, c) => dist(c) }: _*)
+    val ids = array(cents.toIndexedSeq.map { case (id, _) => lit(id) }: _*)
+    element_at(ids, array_position(dists, array_min(dists)).cast("int"))
+  }
+
   /** Min-label propagation, the distributed strategy
     * [[TextOps.ccStarLabels]] replaced, kept as its measured baseline:
     * per round every node takes the min label over its neighbors —
@@ -1100,7 +1132,7 @@ class TextVectorSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val rows = emb.select(
         VectorOps.projectEmbeddings(col("embedding"), 8).as("native"),
-        VectorOps.projectEmbeddingsColumnar(col("embedding"), 8).as("col"))
+        projectEmbeddingsColumnar(col("embedding"), 8).as("col"))
       .collect()
     rows.foreach { r =>
       val n = r.getSeq[Double](0); val c = r.getSeq[Double](1)
@@ -2240,7 +2272,7 @@ class TextVectorSpec extends SparkSpec {
     val cmp = df.select(
       graft.functions.micro_argmin(col("qx"), cents.map(_._1),
         cents.flatMap(_._2)).as("a"),
-      graft.operators.VectorOps.nearestMicroL2Columns(col("qx"), cents)
+      nearestMicroL2Columns(col("qx"), cents)
         .as("b"))
     assert(cmp.filter(not(col("a") <=> col("b"))).count() === 0)
     // the exact-tie row: qx equidistant from ids 3 and 7 -> 3
